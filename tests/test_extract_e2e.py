@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from transkribusdu_spark.oracle import oracle_extract
 from transkribusdu_spark.pipeline.extract import extract_text_spans
-from transkribusdu_spark.pipeline.parse import parse_doc, parse_pages
+from transkribusdu_spark.pipeline.parse import parse_doc, parse_doc_cols, parse_pages
 from transkribusdu_spark.synth import pages_from_documents, render_doc
 
 
@@ -51,6 +51,30 @@ def test_parse_doc_fields(sf_dir):
     # per-doc node ids unique (dedup guard P8, graph/Graph_DOM.py:66-68)
     ids = [n["node_id"] for n in nodes]
     assert len(ids) == len(set(ids))
+
+
+def _one_line_doc(unicode_xml: bytes) -> bytes:
+    return (
+        b'<PcGts><Page imageWidth="100" imageHeight="100">'
+        b'<TextRegion id="r" custom="structure {type:paragraph;}">'
+        b'<Coords points="0,0 10,10"/><TextLine id="l"><TextEquiv>'
+        + unicode_xml
+        + b"</TextEquiv></TextLine></TextRegion></Page></PcGts>"
+    )
+
+
+def test_parse_doc_cols_standard_entities():
+    url = "https://x.example.org/doc/000002"
+    html = _one_line_doc(b"<Unicode>a &amp; b &lt;tag&gt; &quot;q&quot;</Unicode>")
+    assert parse_doc_cols(url, html)["text"] == ['a & b <tag> "q"']
+
+
+def test_parse_doc_cols_nested_markup_and_numeric_entity():
+    # nested markup in Unicode is flattened by itertext's " " join;
+    # numeric character references decode
+    url = "https://x.example.org/doc/000001"
+    assert parse_doc_cols(url, _one_line_doc(b"<Unicode>a<b/>c</Unicode>"))["text"] == ["a c"]
+    assert parse_doc_cols(url, _one_line_doc(b"<Unicode>a&#65;b</Unicode>"))["text"] == ["aAb"]
 
 
 def test_spark_e2e_byte_identical(spark, sf_dir):

@@ -473,3 +473,18 @@ def test_deepened_lsh_config_end_to_end(spark):
                                      dim=64).collect()}
     for pair in ((500, 501), (510, 511), (520, 521)):
         assert pair in got and got[pair] == 1.0, (pair, got)
+
+
+def test_mat64_uniform_rows_reshape_and_ragged_rows_raise():
+    import numpy as np
+    import pyarrow as pa
+
+    rows = [[float(i * 3 + k) for k in range(3)] for i in range(4)]
+    col = pa.chunked_array([pa.array(rows[:1], pa.list_(pa.float32())),
+                            pa.array(rows[1:], pa.list_(pa.float32()))])
+    assert np.array_equal(similarity._mat64(col, 4), np.array(rows))
+    # 63 + 65 = 128 elements divide evenly by 2 rows, but the rows are
+    # ragged: this must not silently become a 2 x 64 matrix
+    ragged = pa.chunked_array([pa.array([[0.0] * 63, [1.0] * 65], pa.list_(pa.float64()))])
+    with pytest.raises(ValueError):
+        similarity._mat64(ragged, 2)

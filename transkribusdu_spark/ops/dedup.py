@@ -405,11 +405,12 @@ def minhash_lsh_pairs(
     Banding: 16 bands of 4 rows; candidates = pairs sharing any band
     bucket (shuffle once on the band hash — the sub-quadratic scale
     path); then exact Jaccard is computed only for candidates, from
-    62-bit shingle-hash sets in one numpy intersect kernel (see the
-    verify block below). Unlike :func:`ngram_jaccard_pairs` this is
-    PLAIN set Jaccard — no hot-shingle cap — because per-candidate
-    verification never self-joins the inverted index, so boilerplate
-    shingles cannot blow it up.
+    62-bit shingle-hash sets whose intersection the JVM counts with
+    ``size(array_intersect)`` (see the verify block below). Unlike
+    :func:`ngram_jaccard_pairs` this is PLAIN set Jaccard — no
+    hot-shingle cap — because per-candidate verification never
+    self-joins the inverted index, so boilerplate shingles cannot blow
+    it up.
 
     Recall contract: 16x4 banding detects a pair at jaccard j with
     probability 1-(1-j^4)^16 (~98.8% at the 0.7 threshold, ->1 above
@@ -471,15 +472,11 @@ def minhash_lsh_pairs(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )  # three consumers below; first reader materializes each partition
     # Verify candidates with exact Jaccard on 62-bit shingle-hash sets.
-    # Shape (the same family that fixed the embedding verify): hash sets
-    # are computed MAP-ONLY and only for docs that appear in a candidate
-    # pair (left-semi prune before the kernel — at threshold 0.7 the
-    # candidate docs are a small fraction of the corpus), the two set
-    # joins carry compact int64 arrays on scalar keys, and each batch of
-    # candidate pairs intersects with ONE Arrow kernel (sorted-array
-    # np.intersect1d, C speed) instead of interpreted per-pair
-    # ``array_intersect`` over string arrays. The old path additionally
-    # paid an exploded-shingle shuffle + collect_set over EVERY doc.
+    # Hash sets are computed MAP-ONLY and only for docs that appear in a
+    # candidate pair (left-semi prune before the kernel — at threshold
+    # 0.7 the candidate docs are a small fraction of the corpus), and the
+    # two set joins carry compact int64 arrays on scalar keys, so no
+    # exploded-shingle shuffle or collect_set runs over every doc.
     cd = cand.select(F.col("doc_a").alias("doc_id")).union(
         cand.select(F.col("doc_b").alias("doc_id"))
     )  # no distinct needed: left-semi dedups the probe side itself

@@ -31,13 +31,15 @@ def _mat64(col: "pa.ChunkedArray", n: int) -> np.ndarray:
     ONE flatten+reshape memcpy (the per-row ``np.asarray(list)`` loop the
     pandas group path paid cost ~1-2 us per ROW — guide §4.2: hand whole
     batches to native code). float->double widening is exact, so values
-    are bit-identical to the per-row form. Falls back to the per-row
-    path for ragged lists or nulls (never expected for embeddings)."""
+    are bit-identical to the per-row form. Ragged lists or nulls (never
+    expected for embeddings) take the per-row path, which raises on
+    ragged rows instead of reshaping them into a wrong matrix."""
     arr = col.combine_chunks()
     if arr.null_count == 0 and n:
-        flat = arr.flatten().to_numpy(zero_copy_only=False)
-        if flat.size % n == 0:
-            return flat.reshape(n, flat.size // n).astype(np.float64)
+        lens = np.diff(arr.offsets.to_numpy())
+        if (lens == lens[0]).all():
+            flat = arr.flatten().to_numpy(zero_copy_only=False)
+            return flat.reshape(n, lens[0]).astype(np.float64)
     return np.stack([np.asarray(x, dtype=np.float64) for x in arr.to_pylist()])
 
 # 16 tables x 4 planes (16 buckets/table): for a neighbour at cosine

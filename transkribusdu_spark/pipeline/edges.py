@@ -8,15 +8,20 @@ edges via a sweep with visibility masking (``graph/Block.py:350-371,
 before sweeping (``graph/Block.py:37,443-445``).
 
 Spark shape: documents never share edges, so this is ``applyInPandas``
-over ``nodes.groupBy("url")`` — one shuffle on the url key, then pure
-numpy per document. At cluster scale the shuffle is hash-partitioned and
-AQE splits skewed documents' partitions; the per-document kernel is the
-same sorted sweep the reference uses, so cost is ~O(N log N + E) per
-page, never O(N^2) in the common (sparse-visibility) case.
+over ``nodes.groupBy("url")`` (one shuffle on the url key), or a
+map-only pass fused with parsing (:func:`edges_from_pages`). Each
+document then runs a per-page kernel: one interpreted line-of-sight
+sweep per direction (:func:`_los_pass`) and a vectorized numpy IoU
+matrix for cross-page edges. At cluster scale the shuffle is
+hash-partitioned and AQE splits skewed documents' partitions; the sweep
+visits only the sorted candidate suffix of each block and stops once
+its overlap interval is fully masked, so cost is ~O(N log N + E) per
+page in the common (sparse-visibility) case.
 """
 
 from __future__ import annotations
 
+from bisect import bisect_left
 from typing import Iterable
 
 import numpy as np
@@ -27,43 +32,11 @@ from ..schemas import EDGES_SCHEMA
 from .parse import MAX_NODES_PER_DOC, parse_doc_cols
 
 GRID = 2
+# A candidate suffix longer than this is overlap-prefiltered with numpy
+# before the interpreted masking loop; on shorter ones the per-call numpy
+# overhead costs more than the scan it would save.
+PREFILTER_MIN = 128
 CROSS_PAGE_IOU = 0.25
-
-
-def _g(v: float) -> float:
-    """Grid rounding (multiples of GRID), reference ``Block.setThickBox``
-    style: collapses float keys so sweep bands are stable."""
-    return round(v / GRID) * GRID
-
-
-def _subtract_seen(lo: float, hi: float, seen: list[tuple[float, float]]) -> float:
-    """Length of [lo,hi] not covered by the union of ``seen`` intervals
-    (the visibility mask, reference ``util/masking.py:57-94``)."""
-    if hi <= lo:
-        return 0.0
-    segs = [(lo, hi)]
-    for s_lo, s_hi in seen:
-        nxt = []
-        for a, b in segs:
-            if s_hi <= a or s_lo >= b:
-                nxt.append((a, b))
-            else:
-                if a < s_lo:
-                    nxt.append((a, s_lo))
-                if s_hi < b:
-                    nxt.append((s_hi, b))
-        segs = nxt
-        if not segs:
-            return 0.0
-    return float(sum(b - a for a, b in segs))
-
-
-def _merge_into(seen: list[tuple[float, float]], lo: float, hi: float) -> None:
-    seen.append((lo, hi))
-
-
-def _covered(lo: float, hi: float, seen: list[tuple[float, float]]) -> bool:
-    return _subtract_seen(lo, hi, seen) <= 0.0
 
 
 def _los_pass(
@@ -78,10 +51,11 @@ def _los_pass(
 
     (a1,a2) = interval along the *overlap* axis; (b1,b2) = interval along
     the *sweep* axis. Emits (i, j, length, overlap, iou) for each pair
-    where j is visible below i along the sweep axis. Vertical edges:
-    overlap axis = x, sweep axis = y. Horizontal edges are the same pass
-    with axes swapped (reference rotates -90 deg and reuses the vertical
-    code, ``graph/Block.py:350-371``).
+    where j is visible below i along the sweep axis; i and j are
+    positions in ``ids``. Vertical edges: overlap axis = x, sweep axis =
+    y. Horizontal edges are the same pass with axes swapped (reference
+    rotates -90 deg and reuses the vertical code,
+    ``graph/Block.py:350-371``).
 
     Modes (reference ``graph/Block.py:456-688``):
     - ``g1``  non-overlapping layout; candidate starts at/after i's end;
@@ -92,130 +66,55 @@ def _los_pass(
     - ``g1o`` overlapping boxes tolerated: candidates start at/after i's
       *start*; length may be negative (kept, for the caller's
       larger-overlap orientation filter).
+
+    Only boxes whose four coordinates are finite are swept: a box with a
+    NaN or infinite coordinate gets no edge and hides nothing.
     """
-    n = len(ids)
-    if n < 2:
+    if len(ids) < 2:
         return
-    if n < 32:
-        # Small pages (the common web-page case, ~10 regions): the whole
-        # pass runs numpy-free — Python round() is the same half-even
-        # rounding as np.round and sorted() the same stable (sweep,
-        # overlap) order as np.lexsort, so the candidate sweep and every
-        # emitted value are identical, without 4 array rounds + a
-        # lexsort whose fixed cost dominates at ~10 elements (measured
-        # crossover n~32; the preamble was ~25% of the edge kernel).
-        # Non-finite coordinates (NaN/Inf from garbage documents) make
-        # Python round() raise where np.round yields NaN — those docs
-        # fall back to the numpy path so their edge semantics are
-        # unchanged.
-        try:
-            ga1 = [round(v / GRID) * GRID for v in a1.tolist()]
-            ga2 = [round(v / GRID) * GRID for v in a2.tolist()]
-            gb1 = [round(v / GRID) * GRID for v in b1.tolist()]
-            gb2 = [round(v / GRID) * GRID for v in b2.tolist()]
-        except (ValueError, OverflowError):
-            pass  # non-finite coords: numpy path below
-        else:
-            order = sorted(range(n), key=lambda i: (gb1[i], ga1[i]))
-            yield from _los_small_segs(
-                order,
-                [ga1[i] for i in order], [ga2[i] for i in order],
-                [gb1[i] for i in order], [gb2[i] for i in order],
-                mode,
-            )
-            return
-    ga1 = np.round(a1 / GRID) * GRID
-    ga2 = np.round(a2 / GRID) * GRID
-    gb1 = np.round(b1 / GRID) * GRID
-    gb2 = np.round(b2 / GRID) * GRID
-    # Sweep order: by start of sweep axis, then overlap axis (determinism).
-    order = np.lexsort((ga1, gb1))
-    sa1, sa2, sb1, sb2 = ga1[order], ga2[order], gb1[order], gb2[order]
-    if n < 32:
-        # non-finite-coordinate fallback: same scan over the numpy-
-        # rounded values (np.round yields NaN for NaN, as before)
-        yield from _los_small(
-            [int(i) for i in order],
-            sa1.tolist(), sa2.tolist(), sb1.tolist(), sb2.tolist(), mode,
-        )
-        return
-    # Band sweep: sb1 is sorted, so each block's candidates are a SUFFIX
-    # of the sweep order (searchsorted jump to the first block starting
-    # at/after its bottom — the reference's di1_by_y2 skip index,
-    # graph/Block.py:531-534); the x-overlap gate is one vectorized
-    # compare over that suffix, and the interpreted masking loop touches
-    # only the overlap survivors (usually a handful before the watermark
-    # early-exit). Output set is identical to the per-pair scan; only
-    # the wasted non-candidate iterations are gone.
-    for ii in range(n):
-        i = int(order[ii])
-        if mode == "g1o":
-            # candidates start at/after i's *start*; within equal gb1
-            # only later sweep positions qualify -> exactly the suffix
-            # after ii (graph/Block.py:622-688 tie rule)
-            start = ii + 1
-        else:
-            # only blocks starting at/after the bottom of i
-            # (non-overlap assumption, graph/Block.py:506)
-            start = int(np.searchsorted(sb1, sb2[ii], side="left"))
-        if start >= n:
-            continue
-        lo_v = np.maximum(sa1[ii], sa1[start:])
-        hi_v = np.minimum(sa2[ii], sa2[start:])
-        surv = np.nonzero(hi_v > lo_v)[0]
-        if not len(surv):
-            continue
-        ai1, ai2 = sa1[ii], sa2[ii]
-        len_i = ai2 - ai1
-        seen: list[tuple[float, float]] = []
-        for s in surv:
-            jj = start + int(s)
-            if jj == ii:
-                continue
-            j = int(order[jj])
-            lo, hi = lo_v[s], hi_v[s]
-            visible = _subtract_seen(lo, hi, seen)
-            if visible > 0.0:
-                len_j = sa2[jj] - sa1[jj]
-                ov = visible if mode == "g2" else hi - lo
-                iou = ov / (len_i + len_j - ov) if (len_i + len_j - ov) > 0 else 0.0
-                length = float(sb1[jj] - sb2[ii])
-                if mode != "g1o":
-                    length = max(length, 0.0)
-                yield i, j, length, float(ov), float(iou)
-            _merge_into(seen, lo, hi)
-            if _covered(ai1, ai2, seen):
-                break  # watermark early-exit (graph/Block.py:562-565)
-
-
-def _los_small_segs(order, la1, la2, lb1, lb2, mode: str):
-    """Finite-coordinate small-n scan that tracks the UNCOVERED part of
-    block i's overlap interval as a sorted disjoint segment list instead
-    of re-scanning a growing ``seen`` list per candidate
-    (:func:`_los_small`'s O(n) interval scans per j become O(|segs|)
-    with segs only ever SHRINKING, and the watermark early-exit is a
-    free emptiness test).
-
-    Bit-identical to the seen-list form for finite inputs: each
-    candidate's visible pieces are the SAME intervals ([lo,hi] minus the
-    union of earlier windows — endpoints are exact input floats, no
-    arithmetic) summed in the same left-to-right order, so every
-    emitted (visible, ov, iou, length) value matches to the bit. Only
-    the finite fast path calls this (its round() guard rejects NaN/Inf);
-    non-finite fallbacks keep :func:`_los_small`, whose NaN-propagation
-    quirks are the pinned semantics for garbage geometry."""
+    box = range(len(ids))
+    cols = (a1, a2, b1, b2)
+    try:
+        # Python round() is half-even like np.round, and raises on NaN/inf
+        ga1, ga2, gb1, gb2 = [[round(v / GRID) * GRID for v in c.tolist()] for c in cols]
+    except (ValueError, OverflowError):
+        fin = np.isfinite(a1) & np.isfinite(a2) & np.isfinite(b1) & np.isfinite(b2)
+        box = np.flatnonzero(fin).tolist()
+        ga1, ga2, gb1, gb2 = [[round(v / GRID) * GRID for v in c[fin].tolist()] for c in cols]
+    # Sweep order: by start of sweep axis, then overlap axis (stable).
+    order = sorted(range(len(box)), key=lambda k: (gb1[k], ga1[k]))
+    src = [box[k] for k in order]
+    la1, la2 = [ga1[k] for k in order], [ga2[k] for k in order]
+    lb1, lb2 = [gb1[k] for k in order], [gb2[k] for k in order]
     n = len(order)
+    if n > PREFILTER_MIN:
+        na1, na2 = np.array(la1, dtype=np.float64), np.array(la2, dtype=np.float64)
     for ii in range(n):
-        i = order[ii]
         ai1, ai2 = la1[ii], la2[ii]
+        if ai2 <= ai1:
+            continue  # empty overlap interval: nothing can overlap it
         bot = lb2[ii]
+        # lb1 is sorted, so the candidates are a suffix of the sweep
+        # order. g1o: every later block (graph/Block.py:622-688 tie
+        # rule); g1/g2: the blocks starting at/after i's bottom
+        # (non-overlap assumption, graph/Block.py:506; the reference's
+        # di1_by_y2 skip index, graph/Block.py:531-534).
+        start = ii + 1 if mode == "g1o" else bisect_left(lb1, bot)
+        if n - start > PREFILTER_MIN:
+            # long suffix: one vectorized overlap compare, so the
+            # interpreted loop below touches only blocks whose interval
+            # reaches into i's (it still drops empty ones itself)
+            hit = (na2[start:] > na1[ii]) & (na1[start:] < na2[ii])
+            cand = (np.flatnonzero(hit) + start).tolist()
+        else:
+            cand = range(start, n)
         len_i = ai2 - ai1
-        segs = [(ai1, ai2)] if ai2 > ai1 else []
-        start = ii + 1 if mode == "g1o" else 0
-        for jj in range(start, n):
+        # the UNCOVERED part of i's overlap interval, as a sorted
+        # disjoint segment list that only ever shrinks (the visibility
+        # mask, util/masking.py:57-94)
+        segs = [(ai1, ai2)]
+        for jj in cand:
             if jj == ii:
-                continue
-            if mode != "g1o" and lb1[jj] < bot:
                 continue
             lo = ai1 if ai1 > la1[jj] else la1[jj]
             hi = ai2 if ai2 < la2[jj] else la2[jj]
@@ -234,11 +133,12 @@ def _los_small_segs(order, la1, la2, lb1, lb2, mode: str):
             if visible > 0.0:
                 len_j = la2[jj] - la1[jj]
                 ov = visible if mode == "g2" else hi - lo
-                iou = ov / (len_i + len_j - ov) if (len_i + len_j - ov) > 0 else 0.0
+                union = len_i + len_j - ov
+                iou = ov / union if union > 0 else 0.0
                 length = lb1[jj] - bot
                 if mode != "g1o":
                     length = max(length, 0.0)
-                yield i, order[jj], float(length), float(ov), float(iou)
+                yield src[ii], src[jj], float(length), float(ov), float(iou)
             if touched:
                 nxt = []
                 for a, b in segs:
@@ -251,45 +151,7 @@ def _los_small_segs(order, la1, la2, lb1, lb2, mode: str):
                             nxt.append((hi, b))
                 segs = nxt
                 if not segs:
-                    break  # watermark early-exit: interval fully covered
-    return
-
-
-def _los_small(order, la1, la2, lb1, lb2, mode: str):
-    """Small-n line-of-sight scan over plain Python numbers (numpy
-    scalar arithmetic is ~10x slower per op); same candidate rule as
-    the band sweep: lb1 sorted -> candidates are a suffix. All five
-    sequences are plain lists, already in sweep order."""
-    n = len(order)
-    for ii in range(n):
-        i = int(order[ii])
-        ai1, ai2 = la1[ii], la2[ii]
-        bot = lb2[ii]
-        len_i = ai2 - ai1
-        seen: list[tuple[float, float]] = []
-        start = ii + 1 if mode == "g1o" else 0
-        for jj in range(start, n):
-            if jj == ii:
-                continue
-            if mode != "g1o" and lb1[jj] < bot:
-                continue
-            lo = ai1 if ai1 > la1[jj] else la1[jj]
-            hi = ai2 if ai2 < la2[jj] else la2[jj]
-            if hi <= lo:
-                continue
-            visible = _subtract_seen(lo, hi, seen)
-            if visible > 0.0:
-                len_j = la2[jj] - la1[jj]
-                ov = visible if mode == "g2" else hi - lo
-                iou = ov / (len_i + len_j - ov) if (len_i + len_j - ov) > 0 else 0.0
-                length = lb1[jj] - bot
-                if mode != "g1o":
-                    length = max(length, 0.0)
-                yield i, int(order[jj]), float(length), float(ov), float(iou)
-            _merge_into(seen, lo, hi)
-            if _covered(ai1, ai2, seen):
-                break  # watermark early-exit
-    return
+                    break  # watermark early-exit (graph/Block.py:562-565)
 
 
 def _box_iou(x1a, y1a, x2a, y2a, x1b, y1b, x2b, y2b) -> float:
@@ -383,7 +245,8 @@ def _empty_out() -> dict[str, list]:
 
 
 def doc_edges(pdf: pd.DataFrame, mode: str = "g1") -> pd.DataFrame:
-    """All edges for one document's nodes (numpy kernel; unit-testable)."""
+    """All edges for one document's nodes, as a pandas frame (the
+    :func:`doc_edges_arrays` kernel; unit-testable)."""
     out = _empty_out()
     if len(pdf):
         doc_edges_arrays(
@@ -523,7 +386,7 @@ def build_continuous_edges(nodes: DataFrame, mirror: bool = True) -> DataFrame:
 
 
 def build_edges(nodes: DataFrame, short_only: bool = False, mode: str = "g1") -> DataFrame:
-    """nodes -> edges: one shuffle on url, then per-doc numpy kernels.
+    """nodes -> edges: one shuffle on url, then the per-doc edge kernel.
 
     ``short_only`` filters V/H edges longer than the source block height
     (reference ``bShortOnly`` pruning, ``graph/Block.py:551-556``) —

@@ -29,44 +29,6 @@ from ..schemas import NODES_SCHEMA
 _CUSTOM_RE = re.compile(r"(\w[\w-]*)\s*\{([^}]*)\}")
 _KV_RE = re.compile(r"([\w-]+)\s*:\s*([^;]*)\s*;?")
 
-# --- regex fast path (byte-level) -----------------------------------------
-# Strictly guarded: any structural surprise (nested regions, markup or
-# unknown entities inside <Unicode>, self-closing regions, region Coords
-# after the first TextLine) falls back to the ElementTree path, so the
-# fast path can never change extraction bytes — only speed. Guards are
-# tested against adversarial documents in tests/test_parse_fastpath.py.
-_B_PAGE_RE = re.compile(rb"<Page\b([^>]*)>(.*?)</Page>", re.S)
-_B_REGION_RE = re.compile(rb"<TextRegion\b([^>]*)>(.*?)</TextRegion>", re.S)
-_B_REGION_OPEN_RE = re.compile(rb"<TextRegion[\s>/]")
-_B_PAGE_OPEN_RE = re.compile(rb"<Page[\s>/]")
-_B_COORDS_RE = re.compile(rb'<Coords\s+points="([^"]*)"')
-_B_TEXTLINE_RE = re.compile(rb"<TextLine\b[^>]*>(.*?)</TextLine>", re.S)
-_B_UNICODE_RE = re.compile(rb"<Unicode>(.*?)</Unicode>", re.S)
-_B_UNICODE_ANY_RE = re.compile(rb"<Unicode[\s>/]")
-_B_ATTR_RE = re.compile(rb'([\w:-]+)="([^"]*)"')
-_B_ENTITY_RE = re.compile(rb"&(amp|lt|gt|quot|apos);")
-
-
-def _unescape_fast(b: bytes) -> str | None:
-    """Decode a <Unicode> capture; None = not fast-path safe."""
-    if b"<" in b:
-        return None  # nested markup/CDATA/comments -> ET fallback
-    if b"&" in b:
-        # only the five standard entities are handled; anything else
-        # (numeric refs, custom entities) -> ET fallback
-        rest = _B_ENTITY_RE.sub(b"", b)
-        if b"&" in rest:
-            return None
-        b = (
-            b.replace(b"&lt;", b"<").replace(b"&gt;", b">")
-            .replace(b"&quot;", b'"').replace(b"&apos;", b"'")
-            .replace(b"&amp;", b"&")
-        )
-    try:
-        return b.decode("utf-8")
-    except UnicodeDecodeError:
-        return None
-
 
 def parse_custom_attr(custom: str) -> dict[str, dict[str, str]]:
     """Parse ``custom="readingOrder {index:9;} structure {type:heading;}"``
@@ -147,138 +109,9 @@ def _bbox_of_points(s: str) -> tuple[float, float, float, float]:
     return min(xs), min(ys), max(xs), max(ys)
 
 
-def _attrs_or_none(blob: bytes) -> dict | None:
-    """Parse an attribute blob; None if anything (spaces around '=',
-    single quotes, '>' inside values) deviates from the plain form."""
-    attrs = dict(_B_ATTR_RE.findall(blob))
-    leftover = _B_ATTR_RE.sub(b"", blob).strip()
-    if leftover:
-        return None
-    return attrs
-
-
-def parse_doc_fast(url: str, html: bytes) -> list[dict] | None:
-    """Regex fast path for the common flat PageXML-like shape.
-
-    Returns None whenever ANY guard trips; the caller then runs the exact
-    ElementTree path. ~3x faster on conforming documents."""
-    pages = _B_PAGE_RE.findall(html)
-    if len(pages) != len(_B_PAGE_OPEN_RE.findall(html)):
-        return None  # self-closing/nested Page
-    if html.count(b"</Page>") != len(pages):
-        return None  # stray close tag (comments/CDATA tricks)
-    if html.count(b"</TextRegion>") != len(_B_REGION_OPEN_RE.findall(html)):
-        return None
-    page_cnt = len(pages)
-    try:
-        doc_id = int(url.rsplit("/", 1)[1])
-    except (ValueError, IndexError):
-        doc_id = None
-    rows: list[dict] = []
-    for pnum, (pattrs_b, pbody) in enumerate(pages, start=1):
-        pattrs = _attrs_or_none(pattrs_b)
-        if pattrs is None:
-            return None
-        try:
-            pw = float(pattrs.get(b"imageWidth", b"0"))
-            ph = float(pattrs.get(b"imageHeight", b"0"))
-        except ValueError:
-            return None
-        regions = _B_REGION_RE.findall(pbody)
-        if len(regions) != len(_B_REGION_OPEN_RE.findall(pbody)):
-            return None  # self-closing/nested TextRegion
-        ridx = 0
-        for rattrs_b, rbody in regions:
-            cm = _B_COORDS_RE.search(rbody)
-            if cm is None:
-                if b"<Coords" in rbody:
-                    return None  # Coords present but unusual form -> ET
-                continue  # matches ET: region without Coords is skipped
-            # region Coords must be a direct leading child: it has to
-            # appear before the first TextLine or the ET semantics
-            # (find('Coords') = direct child) could differ
-            first_line = rbody.find(b"<TextLine")
-            if first_line != -1 and cm.start() > first_line:
-                return None
-            # nested TextLine elements would break non-greedy capture
-            lines = _B_TEXTLINE_RE.findall(rbody)
-            n_line_opens = rbody.count(b"<TextLine")
-            if len(lines) != n_line_opens or rbody.count(b"</TextLine>") != n_line_opens:
-                return None
-            rattrs = _attrs_or_none(rattrs_b)
-            if rattrs is None:
-                return None
-            points_s = _unescape_fast(cm.group(1))
-            if points_s is None:
-                return None
-            try:
-                x1, y1, x2, y2 = fit_rectangle(parse_points(points_s))
-            except (ValueError, IndexError):
-                return None
-            custom_b = rattrs.get(b"custom")
-            custom_s = _unescape_fast(custom_b) if custom_b is not None else ""
-            if custom_s is None:
-                return None
-            custom = parse_custom_attr(custom_s)
-            type_b = rattrs.get(b"type")
-            type_s = _unescape_fast(type_b) if type_b is not None else None
-            label = custom.get("structure", {}).get("type") or type_s or "other"
-            id_s = _unescape_fast(rattrs.get(b"id", b""))
-            if id_s is None:
-                return None
-            texts = []
-            for lbody in lines:
-                um = _B_UNICODE_RE.search(lbody)
-                n_open = len(_B_UNICODE_ANY_RE.findall(lbody))
-                if um is None:
-                    if n_open:
-                        return None  # <Unicode/> or odd shape -> ET decides
-                    continue  # line without text: ET skips it too
-                if n_open != len(_B_UNICODE_RE.findall(lbody)):
-                    return None
-                # ET takes find('TextEquiv/Unicode'): the FIRST TextEquiv
-                # child's Unicode. Pin the regex choice to exactly that:
-                # the first <TextEquiv> must immediately wrap our match.
-                t_eq = lbody.find(b"<TextEquiv")
-                if t_eq == -1 or lbody[t_eq : t_eq + 11] != b"<TextEquiv>":
-                    return None
-                if um.start() != t_eq + 11:
-                    return None
-                t = _unescape_fast(um.group(1))
-                if t is None:
-                    return None
-                texts.append(t)
-            rows.append(
-                {
-                    "url": url,
-                    "doc_id": doc_id,
-                    "page_num": pnum,
-                    "page_w": pw,
-                    "page_h": ph,
-                    "page_cnt": page_cnt,
-                    "node_id": id_s,
-                    "kind": "TextRegion",
-                    "x1": x1,
-                    "y1": y1,
-                    "x2": x2,
-                    "y2": y2,
-                    "text": " ".join(texts),
-                    "orientation": 0,
-                    "reading_index": ridx,
-                    "label": label,
-                    "parent_id": None,
-                }
-            )
-            ridx += 1
-    return rows
-
-
 def parse_doc(url: str, html: bytes, kinds: tuple[str, ...] = ("TextRegion",)) -> list[dict]:
-    """One document -> list of node dicts. Document-local by design.
-
-    Measured: stdlib ElementTree's C accelerator beats a fully-guarded
-    regex fast path (parse_doc_fast, kept for the guard tests) by ~1.4x,
-    so ET is the only production path.
+    """One document -> list of node dicts. Document-local by design:
+    the row form of the ElementTree parse (:func:`parse_doc_et`).
 
     ``kinds`` selects the node types to emit (multitype support, F21):
     'TextRegion' (default) and/or 'TextLine' — one graph can carry
