@@ -308,26 +308,93 @@ def test_url_dedup_keeps_latest_snapshot(spark):
             out[c].kept_url, out[c].kept_ts, out[c].n_snapshots)
 
 
-def test_components_reliable_checkpoint_path(spark, tmp_path):
-    """With a checkpoint dir configured (the cluster deployment shape),
-    the loop must take the RELIABLE checkpoint branch and still
-    converge to union-find labels."""
+def _long_lineage_pairs(spark):
+    """(pairs DataFrame, python edge list) for a 300-node clique, a
+    30-node path and five stars, with the pairs built by a shuffled,
+    multi-stage upstream (repartition, self-joins, a groupBy) rather than
+    ``createDataFrame`` — the shape ``dedup_components`` sees after
+    url-dedup -> extract -> MinHash. Doc ids are scrambled so component
+    minima are not the first member of each group."""
+    ids = iter((i * 7919) % 100_003 for i in range(1, 10_000))
+    clique = [next(ids) for _ in range(300)]
+    path = [next(ids) for _ in range(30)]
+    stars = [[next(ids) for _ in range(8)] for _ in range(5)]
+    members = (  # (doc_id, grp, kind, pos)
+        [(d, 0, "clique", p) for p, d in enumerate(clique)]
+        + [(d, 1, "path", p) for p, d in enumerate(path)]
+        + [(d, 2 + g, "star", p) for g, s in enumerate(stars) for p, d in enumerate(s)]
+    )
+    edges = (
+        [(a, b) for i, a in enumerate(clique) for b in clique[i + 1:]]
+        + list(zip(path, path[1:]))
+        + [(min(s), d) for s in stars for d in s if d != min(s)]
+    )
+
+    m = spark.createDataFrame(
+        members, "doc_id long, grp long, kind string, pos long"
+    ).repartition(7, "doc_id")
+    a, b = m.alias("a"), m.alias("b")
+    same = F.col("a.grp") == F.col("b.grp")
+    clique = a.join(b, same & (F.col("a.doc_id") < F.col("b.doc_id"))).filter(
+        F.col("a.kind") == "clique"
+    )
+    path = a.join(b, same & (F.col("b.pos") == F.col("a.pos") + 1)).filter(
+        F.col("a.kind") == "path"
+    )
+    hubs = m.filter(F.col("kind") == "star").groupBy("grp").agg(
+        F.min("doc_id").alias("hub")
+    )
+    star = (
+        m.join(hubs, "grp")
+        .filter(F.col("doc_id") != F.col("hub"))
+        .select(F.col("hub").alias("doc_a"), F.col("doc_id").alias("doc_b"))
+    )
+    pairs = (
+        clique.select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .union(path.select(F.col("b.doc_id").alias("doc_a"), F.col("a.doc_id").alias("doc_b")))
+        .union(star)
+    )
+    return pairs, edges
+
+
+@pytest.mark.parametrize("reliable", [False, True], ids=["local", "reliable"])
+def test_components_reliable_checkpoint_path(spark, tmp_path, reliable):
+    """Both plan-truncation branches — localCheckpoint (no checkpoint
+    dir) and RELIABLE checkpoint (a checkpoint dir, the cluster
+    deployment shape) — converge to union-find labels on pairs that
+    arrive with a long shuffled lineage."""
     sc = spark.sparkContext
     assert not sc._jsc.sc().getCheckpointDir().isDefined()
-    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    if reliable:
+        sc.setCheckpointDir(str(tmp_path / "ckpt"))
     try:
-        edges = [(i, i + 1) for i in range(25)] + [(100, 103), (103, 99)]
-        got = dict(
-            dedup_components(
-                spark.createDataFrame(edges, "doc_a long, doc_b long")
-            ).collect()
-        )
+        pairs, edges = _long_lineage_pairs(spark)
+        got = dict(dedup_components(pairs).collect())
         assert got == _union_find(edges)
+        assert len(set(got.values())) == 7
     finally:
         # restore: the local-checkpoint branch is the default elsewhere
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(
             sc._jvm.scala.Option.apply(None)
         )
+
+
+def test_components_release_superseded_checkpoints(spark):
+    """Repeated calls in one session keep at most two persistent RDDs
+    each (the final round and the roots checkpoint the result reads);
+    every superseded round checkpoint and the entry one are freed."""
+    sc = spark.sparkContext
+    edges = [(i, i + 1) for i in range(25)] + [(100, 103), (103, 99)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    held = [len(sc._jsc.getPersistentRDDs())]
+    results = []
+    for _ in range(3):
+        results.append(dedup_components(pairs))
+        held.append(len(sc._jsc.getPersistentRDDs()))
+    assert all(b - a <= 2 for a, b in zip(held, held[1:])), held
+    # the retained checkpoints are the ones the results read
+    for r in results:
+        assert dict(r.collect()) == _union_find(edges)
 
 
 # ---------------------------------------------------------------------------

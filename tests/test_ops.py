@@ -107,6 +107,64 @@ def test_simhash_matches_duckdb(docs, duck):
         assert got[doc_id] == sh
 
 
+def _simhash_ref(text, bits=60):
+    """Per-doc simhash by definition: md5-prefix token hashes, bit b set
+    iff more tokens have it set than not."""
+    import hashlib
+
+    import numpy as np
+
+    h = np.array(
+        [int(hashlib.md5(t.encode()).hexdigest()[:15], 16) for t in text.split(" ")],
+        dtype=np.int64,
+    )
+    b = np.arange(bits, dtype=np.int64)
+    s = (2 * ((h[:, None] >> b) & 1) - 1).sum(axis=0)
+    return int(((s > 0).astype(np.int64) << b).sum())
+
+
+def test_simhash_open_vocab_chunks_match_reference():
+    """A high-entropy batch (every token distinct corpus-wide, plus some
+    in-doc repeats) takes the open-vocabulary path and spans several
+    SIMHASH_CHUNK_TRIPLES chunks; its signatures equal the definition."""
+    import random
+
+    rng = random.Random(3)
+    texts = []
+    for _ in range(6_000):
+        toks = [f"t{rng.getrandbits(48):x}" for _ in range(rng.randrange(20, 90))]
+        toks += rng.sample(toks, 5)  # multiplicity counts
+        texts.append(" ".join(toks))
+    n_triples = sum(len(set(t.split(" "))) for t in texts)
+    assert n_triples > 2 * dedup.SIMHASH_CHUNK_TRIPLES  # >= 3 chunks
+    got = dedup._simhash_batch(texts, 60)
+    assert got.tolist() == [_simhash_ref(t) for t in texts]
+
+
+def test_simhash_doc_chunks_respect_budget():
+    """Chunks cover the docs in order, split only on doc boundaries,
+    hold <= budget triples unless one doc alone is larger, and are
+    greedy (the next doc would not have fit)."""
+    import random
+
+    import numpy as np
+
+    rng = random.Random(5)
+    budget = 100
+    for _ in range(200):
+        sizes = [rng.choice([1, 3, 40, 99, 100, 101, 250]) for _ in range(rng.randrange(1, 40))]
+        starts = np.r_[0, np.cumsum(sizes)[:-1]]
+        n = sum(sizes)
+        chunks = list(dedup._doc_chunks(starts, n, budget))
+        assert [gs for gs, _ in chunks] == [0] + [ge for _, ge in chunks[:-1]]
+        assert chunks[-1][1] == len(sizes)
+        for gs, ge in chunks:
+            held = sum(sizes[gs:ge])
+            assert held <= budget or ge - gs == 1
+            if ge < len(sizes):
+                assert held + sizes[ge] > budget
+
+
 def test_simhash_blocking_equals_allpairs(docs):
     pairs = dedup.simhash_near_pairs(docs, max_hamming=8).toPandas()
     sig = {r.doc_id: r.simhash for r in dedup.simhash(docs).collect()}

@@ -516,6 +516,73 @@ def minhash_lsh_pairs(
     )
 
 
+# Open-vocabulary simhash scratch budget: distinct (doc, token) triples
+# expanded to a (triples x bits) int64 bit matrix at once (~63 MB per
+# temporary at 60 bits). Chunks split on doc boundaries only, so one
+# doc with more distinct tokens than this is a chunk on its own.
+SIMHASH_CHUNK_TRIPLES = 1 << 17
+
+
+def _doc_chunks(starts, n: int, budget: int):
+    """Yield ``(gs, ge)`` index ranges into ``starts`` (the first-triple
+    offset of each doc; ``n`` triples in all) whose docs hold at most
+    ``budget`` triples together — except a single doc larger than that,
+    which is a chunk on its own."""
+    import numpy as np
+
+    ends = np.r_[starts[1:], n]
+    gs = 0
+    while gs < len(starts):
+        ge = max(gs + 1, int(np.searchsorted(ends, starts[gs] + budget, side="right")))
+        yield gs, ge
+        gs = ge
+
+
+def _simhash_batch(texts, bits: int) -> "np.ndarray":
+    """Signatures (int64) of one batch of texts; see :func:`simhash`."""
+    import numpy as np
+
+    bit_idx = np.arange(bits, dtype=np.int64)
+    n_docs = len(texts)
+    codes, uh, bounds = _batch_token_codes(texts)
+    n_tok = np.diff(bounds)
+    acc = np.zeros((n_docs, bits), dtype=np.int64)
+    U = len(uh)
+    if U and U * n_docs <= 8_000_000:
+        # Closed-vocabulary fast path: acc = per-doc token-count
+        # matrix @ per-unique bit matrix — one bincount over
+        # packed (doc, code) keys + one BLAS dgemm, ~10x faster
+        # than expanding a bit row per (doc, token) triple when
+        # U << tokens. Exact in float64: every partial sum is an
+        # integer bounded by the doc's token count << 2^53.
+        doc_idx = np.repeat(np.arange(n_docs, dtype=np.int64), n_tok)
+        cntmat = np.bincount(
+            doc_idx * U + codes, minlength=n_docs * U
+        ).reshape(n_docs, U).astype(np.float64)
+        Bu = ((uh[:, None] >> bit_idx) & 1).astype(np.float64)
+        acc = np.rint(cntmat @ Bu).astype(np.int64)
+    elif U:
+        # Open-vocabulary path: compress to DISTINCT (doc, token)
+        # triples (one global sort-unique over packed keys — token
+        # repetition is high on natural text), then bit expansion +
+        # reduceat over doc boundaries, chunked by triple count.
+        doc_idx = np.repeat(np.arange(n_docs, dtype=np.int64), n_tok)
+        uk, cnt = np.unique(doc_idx * U + codes, return_counts=True)
+        d = uk // U
+        h = uh[uk % U]
+        starts = np.flatnonzero(np.r_[True, d[1:] != d[:-1]])
+        for gs, ge in _doc_chunks(starts, len(d), SIMHASH_CHUNK_TRIPLES):
+            lo = starts[gs]
+            hi = starts[ge] if ge < len(starts) else len(d)
+            Bm = (h[lo:hi, None] >> bit_idx) & 1
+            acc[d[starts[gs:ge]]] = np.add.reduceat(
+                Bm * cnt[lo:hi, None], starts[gs:ge] - lo, axis=0
+            )
+    # sum(+1/-1) = 2*acc - n_tok; bit set iff > 0
+    sig_bits = (2 * acc - n_tok[:, None]) > 0
+    return (sig_bits.astype(np.int64) * (1 << bit_idx)).sum(axis=1) & ((1 << bits) - 1)
+
+
 def simhash(docs: DataFrame, bits: int = 60) -> DataFrame:
     """60-bit SimHash over word tokens (with multiplicity).
 
@@ -524,66 +591,24 @@ def simhash(docs: DataFrame, bits: int = 60) -> DataFrame:
     bit-for-bit). Bit b of the signature is 1 iff the sum over tokens
     of (+1 if bit b of the hash is set else -1) is > 0.
 
-    Shape: one Arrow map-only kernel per batch — tokens factorize once
-    per batch (md5 runs only for memo-missing unique tokens, see
-    ``_batch_token_hashes``), and the per-doc bit sums are vectorized
-    ``np.add.reduceat`` segments over the all-token hash array (token
-    multiplicity is included by construction — no Python count dicts),
-    chunked on doc boundaries to bound the (tokens x 60) bit-matrix
-    memory. This replaced a 60-conditional-sum JVM aggregation that was
-    the heaviest query in the bench (10.4 s -> ~1 s at 20k docs);
-    value-identical by construction (integer arithmetic throughout).
+    Shape: one Arrow map-only kernel per batch (:func:`_simhash_batch`)
+    — tokens factorize once per batch (md5 runs only for memo-missing
+    unique tokens, see ``_batch_token_codes``), and the per-doc bit sums
+    are vectorized ``np.add.reduceat`` segments over the all-token hash
+    array (token multiplicity is included by construction — no Python
+    count dicts), chunked on doc boundaries so the (triples x 60)
+    bit matrix stays under ``SIMHASH_CHUNK_TRIPLES`` rows. This replaced
+    a 60-conditional-sum JVM aggregation that was the heaviest query in
+    the bench (10.4 s -> ~1 s at 20k docs); value-identical by
+    construction (integer arithmetic throughout).
     """
     from typing import Iterator
 
-    import numpy as np
     import pandas as pd
-
-    mask = (1 << bits) - 1
-    bit_idx = np.arange(bits, dtype=np.int64)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            n_docs = len(pdf)
-            codes, uh, bounds = _batch_token_codes(pdf["text"])
-            n_tok = np.diff(bounds)
-            acc = np.zeros((n_docs, bits), dtype=np.int64)
-            U = len(uh)
-            if U and U * n_docs <= 8_000_000:
-                # Closed-vocabulary fast path: acc = per-doc token-count
-                # matrix @ per-unique bit matrix — one bincount over
-                # packed (doc, code) keys + one BLAS dgemm, ~10x faster
-                # than expanding a bit row per (doc, token) triple when
-                # U << tokens. Exact in float64: every partial sum is an
-                # integer bounded by the doc's token count << 2^53.
-                doc_idx = np.repeat(np.arange(n_docs, dtype=np.int64), n_tok)
-                cntmat = np.bincount(
-                    doc_idx * U + codes, minlength=n_docs * U
-                ).reshape(n_docs, U).astype(np.float64)
-                Bu = ((uh[:, None] >> bit_idx) & 1).astype(np.float64)
-                acc = np.rint(cntmat @ Bu).astype(np.int64)
-            elif U:
-                # Open-vocabulary path: compress to DISTINCT (doc,
-                # token) triples (one global sort-unique over packed
-                # keys — token repetition is high on natural text), then
-                # chunked bit expansion + reduceat over doc boundaries.
-                doc_idx = np.repeat(np.arange(n_docs, dtype=np.int64), n_tok)
-                uk, cnt = np.unique(doc_idx * U + codes, return_counts=True)
-                d = uk // U
-                h = uh[uk % U]
-                starts = np.flatnonzero(np.r_[True, d[1:] != d[:-1]])
-                step_docs = 4_000
-                for gs in range(0, len(starts), step_docs):
-                    ge = gs + step_docs
-                    lo = starts[gs]
-                    hi = starts[ge] if ge < len(starts) else len(d)
-                    Bm = (h[lo:hi, None] >> bit_idx) & 1
-                    acc[d[starts[gs:ge]]] = np.add.reduceat(
-                        Bm * cnt[lo:hi, None], starts[gs:ge] - lo, axis=0
-                    )
-            # sum(+1/-1) = 2*acc - n_tok; bit set iff > 0
-            sig_bits = (2 * acc - n_tok[:, None]) > 0
-            out = (sig_bits.astype(np.int64) * (1 << bit_idx)).sum(axis=1) & mask
+            out = _simhash_batch(pdf["text"], bits)
             yield pd.DataFrame({"doc_id": pdf["doc_id"].to_numpy(), "simhash": out})
 
     return docs.select("doc_id", "text").mapInPandas(run, schema="doc_id long, simhash long")

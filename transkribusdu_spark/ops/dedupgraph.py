@@ -8,14 +8,19 @@ large-star / small-star algorithm (Kiveris et al., "Connected Components
 in MapReduce and Beyond", SoCC'14) expressed as DataFrame joins — each
 round is two groupBy/join stages over the edge list, converging in
 O(log^2 n) rounds to per-component star graphs. No driver-side
-union-find, no collect: the edge list never leaves the cluster, and each
-round's result is persisted + checkpointed — reliably (HDFS/S3
-checkpoint dir) when the session has one, so an executor loss replays
-at most one round; localCheckpoint otherwise (local runs) — so the
-lineage stays bounded by one round, not the whole loop. Near-dup graphs are overwhelmingly tiny
-star/clique clusters, so in practice 2-3 rounds converge; the loop still
-carries the logarithmic worst-case bound for adversarial chains
-(a 1M-doc path graph converges in ~20 rounds, not 1M).
+union-find, no collect: the edge list never leaves the cluster. The
+canonical edge set is checkpointed once at entry, because persisting it
+left round 0 executing against the caller's whole upstream lineage
+(15-23 s against ~2 s for the same 45k-edge round 0). Each round's
+result is checkpointed too — reliably (HDFS/S3 checkpoint dir) when the
+session has one, so an executor loss replays at most one round;
+localCheckpoint otherwise (local runs) — so every round plans against a
+leaf. A checkpoint is released as soon as the round after it has been
+compared; only the final round and the roots checkpoint, which the
+returned DataFrame reads, outlive the call. Near-dup graphs are
+overwhelmingly tiny star/clique clusters, so in practice 2-3 rounds
+converge; the loop still carries the logarithmic worst-case bound for
+adversarial chains (a 1M-doc path graph converges in ~20 rounds, not 1M).
 
 Reference parity note: the reference's only clustering is per-document
 (graph/pkg_GraphBinaryConjugateSegmenter, SURVEY §2.8) — cross-document
@@ -77,6 +82,14 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return _canon(repointed.union(self_edges))
 
 
+def _release(df: DataFrame) -> None:
+    """Free the blocks of a checkpointed DataFrame. ``df.unpersist()``
+    is a no-op there: the blocks belong to the checkpointed RDD under
+    the plan's ``LogicalRDD`` leaf, so that RDD is unpersisted instead
+    (harmless for a reliable checkpoint, whose data lives in files)."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def dedup_components(pairs: DataFrame, max_rounds: int = MAX_CC_ROUNDS) -> DataFrame:
     """(doc_id, component) for every doc appearing in >= 1 pair.
 
@@ -84,46 +97,48 @@ def dedup_components(pairs: DataFrame, max_rounds: int = MAX_CC_ROUNDS) -> DataF
     ignored); ``component`` is the minimum doc_id of the connected
     component. Alternates large-star/small-star until the edge set is
     stable (then every component is a star rooted at its minimum).
-    Each round materializes via persist so the convergence check and the
-    next round share one computation, and a checkpoint (reliable when a
-    checkpoint dir is configured, local otherwise) truncates the
-    logical plan so round N's plan does not embed rounds 1..N-1.
+
+    The canonical edge set is checkpointed once at entry and every
+    round's result is checkpointed (reliable when a checkpoint dir is
+    configured, local otherwise), so each round, the ``nodes`` table and
+    the roots join plan against a leaf instead of the caller's whole
+    upstream lineage. A round's edge count is carried forward as the next
+    round's ``prev`` count. Once a round has been compared, the
+    checkpoint it superseded (the entry one included) is released; only
+    the final round and the roots checkpoint, which the returned
+    DataFrame reads, stay.
     """
     spark = pairs.sparkSession
-    # Plan-truncation strategy per round: a RELIABLE checkpoint when the
-    # session has a checkpoint dir (cluster runs — survives executor
-    # loss, which localCheckpoint blocks do not), localCheckpoint
-    # otherwise (local/test runs — no shared storage required). Either
-    # way round N's plan never embeds rounds 1..N-1.
+    # Plan-truncation strategy: a RELIABLE checkpoint when the session
+    # has a checkpoint dir (cluster runs — survives executor loss, which
+    # localCheckpoint blocks do not), localCheckpoint otherwise
+    # (local/test runs — no shared storage required).
     reliable = spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
 
     def _truncate(df: DataFrame) -> DataFrame:
         return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
 
-    edges = _canon(
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    edges = _truncate(
+        _canon(pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")))
+    )
     nodes = (
         edges.select(F.col("u").alias("doc_id"))
         .union(edges.select(F.col("v").alias("doc_id")))
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    nodes.count()  # materialize off the pre-loop edge set
-
-    prev = edges
+    prev = nxt = edges
     try:
+        nodes.count()  # materialize before the entry checkpoint is released
+        n_prev = prev.count()
         for _ in range(max_rounds):
             nxt = _truncate(_small_star(_large_star(prev)))
+            n_nxt = nxt.count()
             # Convergence: identical edge sets. Both sides are distinct
             # canonical sets, so |A| == |B| and |A \ B| == 0 iff A == B.
-            stable = (
-                nxt.count() == prev.count()
-                and nxt.exceptAll(prev).limit(1).count() == 0
-            )
-            if prev is not edges:
-                prev.unpersist()
-            prev = nxt
+            stable = n_nxt == n_prev and nxt.exceptAll(prev).limit(1).count() == 0
+            _release(prev)
+            prev, n_prev = nxt, n_nxt
             if stable:
                 break
         else:
@@ -134,21 +149,23 @@ def dedup_components(pairs: DataFrame, max_rounds: int = MAX_CC_ROUNDS) -> DataF
 
         # Stable state = stars: every non-root points directly at its
         # component minimum; roots appear only on the v side. Roots are
-        # materialized (checkpoint — the guard set is tiny: every >= 2
-        # node component's root already appears as v) so the returned
-        # plan reads only checkpointed data and BOTH persists can be
-        # released here instead of leaking into a long-lived session.
+        # checkpointed (the guard set is tiny: every >= 2 node
+        # component's root already appears as v) so the returned plan
+        # reads only checkpointed data and ``nodes`` can be released.
         labels = prev.select(F.col("u").alias("doc_id"), F.col("v").alias("component"))
         roots = _truncate(
             nodes.join(labels.select("doc_id"), "doc_id", "left_anti")
             .select("doc_id", F.col("doc_id").alias("component"))
         )
-        return labels.union(roots)
+    except BaseException:
+        _release(prev)
+        _release(nxt)  # a round that failed before it was compared
+        raise
     finally:
         # success AND failure paths: a repeated call in a long-lived
-        # session must not accumulate cached edge/node tables.
-        edges.unpersist()
+        # session must not accumulate cached node tables.
         nodes.unpersist()
+    return labels.union(roots)
 
 
 def dedup_survivors(docs: DataFrame, pairs: DataFrame) -> DataFrame:
