@@ -15,11 +15,18 @@ in one job.
                                       repetition stats — optional)
       -> lineage'd corpus write      (pipeline/lineage.run_with_lineage:
                                       per-partition lineage + checksums)
+      -> audit rows                  (pipeline/lineage.write_audit: every
+                                      document that failed to parse, was
+                                      truncated or kept no main-content
+                                      node, from the extraction's cache)
 
 Deployment shape matches jobs/extract_job.py (`spark-submit --py-files
 transkribusdu_spark.zip jobs/corpus_job.py ...`); the single JSON line
-on stdout carries the stage funnel (rows in/out per stage), per-phase
-wall seconds, and the lineage verdict. Sandbox stand-in::
+on stdout carries the stage funnel (rows in/out per stage, parse
+statuses), per-phase wall seconds, and the lineage verdict. The funnel
+up to extraction is observed (``DataFrame.observe``) in the one action
+that materializes the extraction, so it costs no extra scan or job.
+Sandbox stand-in::
 
     spark-submit --master local[8] --py-files dist/transkribusdu_spark.zip \
         jobs/corpus_job.py --sf-dir /root/testdata/sf0.001 --output /tmp/corpus
@@ -48,7 +55,7 @@ def main() -> None:
     src.add_argument("--sf-dir", help="testdata sf dir: synthesize the pages "
                      "table from its documents.parquet (sandbox runs)")
     p.add_argument("--output", required=True,
-                   help="output dir: extracted/ + lineage/ parquet tables")
+                   help="output dir: extracted/ + lineage/ (+ audit/) parquet tables")
     p.add_argument("--run-id", default=None)
     p.add_argument("--input-snapshot", default=None,
                    help="snapshot id recorded on lineage rows")
@@ -64,14 +71,16 @@ def main() -> None:
                    help="hash-repartition on url before extraction")
     args = p.parse_args()
 
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from transkribusdu_spark.ops import dedup, dedupgraph, textstats, urls
-    from transkribusdu_spark.pipeline.extract import extract_from_pages
+    from transkribusdu_spark.pipeline.extract import extract_with_status, observe_status
     from transkribusdu_spark.pipeline.lineage import (
         run_with_lineage,
         straggler_stats,
         verify_lineage,
+        write_audit,
     )
     from transkribusdu_spark.session import submit_session
     from transkribusdu_spark.synth import pages_from_documents
@@ -81,6 +90,11 @@ def main() -> None:
     t0 = time.monotonic()
     funnel: dict[str, int] = {}
     phases: dict[str, float] = {}
+    observed: dict[str, Observation] = {}
+
+    def count_rows(df, name):
+        observed[name] = Observation(name)
+        return df.observe(observed[name], F.count(F.lit(1)).alias(name))
 
     if args.pages:
         pages = spark.read.parquet(args.pages)
@@ -88,31 +102,29 @@ def main() -> None:
     else:
         pages = pages_from_documents(spark, args.sf_dir)
         snapshot = args.input_snapshot or f"synth:{args.sf_dir}"
-    # The raw pages table has THREE consumers before extraction
-    # materializes (pages_in count, after_url_dedup count, the
-    # extraction scan itself); persist it so funnel bookkeeping does not
-    # triple the input I/O at snapshot scale — released right after the
-    # extracted stage is materialized below.
-    raw_pages = pages.persist()
-    funnel["pages_in"] = pages.count()
+    pages = count_rows(pages, "pages_in")
 
-    t = time.monotonic()
     if not args.no_url_dedup:
-        pages = urls.url_dedup_rows(pages).drop("canonical_url", "n_snapshots")
-        funnel["after_url_dedup"] = pages.count()
-    phases["url_dedup_sec"] = round(time.monotonic() - t, 3)
-
+        pages = count_rows(
+            urls.url_dedup_rows(pages).drop("canonical_url", "n_snapshots"),
+            "after_url_dedup",
+        )
     if args.repartition:
         pages = pages.repartition(args.repartition, F.col("url"))
 
-    # Extraction feeds two consumers (the dedup pair scan and the final
-    # write), so materialize it once — at cluster scale this is the
-    # checkpoint-after-expensive-parse shape, never a double parse.
+    # The status frame feeds three consumers (the dedup pair scan, the
+    # final write and the audit rows), so materialize it once — at
+    # cluster scale this is the checkpoint-after-expensive-parse shape,
+    # never a double parse. This one action runs url dedup and
+    # extraction (extract_sec covers both) and fills every funnel
+    # observation up to here.
     t = time.monotonic()
-    extracted = extract_from_pages(pages)
-    extracted.persist()
+    status, observed["parse"] = observe_status(extract_with_status(pages))
+    status = status.persist()
+    extracted = status.filter(F.col("extracted_text").isNotNull()).drop("status")
     funnel["extracted"] = extracted.count()
-    raw_pages.unpersist()  # last pages consumer has materialized
+    for obs in observed.values():
+        funnel.update(obs.get)
     phases["extract_sec"] = round(time.monotonic() - t, 3)
 
     t = time.monotonic()
@@ -141,6 +153,7 @@ def main() -> None:
 
     phases.update(run_with_lineage(extracted, args.output, run_id=run_id,
                                    input_snapshot=snapshot))
+    phases["audit_sec"] = write_audit(status, funnel, args.output, run_id)
     wall = time.monotonic() - t0
     out_docs = funnel.get("after_content_dedup", funnel["extracted"])
 

@@ -18,9 +18,12 @@ The job is idempotent and resumable: ``--resume`` anti-joins the input
 on urls already extracted under ``--output`` (exactly-once per url —
 ``pipeline/lineage.py``), every run appends per-partition lineage rows
 (run_id, partition id, input snapshot, doc count, checksum, wall ms),
-and giant-document truncations land in an ``overflows`` audit table.
-The single JSON line on stdout is the job's metrics record (docs,
-wall seconds, docs/sec, straggler skew ratio, lineage consistency).
+and every document whose parse failed, was truncated or kept no
+main-content node lands in an ``audit`` table as (url, status, run_id).
+Output, audit rows and the parse funnel all come from one persisted
+pass over the pages (``extract.extract_with_status``). The single JSON
+line on stdout is the job's metrics record (docs, parse funnel, wall
+seconds, docs/sec, straggler skew ratio, lineage consistency).
 """
 
 from __future__ import annotations
@@ -39,7 +42,7 @@ def main() -> None:
     src.add_argument("--sf-dir", help="testdata sf dir: synthesize the pages "
                      "table from its documents.parquet (sandbox runs)")
     p.add_argument("--output", required=True, help="output dir: extracted/ "
-                   "+ lineage/ (+ overflows/) parquet tables")
+                   "+ lineage/ (+ audit/) parquet tables")
     p.add_argument("--run-id", default=None, help="lineage run id "
                    "(default: random)")
     p.add_argument("--input-snapshot", default=None, help="snapshot id "
@@ -56,23 +59,20 @@ def main() -> None:
     p.add_argument("--expected-docs", type=int, default=0, help="if set, the "
                    "metrics line reports lineage completeness against this "
                    "count")
-    p.add_argument("--no-overflow-audit", action="store_true",
-                   help="skip the giant-document audit table (a second parse "
-                   "pass of the corpus — see parse_overflows); truncation "
-                   "still applies, it just goes unrecorded")
     args = p.parse_args()
 
     # Imports resolve from the --py-files zip on executors; deferred past
     # argparse so `--help` works without a JVM.
     from pyspark.sql import functions as F
 
-    from transkribusdu_spark.pipeline.extract import extract_from_pages
-    from transkribusdu_spark.pipeline.parse import MAX_NODES_PER_DOC, parse_overflows
+    from transkribusdu_spark.pipeline.extract import extract_with_status, observe_status
+    from transkribusdu_spark.pipeline.parse import MAX_NODES_PER_DOC
     from transkribusdu_spark.pipeline.lineage import (
         pending_pages,
         run_with_lineage,
         straggler_stats,
         verify_lineage,
+        write_audit,
     )
     from transkribusdu_spark.session import submit_session
     from transkribusdu_spark.synth import pages_from_documents
@@ -95,13 +95,16 @@ def main() -> None:
     if args.repartition:
         pages = pages.repartition(args.repartition, F.col("url"))
 
-    extracted = extract_from_pages(pages, max_nodes_per_doc=cap)
-    overflows = (
-        None if args.no_overflow_audit
-        else parse_overflows(pages, max_nodes_per_doc=cap)
-    )
+    # One parse: the output write fills the status cache and the
+    # observation; the audit rows are then read from that cache.
+    status, parse_obs = observe_status(extract_with_status(pages, max_nodes_per_doc=cap))
+    status = status.persist()
+    extracted = status.filter(F.col("extracted_text").isNotNull()).drop("status")
     phases = run_with_lineage(extracted, args.output, run_id=run_id,
-                              input_snapshot=snapshot, overflows=overflows)
+                              input_snapshot=snapshot)
+    funnel = parse_obs.get
+    phases["audit_sec"] = write_audit(status, funnel, args.output, run_id)
+    status.unpersist()
     wall = time.monotonic() - t0
 
     consistency = verify_lineage(
@@ -118,6 +121,7 @@ def main() -> None:
         "run_id": run_id,
         "input_snapshot": snapshot,
         "docs_this_run": int(this_run),
+        "funnel": funnel,
         "wall_sec": round(wall, 3),
         "phases": phases,
         "docs_per_sec": round(this_run / wall, 2) if wall > 0 else 0.0,

@@ -3,11 +3,13 @@ per url to the pinned oracle AND to the source document text (the
 round-trip invariant, BASELINE.md 'Extracted-text fidelity')."""
 
 import duckdb
+import pandas as pd
 from pyspark.sql import functions as F
 
 from transkribusdu_spark.oracle import oracle_extract
 from transkribusdu_spark.pipeline.extract import extract_text_spans
-from transkribusdu_spark.pipeline.parse import parse_doc, parse_doc_cols, parse_pages
+from transkribusdu_spark.schemas import NODES_SCHEMA
+from transkribusdu_spark.pipeline.parse import parse_doc_cols, parse_pages
 from transkribusdu_spark.synth import pages_from_documents, render_doc
 
 
@@ -42,15 +44,14 @@ def test_oracle_fulltext_superset(sf_dir):
 def test_parse_doc_fields(sf_dir):
     doc_id, text, lang = _docs(sf_dir)[1]
     url, _, html = render_doc(doc_id, text, lang)
-    nodes = parse_doc(url, html)
-    assert nodes, "no nodes parsed"
-    for n in nodes:
-        assert n["x1"] <= n["x2"] and n["y1"] <= n["y2"]
-        assert n["node_id"] and n["label"]
-        assert n["page_num"] >= 1 and n["page_cnt"] >= n["page_num"]
+    nodes = pd.DataFrame(parse_doc_cols(url, html))
+    assert len(nodes), "no nodes parsed"
+    assert list(nodes.columns) == [f.name for f in NODES_SCHEMA.fields]
+    assert ((nodes.x1 <= nodes.x2) & (nodes.y1 <= nodes.y2)).all()
+    assert nodes.node_id.astype(bool).all() and nodes.label.astype(bool).all()
+    assert ((nodes.page_num >= 1) & (nodes.page_cnt >= nodes.page_num)).all()
     # per-doc node ids unique (dedup guard P8, graph/Graph_DOM.py:66-68)
-    ids = [n["node_id"] for n in nodes]
-    assert len(ids) == len(set(ids))
+    assert nodes.node_id.is_unique
 
 
 def _one_line_doc(unicode_xml: bytes) -> bytes:
@@ -124,26 +125,73 @@ def test_fused_extract_matches_window_path(spark, sf_dir):
             assert [tuple(x) for x in ra] == [tuple(x) for x in rb]
 
 
-def test_fused_extract_skip_is_audited(spark, sf_dir):
-    """A document the fused path SKIPS (parse or assembly raised) must
-    appear in extract_errors with its exception — no silent drops."""
-    import datetime
+def _grid_doc(n_nodes: int, label: str) -> bytes:
+    """One page of n_nodes small regions in a grid, all labelled ``label``."""
+    parts = [b'<PcGts><Page imageWidth="1240" imageHeight="3000">']
+    for i in range(n_nodes):
+        x, y = 10 + (i % 100) * 12, 10 + (i // 100) * 6
+        parts.append(
+            f'<TextRegion id="r{i:06d}" custom="structure {{type:{label};}}">'
+            f'<Coords points="{x},{y} {x+10},{y} {x+10},{y+4} {x},{y+4}"/>'
+            f"<TextLine><TextEquiv><Unicode>w{i}</Unicode></TextEquiv></TextLine>"
+            f"</TextRegion>".encode()
+        )
+    parts.append(b"</Page></PcGts>")
+    return b"".join(parts)
 
+
+def test_status_frame_one_row_per_doc(spark, sf_dir):
+    """extract_with_status returns ONE row per input document with the
+    parse-loop status (ok / error / truncated) or ``empty``, and
+    extract_from_pages is exactly its rows with text. The same loop
+    drives parse_pages and edges_from_pages: errors give no rows, the
+    giant doc gives its first ``cap`` nodes."""
+    from transkribusdu_spark.pipeline.edges import edges_from_pages
     from transkribusdu_spark.pipeline.extract import (
-        extract_errors,
         extract_from_pages,
+        extract_with_status,
     )
-    from transkribusdu_spark.synth import pages_from_documents
 
-    pages = pages_from_documents(spark, sf_dir)
-    bad = spark.createDataFrame(
-        [("u://bad", datetime.datetime(2020, 1, 1),
-          bytearray(b"<PcGts><Page"), "", "xx")],
-        "url string, warc_ts timestamp, html binary, text string, lang string",
-    )
-    both = pages.unionByName(bad)
-    n_ok = pages.count()
-    assert extract_from_pages(both).count() == n_ok  # bad doc skipped
-    errs = {r["url"]: r["error"] for r in extract_errors(both).collect()}
-    assert set(errs) == {"u://bad"}
-    assert "ParseError" in errs["u://bad"]
+    doc_id, text, lang = _docs(sf_dir)[0]
+    good_url, _, good = render_doc(doc_id, text, lang)
+    cap = 2_000
+    rows = [
+        (good_url, bytearray(good)),
+        ("u://bad", bytearray(b"<PcGts><Page")),
+        ("https://x.example.org/doc/000003", bytearray(_grid_doc(50_000, "paragraph"))),
+        ("https://x.example.org/doc/000004", bytearray(_grid_doc(3, "header"))),
+        # a url id beyond the long doc_id column parses with a null id
+        (f"https://x.example.org/doc/{10**25}", bytearray(good)),
+    ]
+    pages = spark.createDataFrame(rows, "url string, html binary")
+
+    status = extract_with_status(pages, max_nodes_per_doc=cap).persist()
+    got = {r["url"]: r for r in status.collect()}
+    assert status.count() == len(got) == 5
+    assert got[good_url]["status"] == "ok"
+    assert got[good_url]["extracted_text"] == text
+    huge = got[f"https://x.example.org/doc/{10**25}"]
+    assert (huge["status"], huge["doc_id"], huge["extracted_text"]) == ("ok", None, text)
+    assert got["u://bad"]["status"].startswith("error:ParseError: ")
+    assert got["https://x.example.org/doc/000003"]["status"] == "truncated:50000"
+    assert got["https://x.example.org/doc/000003"]["extracted_text"] == " ".join(
+        f"w{i}" for i in range(cap))
+    assert got["https://x.example.org/doc/000004"]["status"] == "empty"
+    for url in ("u://bad", "https://x.example.org/doc/000004"):
+        assert got[url]["extracted_text"] is None and got[url]["spans"] is None
+
+    with_text = (status.filter(F.col("extracted_text").isNotNull()).drop("status")
+                 .orderBy("url").collect())
+    assert extract_from_pages(pages, max_nodes_per_doc=cap).orderBy("url").collect() == with_text
+    assert [r["url"] for r in with_text] == sorted(
+        [good_url, "https://x.example.org/doc/000003", f"https://x.example.org/doc/{10**25}"])
+    status.unpersist()
+
+    n_nodes = {r["url"]: r["n"] for r in parse_pages(pages, max_nodes_per_doc=cap)
+               .groupBy("url").agg(F.count("*").alias("n")).collect()}
+    assert n_nodes["https://x.example.org/doc/000003"] == cap
+    assert n_nodes["https://x.example.org/doc/000004"] == 3
+    assert "u://bad" not in n_nodes
+    edge_urls = {r["url"] for r in edges_from_pages(pages, max_nodes_per_doc=cap)
+                 .select("url").distinct().collect()}
+    assert "u://bad" not in edge_urls and "https://x.example.org/doc/000003" in edge_urls

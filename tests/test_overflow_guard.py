@@ -3,9 +3,10 @@ with O(100k) nodes turns the per-doc O(n^2)-family stages — LOS sweep
 candidates, dual graph — into a straggler/OOM).
 
 Contract: parse truncates past ``max_nodes_per_doc`` keeping the HEAD
-in document order, the truncation is auditable (parse_overflows) and
-recorded by run_with_lineage in an ``overflows`` table — never silent,
-never a crash."""
+in document order, the truncation is the document's status in the
+production pass (``truncated:<n>`` in extract_with_status) and
+write_audit records it in an ``audit`` table beside the lineage — never
+silent, never a crash."""
 
 import os
 
@@ -44,7 +45,8 @@ def giant_pages(spark):
 
 def test_giant_doc_truncated_not_oom(spark, giant_pages):
     from transkribusdu_spark.pipeline.edges import build_edges
-    from transkribusdu_spark.pipeline.parse import parse_overflows, parse_pages
+    from transkribusdu_spark.pipeline.extract import extract_with_status
+    from transkribusdu_spark.pipeline.parse import parse_pages
 
     cap = 2_000
     nodes = parse_pages(giant_pages, max_nodes_per_doc=cap)
@@ -60,27 +62,38 @@ def test_giant_doc_truncated_not_oom(spark, giant_pages):
     n_edges = build_edges(nodes).count()
     assert n_edges > 0
     # the guard is auditable, and the small doc is NOT flagged
-    flagged = parse_overflows(giant_pages, max_nodes_per_doc=cap).collect()
-    assert len(flagged) == 1
-    assert flagged[0]["url"].endswith("000001")
-    assert flagged[0]["n_nodes"] == 50_000 and flagged[0]["cap"] == cap
+    status = {r["url"]: r["status"] for r in extract_with_status(
+        giant_pages, labels=None, max_nodes_per_doc=cap).select("url", "status").collect()}
+    assert status == {"https://host000.example.org/doc/000001": "truncated:50000",
+                      "https://host000.example.org/doc/000002": "ok"}
 
 
 def test_overflow_recorded_in_lineage(spark, giant_pages, tmp_path):
-    from transkribusdu_spark.pipeline.extract import extract_text_spans
-    from transkribusdu_spark.pipeline.lineage import run_with_lineage
-    from transkribusdu_spark.pipeline.parse import parse_overflows, parse_pages
+    from transkribusdu_spark.pipeline.extract import extract_with_status, observe_status
+    from transkribusdu_spark.pipeline.lineage import run_with_lineage, write_audit
 
     cap = 2_000
-    nodes = parse_pages(giant_pages, max_nodes_per_doc=cap)
-    ext = extract_text_spans(nodes, labels=None).select("url", "extracted_text")
+    # Observe in a child session: on Spark 4.1 a session that has run an
+    # Observation holds a non-serializable ObservationManager, and later
+    # ML tuning tests serialize the shared session.
+    pages = spark.newSession().createDataFrame(giant_pages.collect(), giant_pages.schema)
+    status, obs = observe_status(
+        extract_with_status(pages, labels=None, max_nodes_per_doc=cap))
+    status = status.persist()
+    ext = status.filter(F.col("extracted_text").isNotNull()).drop("status")
     out = str(tmp_path / "run")
-    run_with_lineage(ext, out, run_id="r1",
-                     overflows=parse_overflows(giant_pages, max_nodes_per_doc=cap))
-    ov = spark.read.parquet(os.path.join(out, "overflows")).collect()
-    assert len(ov) == 1
-    assert ov[0]["run_id"] == "r1" and ov[0]["n_nodes"] == 50_000
-    # default cap leaves ordinary corpora untouched: no overflow table
-    # rows for the small doc, and lineage counts cover both docs
+    run_with_lineage(ext, out, run_id="r1")
+    funnel = obs.get  # filled by the output write
+    assert funnel == {"parse_ok": 1, "parse_error": 0, "truncated": 1, "empty": 0}
+    write_audit(status, funnel, out, run_id="r1")
+    status.unpersist()
+    audit = spark.read.parquet(os.path.join(out, "audit")).collect()
+    assert [tuple(r) for r in audit] == [
+        ("https://host000.example.org/doc/000001", "truncated:50000", "r1")]
+    # the truncated doc's output is its head: the first cap regions
+    head = spark.read.parquet(os.path.join(out, "extracted")).filter(
+        F.col("url").endswith("000001")).collect()[0]["extracted_text"]
+    assert head == " ".join(f"w{i}" for i in range(cap))
+    # the small doc has no audit row, and lineage counts cover both docs
     lin = spark.read.parquet(os.path.join(out, "lineage"))
     assert lin.agg(F.sum("doc_count")).collect()[0][0] == 2

@@ -2,6 +2,8 @@
 pruned scans, single shuffle for extraction, broadcast joins for small
 dims. Regressions here are scale bugs even when results stay correct."""
 
+import ast
+import os
 import tempfile
 
 from pyspark.sql import functions as F
@@ -172,3 +174,26 @@ def test_repetition_stats_jvm_only(spark, sf_dir):
     plan = _physical(textstats.repetition_stats(docs))
     assert "Python" not in plan, "repetition stats fell out of the JVM"
     assert plan.count("HashAggregate") >= 4, "missing partial aggregation"
+
+
+def test_parse_doc_cols_has_one_call_site():
+    """Each document is parsed once per job: the package calls
+    parse_doc_cols from exactly one place (the parse_batch loop), so no
+    kernel can grow its own parse/skip loop or a second audit parse."""
+    import transkribusdu_spark
+
+    root = os.path.dirname(transkribusdu_spark.__file__)
+    sites = []
+    for d, _, files in os.walk(root):
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(d, name)
+                with open(path) as f:
+                    tree = ast.parse(f.read())
+                sites += [
+                    (os.path.relpath(path, root), node.lineno)
+                    for node in ast.walk(tree)
+                    if isinstance(node, ast.Call)
+                    and getattr(node.func, "id", getattr(node.func, "attr", None)) == "parse_doc_cols"
+                ]
+    assert [s for s, _ in sites] == [os.path.join("pipeline", "parse.py")], sites

@@ -51,11 +51,13 @@ def test_submit_extract_resume_lineage(tmp_path):
         "--run-id", "rA", "--expected-docs", "500",
     )
     assert m1["docs_this_run"] == 500
+    # parse funnel observed in the action that wrote the output
+    assert m1["funnel"] == {"parse_ok": 500, "parse_error": 0, "truncated": 0, "empty": 0}
     assert m1["lineage"]["complete"] is True
     assert m1["lineage"]["lineage_docs"] == 500
     assert m1["stragglers"]["partitions"] >= 1
     assert m1["master"] == "local[4]"  # spark-submit's --master won
-    assert set(m1["phases"]) == {"extract_write_sec", "lineage_sec", "overflow_sec"}
+    assert set(m1["phases"]) == {"extract_write_sec", "lineage_sec", "audit_sec"}
 
     # Byte-identical extraction against the source documents table.
     con = duckdb.connect()
@@ -67,6 +69,8 @@ def test_submit_extract_resume_lineage(tmp_path):
         """
     ).fetchone()[0]
     assert n_bad == 0
+    # every document parsed cleanly: no audit rows, so no audit table
+    assert not os.path.exists(os.path.join(out, "audit"))
 
     # Idempotent restart: everything already extracted -> zero new docs,
     # no duplicate output rows, and run rA's lineage is untouched.
@@ -75,6 +79,9 @@ def test_submit_extract_resume_lineage(tmp_path):
         "--run-id", "rB", "--resume", "--expected-docs", "500",
     )
     assert m2["docs_this_run"] == 0
+    # zero pending urls: the observation still fires (the job returned,
+    # so reading it did not block) and counts nothing
+    assert m2["funnel"] == {"parse_ok": 0, "parse_error": 0, "truncated": 0, "empty": 0}
     assert m2["lineage"]["complete"] is True
     n_rows, n_urls = con.execute(
         f"select count(*), count(distinct url) from '{out}/extracted/*.parquet'"
@@ -215,6 +222,8 @@ def test_submit_corpus_job_full_funnel(spark, tmp_path):
     assert m["funnel"]["pages_in"] == 1000
     assert m["funnel"]["after_url_dedup"] == 500  # variants collapsed
     assert m["funnel"]["extracted"] == 500
+    assert m["funnel"]["parse_ok"] == 500
+    assert m["funnel"]["parse_error"] == 0
     assert m["funnel"]["after_content_dedup"] == m["corpus_docs"] < 500
     assert m["lineage"]["complete"] is True
 

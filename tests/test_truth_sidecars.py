@@ -12,7 +12,7 @@ import pytest
 
 import tools.make_truth as mt
 from transkribusdu_spark.pipeline.edges import doc_edges
-from transkribusdu_spark.pipeline.parse import parse_doc
+from transkribusdu_spark.pipeline.parse import parse_doc_cols
 from transkribusdu_spark.synth import render_doc
 
 TRUTH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "truth")
@@ -36,7 +36,7 @@ def _sample_docs(sf_dir, n=25):
 def test_truth_nodes_match_parser(sf_dir, truth001):
     for r in _sample_docs(sf_dir).itertuples():
         url, _, hb = render_doc(int(r.doc_id), r.text, r.lang)
-        pdf = pd.DataFrame(parse_doc(url, hb, kinds=("TextRegion", "TextLine")))
+        pdf = pd.DataFrame(parse_doc_cols(url, hb, kinds=("TextRegion", "TextLine")))
         t = truth001["nodes"][truth001["nodes"].url == url]
         cols = ["node_id", "kind", "label", "text", "x1", "y1", "x2", "y2", "page_num"]
         a = pdf[cols].sort_values(["node_id", "kind"]).reset_index(drop=True)
@@ -47,7 +47,7 @@ def test_truth_nodes_match_parser(sf_dir, truth001):
 def test_truth_edges_match_kernel_all_modes(sf_dir, truth001):
     for r in _sample_docs(sf_dir).itertuples():
         url, _, hb = render_doc(int(r.doc_id), r.text, r.lang)
-        reg = pd.DataFrame(parse_doc(url, hb))
+        reg = pd.DataFrame(parse_doc_cols(url, hb))
         for mode in ("g1", "g2", "g1o"):
             e = doc_edges(reg, mode=mode)
             te = truth001["edges"]
@@ -60,7 +60,7 @@ def test_truth_edges_match_kernel_all_modes(sf_dir, truth001):
 def test_truth_fulltext_is_reading_order_assembly(sf_dir, truth001):
     for r in _sample_docs(sf_dir).itertuples():
         url, _, hb = render_doc(int(r.doc_id), r.text, r.lang)
-        pdf = pd.DataFrame(parse_doc(url, hb)).sort_values(
+        pdf = pd.DataFrame(parse_doc_cols(url, hb)).sort_values(
             ["page_num", "y1", "x1", "node_id"]
         )
         ft = truth001["docs"]

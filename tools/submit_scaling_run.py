@@ -7,7 +7,8 @@ pre-written snapshot, per-pair /proc/stat idle gate, median of
 temporally-adjacent pair ratios) — but each timed run is a separate
 `spark-submit` process importing the package ONLY from the --py-files
 zip, and the measured job includes the full production surface: scan ->
-fused extract -> parquet write -> per-partition lineage. Throughput is
+fused extract -> parquet write -> per-partition lineage -> audit rows
+(read from the extraction's cache, not a second parse). Throughput is
 the job's own docs_per_sec metric. Writes BENCH/SUBMIT_SCALING.md.
 
     SCALING_RUNS=6 SPARK_GRAFT_BENCH_MULT=400 python tools/submit_scaling_run.py
@@ -52,9 +53,7 @@ def submit(cpus: int, zip_path: str, job_path: str, pages_dir: str,
     out_dir = os.path.join(work, f"out_{cpus}")
     metrics = run_submit(
         job_path,
-        ["--pages", pages_dir, "--output", out_dir,
-         "--run-id", f"scale-{cpus}",
-         "--no-overflow-audit"],  # time ONE pass of the corpus per run
+        ["--pages", pages_dir, "--output", out_dir, "--run-id", f"scale-{cpus}"],
         master=f"local[{cpus}]",
         zip_path=zip_path,
         cwd=work,
@@ -73,10 +72,11 @@ def report(results: dict[int, list[dict]], pair_busy: list[float]) -> str:
         for i in range(RUNS)
     ]
     # Phase-level attribution: the extract+write phase is the scaling
-    # surface (map-only, file-parallel); the lineage checksum pass and
-    # driver-side setup are small near-fixed costs whose share of the
-    # wall grows as the job gets faster — report both so a reader can
-    # tell noise, fixed-cost dilution, and true scaling loss apart.
+    # surface (map-only, file-parallel); the lineage checksum pass, the
+    # audit write and driver-side setup are small near-fixed costs whose
+    # share of the wall grows as the job gets faster — report both so a
+    # reader can tell noise, fixed-cost dilution, and true scaling loss
+    # apart.
     phase_effs = [
         results[lo][i]["phases"]["extract_write_sec"]
         / (ratio * results[hi][i]["phases"]["extract_write_sec"])
@@ -118,7 +118,7 @@ def report(results: dict[int, list[dict]], pair_busy: list[float]) -> str:
         f"busy fractions: " + ", ".join(f"{b:.2f}" for b in pair_busy) + ").",
         "",
         "| parallelism | whole-job docs/sec (median) | wall s (median) | "
-        "extract+write phase s | fixed (setup+lineage) s |",
+        "extract+write phase s | fixed (setup+lineage+audit) s |",
         "|---|---|---|---|---|",
         f"| local[{lo}] (N) | {med_lo:.2f} | {wall_lo:.1f} | {ew_lo:.1f} | {fixed_lo:.1f} |",
         f"| local[{hi}] ({ratio}N) | {med_hi:.2f} | {wall_hi:.1f} | {ew_hi:.1f} | {fixed_hi:.1f} |",

@@ -87,9 +87,9 @@ def page_cut_rows(boxes: list[tuple[float, float, float, float]], page_w: float)
     :meth:`BoxPartition.is_valid_cut` interval algebra. The production
     query emits cut rows regardless (the oracle's gap scan defines the
     contract) and never raises inside an executor; disagreements are
-    observable via the SEPARATE :func:`cut_check_failures` audit pass —
-    the same separate-pass contract as ``parse_errors`` /
-    ``parse_overflows``."""
+    observable via the separate :func:`cut_check_failures` audit pass,
+    which re-runs this per-page scan over a nodes table (no document
+    is parsed again)."""
     bs = sorted(boxes, key=lambda b: (b[1], b[3], b[0]))  # by y1, y2, x1
     bp = BoxPartition([(b[0], b[1], b[2], b[3]) for b in bs])
     n = len(bs)
@@ -144,10 +144,10 @@ def valid_horizontal_cuts(nodes) -> "DataFrame":  # noqa: F821
 
 
 def cut_check_failures(nodes) -> "DataFrame":  # noqa: F821
-    """Audit channel (same contract as parse_errors): one row per cut
-    whose BoxPartition interval-algebra cross-check disagrees with the
-    gap scan. Empty = the two formulations agree; disagreements surface
-    here instead of failing the whole job inside an executor."""
+    """Audit channel: one row per cut whose BoxPartition interval-algebra
+    cross-check disagrees with the gap scan. Empty = the two formulations
+    agree; disagreements surface here instead of failing the whole job
+    inside an executor."""
     import pandas as pd
     from pyspark.sql import types as T
 

@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..schemas import EDGES_SCHEMA
-from .parse import MAX_NODES_PER_DOC, parse_doc_cols
+from .parse import MAX_NODES_PER_DOC, parse_batch
 
 GRID = 2
 # A candidate suffix longer than this is overlap-prefiltered with numpy
@@ -280,22 +280,17 @@ def edges_from_pages(
     def run(batches):
         for pdf in batches:
             out = _empty_out()
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    dc = parse_doc_cols(url, bytes(html))
-                except Exception:
+            for url, dc, _ in parse_batch(pdf, max_nodes_per_doc=max_nodes_per_doc):
+                if dc is None or not dc["node_id"]:
                     continue
-                if not dc["node_id"]:
-                    continue
-                cap = max_nodes_per_doc or len(dc["node_id"])
                 doc_edges_arrays(
                     url,
-                    np.array(dc["node_id"][:cap]),
-                    np.array(dc["page_num"][:cap]),
-                    np.array(dc["x1"][:cap], dtype=np.float64),
-                    np.array(dc["y1"][:cap], dtype=np.float64),
-                    np.array(dc["x2"][:cap], dtype=np.float64),
-                    np.array(dc["y2"][:cap], dtype=np.float64),
+                    np.array(dc["node_id"]),
+                    np.array(dc["page_num"]),
+                    np.array(dc["x1"], dtype=np.float64),
+                    np.array(dc["y1"], dtype=np.float64),
+                    np.array(dc["x2"], dtype=np.float64),
+                    np.array(dc["y2"], dtype=np.float64),
                     out,
                     mode=mode,
                 )

@@ -13,11 +13,11 @@ aggregation keyed on url.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..schemas import MAIN_CONTENT_LABELS
-from .parse import MAX_NODES_PER_DOC, parse_doc_cols
+from .parse import MAX_NODES_PER_DOC, parse_batch
 
 # Canonical reading order (SURVEY.md §2.6 O2): page, then top-to-bottom,
 # then left-to-right; node_id as the deterministic tiebreak.
@@ -100,19 +100,11 @@ def _fused_ord_key(dc: dict, i: int):
     )
 
 
-def _fused_doc(
-    url: str, html: bytes, cap: int | None, want: set[str] | None
-) -> tuple[int, str, list[dict]] | None:
-    """Per-doc body of the fused parse+extract: returns
-    (doc_id, extracted_text, spans), or None when no node survives the
-    label filter. Raises on unparseable/garbage input — the caller
-    decides whether to skip (extract_from_pages) or report
-    (extract_errors)."""
-    dc = parse_doc_cols(url, html)
-    n = len(dc["node_id"])
-    if cap and n > cap:
-        n = cap
-    idx = sorted(range(n), key=lambda i: _fused_ord_key(dc, i))
+def _fused_doc(dc: dict, want: set[str] | None) -> tuple[str, list[dict]] | None:
+    """Per-doc assembly of the fused parse+extract over one document's
+    parsed columns: returns (extracted_text, spans), or None when no
+    node survives the label filter."""
+    idx = sorted(range(len(dc["node_id"])), key=lambda i: _fused_ord_key(dc, i))
     if want is not None:
         idx = [i for i in idx if dc["label"][i] in want]
     if not idx:
@@ -129,7 +121,66 @@ def _fused_doc(
              "label": dc["label"][i]}
         )
         off = end + 1
-    return dc["doc_id"][0], " ".join(parts), spans
+    return " ".join(parts), spans
+
+
+def extract_with_status(
+    pages: DataFrame,
+    labels: tuple[str, ...] | None = MAIN_CONTENT_LABELS,
+    max_nodes_per_doc: int | None = MAX_NODES_PER_DOC,
+) -> DataFrame:
+    """Fused parse+extract with its audit: pages.html -> ONE row per
+    input document, (url, doc_id, extracted_text, spans, status), in one
+    map-only pass.
+
+    ``status`` is the :func:`parse.parse_batch` status (``ok``,
+    ``truncated:<n>``, ``error:<Type>: <msg>``), or ``empty`` when the
+    document parsed but no node survives the label filter — a truncated
+    document whose kept head has no such node is ``empty`` too. A row
+    has ``extracted_text`` exactly when its status is ``ok`` or
+    ``truncated:<n>``; :func:`extract_from_pages` is those rows. Jobs
+    persist this frame once, write the output from its text rows and the
+    audit table from its other rows, and count the statuses with a
+    ``DataFrame.observe`` in the same action — no second parse."""
+    from typing import Iterator
+
+    import pandas as pd
+
+    want = set(labels) if labels is not None else None
+    schema = (
+        "url string, doc_id long, extracted_text string, "
+        "spans array<struct<node_id:string,start:int,end:int,label:string>>, "
+        "status string"
+    )
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            urls, dids, texts, spans_col, status = [], [], [], [], []
+            for url, dc, st in parse_batch(pdf, max_nodes_per_doc=max_nodes_per_doc):
+                did = text = spans = None
+                if dc is not None:
+                    assembled = _fused_doc(dc, want)
+                    if assembled is None:
+                        st = "empty"
+                    else:
+                        did, (text, spans) = dc["doc_id"][0], assembled
+                urls.append(url)
+                dids.append(did)
+                texts.append(text)
+                spans_col.append(spans)
+                status.append(st)
+            # pd.DataFrame({...: []}) defaults the columns to float64,
+            # which Arrow cannot convert to list<struct>: an empty batch
+            # yields nothing. doc_id is nullable Int64: a float64 column
+            # (ints mixed with the None of non-text rows) rounds ids
+            # above 2**53.
+            if urls:
+                yield pd.DataFrame(
+                    {"url": urls, "doc_id": pd.array(dids, dtype="Int64"),
+                     "extracted_text": texts, "spans": spans_col, "status": status}
+                )
+
+    return pages.select("url", "html").mapInPandas(run, schema=schema)
 
 
 def extract_from_pages(
@@ -149,91 +200,39 @@ def extract_from_pages(
     numerically; node_id tiebreak is ASCII in this corpus family, where
     Python code-point order equals Java's UTF-16 order), same
     single-space join, same running-sum offsets — and hash-verified by
-    the same driver oracles. Keep :func:`extract_text_spans` for
+    the same DuckDB oracles. Keep :func:`extract_text_spans` for
     labeled NODE tables (predicted/smoothed labels, cluster-driven
     extraction); this fused form exists for the scan->extract path.
 
-    ``max_nodes_per_doc``: identical semantics and default to
+    These are the text rows of :func:`extract_with_status`: documents
+    that fail to parse or keep no node are absent, and that frame says
+    why. ``max_nodes_per_doc``: identical semantics and default to
     ``parse_pages`` (None disables the giant-document guard)."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    cap = max_nodes_per_doc
-    want = set(labels) if labels is not None else None
-    schema = (
-        "url string, doc_id long, extracted_text string, "
-        "spans array<struct<node_id:string,start:int,end:int,label:string>>"
+    return (
+        extract_with_status(pages, labels, max_nodes_per_doc)
+        .filter(F.col("extracted_text").isNotNull())
+        .drop("status")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, dids, texts, spans_col = [], [], [], []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                # One skip-on-error contract for parse AND assembly:
-                # garbage rows (missing ids, NaN geometry, broken pages)
-                # drop the document, never the job — same contract the
-                # windowed path inherits from parse_pages. Skips are
-                # auditable per-url via :func:`extract_errors`, which
-                # re-runs this same per-doc body and reports the
-                # exception instead of swallowing it.
-                try:
-                    assembled = _fused_doc(url, bytes(html), cap, want)
-                except Exception:
-                    continue
-                if assembled is None:
-                    continue
-                doc_id, text, spans = assembled
-                urls.append(url)
-                dids.append(doc_id)
-                texts.append(text)
-                spans_col.append(spans)
-            # A batch where EVERY doc was skipped must yield nothing:
-            # pd.DataFrame({...: []}) defaults the columns to float64,
-            # which Arrow cannot convert to list<struct> (found by the
-            # malformed-doc probe — the job died instead of skipping).
-            if urls:
-                yield pd.DataFrame(
-                    {"url": urls, "doc_id": dids,
-                     "extracted_text": texts, "spans": spans_col}
-                )
 
-    return pages.select("url", "html").mapInPandas(run, schema=schema)
-
-
-def extract_errors(
-    pages: DataFrame,
-    labels: tuple[str, ...] | None = MAIN_CONTENT_LABELS,
-    max_nodes_per_doc: int | None = MAX_NODES_PER_DOC,
-) -> DataFrame:
-    """Audit channel for the fused path: one row per document that
-    :func:`extract_from_pages` would SKIP because parse OR assembly
-    raised (url, error). Runs the identical per-doc body, so a bug that
-    silently drops documents there surfaces here with its exception —
-    the fused-path analogue of :func:`parse_errors`, which only covers
-    the parse step."""
-    from typing import Iterator
-
-    import pandas as pd
-    import pyspark.sql.types as T
-
-    cap = max_nodes_per_doc
-    want = set(labels) if labels is not None else None
-    schema = T.StructType(
-        [T.StructField("url", T.StringType()), T.StructField("error", T.StringType())]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            bad: list[dict] = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    _fused_doc(url, bytes(html), cap, want)
-                except Exception as e:
-                    bad.append({"url": url, "error": f"{type(e).__name__}: {e}"})
-            yield pd.DataFrame(bad, columns=["url", "error"])
-
-    return pages.select("url", "html").mapInPandas(run, schema=schema)
+def observe_status(status: DataFrame) -> tuple[DataFrame, Observation]:
+    """Attach the parse funnel to an :func:`extract_with_status` frame:
+    an ``Observation`` counting ``parse_ok``, ``parse_error``,
+    ``truncated`` and ``empty`` documents, filled by the first action
+    that computes the returned frame (read it with ``.get`` after that
+    action; it costs no extra job). On Spark 4.1 a session that has run
+    an Observation can no longer be serialized, which spark.ml tuning
+    does: observe in a separate ``spark.newSession()`` when mixing the
+    two."""
+    obs = Observation("parse_funnel")
+    st = F.col("status")
+    return status.observe(
+        obs,
+        F.count_if(st == "ok").alias("parse_ok"),
+        F.count_if(st.startswith("error:")).alias("parse_error"),
+        F.count_if(st.startswith("truncated:")).alias("truncated"),
+        F.count_if(st == "empty").alias("empty"),
+    ), obs
 
 
 def extract_from_clusters(nodes: DataFrame, clusters: DataFrame) -> DataFrame:

@@ -8,6 +8,8 @@ The reference's nearest analogue is a timestamp-freshness model cache
   ``(run_id, partition_id, input_snapshot, doc_count, checksum, wall_ms)``;
   the checksum is an order-insensitive XOR of per-document
   ``sha1(url || extracted_text)`` so it is stable under partitioning.
+- documents that failed to parse, were truncated or kept no text get
+  ``audit`` rows (:func:`write_audit`) from the same pass as the output.
 - resume = anti-join the input on urls already present in the output
   (idempotent, exactly-once per url); with Iceberg this would be a
   snapshot-id predicate — with plain parquet in this sandbox the output
@@ -66,7 +68,6 @@ def run_with_lineage(
     out_dir: str,
     run_id: str,
     input_snapshot: str = "parquet",
-    overflows: DataFrame | None = None,
 ) -> dict:
     """Write extracted output + lineage rows under ``out_dir``.
 
@@ -76,13 +77,8 @@ def run_with_lineage(
     double-count earlier runs' documents in the lineage table (each
     document is counted by exactly one run_id).
 
-    ``overflows`` (``parse.parse_overflows`` output) records the
-    giant-document truncations of this run in an ``overflows`` table
-    beside the lineage — the flag that says "this url's output is the
-    HEAD of the document, not all of it".
-
-    Returns per-phase wall seconds (extract+write / checksum pass /
-    overflow audit) so jobs can report where a run's time went.
+    Returns per-phase wall seconds (extract+write / checksum pass) so
+    jobs can report where a run's time went.
 
     ``run_id`` must be fresh per attempt: the lineage increment is
     identified by run_id on disk, so re-running a completed run_id would
@@ -112,16 +108,32 @@ def run_with_lineage(
     )
     lin = with_lineage(increment, run_id, input_snapshot)
     lin.write.mode("append").parquet(lin_path)
-    t2 = time.monotonic()
-    if overflows is not None:
-        overflows.withColumn("run_id", F.lit(run_id)).write.mode("append").parquet(
-            os.path.join(out_dir, "overflows")
-        )
     return {
         "extract_write_sec": round(t1 - t0, 3),
-        "lineage_sec": round(t2 - t1, 3),
-        "overflow_sec": round(time.monotonic() - t2, 3),
+        "lineage_sec": round(time.monotonic() - t1, 3),
     }
+
+
+def write_audit(status: DataFrame, funnel: dict, out_dir: str, run_id: str) -> float:
+    """Append this run's documents whose status is not ``ok`` — parse
+    errors, truncations ("this url's output is the HEAD of the document,
+    not all of it") and empty extractions — as ``(url, status, run_id)``
+    rows to the ``audit`` table beside the lineage.
+
+    ``status`` is the caller's persisted ``extract.extract_with_status``
+    frame and ``funnel`` its ``extract.observe_status`` counts, both
+    filled by the action that wrote the output: the rows come from that
+    cache, never from a second parse, and a run whose documents are all
+    ``ok`` writes nothing (an empty write still costs a Spark job).
+    Returns the wall seconds spent."""
+    t0 = time.monotonic()
+    if funnel["parse_error"] + funnel["truncated"] + funnel["empty"]:
+        (
+            status.filter(F.col("status") != "ok")
+            .select("url", "status", F.lit(run_id).alias("run_id"))
+            .write.mode("append").parquet(os.path.join(out_dir, "audit"))
+        )
+    return round(time.monotonic() - t0, 3)
 
 
 def pending_pages(spark: SparkSession, pages: DataFrame, out_dir: str) -> DataFrame:

@@ -109,16 +109,6 @@ def _bbox_of_points(s: str) -> tuple[float, float, float, float]:
     return min(xs), min(ys), max(xs), max(ys)
 
 
-def parse_doc(url: str, html: bytes, kinds: tuple[str, ...] = ("TextRegion",)) -> list[dict]:
-    """One document -> list of node dicts. Document-local by design:
-    the row form of the ElementTree parse (:func:`parse_doc_et`).
-
-    ``kinds`` selects the node types to emit (multitype support, F21):
-    'TextRegion' (default) and/or 'TextLine' — one graph can carry
-    several node types (reference ``graph/Graph.py:150-176``)."""
-    return parse_doc_et(url, html, kinds)
-
-
 def _first_child(el: etree.Element, tag: str) -> etree.Element | None:
     """First direct child with ``tag`` — same element ``el.find(tag)``
     returns, without the ElementPath machinery (~3x faster; measured
@@ -141,23 +131,17 @@ def _te_unicode(tl: etree.Element) -> etree.Element | None:
     return None
 
 
-# Column order of the parse output (must match NODES_SCHEMA fields).
-_NODE_COLS = (
-    "url", "doc_id", "page_num", "page_w", "page_h", "page_cnt",
-    "node_id", "kind", "x1", "y1", "x2", "y2", "text",
-    "orientation", "reading_index", "label", "parent_id",
-)
-
-
 def parse_doc_cols(url: str, html: bytes,
                    kinds: tuple[str, ...] = ("TextRegion",)) -> dict[str, list]:
     """Columnar ET parse: one document -> dict of per-column lists in
-    ``_NODE_COLS`` order. Same elements, same document order, same
-    values as the row form (:func:`parse_doc` wraps this) — but fields
+    ``NODES_SCHEMA`` order, one entry per node in document order. Fields
     constant per document/page (url, doc_id, page dims, kind, ...) are
     filled with C-speed list multiplication AFTER the walk instead of
-    being re-appended per region, which is where the row-dict assembly
-    spent most of its time (measured: 106 -> ~80 us/doc)."""
+    being re-appended per region, which is where a row-dict assembly
+    spent most of its time (measured: 106 -> ~80 us/doc).
+    ``pd.DataFrame(parse_doc_cols(...))`` is the node table of one
+    document. Raises on malformed input; :func:`parse_batch` is the one
+    caller that decides what a failure means."""
     root = etree.fromstring(html)
     pages = [el for el in root.iter("Page") if el is not root]
     page_cnt = len(pages)
@@ -167,6 +151,8 @@ def parse_doc_cols(url: str, html: bytes,
         doc_id = int(url.rsplit("/", 1)[1])
     except (ValueError, IndexError):
         doc_id = None
+    if doc_id is not None and not -(2**63) <= doc_id < 2**63:
+        doc_id = None  # outside the long column: Arrow would fail the batch
     # per-region varying columns (regions and lines appended in document
     # order, exactly as the row form emitted them)
     c_pnum: list[int] = []
@@ -244,67 +230,74 @@ def parse_doc_cols(url: str, html: bytes,
     }
 
 
-def parse_doc_et(url: str, html: bytes, kinds: tuple[str, ...] = ("TextRegion",)) -> list[dict]:
-    """Reference ElementTree implementation (the semantics oracle), row
-    form: thin wrapper over :func:`parse_doc_cols`.
-
-    Descendant scans use C-level ``Element.iter`` and direct child walks
-    instead of ElementPath ``find``/``findall('.//...')`` — identical
-    element sets and document order, ~1.5x faster overall."""
-    cols = parse_doc_cols(url, html, kinds)
-    return [dict(zip(_NODE_COLS, vals)) for vals in zip(*(cols[c] for c in _NODE_COLS))]
-
-
 # A real document never has this many layout regions; a pathological
 # one (scraped garbage, a dumped table of 100k rows) would make every
 # downstream O(n log n)-to-O(n^2) per-doc stage (LOS sweep candidates,
 # dual graph ~ sum deg^2) a straggler or an OOM. Truncation keeps the
-# HEAD of the document in reading order and is never silent: audit via
-# parse_overflows, and run_with_lineage records flagged urls.
+# HEAD of the document in reading order and is never silent: the doc's
+# status says ``truncated:<n>`` (see parse_batch).
 MAX_NODES_PER_DOC = 20_000
+
+
+def parse_batch(
+    pdf: pd.DataFrame,
+    kinds: tuple[str, ...] = ("TextRegion",),
+    max_nodes_per_doc: int | None = MAX_NODES_PER_DOC,
+) -> Iterator[tuple[str, dict[str, list] | None, str]]:
+    """The one per-document parse loop: every kernel that reads
+    ``pages.html`` iterates this over its Arrow batch (``url``/``html``
+    columns) and yields, per input document in input order,
+    ``(url, cols, status)``:
+
+    - ``ok``: ``cols`` is the :func:`parse_doc_cols` output;
+    - ``truncated:<n>``: the document had n > ``max_nodes_per_doc``
+      nodes and ``cols`` is already cut to the first ``max_nodes_per_doc``
+      in document order (``None`` disables the cap);
+    - ``error:<Type>: <msg>``: the document failed to parse and ``cols``
+      is None. A malformed document never kills the job — mandatory at
+      web scale, where input is always partly garbage — and the status is
+      its audit record, from the same pass that produced the output."""
+    for url, html in zip(pdf["url"], pdf["html"]):
+        try:
+            cols = parse_doc_cols(url, bytes(html), kinds)
+        except Exception as e:
+            yield url, None, f"error:{type(e).__name__}: {e}"
+            continue
+        n = len(cols["node_id"])
+        if max_nodes_per_doc and n > max_nodes_per_doc:
+            for v in cols.values():
+                del v[max_nodes_per_doc:]
+            yield url, cols, f"truncated:{n}"
+        else:
+            yield url, cols, "ok"
 
 
 def parse_pages(
     pages: DataFrame,
-    on_error: str = "skip",
     kinds: tuple[str, ...] = ("TextRegion",),
     max_nodes_per_doc: int | None = MAX_NODES_PER_DOC,
 ) -> DataFrame:
     """pages -> nodes. Map-only; one Arrow batch in, node rows out.
 
-    ``on_error='skip'`` (default): a malformed document never kills the
-    job — mandatory at web scale where input is always partly garbage;
-    failures are auditable via :func:`parse_errors`. ``'raise'`` keeps
-    strict mode for tests. ``kinds`` selects node types (multitype F21).
-    ``max_nodes_per_doc`` (ON by default) truncates a pathological
-    giant document to its first N nodes in document order; audit the
-    truncated urls with :func:`parse_overflows` (same contract as
-    :func:`parse_errors`); ``None`` disables.
+    Documents that fail to parse contribute no rows, and a giant document
+    contributes its first ``max_nodes_per_doc`` nodes (:func:`parse_batch`;
+    ``extract.extract_with_status`` reports both per url). ``kinds``
+    selects node types (multitype F21).
     """
-    cols = ["url", "html"]
-    strict = on_error == "raise"
+    names = [f.name for f in NODES_SCHEMA.fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        names = [f.name for f in NODES_SCHEMA.fields]
         for pdf in batches:
             # columnar assembly end to end: per-doc column lists extend
             # per-batch column lists; no row dicts anywhere
             out: dict[str, list] = {n: [] for n in names}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    dc = parse_doc_cols(url, bytes(html), kinds)
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                if max_nodes_per_doc and len(dc["node_id"]) > max_nodes_per_doc:
+            for _, dc, _ in parse_batch(pdf, kinds, max_nodes_per_doc):
+                if dc is not None:
                     for n in names:
-                        del dc[n][max_nodes_per_doc:]
-                for n in names:
-                    out[n].extend(dc[n])
+                        out[n].extend(dc[n])
             yield pd.DataFrame(out)
 
-    return pages.select(*cols).mapInPandas(run, schema=NODES_SCHEMA)
+    return pages.select("url", "html").mapInPandas(run, schema=NODES_SCHEMA)
 
 
 def dedup_guard(nodes: DataFrame) -> DataFrame:
@@ -312,7 +305,7 @@ def dedup_guard(nodes: DataFrame) -> DataFrame:
     uniqueness check): returns the offending rows — (url, node_id, kind,
     n) for ids claimed by more than one node of the same kind. Empty
     result = invariant holds; callers treat non-empty as a data error
-    channel (like parse_errors)."""
+    channel."""
     from pyspark.sql import functions as F
 
     return (
@@ -353,61 +346,3 @@ def shrink_bboxes(nodes: DataFrame, w_factor: float = 0.066, cap: float = 20.0) 
         .withColumnRenamed("_x1", "x1")
         .withColumnRenamed("_y1", "y1")
     )
-
-
-def parse_overflows(
-    pages: DataFrame,
-    kinds: tuple[str, ...] = ("TextRegion",),
-    max_nodes_per_doc: int = MAX_NODES_PER_DOC,
-) -> DataFrame:
-    """Audit channel for the giant-document guard: one row per document
-    whose parse yields more than ``max_nodes_per_doc`` nodes —
-    (url, n_nodes, cap). Same SEPARATE-pass contract as
-    :func:`parse_errors` (a second parse of the corpus): audit channels
-    trade a re-read for keeping the production output schema stable —
-    run them when recording lineage, not on every extraction."""
-    import pyspark.sql.types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("n_nodes", T.LongType()),
-            T.StructField("cap", T.LongType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    n = len(parse_doc_cols(url, bytes(html), kinds)["node_id"])
-                except Exception:
-                    continue  # parse_errors owns the failure channel
-                if n > max_nodes_per_doc:
-                    rows.append({"url": url, "n_nodes": n, "cap": max_nodes_per_doc})
-            yield pd.DataFrame(rows, columns=["url", "n_nodes", "cap"])
-
-    return pages.select("url", "html").mapInPandas(run, schema=schema)
-
-
-def parse_errors(pages: DataFrame) -> DataFrame:
-    """Audit channel: one row per document that fails to parse
-    (url, error). Same map-only shape as :func:`parse_pages`."""
-    import pyspark.sql.types as T
-
-    schema = T.StructType(
-        [T.StructField("url", T.StringType()), T.StructField("error", T.StringType())]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            bad: list[dict] = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    parse_doc(url, bytes(html))
-                except Exception as e:
-                    bad.append({"url": url, "error": f"{type(e).__name__}: {e}"})
-            yield pd.DataFrame(bad, columns=["url", "error"])
-
-    return pages.select("url", "html").mapInPandas(run, schema=schema)

@@ -141,8 +141,10 @@ def parse_dsxml_pages(
     """pages with DS-XML payloads -> standard nodes table (map-only).
 
     ``on_error='skip'`` (default) drops malformed documents — audit them
-    via :func:`parse_dsxml_errors`, same error channel contract as the
-    PageXML source's ``parse_errors``; ``'raise'`` is strict mode."""
+    via :func:`parse_dsxml_errors`, a second pass over the payloads
+    (the PageXML path reports its failures from the production pass
+    instead: ``pipeline.extract.extract_with_status``); ``'raise'`` is
+    strict mode."""
     strict = on_error == "raise"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -166,7 +168,7 @@ def parse_dsxml_pages(
 
 def parse_dsxml_errors(pages: DataFrame, payload_col: str = "html") -> DataFrame:
     """Audit channel: one row per DS-XML document that fails to parse
-    (url, error) — mirror of ``pipeline.parse.parse_errors``."""
+    (url, error), by parsing every payload again."""
     import pyspark.sql.types as T
 
     schema = T.StructType(
