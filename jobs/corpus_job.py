@@ -10,9 +10,8 @@ in one job.
       -> content dedup               (ops/dedup.minhash_lsh_pairs ->
                                       ops/dedupgraph survivors: one doc
                                       kept per near-dup cluster)
-      -> quality/lang annotation     (ops/textstats: token counts,
-                                      language id, quality score,
-                                      repetition stats — optional)
+      -> quality/lang annotation     (ops/textstats: all_stats in one
+                                      scan + repetition_stats — optional)
       -> lineage'd corpus write      (pipeline/lineage.run_with_lineage:
                                       per-partition lineage + checksums)
       -> audit rows                  (pipeline/lineage.write_audit: every
@@ -143,9 +142,7 @@ def main() -> None:
     if args.annotate:
         docs = extracted.select("doc_id", F.col("extracted_text").alias("text"))
         ann = (
-            textstats.token_count(docs)
-            .join(textstats.language_id(docs), "doc_id")
-            .join(textstats.quality_score(docs).drop("n_tokens"), "doc_id")
+            textstats.all_stats(docs).drop("md5_text", "md5_normalized")
             .join(textstats.repetition_stats(docs), "doc_id")
         )
         extracted = extracted.join(ann, "doc_id")

@@ -421,6 +421,77 @@ def test_shingle_hash_sets_match_string_sets(spark, docs):
         assert len(hs[a] & hs[b]) == len(ss[a] & ss[b]), (a, b)
 
 
+def _trigram_ref(text):
+    """The MinHash shingle space by definition: each distinct string word
+    trigram of the text as its two 31-bit mixes of md5-prefix token
+    hashes (pinned constants, mod 2^31-1 and mod the second prime)."""
+    import hashlib
+
+    toks = (text or "").split(" ")
+    grams = {tuple(toks[i:i + 3]) for i in range(len(toks) - 2)}
+    out = set()
+    for g in grams:
+        h = [int(hashlib.md5(t.encode()).hexdigest()[:15], 16) for t in g]
+        s1 = sum(k * (x % dedup.MERSENNE_P) for k, x in zip(dedup._TRIO_K, h))
+        s2 = sum(k * (x % dedup._P2) for k, x in zip(dedup._TRIO_K2, h))
+        out.add((s1 % dedup.MERSENNE_P, s2 % dedup._P2))
+    return out
+
+
+def _random_texts(rng, n_docs):
+    small = ["a", "b", "c", "d", "e"]
+    texts = []
+    for _ in range(n_docs):
+        r = rng.random()
+        if r < 0.05:
+            texts.append(None)
+        elif r < 0.1:
+            texts.append("")
+        elif r < 0.2:
+            texts.append(" ".join(rng.choice(small) for _ in range(rng.randrange(1, 3))))
+        elif r < 0.45:  # heavy token repeats, repeated trigrams
+            texts.append(" ".join(rng.choice(small) for _ in range(rng.randrange(3, 80))))
+        else:
+            texts.append(" ".join(f"w{rng.getrandbits(20):x}" if rng.random() < 0.7
+                                  else rng.choice(small) for _ in range(rng.randrange(3, 60))))
+    return texts
+
+
+def test_minhash_batch_kernels_match_definition():
+    """The signature and verification-set batch kernels (the MinHash
+    path's two Arrow kernels, called here without Spark) equal a per-doc
+    reference built from the definition: distinct string trigrams,
+    md5-prefix token hashes, the mix, then the min over the 64
+    permutations, or the sorted distinct packed set. Covers None and
+    empty texts, 1-2-token docs, heavy repeats and all-short batches."""
+    import random
+
+    rng = random.Random(17)
+    P = dedup.MERSENNE_P
+    for trial in range(40):
+        n_docs = rng.choice([1, 2, 7, 60, 400])
+        texts = _random_texts(rng, n_docs)
+        if trial == 0:
+            texts = [None, "", "a", "a b", "x y"]  # no doc has a trigram
+        elif trial == 1:  # neighbouring docs with the same single trigram
+            texts = ["a a a", "a a a a", "b", "a a a", "c c c c c"]
+        ref = [_trigram_ref(t) for t in texts]
+        keep = [bool(r) for r in ref]
+
+        got_keep, sigs = dedup._minhash_batch(texts)
+        assert got_keep.tolist() == keep
+        want_sigs = [
+            [min((a * s1 + b) % P for s1, _ in r) for a, b in zip(dedup._PERM_A, dedup._PERM_B)]
+            for r in ref if r
+        ]
+        assert sigs.tolist() == want_sigs
+
+        got_keep, offsets, values = dedup._shingle_set_batch(texts)
+        assert got_keep.tolist() == keep
+        sets = [values[offsets[i]:offsets[i + 1]].tolist() for i in range(len(offsets) - 1)]
+        assert sets == [sorted({(s1 << 31) + s2 for s1, s2 in r}) for r in ref if r]
+
+
 def test_blocked_verify_matches_bruteforce_randomized():
     """Property check: for random (m, d, guard, block size) the blocked
     triangular verify emits EXACTLY the brute-force survivor set, with

@@ -132,6 +132,22 @@ def test_hot_shingle_guard_not_forced_broadcast(spark, sf_dir):
     assert "LeftAnti" in analyzed, "hot-shingle anti-join missing"
 
 
+def test_minhash_lsh_pairs_two_arrow_kernels_no_pandas(spark, sf_dir):
+    """The MinHash path has two Python boundaries, both whole-batch
+    Arrow kernels: the signature map and the verification-set map. A
+    per-doc pandas map (the shape both replaced) must not come back. A
+    persisted kernel prints once per reader, so count distinct nodes."""
+    import re
+
+    from transkribusdu_spark.ops import dedup
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    plan = _physical(dedup.minhash_lsh_pairs(docs))
+    assert "MapInPandas" not in plan, "per-doc pandas kernel on the MinHash path"
+    kernels = set(re.findall(r"MapInArrow [^\n]*", plan))
+    assert len(kernels) == 2, kernels
+
+
 def test_url_dedup_rows_single_shuffle_jvm_only(spark, sf_dir):
     """URL snapshot dedup must shuffle exactly once (on canonical_url)
     — the row_number pick and the snapshot count are windows sharing

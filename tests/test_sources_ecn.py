@@ -1,4 +1,4 @@
-"""JSON-OCR source round-trip, artifact store, ECN-style scorer."""
+"""JSON-OCR and DS-XML sources, artifact store, ECN-style scorer."""
 
 import json
 
@@ -11,6 +11,7 @@ from transkribusdu_spark.sources.artifacts import (
     load_quantile_splits,
     save_quantile_splits,
 )
+from transkribusdu_spark.sources.ds_xml import parse_dsxml_pages
 from transkribusdu_spark.sources.json_ocr import nodes_to_json_payload, parse_json_pages
 
 
@@ -66,6 +67,44 @@ def test_json_roundtrip(spark):
     a = sorted((r.node_id, r.text, r.x1) for r in nodes.collect())
     b = sorted((r.node_id, r.text, r.x1) for r in re_nodes.collect())
     assert a == b
+
+
+def test_dsxml_source_skips_malformed_payload(spark):
+    """One batch: two well-formed DS-XML docs around a truncated payload.
+    The bad payload yields nothing and does not fail the batch; the
+    result is exactly the nodes of the two good docs."""
+    good1 = (
+        '<DOC><PAGE width="800.0" height="1000.0">'
+        '<BLOCK id="r1" x="10" y="20" width="300" height="40" heading="yes">'
+        "<TEXT><TOKEN>Hello</TOKEN><TOKEN>world</TOKEN></TEXT></BLOCK>"
+        '<BLOCK id="r2" x="10" y="80" width="300" height="40">'
+        "<TEXT><TOKEN>body</TOKEN></TEXT></BLOCK>"
+        "</PAGE></DOC>"
+    )
+    good2 = (
+        '<DOC><PAGE width="500.0" height="600.0">'
+        '<BLOCK id="s1" x="5" y="5" width="50" height="10" paragraph="yes">'
+        "<TEXT><TOKEN>only</TOKEN></TEXT></BLOCK>"
+        "</PAGE></DOC>"
+    )
+    pages = spark.createDataFrame(
+        [
+            ("https://x.example.org/doc/1", bytearray(good1.encode())),
+            ("https://x.example.org/doc/2", bytearray(b"<DOC><PAGE")),
+            ("https://x.example.org/doc/3", bytearray(good2.encode())),
+        ],
+        "url string, html binary",
+    ).coalesce(1)
+    got = sorted(
+        (r.doc_id, r.page_num, r.node_id, r.x1, r.y1, r.x2, r.y2, r.text,
+         r.reading_index, r.label)
+        for r in parse_dsxml_pages(pages).collect()
+    )
+    assert got == [
+        (1, 1, "r1", 10.0, 20.0, 310.0, 60.0, "Hello world", 0, "heading"),
+        (1, 1, "r2", 10.0, 80.0, 310.0, 120.0, "body", 1, "other"),
+        (3, 1, "s1", 5.0, 5.0, 55.0, 15.0, "only", 0, "paragraph"),
+    ]
 
 
 def test_artifact_store_roundtrip(spark, tmp_path):

@@ -240,11 +240,16 @@ def test_submit_corpus_job_full_funnel(spark, tmp_path):
     ).fetchone()
     assert (n_variant, n_mismatch) == (0, 0)
 
-    # --annotate attached the quality/lang/repetition columns, sane
-    cols = {r[0] for r in con.execute(
-        f"describe select * from '{out}/extracted/*.parquet'").fetchall()}
-    assert {"n_tokens", "pred_lang", "quality", "top_ngram_frac",
-            "dup_ngram_frac"} <= cols, cols
+    # --annotate attached the quality/lang/repetition columns, in the
+    # written order, with sane values
+    cols = [r[0] for r in con.execute(
+        f"describe select * from '{out}/extracted/*.parquet'").fetchall()]
+    assert cols == [
+        "doc_id", "url", "extracted_text", "spans",
+        "n_tokens", "n_subwords", "n_chars_seen", "pred_lang", "marker_hits",
+        "mean_token_len", "type_token_ratio", "stopword_frac", "quality",
+        "top_ngram_frac", "dup_ngram_frac", "run_id",
+    ], cols
     bad = con.execute(
         f"""select count(*) from '{out}/extracted/*.parquet'
             where n_tokens <= 0 or top_ngram_frac not between 0 and 1

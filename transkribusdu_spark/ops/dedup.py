@@ -19,7 +19,9 @@ sub-quadratic path; everything else is groupBy/join that AQE handles.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from typing import Iterator
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 SHINGLE_N = 3
@@ -35,10 +37,6 @@ COSINE_DUP_THRESHOLD = 0.45
 # signature is reproducible across runs and engines).
 _PERM_A = [(2 * i + 1) * 0x9E3779B97F4A7C15 % MERSENNE_P for i in range(MINHASH_PERMS)]
 _PERM_B = [(i + 1) * 0xC2B2AE3D27D4EB4F % MERSENNE_P for i in range(MINHASH_PERMS)]
-
-
-def docs_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
@@ -80,7 +78,7 @@ def hot_shingles(docs: DataFrame, n: int = SHINGLE_N,
 
 def ngram_jaccard_pairs(
     docs: DataFrame, threshold: float = JACCARD_THRESHOLD, n: int = SHINGLE_N,
-    max_shingle_df: int | None = MAX_SHINGLE_DF, log_dropped: bool = False,
+    max_shingle_df: int | None = MAX_SHINGLE_DF,
 ) -> DataFrame:
     """Exact word-n-gram Jaccard similar pairs (doc_a < doc_b).
 
@@ -90,9 +88,8 @@ def ngram_jaccard_pairs(
     than k documents (boilerplate) before the join — the standard
     hot-key guard; set sizes are computed AFTER the drop so jaccard
     stays a consistent set measure. Audit what was dropped with
-    :func:`hot_shingles` (same predicate); ``log_dropped=True`` also
-    counts and prints the dropped shingles eagerly (one extra job).
-    Pass ``max_shingle_df=None`` to disable.
+    :func:`hot_shingles` (same predicate). Pass ``max_shingle_df=None``
+    to disable.
 
     The registered DuckDB oracle mirrors the SAME cap (drop shingles
     with df > 1000, sizes post-drop), so the gate stays exact at any
@@ -104,11 +101,6 @@ def ngram_jaccard_pairs(
     sh = _shingles(docs, n)
     if max_shingle_df:
         hot = sh.groupBy("shingle").count().filter(F.col("count") > max_shingle_df)
-        if log_dropped:
-            n_hot = hot.count()
-            if n_hot:
-                print(f"ngram_jaccard_pairs: hot-shingle guard dropped {n_hot} "
-                      f"shingles with df > {max_shingle_df}")
         # No broadcast hint: at web scale the boilerplate-shingle set
         # can itself hold millions of strings, and forcing a broadcast
         # removes Spark's freedom to fall back to a shuffle anti-join —
@@ -136,10 +128,9 @@ def ngram_jaccard_pairs(
     )
 
 
-# token mixing constants for the shingle base hash (odd, < 2^31-1).
-# The first 3 are the pinned trigram constants (signatures for n=3 are
-# bit-stable across rounds); positions beyond 3 extend the family
-# deterministically so any shingle width hashes with its own constant.
+# Trigram mix constants for the shingle base hash (odd, < 2^31-1):
+# shingle = (k0*h[i] + k1*h[i+1] + k2*h[i+2]) mod p over the md5 token
+# hashes h. Pinned, so signatures stay bit-stable across releases.
 _TRIO_K = (0x1000193, 0x85EBCA77 % MERSENNE_P, 0xC2B2AE3D % MERSENNE_P)
 
 # Second independent constant family + modulus for the WIDE (62-bit)
@@ -152,26 +143,6 @@ _TRIO_K = (0x1000193, 0x85EBCA77 % MERSENNE_P, 0xC2B2AE3D % MERSENNE_P)
 # spurious intersections under 31 bits vs ~1e-7 expected under 62 bits.
 _P2 = 2147483629  # largest prime < 2^31 - 1
 _TRIO_K2 = (0x27D4EB2F % _P2, 0x9E3779B1 % _P2, 0x165667B1 % _P2)
-
-
-def _mix_constants(n: int) -> tuple[int, ...]:
-    if n <= len(_TRIO_K):
-        return _TRIO_K[:n]
-    extra = tuple(
-        ((0x9E3779B97F4A7C15 * (2 * i + 1)) % MERSENNE_P) | 1
-        for i in range(len(_TRIO_K), n)
-    )
-    return _TRIO_K + extra
-
-
-def _mix_constants2(n: int) -> tuple[int, ...]:
-    if n <= len(_TRIO_K2):
-        return _TRIO_K2[:n]
-    extra = tuple(
-        ((0xC2B2AE3D27D4EB4F * (2 * i + 1)) % _P2) | 1
-        for i in range(len(_TRIO_K2), n)
-    )
-    return _TRIO_K2 + extra
 
 
 # ---- batched token hashing (shared by the three signature kernels) ----
@@ -235,171 +206,162 @@ def _batch_token_hashes(texts) -> "tuple[np.ndarray, np.ndarray]":
     return uh[codes], bounds
 
 
-def shingle_hash_sets(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
+def _trigram_windows(th, bounds, p: int, ks: tuple[int, int, int]):
+    """Word-trigram shingle hashes of one batch: the one trigram mix.
+
+    ``th``/``bounds`` come from :func:`_batch_token_hashes`. Returns
+    ``(sh, starts, keep)``: ``keep`` marks the docs with at least one
+    trigram (>= 3 tokens), ``sh`` holds each kept doc's window hashes
+    in order, and ``starts`` is each kept doc's first offset into
+    ``sh`` (strictly increasing, so safe as ``reduceat`` segment
+    starts).
+
+    The mix runs fused over the whole concatenated token array; the two
+    windows straddling each doc boundary are junk and the gather drops
+    them. It reduces mod p once, at the end, because with token hashes
+    below p < 2^31 the unreduced sum fits int64 for both constant
+    families: for ``_TRIO_K`` the three terms are below 2^56, 2^58 and
+    2^62, so the sum is below 2^63; for ``_TRIO_K2`` the constants sum
+    below 2^31, so the sum is below 2^62.
+    """
+    import numpy as np
+
+    th = th % p
+    m = np.diff(bounds) - 2  # trigrams per doc
+    keep = m > 0
+    mk = m[keep]
+    starts = np.zeros(len(mk), dtype=np.int64)
+    np.cumsum(mk[:-1], out=starts[1:])
+    sh_all = (th[:-2] * ks[0] + th[1:-1] * ks[1] + th[2:] * ks[2]) % p
+    idx = (
+        np.arange(int(mk.sum()), dtype=np.int64)
+        - np.repeat(starts, mk)
+        + np.repeat(bounds[:-1][keep], mk)
+    )
+    return sh_all[idx], starts, keep
+
+
+def _minhash_batch(texts) -> "tuple[np.ndarray, np.ndarray]":
+    """``(keep, sigs)`` of one batch: the kept-doc mask and a
+    (kept docs x MINHASH_PERMS) signature matrix; see
+    :func:`minhash_signatures`."""
+    import numpy as np
+
+    sh, starts, keep = _trigram_windows(
+        *_batch_token_hashes(texts), MERSENNE_P, _TRIO_K
+    )
+    sigs = np.empty((MINHASH_PERMS, len(starts)), dtype=np.int64)
+    if len(starts):
+        for i, (a, b) in enumerate(zip(_PERM_A, _PERM_B)):
+            sigs[i] = np.minimum.reduceat((a * sh + b) % MERSENNE_P, starts)
+    return keep, sigs.T
+
+
+def _shingle_set_batch(texts) -> "tuple[np.ndarray, np.ndarray, np.ndarray]":
+    """``(keep, offsets, values)`` of one batch: the kept-doc mask and,
+    as list offsets into ``values``, each kept doc's sorted distinct
+    62-bit shingle hashes; see :func:`shingle_hash_sets`."""
+    import numpy as np
+
+    th, bounds = _batch_token_hashes(texts)
+    sh1, starts, keep = _trigram_windows(th, bounds, MERSENNE_P, _TRIO_K)
+    sh2, _, _ = _trigram_windows(th, bounds, _P2, _TRIO_K2)
+    wide = (sh1 << 31) + sh2
+    doc = np.repeat(np.arange(len(starts)), np.diff(np.r_[starts, len(wide)]))
+    # doc is already sorted, so the lexsort keeps it in place and
+    # orders each doc's run by hash; a run's first element is distinct
+    wide = wide[np.lexsort((wide, doc))]
+    first = np.ones(len(wide), dtype=bool)
+    first[1:] = wide[1:] != wide[:-1]
+    first[starts] = True
+    offsets = np.zeros(len(starts) + 1, dtype=np.int32)
+    np.cumsum(np.bincount(doc[first], minlength=len(starts)), out=offsets[1:])
+    return keep, offsets, wide[first]
+
+
+def shingle_hash_sets(docs: DataFrame) -> DataFrame:
     """Per-doc SORTED distinct 62-bit shingle-hash array + set size.
 
-    Map-only Arrow kernel (token hashing via :func:`_batch_token_codes`
-    — factorize + md5 on memo-missing uniques only), each n-gram mixes
-    to TWO independent 31-bit values
-    (two constant families, two moduli) packed into one int64. The
+    One map-only Arrow kernel (:func:`_shingle_set_batch`): token
+    hashing via :func:`_batch_token_codes` (factorize + md5 on
+    memo-missing uniques only), then :func:`_trigram_windows` twice —
+    each trigram mixes to TWO independent 31-bit values (two constant
+    families, two moduli) packed into one int64 — and one batch
+    ``np.lexsort`` over (doc, hash) whose first-of-run mask gives every
+    doc's sorted distinct set, returned as one Arrow ListArray. The
     output is the exact-set surface the MinHash verification intersects
     — int64 arrays, never string arrays, and never an exploded-shingle
     shuffle. |set| equals the distinct STRING shingle count unless both
     31-bit mixes collide for two distinct shingles of one doc
     (P ~ m^2 / 2^63 per doc — negligible even for megadocs), which is
     why the DuckDB string-set oracle stays hash-exact over this path.
+    Docs with fewer than 3 tokens have no shingles and emit no row.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    ks1 = _mix_constants(n)
-    ks2 = _mix_constants2(n)
+    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        for rb in batches:
+            keep, offsets, values = _shingle_set_batch(rb.column("text").to_pylist())
+            if keep.any():
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        rb.column("doc_id").filter(pa.array(keep)),
+                        pa.ListArray.from_arrays(pa.array(offsets), pa.array(values)),
+                        pa.array(np.diff(offsets).astype(np.int64)),
+                    ],
+                    ["doc_id", "sh", "sz"],
+                )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            th_all, bounds = _batch_token_hashes(pdf["text"])
-            th1_all = th_all % MERSENNE_P
-            th2_all = th_all % _P2
-            ids, sets, sizes = [], [], []
-            for d, doc_id in enumerate(pdf["doc_id"]):
-                lo, hi = bounds[d], bounds[d + 1]
-                m = hi - lo - n + 1
-                if m <= 0:
-                    continue
-                th1 = th1_all[lo:hi]
-                th2 = th2_all[lo:hi]
-                sh1 = np.zeros(m, dtype=np.int64)
-                sh2 = np.zeros(m, dtype=np.int64)
-                for j in range(n):
-                    sh1 = (sh1 + th1[j : j + m] * ks1[j]) % MERSENNE_P
-                    sh2 = (sh2 + th2[j : j + m] * ks2[j]) % _P2
-                wide = np.unique((sh1 << 31) + sh2)
-                ids.append(doc_id)
-                sets.append(wide)
-                sizes.append(len(wide))
-            if ids:  # empty float64 frames can't cast to array<long>
-                yield pd.DataFrame({"doc_id": ids, "sh": sets, "sz": sizes})
-
-    return docs.select("doc_id", "text").mapInPandas(
+    return docs.select("doc_id", "text").mapInArrow(
         run, schema="doc_id long, sh array<long>, sz long"
     )
 
 
-def minhash_signatures(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """64-perm MinHash signature per doc (array<long>).
 
     Base shingle hash = md5 of each token (vectorized via
-    :func:`_batch_token_codes`) mixed across the n-gram with fixed odd
-    constants, mod (2^31 - 1); permutations
+    :func:`_batch_token_codes`) mixed across the word trigram with fixed
+    odd constants, mod (2^31 - 1); permutations
     h_i = (a_i * h + b_i) mod (2^31 - 1), minimum over the doc's
     DISTINCT shingles.
 
-    Shape: one map-only Arrow kernel — token hashing is factorized, and
-    for the trigram default the whole batch vectorizes with NO per-doc
-    Python loop: one fused shingle mix over the concatenated token-hash
-    array, one gather of each doc's valid window, and 64
+    Shape: one map-only Arrow kernel (:func:`_minhash_batch`) with NO
+    per-doc Python loop: the fused trigram mix of
+    :func:`_trigram_windows` over the whole batch, then 64
     ``np.minimum.reduceat`` passes over doc boundaries (min over a
-    MULTISET equals min over the set, so the old per-doc ``np.unique``
-    was unnecessary — dropping it is what makes the segmented-min form
-    possible; values are bit-identical). Output rides back as one Arrow
-    ListArray built from the flat signature buffer. The hash choice
-    only affects CANDIDATE recall — emitted pairs are always verified
-    with exact Jaccard — and the recall tests/oracles gate that (docs
-    with fewer than n tokens have no shingles and emit no signature, as
-    before).
+    MULTISET equals min over the set, so no per-doc ``np.unique`` is
+    needed). Output rides back as one Arrow ListArray built from the
+    flat signature buffer. The hash choice only affects CANDIDATE
+    recall — emitted pairs are always verified with exact Jaccard — and
+    the recall tests/oracles gate that (docs with fewer than 3 tokens
+    have no shingles and emit no signature).
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
     import pyarrow as pa
 
-    A = np.array(_PERM_A, dtype=np.int64)
-    B = np.array(_PERM_B, dtype=np.int64)
-    ks = _mix_constants(n)
-
-    if n == 3:
-
-        def run3(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-            for rb in batches:
-                names = rb.schema.names
-                texts = rb.column(names.index("text")).to_pylist()
-                dids = rb.column(names.index("doc_id")).to_numpy(zero_copy_only=False)
-                th_all, bounds = _batch_token_hashes(texts)
-                th_all = th_all % MERSENNE_P
-                m = np.diff(bounds) - (n - 1)  # shingles per doc
-                keep = m > 0
-                if not keep.any():
-                    continue
-                # fused trigram mix over the WHOLE batch (sum < 2^62:
-                # the pinned constants keep products small enough); the
-                # 2 positions straddling each doc boundary are junk and
-                # excluded by the gather below.
-                sh_all = (
-                    th_all[:-2] * ks[0] + th_all[1:-1] * ks[1] + th_all[2:] * ks[2]
-                ) % MERSENNE_P
-                mk = m[keep]
-                out_starts = np.zeros(len(mk), dtype=np.int64)
-                np.cumsum(mk[:-1], out=out_starts[1:])
-                idx = (
-                    np.arange(int(mk.sum()), dtype=np.int64)
-                    - np.repeat(out_starts, mk)
-                    + np.repeat(bounds[:-1][keep], mk)
-                )
-                shv = sh_all[idx]
-                sigs = np.empty((MINHASH_PERMS, len(mk)), dtype=np.int64)
-                for i in range(MINHASH_PERMS):
-                    sigs[i] = np.minimum.reduceat(
-                        (A[i] * shv + B[i]) % MERSENNE_P, out_starts
-                    )
-                offsets = pa.array(
-                    np.arange(len(mk) + 1, dtype=np.int32) * MINHASH_PERMS,
-                    type=pa.int32(),
-                )
-                sig_col = pa.ListArray.from_arrays(
-                    offsets, pa.array(sigs.T.reshape(-1), type=pa.int64())
-                )
+    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        for rb in batches:
+            keep, sigs = _minhash_batch(rb.column("text").to_pylist())
+            if keep.any():
+                offsets = np.arange(len(sigs) + 1, dtype=np.int32) * MINHASH_PERMS
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(dids[keep], type=pa.int64()), sig_col],
+                    [
+                        rb.column("doc_id").filter(pa.array(keep)),
+                        pa.ListArray.from_arrays(
+                            pa.array(offsets), pa.array(sigs.reshape(-1))
+                        ),
+                    ],
                     ["doc_id", "sig"],
                 )
 
-        return docs.select("doc_id", "text").mapInArrow(
-            run3, schema="doc_id long, sig array<long>"
-        )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            th_all, bounds = _batch_token_hashes(pdf["text"])
-            th_all = th_all % MERSENNE_P
-            ids, sigs = [], []
-            for d, doc_id in enumerate(pdf["doc_id"]):
-                lo, hi = bounds[d], bounds[d + 1]
-                if hi - lo < n:
-                    continue
-                th = th_all[lo:hi]
-                # general n-gram mix: sum_j k_j * th[j:], mod p each
-                # step so partial sums stay < 2^62 under int64
-                m = hi - lo - n + 1
-                sh = np.zeros(m, dtype=np.int64)
-                for j, kj in enumerate(ks):
-                    sh = (sh + th[j : j + m] * kj) % MERSENNE_P
-                sig = ((A[:, None] * sh[None, :] + B[:, None]) % MERSENNE_P).min(axis=1)
-                ids.append(doc_id)
-                sigs.append(sig.tolist())
-            if ids:  # empty float64 frames can't cast to array<long>
-                yield pd.DataFrame({"doc_id": ids, "sig": sigs})
-
-    return docs.select("doc_id", "text").mapInPandas(
+    return docs.select("doc_id", "text").mapInArrow(
         run, schema="doc_id long, sig array<long>"
     )
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame, threshold: float = JACCARD_THRESHOLD, n: int = SHINGLE_N
-) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame, threshold: float = JACCARD_THRESHOLD) -> DataFrame:
     """MinHash-LSH candidate generation + exact-Jaccard verification.
 
     Banding: 16 bands of 4 rows; candidates = pairs sharing any band
@@ -428,7 +390,7 @@ def minhash_lsh_pairs(
     # computed only for candidate docs, so MEMORY_AND_DISK storage is
     # tiny next to the corpus and recomputable on executor loss (unlike
     # a checkpoint). Without this, the plan ran the minhash kernel up
-    # to 6x and the shingle kernel 2x (13 MapInPandas nodes). The
+    # to 6x and the shingle kernel 2x. The
     # persists are LAZY: every consumer sits under the caller's single
     # action, whose first reader materializes each cached partition
     # (concurrent readers block on the per-partition cache lock), so an
@@ -436,7 +398,7 @@ def minhash_lsh_pairs(
     # measured 3.1 -> 2.5 s on the 50k-doc bench dropping three of them.
     from pyspark import StorageLevel
 
-    sig = minhash_signatures(docs, n).persist(StorageLevel.MEMORY_AND_DISK)
+    sig = minhash_signatures(docs).persist(StorageLevel.MEMORY_AND_DISK)
     rows_per_band = MINHASH_PERMS // LSH_BANDS
     # ONE packed 64-bit join key per (doc, band): xxhash64 over (band
     # index, the band's signature rows) — the band index rides inside
@@ -480,7 +442,7 @@ def minhash_lsh_pairs(
     cd = cand.select(F.col("doc_a").alias("doc_id")).union(
         cand.select(F.col("doc_b").alias("doc_id"))
     )  # no distinct needed: left-semi dedups the probe side itself
-    sets = shingle_hash_sets(docs.join(cd, "doc_id", "left_semi"), n).persist(
+    sets = shingle_hash_sets(docs.join(cd, "doc_id", "left_semi")).persist(
         StorageLevel.MEMORY_AND_DISK
     )  # joined twice below (doc_a and doc_b sides)
     joined = (
@@ -602,8 +564,6 @@ def simhash(docs: DataFrame, bits: int = 60) -> DataFrame:
     the bench (10.4 s -> ~1 s at 20k docs); value-identical by
     construction (integer arithmetic throughout).
     """
-    from typing import Iterator
-
     import pandas as pd
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

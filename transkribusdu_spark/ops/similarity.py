@@ -20,7 +20,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import SEED
@@ -162,10 +162,6 @@ IVF_PROBE = 4
 IVF_ITERS = 3
 
 
-def embeddings_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
 def knn_bruteforce(
     embeddings: DataFrame, queries: DataFrame, k: int = 5, include_self: bool = False
 ) -> DataFrame:
@@ -219,31 +215,16 @@ def _neardup_hyperplanes(dim: int, n_tables: int = NEARDUP_TABLES,
     return rng.standard_normal((n_tables, n_planes, dim))
 
 
-def _bucket_expr(vcol, planes: np.ndarray):
-    """Sign-bit bucket id for one table: bit p = 1 iff dot(v, plane_p) > 0.
-    Declarative fold form — kept as the semantics reference; the batch
-    path below computes the same signs with one Arrow matmul."""
-    bits = []
-    for p in range(planes.shape[0]):
-        w = planes[p].tolist()
-        dot = F.aggregate(
-            F.zip_with(vcol, F.array(*[F.lit(float(x)) for x in w]), lambda a, b: a * b),
-            F.lit(0.0),
-            lambda s, v: s + v,
-        )
-        bits.append(F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0)))
-    return sum(bits[1:], bits[0])
-
-
 def _buckets_udf(planes: np.ndarray):
     """All tables' bucket ids in ONE vectorized kernel: a (batch x dim)
     @ (dim x tables*planes) matmul, sign bits packed per table. Replaces
     tables*planes interpreted Catalyst folds per row (~170 for the deep
     near-dup config) with one Arrow batch op — the throughput path.
 
-    Value safety vs the fold form: a sign can only differ if |dot| is
+    Value safety vs an exact dot: a sign can only differ if |dot| is
     within float-summation noise (~1e-13) of zero; measured min |dot|
-    across all configs and SFs is >= 8e-7 (tests lock equality).
+    across all configs and SFs is >= 8e-7. The DuckDB oracles
+    ``ann_lsh`` and ``embedding_near_dups`` gate the buckets end to end.
     """
     n_tables, n_planes, dim = planes.shape
     flat = planes.reshape(-1, dim).T.copy()  # (dim, tables*planes)
@@ -261,19 +242,12 @@ def _buckets_udf(planes: np.ndarray):
     return f
 
 
-def _explode_buckets(df: DataFrame, vcol: str, id_cols: list[str], planes: np.ndarray) -> DataFrame:
-    """id_cols + (tbl, bkt) rows, one per LSH table."""
-    return df.select(
-        *id_cols, F.posexplode(_buckets_udf(planes)(F.col(vcol))).alias("tbl", "bkt")
-    )
-
-
 def _cells_udf(cents: list[list[float]]):
     """argmin-cell assignment for a batch of vectors in one Arrow kernel:
     squared L2 to every broadcast centroid via (n x k x d) numpy
-    broadcasting, ``np.argmin`` ties -> smallest index (same tie rule as
-    the struct-array_min fold form ``_cell_expr``, kept below as the
-    semantics reference). Replaces k*d interpreted fold ops per row."""
+    broadcasting, ``np.argmin`` ties -> smallest index. Replaces k*d
+    interpreted fold ops per row; the DuckDB oracle ``ann_ivf`` gates
+    the cell assignment end to end."""
     c = np.asarray(cents, dtype=np.float64)  # (k, d)
 
     @F.pandas_udf("int")
@@ -296,16 +270,6 @@ def _sqdist_expr(vcol, center: list[float]):
         F.lit(0.0),
         lambda s, v: s + v,
     )
-
-
-def _cell_expr(vcol, cents: list[list[float]]):
-    """argmin cell index over centroid literals; ties -> smallest index
-    (struct array_min compares dist first, then index)."""
-    structs = [
-        F.struct(_sqdist_expr(vcol, c).alias("d"), F.lit(ci).alias("ci"))
-        for ci, c in enumerate(cents)
-    ]
-    return F.array_min(F.array(*structs)).getField("ci")
 
 
 def ivf_fit(
@@ -626,28 +590,6 @@ def _arrow_score_fn(k: int):
                          "cosine": pa.array(cs, pa.float64())})
 
     return score
-
-
-def lsh_candidate_pairs(
-    embeddings: DataFrame,
-    n_tables: int = NEARDUP_TABLES,
-    n_planes: int = NEARDUP_PLANES,
-    dim: int = 64,
-) -> DataFrame:
-    """Symmetric LSH candidate pairs (vec_a < vec_b) for near-duplicate
-    detection: vectors sharing any table's bucket. The distinct is on the
-    ID pair only — vectors are re-joined by the caller, so the dedup
-    shuffle never carries float arrays."""
-    planes = _neardup_hyperplanes(dim, n_tables, n_planes)
-    base = embeddings.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    b_rows = _explode_buckets(base, "v", ["vec_id"], planes)
-    return (
-        b_rows.alias("x")
-        .join(b_rows.alias("y"), ["tbl", "bkt"])
-        .filter(F.col("x.vec_id") < F.col("y.vec_id"))
-        .select(F.col("x.vec_id").alias("vec_a"), F.col("y.vec_id").alias("vec_b"))
-        .distinct()
-    )
 
 
 def ann_lsh(

@@ -4,11 +4,15 @@ This is the byte-identical surface (reference reading-order assembly:
 sort by (page, y, x) ``graph/Block.py:309-318`` +
 ``spm/spmPageVerticals.py:374-376``; text join ``graph/Graph_DOM.py:166-195``).
 
-Spark-first: the whole stage is a window function + groupBy — no Python
-UDF at all. Span offsets are a running sum over the canonical order
-(start_i = sum_{j<i}(len_j + 1) for the single-space join), so the stage
-stays inside whole-stage codegen and scales as an ordinary shuffle-once
-aggregation keyed on url.
+Two forms, one output. Over a nodes table (:func:`extract_text_spans`)
+the stage is a window function + groupBy with no Python UDF: span
+offsets are a running sum over the canonical order
+(start_i = sum_{j<i}(len_j + 1) for the single-space join), so it stays
+inside whole-stage codegen and scales as an ordinary shuffle-once
+aggregation keyed on url. Over raw pages (:func:`extract_with_status`,
+:func:`extract_from_pages`) one fused map-only Python kernel parses each
+document and assembles the same text and spans in place, with no
+shuffle and a parse status per document.
 """
 
 from __future__ import annotations

@@ -13,8 +13,10 @@ import os
 from pyspark.sql import SparkSession
 
 # Shuffle partitions: on a real cluster this is sized to ~2-3x total cores
-# and AQE coalesces down. local[32] tests use 32.
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+# and AQE coalesces down. local[32] tests use 32. Every key of
+# engine_conf is overridable per session (build_session's
+# shuffle_partitions= / extra_conf=, spark-submit --conf).
+DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
 def engine_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
@@ -39,12 +41,8 @@ def engine_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
         # setup over real batches (guide §4.2; measured: simhash pairs
         # 1.55 -> 1.26 s at 50k docs from this alone — 512-row batches
         # were tuned for html payloads and starved every text kernel).
-        "spark.sql.execution.arrow.maxRecordsPerBatch": os.environ.get(
-            "SPARK_GRAFT_ARROW_ROWS", "10000"
-        ),
-        "spark.sql.execution.arrow.maxBytesPerBatch": os.environ.get(
-            "SPARK_GRAFT_ARROW_BYTES", str(32 * 1024 * 1024)
-        ),
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        "spark.sql.execution.arrow.maxBytesPerBatch": str(32 * 1024 * 1024),
         # Broadcast joins for small dims (fitted params, host tables).
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # Scan split sizing for a PYTHON-PARSE-BOUND engine: the hot
@@ -58,12 +56,8 @@ def engine_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
         # corpus sizes; at 100 TB both settings are irrelevant to wave
         # shape (hundreds of splits per executor either way) and 32 MB
         # still means ~30 s parse tasks — well above scheduling noise.
-        "spark.sql.files.maxPartitionBytes": os.environ.get(
-            "SPARK_GRAFT_MAX_PARTITION_BYTES", str(32 * 1024 * 1024)
-        ),
-        "spark.sql.files.openCostInBytes": os.environ.get(
-            "SPARK_GRAFT_OPEN_COST", str(1024 * 1024)
-        ),
+        "spark.sql.files.maxPartitionBytes": str(32 * 1024 * 1024),
+        "spark.sql.files.openCostInBytes": str(1024 * 1024),
         "spark.ui.enabled": "false",
     }
 
@@ -113,7 +107,3 @@ def submit_session(app_name: str = "transkribusdu_spark") -> SparkSession:
         if not submitted.contains(k):
             b = b.config(k, v)
     return b.getOrCreate()
-
-
-def get_or_create(spark: SparkSession | None = None) -> SparkSession:
-    return spark or build_session()

@@ -135,17 +135,13 @@ def parse_dsxml_doc(url: str, xml: bytes) -> list[dict]:
     return rows
 
 
-def parse_dsxml_pages(
-    pages: DataFrame, payload_col: str = "html", on_error: str = "skip"
-) -> DataFrame:
+def parse_dsxml_pages(pages: DataFrame, payload_col: str = "html") -> DataFrame:
     """pages with DS-XML payloads -> standard nodes table (map-only).
 
-    ``on_error='skip'`` (default) drops malformed documents — audit them
-    via :func:`parse_dsxml_errors`, a second pass over the payloads
-    (the PageXML path reports its failures from the production pass
-    instead: ``pipeline.extract.extract_with_status``); ``'raise'`` is
-    strict mode."""
-    strict = on_error == "raise"
+    Malformed payloads are skipped: they yield no nodes and no audit
+    row. A job that reads DS-XML should first move this source onto
+    the PageXML path's status contract (``pipeline.parse.parse_batch``:
+    one loop, a status per document, no second pass)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         names = [f.name for f in NODES_SCHEMA.fields]
@@ -155,8 +151,6 @@ def parse_dsxml_pages(
                 try:
                     rows = parse_dsxml_doc(url, bytes(payload))
                 except Exception:
-                    if strict:
-                        raise
                     continue
                 for r in rows:
                     for n in names:
@@ -164,25 +158,3 @@ def parse_dsxml_pages(
             yield pd.DataFrame(out)
 
     return pages.select("url", payload_col).mapInPandas(run, schema=NODES_SCHEMA)
-
-
-def parse_dsxml_errors(pages: DataFrame, payload_col: str = "html") -> DataFrame:
-    """Audit channel: one row per DS-XML document that fails to parse
-    (url, error), by parsing every payload again."""
-    import pyspark.sql.types as T
-
-    schema = T.StructType(
-        [T.StructField("url", T.StringType()), T.StructField("error", T.StringType())]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            bad: list[dict] = []
-            for url, payload in zip(pdf["url"], pdf[payload_col]):
-                try:
-                    parse_dsxml_doc(url, bytes(payload))
-                except Exception as e:
-                    bad.append({"url": url, "error": f"{type(e).__name__}: {e}"})
-            yield pd.DataFrame(bad, columns=["url", "error"])
-
-    return pages.select("url", payload_col).mapInPandas(run, schema=schema)
