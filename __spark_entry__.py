@@ -414,7 +414,8 @@ def _q_textstats_all(spark, sf_dir):
 def _q_box_cuts(spark, sf_dir):
     """C8 cut/partition queries (reference util/Shape.py:300-614): every
     valid full-width horizontal cut per page with its half-plane
-    partition sizes, validated via BoxPartition interval algebra."""
+    partition sizes, from the per-page gap scan of ``page_cut_rows``
+    (the DuckDB oracle runs the same scan as window functions)."""
     from transkribusdu_spark.functions.shapecut import valid_horizontal_cuts
 
     nodes = parse_pages(pages_from_documents(spark, sf_dir))

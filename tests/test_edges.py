@@ -87,62 +87,62 @@ def _pairs(edges, etype):
 
 def test_stacked_blocks_occlusion():
     # A above B above C, same x-range: A-B and B-C, never A-C (occluded).
-    e = doc_edges(_nodes([
+    e = pd.DataFrame(doc_edges(_nodes([
         ("A", 1, 100, 100, 500, 150),
         ("B", 1, 100, 200, 500, 250),
         ("C", 1, 100, 300, 500, 350),
-    ]))
+    ])))
     assert _pairs(e, "V") == {("A", "B"), ("B", "C")}
 
 
 def test_partial_occlusion_keeps_visible_slice():
     # B covers only the left half between A and C: A sees B (left) and C
     # (right half remains visible through the mask).
-    e = doc_edges(_nodes([
+    e = pd.DataFrame(doc_edges(_nodes([
         ("A", 1, 100, 100, 500, 150),
         ("B", 1, 100, 200, 300, 250),
         ("C", 1, 100, 300, 500, 350),
-    ]))
+    ])))
     v = _pairs(e, "V")
     assert ("A", "B") in v and ("A", "C") in v and ("B", "C") in v
 
 
 def test_full_occlusion_by_two_halves():
     # B and C side by side fully cover A's span: D below is not visible.
-    e = doc_edges(_nodes([
+    e = pd.DataFrame(doc_edges(_nodes([
         ("A", 1, 100, 100, 500, 150),
         ("B", 1, 100, 200, 300, 250),
         ("C", 1, 300, 200, 500, 250),
         ("D", 1, 100, 300, 500, 350),
-    ]))
+    ])))
     v = _pairs(e, "V")
     assert ("A", "B") in v and ("A", "C") in v
     assert ("A", "D") not in v
 
 
 def test_horizontal_edges():
-    e = doc_edges(_nodes([
+    e = pd.DataFrame(doc_edges(_nodes([
         ("L", 1, 100, 100, 200, 300),
         ("R", 1, 300, 100, 400, 300),
-    ]))
+    ])))
     assert _pairs(e, "H") == {("L", "R")}
     assert _pairs(e, "V") == set()
 
 
 def test_no_edge_without_projection_overlap():
     # Diagonal blocks: no x-overlap, no y-overlap -> no V/H edges.
-    e = doc_edges(_nodes([
+    e = pd.DataFrame(doc_edges(_nodes([
         ("A", 1, 100, 100, 200, 200),
         ("B", 1, 300, 300, 400, 400),
-    ]))
+    ])))
     assert len(e[e.etype.isin(["V", "H"])]) == 0
 
 
 def test_edge_attributes():
-    e = doc_edges(_nodes([
+    e = pd.DataFrame(doc_edges(_nodes([
         ("A", 1, 100, 100, 500, 150),
         ("B", 1, 200, 250, 400, 300),
-    ]))
+    ])))
     r = e[e.etype == "V"].iloc[0]
     assert r.length == 100.0  # gap 250-150
     assert r.overlap == 200.0  # [200,400]
@@ -152,11 +152,11 @@ def test_edge_attributes():
 
 def test_cross_page_edges_on_iou():
     # Same box position on page 1 and 2 -> CP edge; disjoint -> none.
-    e = doc_edges(_nodes([
+    e = pd.DataFrame(doc_edges(_nodes([
         ("h1", 1, 100, 40, 500, 80),
         ("h2", 2, 100, 40, 500, 80),
         ("x2", 2, 600, 600, 700, 700),
-    ]))
+    ])))
     assert _pairs(e, "CP") == {("h1", "h2")}
 
 
@@ -269,8 +269,8 @@ def _two_page_nodes(garbage):
 def test_non_finite_boxes_get_no_edges_and_hide_nothing():
     clean, dirty = _two_page_nodes(False), _two_page_nodes(True)
     for mode in ("g1", "g2", "g1o"):
-        want = doc_edges(clean, mode=mode)
-        got = doc_edges(dirty, mode=mode)
+        want = pd.DataFrame(doc_edges(clean, mode=mode))
+        got = pd.DataFrame(doc_edges(dirty, mode=mode))
         assert len(want) and {"V", "H", "CP"} <= set(want.etype)
         pd.testing.assert_frame_equal(got.reset_index(drop=True), want)
 

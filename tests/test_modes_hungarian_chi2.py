@@ -21,7 +21,7 @@ def _nodes(rows):
 
 
 def _pairs(edges, etype):
-    return {(r.src, r.dst) for r in edges.itertuples() if r.etype == etype}
+    return {(s, d) for s, d, t in zip(edges["src"], edges["dst"], edges["etype"]) if t == etype}
 
 
 def test_g2_visible_overlap_only():
@@ -32,8 +32,8 @@ def test_g2_visible_overlap_only():
         ("B", 100, 200, 300, 250),
         ("C", 100, 300, 500, 350),
     ])
-    g1 = doc_edges(layout, mode="g1")
-    g2 = doc_edges(layout, mode="g2")
+    g1 = pd.DataFrame(doc_edges(layout, mode="g1"))
+    g2 = pd.DataFrame(doc_edges(layout, mode="g2"))
     ac1 = [r for r in g1.itertuples() if r.etype == "V" and r.src == "A" and r.dst == "C"][0]
     ac2 = [r for r in g2.itertuples() if r.etype == "V" and r.src == "A" and r.dst == "C"][0]
     assert ac1.overlap == 400.0  # full geometric x-overlap
@@ -51,9 +51,9 @@ def test_g1o_overlapping_boxes_get_single_orientation():
         ("A", 100, 100, 300, 200),
         ("B", 150, 150, 350, 260),
     ])
-    g1 = doc_edges(layout, mode="g1")
+    g1 = pd.DataFrame(doc_edges(layout, mode="g1"))
     assert len(g1[g1.etype.isin(["V", "H"])]) == 0
-    g1o = doc_edges(layout, mode="g1o")
+    g1o = pd.DataFrame(doc_edges(layout, mode="g1o"))
     vh = g1o[g1o.etype.isin(["V", "H"])]
     assert len(vh) == 1
     r = vh.iloc[0]

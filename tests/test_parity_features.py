@@ -50,16 +50,16 @@ def test_overlapping_boxes_g1_vs_g1o_vs_shrink():
             "x2": [500.0, 500.0], "y2": [300.0, 500.0],
         }
     )
-    g1 = doc_edges(pdf, mode="g1")
+    g1 = pd.DataFrame(doc_edges(pdf, mode="g1"))
     assert len(g1[g1.etype == "V"]) == 0, "g1 should miss the overlapping pair"
-    g1o = doc_edges(pdf, mode="g1o")
+    g1o = pd.DataFrame(doc_edges(pdf, mode="g1o"))
     assert len(g1o[g1o.etype == "V"]) == 1, "g1o should tolerate the overlap"
     # shrink: dy = max(200*0.066, min(20, 200/3)) = 20 -> gap restored
     sh = pdf.copy()
     for c, d in (("y1", 1), ("y2", -1)):
         h = pdf["y2"] - pdf["y1"]
         sh[c] = (pdf[c] + d * np.maximum(h * 0.066, np.minimum(20.0, h / 3.0))).round()
-    g1s = doc_edges(sh, mode="g1")
+    g1s = pd.DataFrame(doc_edges(sh, mode="g1"))
     assert len(g1s[g1s.etype == "V"]) == 1, "shrunk boxes should separate"
 
 
@@ -73,10 +73,10 @@ def test_g2_true_masking_overlap_value():
             "x2": [400.0, 400.0, 400.0], "y2": [50.0, 150.0, 250.0],
         }
     )
-    g2 = doc_edges(pdf, mode="g2")
+    g2 = pd.DataFrame(doc_edges(pdf, mode="g2"))
     ac = g2[(g2.src == "a") & (g2.dst == "c")]
     assert len(ac) == 1 and float(ac.overlap.iloc[0]) == 200.0  # left half only
-    g1 = doc_edges(pdf, mode="g1")
+    g1 = pd.DataFrame(doc_edges(pdf, mode="g1"))
     ac1 = g1[(g1.src == "a") & (g1.dst == "c")]
     assert len(ac1) == 1 and float(ac1.overlap.iloc[0]) == 400.0  # full projection
 
@@ -214,6 +214,31 @@ def test_boxpartition_on_table_fixture_rows():
             assert bp.is_valid_cut(0, mid, 1300, mid), (r0, mid)
             n_valid += 1
     assert n_valid >= 1
+
+
+def test_page_cut_rows_pass_boxpartition_on_fixture_pages(sf_dir):
+    """Every cut the gap scan behind valid_horizontal_cuts emits is a
+    valid full-width cut under the BoxPartition interval algebra, on
+    every page of the sf0.01 fixture documents."""
+    import os
+
+    from transkribusdu_spark.functions.shapecut import BoxPartition, page_cut_rows
+    from transkribusdu_spark.pipeline.parse import parse_doc_cols
+    from transkribusdu_spark.synth import render_doc
+
+    sf = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01")
+    docs = pd.read_parquet(f"{sf}/documents.parquet", columns=["doc_id", "text", "lang"])
+    n_cuts = 0
+    for r in docs.itertuples():
+        url, _, html = render_doc(int(r.doc_id), r.text, r.lang)
+        nodes = pd.DataFrame(parse_doc_cols(url, html))
+        for _, page in nodes.groupby("page_num"):
+            boxes = list(zip(page.x1, page.y1, page.x2, page.y2))
+            bp, w = BoxPartition(boxes), float(page.page_w.iloc[0])
+            for cut in page_cut_rows(boxes):
+                assert bp.is_valid_cut(0.0, cut["cut_y"], w, cut["cut_y"]), (url, cut)
+                n_cuts += 1
+    assert n_cuts > len(docs)
 
 
 def test_edge_sequentiality_f11(spark):

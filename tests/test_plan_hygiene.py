@@ -148,6 +148,18 @@ def test_minhash_lsh_pairs_two_arrow_kernels_no_pandas(spark, sf_dir):
     assert len(kernels) == 2, kernels
 
 
+def test_conjugate_cluster_graph_stages_on_arrow_harness(spark, sf_dir):
+    """Edges and clustering cross into Python through the one Arrow
+    per-document harness (groupBy/cogroup on url + applyInArrow); a
+    per-group pandas UDF, the shape it replaced, must not come back."""
+    from transkribusdu_spark.api import conjugate_cluster
+
+    plan = _physical(conjugate_cluster(pages_from_documents(spark, sf_dir)))
+    assert "FlatMapGroupsInPandas" not in plan
+    assert "FlatMapCoGroupsInPandas" not in plan
+    assert "FlatMapGroupsInArrow" in plan and "FlatMapCoGroupsInArrow" in plan
+
+
 def test_url_dedup_rows_single_shuffle_jvm_only(spark, sf_dir):
     """URL snapshot dedup must shuffle exactly once (on canonical_url)
     — the row_number pick and the snapshot count are windows sharing

@@ -5,11 +5,12 @@ count, column names, and order-insensitive values."""
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod
 from transkribusdu_spark.session import build_session
 

@@ -7,6 +7,10 @@ every queried object is an axis-aligned box and every cut is a straight
 segment, so the queries reduce to closed-form interval arithmetic,
 fully vectorized over numpy arrays. Y axis points down (screen
 coordinates), matching the reference's above = smaller y.
+
+The distributed cut query (:func:`valid_horizontal_cuts`) runs the
+per-page gap scan in one Arrow kernel call per document behind one url
+shuffle (``pipeline.perdoc.per_url``).
 """
 
 from __future__ import annotations
@@ -74,49 +78,36 @@ class BoxPartition:
         return t.below_line(ya, xa, yb, xb)
 
 
-def page_cut_rows(boxes: list[tuple[float, float, float, float]], page_w: float) -> list[dict]:
+def page_cut_rows(boxes: list[tuple[float, float, float, float]]) -> list[dict]:
     """All valid full-width horizontal cuts for one page's boxes: cut
     y = midpoint of every gap in the running union of y-intervals (sort
     by y1, running max y2). The partition is counted FROM THE GAP SCAN
     itself — every earlier box ends above the gap, every later box
     starts below it, so ``n_above = i`` positionally, exactly the
     window-function gap scan the DuckDB oracle runs (a box lying
-    outside the page's x-range counts like any other; the previous
-    half-plane count excluded it and could diverge from the oracle).
-    Each row carries a ``check_ok`` cross-check against the
-    :meth:`BoxPartition.is_valid_cut` interval algebra. The production
-    query emits cut rows regardless (the oracle's gap scan defines the
-    contract) and never raises inside an executor; disagreements are
-    observable via the separate :func:`cut_check_failures` audit pass,
-    which re-runs this per-page scan over a nodes table (no document
-    is parsed again)."""
+    outside the page's x-range counts like any other). Every cut passes
+    :meth:`BoxPartition.is_valid_cut` across the page width; the test
+    suite holds the two formulations to that agreement."""
     bs = sorted(boxes, key=lambda b: (b[1], b[3], b[0]))  # by y1, y2, x1
-    bp = BoxPartition([(b[0], b[1], b[2], b[3]) for b in bs])
     n = len(bs)
     out: list[dict] = []
     runmax = None
     for i, b in enumerate(bs):
         if i > 0 and b[1] > runmax:
-            cut_y = (runmax + b[1]) / 2.0
-            out.append(
-                {
-                    "cut_idx": len(out),
-                    "cut_y": cut_y,
-                    "n_above": i,
-                    "n_below": n - i,
-                    "check_ok": bool(bp.is_valid_cut(0.0, cut_y, page_w, cut_y)),
-                }
-            )
+            out.append({"cut_idx": len(out), "cut_y": (runmax + b[1]) / 2.0,
+                        "n_above": i, "n_below": n - i})
         runmax = b[3] if runmax is None else max(runmax, b[3])
     return out
 
 
 def valid_horizontal_cuts(nodes) -> "DataFrame":  # noqa: F821
     """C8 as a distributed query: per (url, page) the valid full-width
-    horizontal cuts with their half-plane partition sizes. Same
-    one-shuffle applyInPandas shape as the edge builder."""
-    import pandas as pd
+    horizontal cuts with their half-plane partition sizes. One url
+    shuffle and one Arrow kernel call per document, like the edge
+    builder (``pipeline.perdoc.per_url``)."""
     from pyspark.sql import types as T
+
+    from ..pipeline.perdoc import per_url
 
     schema = T.StructType(
         [
@@ -129,45 +120,16 @@ def valid_horizontal_cuts(nodes) -> "DataFrame":  # noqa: F821
         ]
     )
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows: list[dict] = []
-        for (url, pnum), g in pdf.groupby(["url", "page_num"]):
-            pw = float(g["page_w"].iloc[0])
-            boxes = list(zip(g["x1"], g["y1"], g["x2"], g["y2"]))
-            for r in page_cut_rows(boxes, pw):
-                r.pop("check_ok")
-                rows.append({"url": url, "page_num": int(pnum), **r})
-        return pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    def run(c):
+        out: dict[str, list] = {f.name: [] for f in schema.fields}
+        for p in np.unique(c["page_num"]):
+            rows = np.flatnonzero(c["page_num"] == p)
+            boxes = list(zip(*(c[k][rows].tolist() for k in ("x1", "y1", "x2", "y2"))))
+            for r in page_cut_rows(boxes):
+                out["url"].append(c["url"][0])
+                out["page_num"].append(int(p))
+                for k, v in r.items():
+                    out[k].append(v)
+        return out
 
-    src = nodes.select("url", "page_num", "page_w", "x1", "y1", "x2", "y2")
-    return src.groupBy("url").applyInPandas(run, schema=schema)
-
-
-def cut_check_failures(nodes) -> "DataFrame":  # noqa: F821
-    """Audit channel: one row per cut whose BoxPartition interval-algebra
-    cross-check disagrees with the gap scan. Empty = the two formulations
-    agree; disagreements surface here instead of failing the whole job
-    inside an executor."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("page_num", T.IntegerType()),
-            T.StructField("cut_y", T.DoubleType()),
-        ]
-    )
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows: list[dict] = []
-        for (url, pnum), g in pdf.groupby(["url", "page_num"]):
-            pw = float(g["page_w"].iloc[0])
-            boxes = list(zip(g["x1"], g["y1"], g["x2"], g["y2"]))
-            for r in page_cut_rows(boxes, pw):
-                if not r["check_ok"]:
-                    rows.append({"url": url, "page_num": int(pnum), "cut_y": r["cut_y"]})
-        return pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    src = nodes.select("url", "page_num", "page_w", "x1", "y1", "x2", "y2")
-    return src.groupBy("url").applyInPandas(run, schema=schema)
+    return per_url(schema, run, nodes.select("url", "page_num", "x1", "y1", "x2", "y2"))

@@ -28,70 +28,36 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-def token_count(docs: DataFrame) -> DataFrame:
-    """Whitespace token count + a BPE-ish subword proxy count
-    (4-char chunks per token, ceil) — both closed-form."""
-    toks = F.split(F.col("text"), " ")
-    n_sub = F.aggregate(
-        toks, F.lit(0), lambda acc, t: acc + F.ceil(F.length(t) / F.lit(4.0)).cast("int")
-    )
-    return docs.select(
-        "doc_id",
-        F.size(toks).cast("long").alias("n_tokens"),
-        n_sub.cast("long").alias("n_subwords"),
-        F.length("text").cast("long").alias("n_chars_seen"),
-    )
-
-
 def language_id(docs: DataFrame) -> DataFrame:
-    """Marker-token language heuristic with deterministic tie-break."""
-    toks = F.split(F.col("text"), " ")
-    scored = docs.select("doc_id", toks.alias("toks"))
-    for lang, markers in LANG_MARKERS.items():
-        cnt = F.size(F.filter("toks", lambda t: t.isin(*markers)))
-        scored = scored.withColumn(f"s_{lang}", cnt)
-    # argmax with lexicographic tiebreak: compare (score, reversed-lang)
-    best = None
-    for lang in sorted(LANG_MARKERS):
-        cand = F.struct(F.col(f"s_{lang}").alias("s"), F.lit(lang).alias("lang"))
-        if best is None:
-            best = cand
-        else:
-            # strictly greater wins; ties keep earlier (lexicographically
-            # smaller) language
-            best = F.when(cand["s"] > best["s"], cand).otherwise(best)
-    return scored.select(
-        "doc_id", best["lang"].alias("pred_lang"), best["s"].cast("long").alias("marker_hits")
-    )
+    """Marker-token language heuristic with deterministic tie-break
+    (the ``pred_lang``/``marker_hits`` columns of :func:`all_stats`)."""
+    return all_stats(docs).select("doc_id", "pred_lang", "marker_hits")
 
 
 def quality_score(docs: DataFrame) -> DataFrame:
     """Deterministic quality heuristics: length, mean token length,
-    type-token ratio, stopword fraction, and a composite score."""
-    toks = F.split(F.col("text"), " ")
-    n = F.size(toks)
-    n_distinct = F.size(F.array_distinct(toks))
-    n_stop = F.size(F.filter(toks, lambda t: t.isin(*EN_STOPWORDS)))
-    mean_len = F.round(
-        F.aggregate(toks, F.lit(0), lambda a, t: a + F.length(t)).cast("double") / n, 6
+    type-token ratio, stopword fraction, and a composite score (the
+    quality columns of :func:`all_stats`)."""
+    return all_stats(docs).select(
+        "doc_id", "n_tokens", "mean_token_len", "type_token_ratio", "stopword_frac", "quality"
     )
-    ttr = F.round(n_distinct.cast("double") / n, 6)
-    stop = F.round(n_stop.cast("double") / n, 6)
-    # Composite as a single integer-rational division (0.3*min(n,100)/100
-    # + 0.3*ttr + 0.4*stop with common denominator 1000n): one double op,
-    # so both engines see the identical IEEE value before rounding —
-    # summing *rounded* components instead lands exactly on .5e-6
-    # boundaries where engine rounding modes disagree.
-    num = (F.lit(3) * F.least(n, F.lit(100)) * n + F.lit(300) * n_distinct + F.lit(400) * n_stop)
-    score = F.round(num.cast("double") / (F.lit(1000.0) * n), 6)
-    return docs.select(
-        "doc_id",
-        n.cast("long").alias("n_tokens"),
-        mean_len.alias("mean_token_len"),
-        ttr.alias("type_token_ratio"),
-        stop.alias("stopword_frac"),
-        score.alias("quality"),
-    )
+
+
+def _gram_hashes(toks: F.Column, n: int) -> F.Column:
+    """The pinned 60-bit md5-prefix hash of every ``n``-token gram of
+    ``toks``, in order (empty below ``n`` tokens): the first 15 hex
+    digits of the md5 of the space-joined gram, as a long, so a SQL
+    engine reproduces it bit-for-bit."""
+    return F.when(
+        F.size(toks) >= n,
+        F.transform(
+            F.sequence(F.lit(0), F.size(toks) - n),
+            lambda i: F.conv(
+                F.substring(F.md5(F.array_join(F.slice(toks, i + 1, n), " ")), 1, 15),
+                16, 10,
+            ).cast("long"),
+        ),
+    ).otherwise(F.array().cast("array<long>"))
 
 
 def repetition_stats(docs: DataFrame, top_n: int = 2, dup_n: int = 5) -> DataFrame:
@@ -113,31 +79,16 @@ def repetition_stats(docs: DataFrame, top_n: int = 2, dup_n: int = 5) -> DataFra
     DuckDB oracle computes the identical hash so a within-doc collision
     appears on both sides).
     """
-
-    def _grams(n: int) -> F.Column:
-        toks = F.split(F.col("text"), " ")
-        return F.when(
-            F.size(toks) >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - n),
-                lambda i: F.conv(
-                    F.substring(
-                        F.md5(F.array_join(F.slice(toks, i + 1, n), " ")), 1, 15
-                    ),
-                    16, 10,
-                ).cast("long"),
-            ),
-        ).otherwise(F.array().cast("array<long>"))
-
+    toks = F.split(F.col("text"), " ")
     top = (
-        docs.select("doc_id", F.explode(_grams(top_n)).alias("gram"))
+        docs.select("doc_id", F.explode(_gram_hashes(toks, top_n)).alias("gram"))
         .groupBy("doc_id", "gram")
         .agg(F.count("*").alias("c"))
         .groupBy("doc_id")
         .agg(F.round(F.max("c") / F.sum("c"), 6).alias("top_ngram_frac"))
     )
     dup = (
-        docs.select("doc_id", F.explode(_grams(dup_n)).alias("gram"))
+        docs.select("doc_id", F.explode(_gram_hashes(toks, dup_n)).alias("gram"))
         .groupBy("doc_id", "gram")
         .agg(F.count("*").alias("c"))
         .groupBy("doc_id")
@@ -169,23 +120,15 @@ def winnowing_fingerprints(docs: DataFrame, k: int = 5, w: int = 4) -> DataFrame
     rightmost position on ties — and emit the distinct selected
     ``(doc_id, pos, hash)`` triples. Guarantees every length-(w+k-1)
     token stretch contributes a fingerprint, at ~2/(w+1) sample rate —
-    the local-similarity fingerprint set that full-text md5
-    (:func:`fingerprint`) cannot give.
+    the local-similarity fingerprint set that the full-text md5 of
+    :func:`all_stats` cannot give.
 
     All built-in array expressions (transform over sequence + array_min
     + reverse/array_position for the rightmost tie), map-only until the
     final distinct, whose shuffle key is (doc_id, pos, 8-byte hash).
     Docs with fewer than ``k`` tokens emit nothing; with fewer than
     ``k + w - 1`` tokens the single window spans every gram."""
-    toks = F.split(F.col("text"), " ")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - k),
-        lambda i: F.conv(
-            F.substring(F.md5(F.array_join(F.slice(toks, i + 1, k), " ")), 1, 15),
-            16, 10,
-        ).cast("long"),
-    )
-    h = F.when(F.size(toks) >= k, grams).otherwise(F.array().cast("array<long>"))
+    h = _gram_hashes(F.split(F.col("text"), " "), k)
     n = F.size(h)
     L = F.least(F.lit(w), n)
     wins = F.when(
@@ -211,37 +154,40 @@ def winnowing_fingerprints(docs: DataFrame, k: int = 5, w: int = 4) -> DataFrame
 
 
 def all_stats(docs: DataFrame) -> DataFrame:
-    """All four per-document textstats surfaces — token counting,
-    language ID, quality scoring, fingerprinting — in ONE map-only
-    select (no joins, one scan of the documents table).
-
-    Column-for-column the SAME expressions as :func:`token_count`,
-    :func:`language_id`, :func:`quality_score` (minus its ``n_tokens``)
-    and :func:`fingerprint`, in the column order their doc_id inner
-    joins produced — so the output is row-identical to the old
-    4-scan/3-join form (the DuckDB oracle still computes the join form)
-    while at corpus scale it reads the text exactly once and shuffles
-    nothing.
+    """Every per-document textstats column in ONE map-only select (one
+    scan of the documents table, no joins, no shuffle): token counts
+    (whitespace tokens, a 4-char-chunk subword proxy, characters), the
+    marker-token language ID, the quality heuristics, and the full-text
+    and normalized (sorted unique tokens) md5 fingerprints. Each
+    statistic is written only here; :func:`language_id` and
+    :func:`quality_score` select their columns. The column order is the
+    one the DuckDB oracle's 4-table join form produces.
     """
     toks = F.split(F.col("text"), " ")
-    # token_count
+    # token counts
     n_sub = F.aggregate(
         toks, F.lit(0), lambda acc, t: acc + F.ceil(F.length(t) / F.lit(4.0)).cast("int")
     )
-    # language_id argmax with lexicographic tiebreak
+    # language ID: argmax with lexicographic tiebreak (strictly greater
+    # wins; ties keep the lexicographically smaller language)
     best = None
     for lang in sorted(LANG_MARKERS):
         markers = LANG_MARKERS[lang]
         cnt = F.size(F.filter(toks, lambda t: t.isin(*markers)))
         cand = F.struct(cnt.alias("s"), F.lit(lang).alias("lang"))
         best = cand if best is None else F.when(cand["s"] > best["s"], cand).otherwise(best)
-    # quality_score
+    # quality
     n = F.size(toks)
     n_distinct = F.size(F.array_distinct(toks))
     n_stop = F.size(F.filter(toks, lambda t: t.isin(*EN_STOPWORDS)))
     mean_len = F.round(
         F.aggregate(toks, F.lit(0), lambda a, t: a + F.length(t)).cast("double") / n, 6
     )
+    # Composite as a single integer-rational division (0.3*min(n,100)/100
+    # + 0.3*ttr + 0.4*stop with common denominator 1000n): one double op,
+    # so both engines see the identical IEEE value before rounding —
+    # summing *rounded* components instead lands exactly on .5e-6
+    # boundaries where engine rounding modes disagree.
     num = (F.lit(3) * F.least(n, F.lit(100)) * n + F.lit(300) * n_distinct + F.lit(400) * n_stop)
     score = F.round(num.cast("double") / (F.lit(1000.0) * n), 6)
     # fingerprint
@@ -261,14 +207,3 @@ def all_stats(docs: DataFrame) -> DataFrame:
         F.md5(norm).alias("md5_normalized"),
     )
 
-
-def fingerprint(docs: DataFrame) -> DataFrame:
-    """Content fingerprints: full-text md5 plus a normalized (sorted
-    unique tokens) fingerprint — the classic dedup canonicalization."""
-    toks = F.split(F.col("text"), " ")
-    norm = F.array_join(F.array_sort(F.array_distinct(toks)), " ")
-    return docs.select(
-        "doc_id",
-        F.md5(F.col("text")).alias("md5_text"),
-        F.md5(norm).alias("md5_normalized"),
-    )

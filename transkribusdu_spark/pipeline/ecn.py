@@ -6,8 +6,9 @@ S.diag(cw).Tᵀ.H, trained with TF1 Adam (``gcn/gcn_models.py:258-296``).
 Re-expressed Spark-first:
 
 - *Inference* (:func:`ecn_score`): per-document numpy forward pass
-  (dense matmuls + neighbour segment-sums) inside a cogrouped Arrow
-  UDF, weights broadcast by closure.
+  (dense matmuls + neighbour segment-sums) in one Arrow kernel call per
+  url-cogrouped document (:func:`.perdoc.per_url`), weights broadcast
+  by closure.
 - *Training* (:func:`train_ecn`): distributed full-batch gradient
   descent — each epoch computes per-document gradients with a numpy
   backprop in the same cogrouped shape, sums them with a posexplode +
@@ -20,13 +21,14 @@ Re-expressed Spark-first:
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Mapping
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .perdoc import per_url
 
 SCORES_SCHEMA = T.StructType(
     [
@@ -111,37 +113,40 @@ def _forward(nf: np.ndarray, src: np.ndarray, dst: np.ndarray, weights: dict,
     return e / e.sum(axis=1, keepdims=True)
 
 
+def _doc_graph(n: Mapping[str, np.ndarray], e: Mapping[str, np.ndarray],
+               feature_cols: list[str]):
+    """One document's graph from its node and edge columns: node ids,
+    the [N,F] feature matrix and, over the edges whose both ends are
+    nodes of the document, src/dst node positions and edge classes."""
+    ids = n["node_id"]
+    idx = {nid: i for i, nid in enumerate(ids)}
+    nf = np.column_stack([n[c] for c in feature_cols]).astype(np.float64)
+    triples = np.array([
+        (idx[s], idx[d], ETYPE_IDX.get(t, 2))
+        for s, d, t in zip(e["src"], e["dst"], e["etype"])
+        if s in idx and d in idx
+    ], dtype=np.int64).reshape(-1, 3)
+    return ids, nf, triples[:, 0], triples[:, 1], triples[:, 2]
+
+
 def ecn_score(nodes_feats: DataFrame, edges: DataFrame, weights: dict,
               feature_cols: list[str]) -> DataFrame:
     """Distributed ECN inference: co-group node features and edges per
     url, run the numpy forward pass, emit per-node class probabilities.
     ``weights`` is broadcast by closure capture (tiny)."""
-    nf_rows = nodes_feats.select("url", "node_id", *feature_cols)
-    e_rows = edges.select("url", "src", "dst", "etype")
     conditioned = "wes" in weights and "gat_ws" not in weights
+    fwd = _gat_forward if "gat_ws" in weights else _forward
 
-    def run(key, nfs: pd.DataFrame, es: pd.DataFrame) -> pd.DataFrame:
-        url = key[0]
-        ids = nfs["node_id"].to_numpy()
-        idx = {n: i for i, n in enumerate(ids)}
-        nf = nfs[feature_cols].to_numpy(dtype=np.float64)
-        triples = [
-            (idx[s], idx[d], ETYPE_IDX.get(t, 2))
-            for s, d, t in zip(es["src"], es["dst"], es["etype"])
-            if s in idx and d in idx
-        ]
-        src = np.array([p[0] for p in triples], dtype=np.int64)
-        dst = np.array([p[1] for p in triples], dtype=np.int64)
-        e_cls = np.array([p[2] for p in triples], dtype=np.int64) if conditioned else None
-        fwd = _gat_forward if "gat_ws" in weights else _forward
-        proba = fwd(nf, src, dst, weights, e_cls)
-        return pd.DataFrame({
-            "url": url, "node_id": ids,
-            "y_proba": [np.round(p, 6).tolist() for p in proba],
-        })
+    def run(n: Mapping[str, np.ndarray], e: Mapping[str, np.ndarray]) -> dict:
+        ids, nf, src, dst, e_cls = _doc_graph(n, e, feature_cols)
+        proba = fwd(nf, src, dst, weights, e_cls if conditioned else None)
+        return {"url": n["url"], "node_id": ids,
+                "y_proba": [np.round(p, 6).tolist() for p in proba]}
 
-    return nf_rows.groupBy("url").cogroup(e_rows.groupBy("url")).applyInPandas(
-        run, schema=SCORES_SCHEMA
+    return per_url(
+        SCORES_SCHEMA, run,
+        nodes_feats.select("url", "node_id", *feature_cols),
+        edges.select("url", "src", "dst", "etype"),
     )
 
 
@@ -373,28 +378,13 @@ def _train_loop(theta, shapes, n_params, nf_rows, e_rows, feature_cols,
     for t in range(1, epochs + 1):
         weights = dict(unf(theta), **scaler)
 
-        def run(key, nfs: pd.DataFrame, es: pd.DataFrame) -> pd.DataFrame:
-            ids = nfs["node_id"].to_numpy()
-            idx = {nid: i for i, nid in enumerate(ids)}
-            nf = nfs[feature_cols].to_numpy(dtype=np.float64)
-            y = nfs["_y"].to_numpy(dtype=np.int64)
-            triples = [
-                (idx[s], idx[d], ETYPE_IDX.get(t, 2))
-                for s, d, t in zip(es["src"], es["dst"], es["etype"])
-                if s in idx and d in idx
-            ]
-            src = np.array([p[0] for p in triples], dtype=np.int64)
-            dst = np.array([p[1] for p in triples], dtype=np.int64)
-            e_cls = (
-                np.array([p[2] for p in triples], dtype=np.int64)
-                if "wes" in weights else None
-            )
-            flat, loss, n = grad_fn(nf, src, dst, y, weights, e_cls)
-            return pd.DataFrame({"grad": [flat.tolist()], "loss": [loss], "n": [n]})
+        def run(n: Mapping[str, np.ndarray], e: Mapping[str, np.ndarray]) -> dict:
+            _, nf, src, dst, e_cls = _doc_graph(n, e, feature_cols)
+            flat, loss, cnt = grad_fn(nf, src, dst, n["_y"].astype(np.int64), weights,
+                                      e_cls if "wes" in weights else None)
+            return {"grad": [flat.tolist()], "loss": [loss], "n": [cnt]}
 
-        per_doc = nf_rows.groupBy("url").cogroup(e_rows.groupBy("url")).applyInPandas(
-            run, schema=grad_schema
-        )
+        per_doc = per_url(grad_schema, run, nf_rows, e_rows)
         # elementwise array sum: posexplode -> groupBy(pos) -> sum; the
         # collect is O(n_params) rows, never O(docs).
         agg = (

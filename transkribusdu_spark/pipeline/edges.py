@@ -7,8 +7,8 @@ edges via a sweep with visibility masking (``graph/Block.py:350-371,
 (``graph/Edge.py:132-175``), coordinates grid-rounded to multiples of 2
 before sweeping (``graph/Block.py:37,443-445``).
 
-Spark shape: documents never share edges, so this is ``applyInPandas``
-over ``nodes.groupBy("url")`` (one shuffle on the url key), or a
+Spark shape: documents never share edges, so this is one url shuffle
+and one Arrow kernel call per document (:func:`.perdoc.per_url`), or a
 map-only pass fused with parsing (:func:`edges_from_pages`). Each
 document then runs a per-page kernel: one interpreted line-of-sight
 sweep per direction (:func:`_los_pass`) and a vectorized numpy IoU
@@ -22,7 +22,7 @@ page in the common (sparse-visibility) case.
 from __future__ import annotations
 
 from bisect import bisect_left
-from typing import Iterable
+from typing import Iterable, Mapping
 
 import numpy as np
 import pandas as pd
@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 
 from ..schemas import EDGES_SCHEMA
 from .parse import MAX_NODES_PER_DOC, parse_batch
+from .perdoc import per_url
 
 GRID = 2
 # A candidate suffix longer than this is overlap-prefiltered with numpy
@@ -244,23 +245,17 @@ def _empty_out() -> dict[str, list]:
     return {f.name: [] for f in EDGES_SCHEMA.fields}
 
 
-def doc_edges(pdf: pd.DataFrame, mode: str = "g1") -> pd.DataFrame:
-    """All edges for one document's nodes, as a pandas frame (the
-    :func:`doc_edges_arrays` kernel; unit-testable)."""
+def doc_edges(cols: Mapping, mode: str = "g1") -> dict[str, list]:
+    """All edges for one document's node columns (numpy arrays, or a
+    pandas frame in tests), as edge columns: the per-document entry of
+    :func:`build_edges` over the :func:`doc_edges_arrays` kernel."""
     out = _empty_out()
-    if len(pdf):
-        doc_edges_arrays(
-            pdf["url"].iloc[0],
-            pdf["node_id"].to_numpy(),
-            pdf["page_num"].to_numpy(),
-            pdf["x1"].to_numpy(dtype=np.float64),
-            pdf["y1"].to_numpy(dtype=np.float64),
-            pdf["x2"].to_numpy(dtype=np.float64),
-            pdf["y2"].to_numpy(dtype=np.float64),
-            out,
-            mode=mode,
-        )
-    return pd.DataFrame(out)
+    node_id = np.asarray(cols["node_id"])
+    if len(node_id):
+        x1, y1, x2, y2 = (np.asarray(cols[c], dtype=np.float64) for c in ("x1", "y1", "x2", "y2"))
+        doc_edges_arrays(np.asarray(cols["url"])[0], node_id, np.asarray(cols["page_num"]),
+                         x1, y1, x2, y2, out, mode=mode)
+    return out
 
 
 def edges_from_pages(
@@ -357,47 +352,24 @@ def doc_continuous_edges_arrays(
 
 def build_continuous_edges(nodes: DataFrame, mirror: bool = True) -> DataFrame:
     """nodes -> continuous-page mirror edges (J6); same one-shuffle
-    applyInPandas shape as :func:`build_edges`."""
+    per-document shape as :func:`build_edges`."""
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(c: Mapping[str, np.ndarray]) -> dict[str, list]:
         out = _empty_out()
-        if len(pdf):
+        if len(c["url"]):
             doc_continuous_edges_arrays(
-                pdf["url"].iloc[0],
-                pdf["node_id"].to_numpy(),
-                pdf["page_num"].to_numpy(),
-                pdf["page_h"].to_numpy(dtype=np.float64),
-                pdf["page_w"].to_numpy(dtype=np.float64),
-                pdf["x1"].to_numpy(dtype=np.float64),
-                pdf["y1"].to_numpy(dtype=np.float64),
-                pdf["x2"].to_numpy(dtype=np.float64),
-                pdf["y2"].to_numpy(dtype=np.float64),
-                out,
-                mirror=mirror,
+                c["url"][0], c["node_id"], c["page_num"], c["page_h"], c["page_w"],
+                c["x1"], c["y1"], c["x2"], c["y2"], out, mirror=mirror,
             )
-        return pd.DataFrame(out)
+        return out
 
-    return nodes.groupBy("url").applyInPandas(run, schema=EDGES_SCHEMA)
+    cols = ("url", "node_id", "page_num", "page_h", "page_w", "x1", "y1", "x2", "y2")
+    return per_url(EDGES_SCHEMA, run, nodes.select(*cols))
 
 
-def build_edges(nodes: DataFrame, short_only: bool = False, mode: str = "g1") -> DataFrame:
+def build_edges(nodes: DataFrame, mode: str = "g1") -> DataFrame:
     """nodes -> edges: one shuffle on url, then the per-doc edge kernel.
-
-    ``short_only`` filters V/H edges longer than the source block height
-    (reference ``bShortOnly`` pruning, ``graph/Block.py:551-556``) —
-    a cheap way to cap edge count on dense documents at scale.
     ``mode``: 'g1' (default), 'g2' (true masking), 'g1o' (overlaps ok).
     """
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        edges = doc_edges(pdf, mode=mode)
-        if short_only and len(edges):
-            heights = dict(zip(pdf["node_id"], (pdf["y2"] - pdf["y1"])))
-            keep = [
-                (r.etype == "CP") or (r.length < heights.get(r.src, np.inf))
-                for r in edges.itertuples()
-            ]
-            edges = edges[keep]
-        return edges
-
-    return nodes.groupBy("url").applyInPandas(run, schema=EDGES_SCHEMA)
+    cols = nodes.select("url", "node_id", "page_num", "x1", "y1", "x2", "y2")
+    return per_url(EDGES_SCHEMA, lambda c: doc_edges(c, mode), cols)

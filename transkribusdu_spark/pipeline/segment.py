@@ -5,19 +5,23 @@ with P(continue) >= threshold (C2,
 ``GraphBinaryConjugateSegmenter.py:99-136``) and agglomerative merging
 seeded by CC@0.99 (C3, ``:139-279``). The reference uses a dense N x N
 adjacency + recursive DFS (an O(N^2)-memory anti-pattern, SURVEY.md §4);
-we use union-find over the edge list — O(E α(N)) — inside
-``applyInPandas`` per document. Documents never share edges
+we use union-find over the edge list — O(E α(N)) — in one Arrow kernel
+call per document (:func:`.perdoc.per_url`). Documents never share edges
 (``graph/Graph_Multi_SinglePageXml.py:77-133``), so no cross-document
 iteration (GraphFrames-style) is ever needed.
 """
 
 from __future__ import annotations
 
+from typing import Mapping
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import CLUSTERS_SCHEMA
+from .perdoc import per_url
 
 
 class _UF:
@@ -45,15 +49,14 @@ class _UF:
             self.r[ra] += 1
 
 
-def cluster_doc(node_ids: list[str], edges: pd.DataFrame, threshold: float) -> list[list[str]]:
-    """Union-find connected components for one document (unit-testable)."""
+def cluster_doc(node_ids: list[str], edges: Mapping, threshold: float) -> list[list[str]]:
+    """Union-find connected components for one document; ``edges`` maps
+    ``src``/``dst``/``p_continue`` to columns (unit-testable)."""
     idx = {nid: i for i, nid in enumerate(node_ids)}
     uf = _UF(len(node_ids))
-    if len(edges):
-        keep = edges[edges["p_continue"] >= threshold]
-        for src, dst in zip(keep["src"], keep["dst"]):
-            if src in idx and dst in idx:
-                uf.union(idx[src], idx[dst])
+    for src, dst, pc in zip(edges["src"], edges["dst"], edges["p_continue"]):
+        if pc >= threshold and src in idx and dst in idx:
+            uf.union(idx[src], idx[dst])
     groups: dict[int, list[str]] = {}
     for nid, i in idx.items():
         groups.setdefault(uf.find(i), []).append(nid)
@@ -64,7 +67,7 @@ def cluster_doc(node_ids: list[str], edges: pd.DataFrame, threshold: float) -> l
 
 
 def agglomerate_doc(
-    node_ids: list[str], edges: pd.DataFrame, seed_threshold: float = 0.99
+    node_ids: list[str], edges: Mapping, seed_threshold: float = 0.99
 ) -> list[list[str]]:
     """Agglomerative cluster merging for one document (reference C3,
     ``GraphBinaryConjugateSegmenter.py:139-279``): seed clusters =
@@ -80,13 +83,12 @@ def agglomerate_doc(
     members: dict[int, list[str]] = {i: list(c) for i, c in enumerate(clusters)}
     # inter-cluster score accumulation
     score: dict[tuple[int, int], float] = {}
-    if len(edges):
-        for src, dst, pc in zip(edges["src"], edges["dst"], edges["p_continue"]):
-            a, b = owner.get(src), owner.get(dst)
-            if a is None or b is None or a == b:
-                continue
-            key = (min(a, b), max(a, b))
-            score[key] = score.get(key, 0.0) + (2.0 * float(pc) - 1.0)
+    for src, dst, pc in zip(edges["src"], edges["dst"], edges["p_continue"]):
+        a, b = owner.get(src), owner.get(dst)
+        if a is None or b is None or a == b:
+            continue
+        key = (min(a, b), max(a, b))
+        score[key] = score.get(key, 0.0) + (2.0 * float(pc) - 1.0)
     while score:
         (a, b), best = max(score.items(), key=lambda kv: (kv[1], (-kv[0][0], -kv[0][1])))
         if best <= 0.0:
@@ -113,26 +115,18 @@ def _cluster_by(nodes: DataFrame, edge_scores: DataFrame, algo: str,
                 threshold: float) -> DataFrame:
     """Shared distributed shape for both clusterers: nodes and scored
     edges are COGROUPED per url (two clean keyed streams — no
-    null-padded union frame), each document solved by its numpy kernel."""
-    n = nodes.select("url", "node_id")
-    e = edge_scores.select("url", "src", "dst", "p_continue")
-    cols = [f.name for f in CLUSTERS_SCHEMA.fields]
+    null-padded union frame), each document solved by its kernel."""
+    solve = agglomerate_doc if algo == "agglo" else cluster_doc
 
-    def run(key, nfs: pd.DataFrame, es: pd.DataFrame) -> pd.DataFrame:
-        url = key[0]
-        node_ids = sorted(nfs["node_id"].unique())
-        if algo == "agglo":
-            clusters = agglomerate_doc(node_ids, es, threshold)
-        else:
-            clusters = cluster_doc(node_ids, es, threshold)
-        rows = [
-            dict(url=url, cluster_id=i, node_ids=c, proba=None, algo=algo)
-            for i, c in enumerate(clusters)
-        ]
-        return pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(columns=cols)
+    def run(n: Mapping[str, np.ndarray], e: Mapping[str, np.ndarray]) -> dict[str, list]:
+        clusters = solve(np.unique(n["node_id"]).tolist(), e, threshold)
+        k = len(clusters)
+        return dict(url=n["url"][:1].tolist() * k, cluster_id=list(range(k)),
+                    node_ids=clusters, proba=[None] * k, algo=[algo] * k)
 
-    return n.groupBy("url").cogroup(e.groupBy("url")).applyInPandas(
-        run, schema=CLUSTERS_SCHEMA
+    return per_url(
+        CLUSTERS_SCHEMA, run,
+        nodes.select("url", "node_id"), edge_scores.select("url", "src", "dst", "p_continue"),
     )
 
 
@@ -166,8 +160,6 @@ def split_cluster_columns(
     members: (node_id, x1, y1, x2, y2). Pure kernel (unit-testable);
     :func:`split_wide_clusters` lifts it over the clusters table.
     """
-    import numpy as np
-
     from ..functions.separator import get_linear_separator
 
     if len(members) < 2:
@@ -205,7 +197,6 @@ def split_wide_clusters(clusters: DataFrame, nodes: DataFrame,
     members straddle a whitespace column gap; same cogrouped-per-url
     shape as the clusterers. Emits the refined clusters table plus a
     ``separator`` column (a, b) on rows produced by a split."""
-    import pandas as pd
     from pyspark.sql import types as T
 
     memb = clusters.select(
@@ -246,7 +237,6 @@ def clusters_with_hulls(clusters: DataFrame, nodes: DataFrame) -> DataFrame:
     its members' box corners as a PageXML-style points string (reference
     emits hull polygons on the cluster elements; shapely-free via the
     monotone-chain hull in functions/separator.py)."""
-    import numpy as np
     from pyspark.sql import types as T
 
     from ..functions.separator import convex_hull

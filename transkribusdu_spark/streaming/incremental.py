@@ -6,7 +6,7 @@ module adds the Structured Streaming capabilities a continuously-fed
 Common-Crawl ingest would use:
 
 - ``stream_extract``: readStream over a pages directory ->
-  the same parse+extract pipeline -> parquet sink with checkpointing,
+  the fused map-only parse+extract kernel -> parquet sink with checkpointing,
   ``Trigger.AvailableNow`` (process-everything-then-stop = resumable
   incremental batch; kill it and the checkpoint resumes exactly).
 - ``windowed_event_counts``: event-time windowed aggregation with a
@@ -22,8 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..pipeline.extract import extract_text_spans
-from ..pipeline.parse import parse_pages
+from ..pipeline.extract import extract_from_pages
 from ..schemas import PAGES_SCHEMA
 
 
@@ -44,13 +43,14 @@ def stream_extract(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     pages = reader.parquet(pages_dir)
 
-    # Streaming cannot use unbounded windows; extraction per micro-batch
-    # is complete because files are whole documents (foreachBatch runs
-    # the full batch pipeline — parse + extract — on each increment).
+    # Extraction per micro-batch is complete because files are whole
+    # documents: foreachBatch runs the fused map-only parse+extract
+    # kernel (byte-identical to the windowed form, no url shuffle) on
+    # each increment.
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        extract_text_spans(parse_pages(batch_df)).write.mode("append").parquet(out_dir)
+        extract_from_pages(batch_df).write.mode("append").parquet(out_dir)
 
     q = (
         pages.writeStream.foreachBatch(
