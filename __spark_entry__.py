@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from transkribusdu_spark import relational as rel
+from transkribusdu_spark.api import conjugate_cluster
 from transkribusdu_spark.functions.xycut import page_coverage_profile
 from transkribusdu_spark.ops import dedup, dedupgraph, similarity, textstats, urls
 from transkribusdu_spark.ops.multimodal import attach_media, extract_binary_features
@@ -98,9 +99,9 @@ def _q_edges_hist(spark, sf_dir):
 
 
 def _q_cluster_cc(spark, sf_dir):
-    nodes = parse_pages(pages_from_documents(spark, sf_dir))
-    ef = edge_features(build_edges(nodes), nodes)
-    clusters = connected_components(nodes, edge_oracle_scores(ef))
+    """Map-only oracle conjugate clustering (``api.conjugate_cluster``);
+    ``cluster_hulls`` keeps the staged composition, so both are gated."""
+    clusters = conjugate_cluster(pages_from_documents(spark, sf_dir))
     return clusters.groupBy("url").agg(F.count("*").alias("n_clusters"))
 
 

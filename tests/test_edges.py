@@ -286,3 +286,32 @@ def test_non_finite_boxes_get_no_edges_and_hide_nothing():
     want = continuous(clean)
     assert want["etype"] and set(want["etype"]) == {"CPM"}
     assert continuous(dirty) == want
+
+
+def test_idless_boxes_occlude_but_get_no_edge():
+    """A box whose id is None (a TextRegion without @id) still blocks
+    the line of sight exactly as before; only its own V/H/CP/CPM edges
+    are dropped."""
+    clean = _two_page_nodes(False)
+    # B sits between A and D, A-G is the CP edge, F ends two CPM edges
+    gone = {"B", "F", "G"}
+    anon = clean.assign(node_id=[None if n in gone else n for n in clean.node_id])
+
+    def continuous(pdf):
+        out = _empty_out()
+        doc_continuous_edges_arrays(
+            "u", *(pdf[c].to_numpy() for c in ("node_id", "page_num")),
+            *(pdf[c].to_numpy(dtype=np.float64) for c in ("page_h", "page_w", "x1", "y1", "x2", "y2")),
+            out,
+        )
+        return pd.DataFrame(out)
+
+    def kept(e):
+        return e[~e.src.isin(gone) & ~e.dst.isin(gone)].reset_index(drop=True)
+
+    sweeps = [lambda p, m=m: pd.DataFrame(doc_edges(p, mode=m)) for m in ("g1", "g2", "g1o")]
+    for edges in sweeps + [continuous]:
+        want, got = edges(clean), edges(anon)
+        assert len(want) > len(kept(want))
+        pd.testing.assert_frame_equal(got, kept(want))
+    assert {"CP", "CPM"} <= set(continuous(clean).etype) | set(pd.DataFrame(doc_edges(clean)).etype)

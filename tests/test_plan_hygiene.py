@@ -149,15 +149,36 @@ def test_minhash_lsh_pairs_two_arrow_kernels_no_pandas(spark, sf_dir):
 
 
 def test_conjugate_cluster_graph_stages_on_arrow_harness(spark, sf_dir):
-    """Edges and clustering cross into Python through the one Arrow
-    per-document harness (groupBy/cogroup on url + applyInArrow); a
-    per-group pandas UDF, the shape it replaced, must not come back."""
-    from transkribusdu_spark.api import conjugate_cluster
+    """The staged conjugate composition (the model-scored path, and the
+    one the oracles gate) crosses into Python for edges and clustering
+    through the one Arrow per-document harness (groupBy/cogroup on url +
+    applyInArrow); a per-group pandas UDF, the shape it replaced, must
+    not come back."""
+    from transkribusdu_spark.pipeline.edges import build_edges
+    from transkribusdu_spark.pipeline.features import edge_features
+    from transkribusdu_spark.pipeline.model import edge_oracle_scores
+    from transkribusdu_spark.pipeline.segment import connected_components
 
-    plan = _physical(conjugate_cluster(pages_from_documents(spark, sf_dir)))
+    nodes = parse_pages(pages_from_documents(spark, sf_dir))
+    scores = edge_oracle_scores(edge_features(build_edges(nodes), nodes))
+    plan = _physical(connected_components(nodes, scores))
     assert "FlatMapGroupsInPandas" not in plan
     assert "FlatMapCoGroupsInPandas" not in plan
     assert "FlatMapGroupsInArrow" in plan and "FlatMapCoGroupsInArrow" in plan
+
+
+def test_conjugate_cluster_is_one_map_only_arrow_pass(spark, sf_dir):
+    """Oracle conjugate clustering is per document end to end: one
+    mapInArrow over the scanned pages parses each document once and
+    clusters it in place; no url shuffle, no pandas boundary."""
+    from transkribusdu_spark.api import conjugate_cluster
+
+    tmp = tempfile.mkdtemp(prefix="plan_pages_cc_")
+    pages_from_documents(spark, sf_dir).write.mode("overwrite").parquet(tmp)
+    plan = _physical(conjugate_cluster(spark.read.parquet(tmp)))
+    assert plan.count("MapInArrow") == 1, plan
+    for node in ("Exchange", "MapInPandas", "FlatMap"):
+        assert node not in plan, plan
 
 
 def test_url_dedup_rows_single_shuffle_jvm_only(spark, sf_dir):

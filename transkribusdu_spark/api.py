@@ -1,23 +1,32 @@
 """Top-level composable pipelines (the reference's DU_Task entry points,
-SURVEY.md §3, re-expressed as DataFrame -> DataFrame functions)."""
+SURVEY.md §3, re-expressed as DataFrame -> DataFrame functions).
+
+Extraction (:func:`extract_documents`) and oracle conjugate clustering
+(:func:`conjugate_cluster`) are map-only: a pages row is a whole
+document, so each is one Python pass over ``url``/``html`` that parses
+every document once and needs no shuffle. The learned paths compose
+the staged DataFrame layers (parse, edges, features, model)."""
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .pipeline.edges import build_edges
 from .pipeline.extract import extract_from_pages, extract_text_spans
 from .pipeline.features import edge_features, node_features
 from .pipeline.model import (
-    edge_oracle_scores,
-    predict_edges,
     predict_nodes,
     train_edge_classifier,
     train_node_classifier,
 )
-from .pipeline.parse import parse_pages
-from .pipeline.segment import connected_components
+from .pipeline.parse import parse_batch, parse_pages
+from .pipeline.segment import oracle_clusters_doc
+from .schemas import CLUSTERS_SCHEMA
 from .synth import pages_from_documents
 
 
@@ -44,15 +53,40 @@ def extract_documents_predicted(pages: DataFrame, node_model) -> DataFrame:
     return extract_text_spans(pred, labels=("main",), label_col="pred_label")
 
 
-def conjugate_cluster(pages: DataFrame, edge_model=None) -> DataFrame:
-    """Conjugate (dual) mode: score edges continue/break, cluster by
-    connected components (SURVEY.md §2.8). ``edge_model=None`` uses the
-    edge oracle (reference's own validation trick, M8)."""
-    nodes = parse_pages(pages)
-    edges = build_edges(nodes)
-    ef = edge_features(edges, nodes)
-    scores = edge_oracle_scores(ef) if edge_model is None else predict_edges(edge_model, ef)
-    return connected_components(nodes, scores)
+def conjugate_cluster(pages: DataFrame) -> DataFrame:
+    """Conjugate (dual) mode with the edge oracle (the reference's own
+    validation trick, M8): edges scored continue iff their endpoints
+    share a label, clustered by connected components at 0.5 (SURVEY.md
+    §2.8), as ``CLUSTERS_SCHEMA`` rows with ``algo`` ``"cc"``.
+
+    One map-only ``mapInArrow`` over ``url``/``html``: each document is
+    parsed once (:func:`.pipeline.parse.parse_batch`; a document that
+    fails to parse, or has no named node, gives no rows) and solved by
+    :func:`.pipeline.segment.oracle_clusters_doc`. No shuffle. A trained
+    edge model ``m`` takes the staged composition instead::
+
+        nodes = parse_pages(pages)
+        connected_components(nodes, predict_edges(m, edge_features(build_edges(nodes), nodes)))
+    """
+    schema = to_arrow_schema(CLUSTERS_SCHEMA)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            urls: list[str] = []
+            members: list[list[str]] = []
+            cids: list[int] = []
+            for url, dc, _ in parse_batch(b.to_pydict()):
+                if dc is not None:
+                    clusters = oracle_clusters_doc(dc)
+                    urls += [url] * len(clusters)
+                    members += clusters
+                    cids += range(len(clusters))
+            k = len(urls)
+            yield pa.RecordBatch.from_pydict(
+                dict(url=urls, cluster_id=cids, node_ids=members,
+                     proba=[None] * k, algo=["cc"] * k), schema=schema)
+
+    return pages.select("url", "html").mapInArrow(run, CLUSTERS_SCHEMA)
 
 
 def extract_documents_deterministic(pages: DataFrame) -> DataFrame:
@@ -76,18 +110,15 @@ def extract_documents_deterministic(pages: DataFrame) -> DataFrame:
     return extract_text_spans(labeled, labels=("main",), label_col="smoothed_label")
 
 
-def segment_regions(pages: DataFrame, edge_model=None, min_col_gap: float = 30.0) -> DataFrame:
-    """Full segmentation surface: conjugate clustering, column splitting
-    via the linear separator (C7), convex hulls per refined cluster
-    (C4) — the cluster->DOM geometry the exporter consumes."""
+def segment_regions(pages: DataFrame, min_col_gap: float = 30.0) -> DataFrame:
+    """Full segmentation surface: :func:`conjugate_cluster` clusters,
+    column splitting via the linear separator (C7), convex hulls per
+    refined cluster (C4) — the cluster->DOM geometry the exporter
+    consumes. The two geometry stages read the parsed node table."""
     from .pipeline.segment import clusters_with_hulls, split_wide_clusters
 
     nodes = parse_pages(pages)
-    edges = build_edges(nodes)
-    ef = edge_features(edges, nodes)
-    scores = edge_oracle_scores(ef) if edge_model is None else predict_edges(edge_model, ef)
-    clusters = connected_components(nodes, scores)
-    refined = split_wide_clusters(clusters, nodes, min_gap=min_col_gap)
+    refined = split_wide_clusters(conjugate_cluster(pages), nodes, min_gap=min_col_gap)
     return clusters_with_hulls(refined.drop("separator"), nodes)
 
 

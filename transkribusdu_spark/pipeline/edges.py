@@ -178,7 +178,11 @@ def doc_edges_arrays(
 ) -> None:
     """Edge kernel over plain numpy arrays for one document; appends to
     ``out`` column lists (dict-of-lists beats list-of-dicts ~10x in the
-    Arrow batch path)."""
+    Arrow batch path). A box whose id is None still takes part in the
+    sweep (it can block the line of sight between two other boxes) but
+    gets no edge."""
+    ids_all = node_id.tolist()
+    named = None if None not in ids_all else np.array([v is not None for v in ids_all])
     pages = np.unique(page_num)
     page_rows = {int(p): np.nonzero(page_num == p)[0] for p in pages}
     for p in pages:
@@ -200,6 +204,9 @@ def doc_edges_arrays(
                     lh, ovh, _ = page_edges[kh]
                     if lv < 0 or lh < 0:
                         del page_edges[kv if ovv < ovh else kh]
+        if named is not None:
+            ok = named[rows]
+            page_edges = {k: v for k, v in page_edges.items() if ok[k[1]] and ok[k[2]]}
         if page_edges:
             # batch extends (one C call per column) instead of 8 appends
             # per edge; dict iteration order = insertion order, so the
@@ -228,6 +235,9 @@ def doc_edges_arrays(
         with np.errstate(divide="ignore", invalid="ignore"):
             iou = np.where(union > 0, inter / union, 0.0)
         ii, jj = np.nonzero(iou >= CROSS_PAGE_IOU)
+        if named is not None:
+            keep = named[ra[ii]] & named[rb[jj]]
+            ii, jj = ii[keep], jj[keep]
         m = len(ii)
         if m:
             # same row-major (ii, jj) order the per-pair loop emitted
@@ -246,9 +256,11 @@ def _empty_out() -> dict[str, list]:
 
 
 def doc_edges(cols: Mapping, mode: str = "g1") -> dict[str, list]:
-    """All edges for one document's node columns (numpy arrays, or a
-    pandas frame in tests), as edge columns: the per-document entry of
-    :func:`build_edges` over the :func:`doc_edges_arrays` kernel."""
+    """All edges for one document's node columns (numpy arrays, the
+    :func:`.parse.parse_doc_cols` lists, or a pandas frame in tests), as
+    edge columns: the per-document entry of :func:`build_edges`,
+    :func:`edges_from_pages` and the conjugate oracle pass over the
+    :func:`doc_edges_arrays` kernel."""
     out = _empty_out()
     node_id = np.asarray(cols["node_id"])
     if len(node_id):
@@ -275,20 +287,10 @@ def edges_from_pages(
     def run(batches):
         for pdf in batches:
             out = _empty_out()
-            for url, dc, _ in parse_batch(pdf, max_nodes_per_doc=max_nodes_per_doc):
-                if dc is None or not dc["node_id"]:
-                    continue
-                doc_edges_arrays(
-                    url,
-                    np.array(dc["node_id"]),
-                    np.array(dc["page_num"]),
-                    np.array(dc["x1"], dtype=np.float64),
-                    np.array(dc["y1"], dtype=np.float64),
-                    np.array(dc["x2"], dtype=np.float64),
-                    np.array(dc["y2"], dtype=np.float64),
-                    out,
-                    mode=mode,
-                )
+            for _, dc, _ in parse_batch(pdf, max_nodes_per_doc=max_nodes_per_doc):
+                if dc is not None:
+                    for k, v in doc_edges(dc, mode).items():
+                        out[k].extend(v)
             yield pd.DataFrame(out)
 
     return pages.select("url", "html").mapInPandas(run, schema=EDGES_SCHEMA)
@@ -338,7 +340,7 @@ def doc_continuous_edges_arrays(
             fx1 = np.concatenate([x1[sel_a], x1[sel_b]])
             fx2 = np.concatenate([x2[sel_a], x2[sel_b]])
         for i, j, length, ov, iou in _los_pass(ids, fx1, fx2, fy1, fy2, "g1"):
-            if pn[i] == pn[j]:
+            if pn[i] == pn[j] or ids[i] is None or ids[j] is None:
                 continue
             out["url"].append(url)
             out["page_num"].append(p)

@@ -18,7 +18,7 @@ Reference semantics reproduced (SURVEY.md §2.2 P1-P10):
 from __future__ import annotations
 
 import re
-from typing import Iterator
+from typing import Iterator, Mapping, Sequence
 
 import pandas as pd
 from xml.etree import ElementTree as etree
@@ -240,14 +240,15 @@ MAX_NODES_PER_DOC = 20_000
 
 
 def parse_batch(
-    pdf: pd.DataFrame,
+    batch: Mapping[str, Sequence],
     kinds: tuple[str, ...] = ("TextRegion",),
     max_nodes_per_doc: int | None = MAX_NODES_PER_DOC,
 ) -> Iterator[tuple[str, dict[str, list] | None, str]]:
     """The one per-document parse loop: every kernel that reads
-    ``pages.html`` iterates this over its Arrow batch (``url``/``html``
-    columns) and yields, per input document in input order,
-    ``(url, cols, status)``:
+    ``pages.html`` iterates this over its batch — any mapping with
+    ``url``/``html`` columns: a ``mapInPandas`` frame, or an Arrow
+    batch's ``to_pydict()`` — and yields, per input document in input
+    order, ``(url, cols, status)``:
 
     - ``ok``: ``cols`` is the :func:`parse_doc_cols` output;
     - ``truncated:<n>``: the document had n > ``max_nodes_per_doc``
@@ -257,7 +258,7 @@ def parse_batch(
       is None. A malformed document never kills the job — mandatory at
       web scale, where input is always partly garbage — and the status is
       its audit record, from the same pass that produced the output."""
-    for url, html in zip(pdf["url"], pdf["html"]):
+    for url, html in zip(batch["url"], batch["html"]):
         try:
             cols = parse_doc_cols(url, bytes(html), kinds)
         except Exception as e:

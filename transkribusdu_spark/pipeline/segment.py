@@ -8,7 +8,10 @@ adjacency + recursive DFS (an O(N^2)-memory anti-pattern, SURVEY.md §4);
 we use union-find over the edge list — O(E α(N)) — in one Arrow kernel
 call per document (:func:`.perdoc.per_url`). Documents never share edges
 (``graph/Graph_Multi_SinglePageXml.py:77-133``), so no cross-document
-iteration (GraphFrames-style) is ever needed.
+iteration (GraphFrames-style) is ever needed. With the edge oracle the
+whole chain is per document too: :func:`oracle_clusters_doc` runs edges,
+scores and components on one parsed document, inside the single map-only
+pass of ``api.conjugate_cluster``.
 """
 
 from __future__ import annotations
@@ -21,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import CLUSTERS_SCHEMA
+from .edges import doc_edges
 from .perdoc import per_url
 
 
@@ -119,7 +123,7 @@ def _cluster_by(nodes: DataFrame, edge_scores: DataFrame, algo: str,
     solve = agglomerate_doc if algo == "agglo" else cluster_doc
 
     def run(n: Mapping[str, np.ndarray], e: Mapping[str, np.ndarray]) -> dict[str, list]:
-        clusters = solve(np.unique(n["node_id"]).tolist(), e, threshold)
+        clusters = solve(sorted({v for v in n["node_id"].tolist() if v is not None}), e, threshold)
         k = len(clusters)
         return dict(url=n["url"][:1].tolist() * k, cluster_id=list(range(k)),
                     node_ids=clusters, proba=[None] * k, algo=[algo] * k)
@@ -145,6 +149,26 @@ def connected_components(nodes: DataFrame, edge_scores: DataFrame,
     continue-edge) become their own cluster, matching the reference.
     """
     return _cluster_by(nodes, edge_scores, "cc", threshold)
+
+
+def oracle_clusters_doc(cols: Mapping) -> list[list[str]]:
+    """Conjugate clusters of one parsed document (:func:`.parse.parse_doc_cols`
+    columns) under the edge oracle: the line-of-sight edges
+    (:func:`.edges.doc_edges`), each scored ``p_continue = 1`` iff its
+    endpoints share a label, then :func:`cluster_doc` at 0.5. It equals
+    ``connected_components(nodes, edge_oracle_scores(edge_features(
+    build_edges(nodes), nodes)))`` on the document: an id held by several
+    nodes joins there as a cross product, so two ids are united iff an
+    edge links them and their label sets intersect. Id-less nodes are
+    left out, and a document without named nodes has no cluster."""
+    labels: dict[str, set[str]] = {}
+    for nid, lab in zip(cols["node_id"], cols["label"]):
+        if nid is not None:
+            labels.setdefault(nid, set()).add(lab)
+    edges = doc_edges(cols)
+    edges["p_continue"] = [float(not labels[s].isdisjoint(labels[d]))
+                           for s, d in zip(edges["src"], edges["dst"])]
+    return cluster_doc(sorted(labels), edges, 0.5)
 
 
 def split_cluster_columns(

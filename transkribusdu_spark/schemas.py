@@ -32,7 +32,9 @@ NODES_SCHEMA = T.StructType(
         T.StructField("page_w", T.DoubleType(), False),
         T.StructField("page_h", T.DoubleType(), False),
         T.StructField("page_cnt", T.IntegerType(), False),
-        T.StructField("node_id", T.StringType(), False),
+        # null for a TextRegion without @id: it still occludes other
+        # boxes in the line-of-sight sweep but gets no edge or cluster
+        T.StructField("node_id", T.StringType(), True),
         T.StructField("kind", T.StringType(), False),
         T.StructField("x1", T.DoubleType(), False),
         T.StructField("y1", T.DoubleType(), False),
