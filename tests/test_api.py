@@ -4,11 +4,12 @@ entry points a reference user would call, driven end-to-end."""
 from pyspark.sql import functions as F
 
 from transkribusdu_spark import api
+from transkribusdu_spark.synth import pages_from_documents
 
 
 def test_extract_documents_byte_identical(spark, sf_dir):
-    pages = api.pages_table(spark, sf_dir)
-    ext = api.extract_documents(pages, n_partitions=8)
+    pages = pages_from_documents(spark, sf_dir)
+    ext = api.extract_documents(pages)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     cmp = ext.join(docs, "doc_id")
     n = cmp.count()
@@ -17,7 +18,7 @@ def test_extract_documents_byte_identical(spark, sf_dir):
 
 
 def test_extract_documents_deterministic_runs_twice_identically(spark, sf_dir):
-    pages = api.pages_table(spark, sf_dir)
+    pages = pages_from_documents(spark, sf_dir)
     a = sorted(
         (r.doc_id, r.extracted_text)
         for r in api.extract_documents_deterministic(pages).collect()
@@ -30,7 +31,7 @@ def test_extract_documents_deterministic_runs_twice_identically(spark, sf_dir):
 
 
 def test_segment_regions_full_surface(spark, sf_dir):
-    pages = api.pages_table(spark, sf_dir).limit(30)
+    pages = pages_from_documents(spark, sf_dir).limit(30)
     hulls = api.segment_regions(pages).collect()
     assert len(hulls) > 0
     for r in hulls:

@@ -1,16 +1,22 @@
-"""Map-only oracle conjugate clustering (``api.conjugate_cluster``) against
-the staged composition the oracles gate, on the fixture pages plus
-planted documents that exercise the staged join semantics."""
+"""Map-only oracle conjugate clustering (``api.conjugate_cluster``) and
+region segmentation (``api.segment_regions``) against the staged
+compositions they replace, on the fixture pages plus planted documents
+that exercise the staged join semantics."""
 
 import os
+from collections import defaultdict
+
+import numpy as np
+from pyspark.sql import functions as F
 
 from transkribusdu_spark import api
+from transkribusdu_spark.functions.separator import convex_hull
 from transkribusdu_spark.pipeline.edges import build_edges
 from transkribusdu_spark.pipeline.extract import extract_from_pages
 from transkribusdu_spark.pipeline.features import edge_features
 from transkribusdu_spark.pipeline.model import edge_oracle_scores
 from transkribusdu_spark.pipeline.parse import parse_pages
-from transkribusdu_spark.pipeline.segment import connected_components
+from transkribusdu_spark.pipeline.segment import connected_components, split_cluster_columns
 from transkribusdu_spark.synth import pages_from_documents
 
 HOST = "https://planted.example.org/doc/"
@@ -103,3 +109,65 @@ def test_idless_region_does_not_kill_the_job(spark, sf_dir):
     assert _rows(api.conjugate_cluster(pages)) == _rows(_staged(pages))
     text = {r.url: r.extracted_text for r in extract_from_pages(pages).collect()}
     assert text[HOST + "900005"] == "alpha middle beta"
+
+
+# two columns 40 apart: one oracle cluster, split into L and R
+COLUMNS = _doc([_region(f"{side}{i}", x, 50 * i, "paragraph", f"{side}{i}", w=290 if side == "L" else 260)
+                for i in range(3) for side, x in (("L", 10), ("R", 340))])
+# id "q" is a box in each column: the split puts q on both sides
+SPLIT_ID = _doc([_region("q", 10, 0, "paragraph", "q1", w=190),
+                 _region("q", 400, 0, "paragraph", "q2"),
+                 _region("s", 10, 50, "paragraph", "s", w=190)])
+
+
+def _staged_regions(pages):
+    """The staged segmentation, on the driver: conjugate clusters
+    exploded and joined to the parsed node table on (url, node_id),
+    each cluster split at a 30-unit column gap, renumbered by first
+    member id, and hulled over every node carrying each member id."""
+    nodes = parse_pages(pages).select("url", "node_id", "x1", "y1", "x2", "y2")
+    memb = (api.conjugate_cluster(pages)
+            .select("url", "cluster_id", F.explode("node_ids").alias("node_id"))
+            .join(nodes, ["url", "node_id"]).collect())
+    boxes = defaultdict(list)
+    for r in nodes.collect():
+        boxes[(r.url, r.node_id)].append((r.x1, r.y1, r.x2, r.y2))
+    members = defaultdict(lambda: defaultdict(list))
+    for r in memb:
+        members[r.url][r.cluster_id].append((r.node_id, r.x1, r.y1, r.x2, r.y2))
+    rows = []
+    for url, by_cluster in members.items():
+        refined = []
+        for cid in sorted(by_cluster):
+            refined += split_cluster_columns(by_cluster[cid], 30.0)[0]
+        refined.sort(key=lambda g: g[0])
+        for cid, ids in enumerate(refined):
+            bs = [b for nid in ids for b in boxes[(url, nid)]]
+            corners = ([(x1, y1) for x1, y1, _, _ in bs] + [(x2, y1) for _, y1, x2, _ in bs]
+                       + [(x2, y2) for _, _, x2, y2 in bs] + [(x1, y2) for x1, _, _, y2 in bs])
+            hull = convex_hull(np.array(corners, dtype=float))
+            rows.append((url, cid, "cc", len(bs), " ".join(f"{int(x)},{int(y)}" for x, y in hull)))
+    return sorted(rows)
+
+
+def test_segment_regions_equals_staged_composition(spark, sf_dir):
+    sf = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01")
+    planted = {k: PLANTED[k] for k in ("900001", "900003", "900005")}
+    planted.update({"900006": COLUMNS, "900007": SPLIT_ID})
+    pages = pages_from_documents(spark, sf).select("url", "html").unionByName(
+        _planted(spark, planted))
+    fused = sorted(tuple(r) for r in api.segment_regions(pages).collect())
+    assert fused == _staged_regions(pages)
+    got = defaultdict(list)
+    for url, cid, _, n, hull in fused:
+        if url.startswith(HOST):
+            got[url[len(HOST):]].append((cid, n, hull))
+    assert dict(got) == {
+        # d is held by two nodes: the split lists d once per box, and
+        # each listed d brings both boxes to the hull (2 x 2 + e + f)
+        "900001": [(0, 6, "50,10 250,10 250,190 50,190")],
+        "900005": [(0, 1, "50,10 250,10 250,40 50,40"), (1, 1, "50,110 250,110 250,140 50,140")],
+        "900006": [(0, 3, "10,0 300,0 300,130 10,130"), (1, 3, "340,0 600,0 600,130 340,130")],
+        # left (q, s) before right (q); each q brings both q boxes
+        "900007": [(0, 3, "10,0 600,0 600,30 200,80 10,80"), (1, 2, "10,0 600,0 600,30 10,30")],
+    }

@@ -152,9 +152,12 @@ def test_status_frame_one_row_per_doc(spark, sf_dir):
         extract_with_status,
     )
 
+    from transkribusdu_spark.pipeline.parse import MAX_NODES_PER_DOC
+
     doc_id, text, lang = _docs(sf_dir)[0]
     good_url, _, good = render_doc(doc_id, text, lang)
-    cap = 2_000
+    cap = MAX_NODES_PER_DOC
+    assert cap < 50_000
     rows = [
         (good_url, bytearray(good)),
         ("u://bad", bytearray(b"<PcGts><Page")),
@@ -182,16 +185,16 @@ def test_status_frame_one_row_per_doc(spark, sf_dir):
 
     with_text = (status.filter(F.col("extracted_text").isNotNull()).drop("status")
                  .orderBy("url").collect())
-    assert extract_from_pages(pages, max_nodes_per_doc=cap).orderBy("url").collect() == with_text
+    assert extract_from_pages(pages).orderBy("url").collect() == with_text
     assert [r["url"] for r in with_text] == sorted(
         [good_url, "https://x.example.org/doc/000003", f"https://x.example.org/doc/{10**25}"])
     status.unpersist()
 
-    n_nodes = {r["url"]: r["n"] for r in parse_pages(pages, max_nodes_per_doc=cap)
+    n_nodes = {r["url"]: r["n"] for r in parse_pages(pages)
                .groupBy("url").agg(F.count("*").alias("n")).collect()}
     assert n_nodes["https://x.example.org/doc/000003"] == cap
     assert n_nodes["https://x.example.org/doc/000004"] == 3
     assert "u://bad" not in n_nodes
-    edge_urls = {r["url"] for r in edges_from_pages(pages, max_nodes_per_doc=cap)
+    edge_urls = {r["url"] for r in edges_from_pages(pages)
                  .select("url").distinct().collect()}
     assert "u://bad" not in edge_urls and "https://x.example.org/doc/000003" in edge_urls

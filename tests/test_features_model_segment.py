@@ -138,29 +138,41 @@ def test_split_cluster_columns_kernel():
     assert s2 is None and len(g2) == 1
 
 
-def test_split_wide_clusters_distributed(spark):
-    """Distributed shape: clusters spanning two columns get split; the
-    refined table keeps every node exactly once per url."""
-    from pyspark.sql import functions as F
+def test_split_clusters_doc_on_per_doc_pass(spark):
+    """Map-only shape: a page whose one oracle cluster spans two columns
+    is split in the per-document pass; the refined clusters keep every
+    node exactly once."""
+    from transkribusdu_spark.pipeline.perdoc import per_doc
+    from transkribusdu_spark.pipeline.segment import (
+        boxes_by_id,
+        oracle_clusters_doc,
+        split_clusters_doc,
+    )
+    from transkribusdu_spark.schemas import CLUSTERS_SCHEMA
 
-    from transkribusdu_spark.pipeline.segment import split_wide_clusters
-
-    rows = []
+    boxes = []
     for i in range(3):
-        rows.append(("u1", f"L{i}", 10.0, 50.0 * i, 300.0, 50.0 * i + 30))
-        rows.append(("u1", f"R{i}", 340.0, 50.0 * i, 600.0, 50.0 * i + 30))
-    nodes = spark.createDataFrame(
-        rows, "url string, node_id string, x1 double, y1 double, x2 double, y2 double"
-    )
-    clusters = spark.createDataFrame(
-        [("u1", 0, "cc", [f"L{i}" for i in range(3)] + [f"R{i}" for i in range(3)])],
-        "url string, cluster_id int, algo string, node_ids array<string>",
-    )
-    out = split_wide_clusters(clusters, nodes).orderBy("cluster_id").collect()
+        boxes.append((f"L{i}", 10, 50 * i, 300, 50 * i + 30))
+        boxes.append((f"R{i}", 340, 50 * i, 600, 50 * i + 30))
+    regions = "".join(
+        f'<TextRegion id="{nid}" custom="structure {{type:paragraph;}}">'
+        f'<Coords points="{x1},{y1} {x2},{y1} {x2},{y2} {x1},{y2}"/></TextRegion>'
+        for nid, x1, y1, x2, y2 in boxes)
+    html = f'<PcGts><Page imageWidth="640" imageHeight="200">{regions}</Page></PcGts>'
+    pages = spark.createDataFrame([("u1", bytearray(html.encode()))], "url string, html binary")
+
+    def kernel(url, cols, status):
+        # before the split, the six boxes are one oracle cluster
+        assert oracle_clusters_doc(cols) == [sorted(b[0] for b in boxes)]
+        groups = split_clusters_doc(cols, boxes_by_id(cols))
+        k = len(groups)
+        return dict(url=[url] * k, cluster_id=list(range(k)), node_ids=groups,
+                    proba=[None] * k, algo=["cc"] * k)
+
+    out = per_doc(CLUSTERS_SCHEMA, kernel, pages).orderBy("cluster_id").collect()
     assert len(out) == 2
     assert sorted(out[0].node_ids) == ["L0", "L1", "L2"]
     assert sorted(out[1].node_ids) == ["R0", "R1", "R2"]
-    assert list(out[0].separator) == [float("inf"), 320.0]
     # node coverage is a partition of the original membership
     flat = sorted(n for r in out for n in r.node_ids)
-    assert flat == sorted(r[1] for r in rows)
+    assert flat == sorted(b[0] for b in boxes)

@@ -46,10 +46,10 @@ def giant_pages(spark):
 def test_giant_doc_truncated_not_oom(spark, giant_pages):
     from transkribusdu_spark.pipeline.edges import build_edges
     from transkribusdu_spark.pipeline.extract import extract_with_status
-    from transkribusdu_spark.pipeline.parse import parse_pages
+    from transkribusdu_spark.pipeline.parse import MAX_NODES_PER_DOC, parse_pages
 
-    cap = 2_000
-    nodes = parse_pages(giant_pages, max_nodes_per_doc=cap)
+    cap = MAX_NODES_PER_DOC
+    nodes = parse_pages(giant_pages)
     counts = {r["url"]: r["n"] for r in
               nodes.groupBy("url").agg(F.count("*").alias("n")).collect()}
     assert counts["https://host000.example.org/doc/000001"] == cap

@@ -61,7 +61,7 @@ def test_extraction_is_whole_stage_codegen_after_udf(spark, sf_dir):
     # '*(n)' prefixes mark WholeStageCodegen stages in the final plan
     assert "*(" in phys or "WholeStageCodegen" in phys, "relational glue fell out of codegen"
     # exactly one Python boundary: the parse UDF
-    assert phys.count("MapInPandas") == 1
+    assert phys.count("MapInArrow") == 1
     assert "BatchEvalPython" not in phys, "row-at-a-time Python UDF crept in"
 
 
@@ -181,6 +181,35 @@ def test_conjugate_cluster_is_one_map_only_arrow_pass(spark, sf_dir):
         assert node not in plan, plan
 
 
+def test_segment_regions_is_one_map_only_arrow_pass(spark, sf_dir):
+    """Region segmentation reads each document's member boxes from the
+    document itself: one parse per document, no join back to a node
+    table, no url shuffle, no pandas boundary."""
+    from transkribusdu_spark.api import segment_regions
+
+    tmp = tempfile.mkdtemp(prefix="plan_pages_sr_")
+    pages_from_documents(spark, sf_dir).write.mode("overwrite").parquet(tmp)
+    plan = _physical(segment_regions(spark.read.parquet(tmp)))
+    assert plan.count("MapInArrow") == 1, plan
+    for node in ("Exchange", "MapInPandas", "FlatMap"):
+        assert node not in plan, plan
+
+
+def test_page_passes_are_one_arrow_map_each(spark, sf_dir):
+    """parse_pages, edges_from_pages and extract_with_status are each the
+    one per-document Arrow pass over pages, with no pandas boundary."""
+    from transkribusdu_spark.pipeline.edges import edges_from_pages
+    from transkribusdu_spark.pipeline.extract import extract_with_status
+
+    tmp = tempfile.mkdtemp(prefix="plan_pages_pp_")
+    pages_from_documents(spark, sf_dir).write.mode("overwrite").parquet(tmp)
+    pages = spark.read.parquet(tmp)
+    for stage in (parse_pages, edges_from_pages, extract_with_status):
+        plan = _physical(stage(pages))
+        assert plan.count("MapInArrow") == 1, (stage.__name__, plan)
+        assert "MapInPandas" not in plan, (stage.__name__, plan)
+
+
 def test_url_dedup_rows_single_shuffle_jvm_only(spark, sf_dir):
     """URL snapshot dedup must shuffle exactly once (on canonical_url)
     — the row_number pick and the snapshot count are windows sharing
@@ -225,10 +254,9 @@ def test_repetition_stats_jvm_only(spark, sf_dir):
     assert plan.count("HashAggregate") >= 4, "missing partial aggregation"
 
 
-def test_parse_doc_cols_has_one_call_site():
-    """Each document is parsed once per job: the package calls
-    parse_doc_cols from exactly one place (the parse_batch loop), so no
-    kernel can grow its own parse/skip loop or a second audit parse."""
+def _call_sites(callee: str) -> list[tuple[str, str | None]]:
+    """(module path, enclosing top-level definition) of every call to
+    ``callee`` anywhere in the package."""
     import transkribusdu_spark
 
     root = os.path.dirname(transkribusdu_spark.__file__)
@@ -239,10 +267,23 @@ def test_parse_doc_cols_has_one_call_site():
                 path = os.path.join(d, name)
                 with open(path) as f:
                     tree = ast.parse(f.read())
-                sites += [
-                    (os.path.relpath(path, root), node.lineno)
-                    for node in ast.walk(tree)
-                    if isinstance(node, ast.Call)
-                    and getattr(node.func, "id", getattr(node.func, "attr", None)) == "parse_doc_cols"
-                ]
-    assert [s for s, _ in sites] == [os.path.join("pipeline", "parse.py")], sites
+                for node in ast.walk(tree):
+                    if (isinstance(node, ast.Call)
+                            and getattr(node.func, "id", getattr(node.func, "attr", None)) == callee):
+                        top = next(t for t in tree.body if t.lineno <= node.lineno <= t.end_lineno)
+                        sites.append((os.path.relpath(path, root), getattr(top, "name", None)))
+    return sites
+
+
+def test_parse_doc_cols_has_one_call_site():
+    """Each document is parsed once per job: the package calls
+    parse_doc_cols from exactly one place (the parse_batch loop), so no
+    kernel can grow its own parse/skip loop or a second audit parse."""
+    assert _call_sites("parse_doc_cols") == [(os.path.join("pipeline", "parse.py"), "parse_batch")]
+
+
+def test_parse_batch_has_one_call_site():
+    """Every pass over pages crosses into Python the same way: the
+    package calls parse_batch only from perdoc.per_doc, so no stage can
+    grow its own batch loop around the parse."""
+    assert _call_sites("parse_batch") == [(os.path.join("pipeline", "perdoc.py"), "per_doc")]

@@ -1,20 +1,17 @@
 """Top-level composable pipelines (the reference's DU_Task entry points,
 SURVEY.md §3, re-expressed as DataFrame -> DataFrame functions).
 
-Extraction (:func:`extract_documents`) and oracle conjugate clustering
-(:func:`conjugate_cluster`) are map-only: a pages row is a whole
-document, so each is one Python pass over ``url``/``html`` that parses
-every document once and needs no shuffle. The learned paths compose
-the staged DataFrame layers (parse, edges, features, model)."""
+Extraction (:func:`extract_documents`), oracle conjugate clustering
+(:func:`conjugate_cluster`) and region segmentation
+(:func:`segment_regions`) are map-only: a pages row is a whole
+document, so each is one :func:`.pipeline.perdoc.per_doc` pass over
+``url``/``html`` that parses every document once and needs no shuffle.
+The learned paths compose the staged DataFrame layers (parse, edges,
+features, model)."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql import DataFrame
 
 from .pipeline.edges import build_edges
 from .pipeline.extract import extract_from_pages, extract_text_spans
@@ -24,23 +21,21 @@ from .pipeline.model import (
     train_edge_classifier,
     train_node_classifier,
 )
-from .pipeline.parse import parse_batch, parse_pages
-from .pipeline.segment import oracle_clusters_doc
-from .schemas import CLUSTERS_SCHEMA
-from .synth import pages_from_documents
+from .pipeline.parse import parse_pages
+from .pipeline.perdoc import per_doc
+from .pipeline.segment import oracle_clusters_doc, regions_doc
+from .schemas import CLUSTERS_SCHEMA, HULLS_SCHEMA
 
 
-def extract_documents(pages: DataFrame, n_partitions: int | None = None) -> DataFrame:
+def extract_documents(pages: DataFrame) -> DataFrame:
     """The --run path (SURVEY.md §3.2) in ground-truth-label mode:
-    scan -> [repartition(url)] -> fused parse+extract (map-only, zero
-    shuffle — reading order, join, and spans are doc-local).
+    scan -> fused parse+extract (map-only, zero shuffle — reading order,
+    join, and spans are doc-local).
 
     This is the throughput surface benchmarked in bench.py;
     byte-identical to the window-based
     ``extract_text_spans(parse_pages(pages))`` form (parity-locked).
     """
-    if n_partitions:
-        pages = pages.repartition(n_partitions, F.col("url"))
     return extract_from_pages(pages)
 
 
@@ -59,34 +54,23 @@ def conjugate_cluster(pages: DataFrame) -> DataFrame:
     share a label, clustered by connected components at 0.5 (SURVEY.md
     §2.8), as ``CLUSTERS_SCHEMA`` rows with ``algo`` ``"cc"``.
 
-    One map-only ``mapInArrow`` over ``url``/``html``: each document is
-    parsed once (:func:`.pipeline.parse.parse_batch`; a document that
-    fails to parse, or has no named node, gives no rows) and solved by
+    One map-only pass (:func:`.pipeline.perdoc.per_doc`): each document
+    is parsed once (a document that fails to parse, or has no named
+    node, gives no rows) and solved by
     :func:`.pipeline.segment.oracle_clusters_doc`. No shuffle. A trained
     edge model ``m`` takes the staged composition instead::
 
         nodes = parse_pages(pages)
         connected_components(nodes, predict_edges(m, edge_features(build_edges(nodes), nodes)))
     """
-    schema = to_arrow_schema(CLUSTERS_SCHEMA)
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            urls: list[str] = []
-            members: list[list[str]] = []
-            cids: list[int] = []
-            for url, dc, _ in parse_batch(b.to_pydict()):
-                if dc is not None:
-                    clusters = oracle_clusters_doc(dc)
-                    urls += [url] * len(clusters)
-                    members += clusters
-                    cids += range(len(clusters))
-            k = len(urls)
-            yield pa.RecordBatch.from_pydict(
-                dict(url=urls, cluster_id=cids, node_ids=members,
-                     proba=[None] * k, algo=["cc"] * k), schema=schema)
+    def kernel(url: str, cols: dict | None, status: str) -> dict[str, list]:
+        clusters = oracle_clusters_doc(cols) if cols else []
+        k = len(clusters)
+        return dict(url=[url] * k, cluster_id=list(range(k)), node_ids=clusters,
+                    proba=[None] * k, algo=["cc"] * k)
 
-    return pages.select("url", "html").mapInArrow(run, CLUSTERS_SCHEMA)
+    return per_doc(CLUSTERS_SCHEMA, kernel, pages)
 
 
 def extract_documents_deterministic(pages: DataFrame) -> DataFrame:
@@ -110,16 +94,18 @@ def extract_documents_deterministic(pages: DataFrame) -> DataFrame:
     return extract_text_spans(labeled, labels=("main",), label_col="smoothed_label")
 
 
-def segment_regions(pages: DataFrame, min_col_gap: float = 30.0) -> DataFrame:
+def segment_regions(pages: DataFrame) -> DataFrame:
     """Full segmentation surface: :func:`conjugate_cluster` clusters,
-    column splitting via the linear separator (C7), convex hulls per
-    refined cluster (C4) — the cluster->DOM geometry the exporter
-    consumes. The two geometry stages read the parsed node table."""
-    from .pipeline.segment import clusters_with_hulls, split_wide_clusters
+    column splitting via the linear separator (C7) at a 30-unit
+    whitespace gap, convex hulls per refined cluster (C4) — the
+    cluster->DOM geometry the exporter consumes, as ``HULLS_SCHEMA``
+    rows.
 
-    nodes = parse_pages(pages)
-    refined = split_wide_clusters(conjugate_cluster(pages), nodes, min_gap=min_col_gap)
-    return clusters_with_hulls(refined.drop("separator"), nodes)
+    One map-only pass like :func:`conjugate_cluster`: each parsed
+    document goes through :func:`.pipeline.segment.regions_doc`, which
+    reads its member boxes from the document itself. No shuffle."""
+    return per_doc(HULLS_SCHEMA, lambda url, cols, status: regions_doc(url, cols) if cols else {},
+                   pages)
 
 
 def train_models(pages: DataFrame):
@@ -129,7 +115,3 @@ def train_models(pages: DataFrame):
     nf = node_features(nodes, edges)
     ef = edge_features(edges, nodes)
     return train_node_classifier(nf), train_edge_classifier(ef)
-
-
-def pages_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return pages_from_documents(spark, sf_dir)

@@ -8,8 +8,9 @@ edges via a sweep with visibility masking (``graph/Block.py:350-371,
 before sweeping (``graph/Block.py:37,443-445``).
 
 Spark shape: documents never share edges, so this is one url shuffle
-and one Arrow kernel call per document (:func:`.perdoc.per_url`), or a
-map-only pass fused with parsing (:func:`edges_from_pages`). Each
+and one Arrow kernel call per document (:func:`.perdoc.per_url`) over a
+nodes table, or, over a pages table, a :func:`.perdoc.per_doc` kernel
+in the map-only parse pass (:func:`edges_from_pages`). Each
 document then runs a per-page kernel: one interpreted line-of-sight
 sweep per direction (:func:`_los_pass`) and a vectorized numpy IoU
 matrix for cross-page edges. At cluster scale the shuffle is
@@ -25,12 +26,10 @@ from bisect import bisect_left
 from typing import Iterable, Mapping
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..schemas import EDGES_SCHEMA
-from .parse import MAX_NODES_PER_DOC, parse_batch
-from .perdoc import per_url
+from .perdoc import per_doc, per_url
 
 GRID = 2
 # A candidate suffix longer than this is overlap-prefiltered with numpy
@@ -270,30 +269,16 @@ def doc_edges(cols: Mapping, mode: str = "g1") -> dict[str, list]:
     return out
 
 
-def edges_from_pages(
-    pages: DataFrame, mode: str = "g1",
-    max_nodes_per_doc: int | None = MAX_NODES_PER_DOC,
-) -> DataFrame:
+def edges_from_pages(pages: DataFrame, mode: str = "g1") -> DataFrame:
     """Fused parse+edges: pages.html -> edges in ONE map-only pass.
 
     Each pages row is a complete document, so edges never need a shuffle
     at all — this is the scale path (build_edges on a nodes table costs
-    an extra hash exchange plus per-group overhead).
-    ``max_nodes_per_doc`` carries the SAME semantics and default as
-    ``parse_pages`` (None disables); a caller overriding it there must
-    pass the same value here, or the edge graph would silently cover a
-    different node set."""
-
-    def run(batches):
-        for pdf in batches:
-            out = _empty_out()
-            for _, dc, _ in parse_batch(pdf, max_nodes_per_doc=max_nodes_per_doc):
-                if dc is not None:
-                    for k, v in doc_edges(dc, mode).items():
-                        out[k].extend(v)
-            yield pd.DataFrame(out)
-
-    return pages.select("url", "html").mapInPandas(run, schema=EDGES_SCHEMA)
+    an extra hash exchange plus per-group overhead). The node set is
+    ``parse_pages``': documents that fail to parse give no edge, and a
+    giant one is cut to its first ``MAX_NODES_PER_DOC`` nodes."""
+    return per_doc(EDGES_SCHEMA, lambda url, cols, status: doc_edges(cols, mode) if cols else {},
+                   pages)
 
 
 def doc_continuous_edges_arrays(

@@ -10,22 +10,39 @@ offsets are a running sum over the canonical order
 (start_i = sum_{j<i}(len_j + 1) for the single-space join), so it stays
 inside whole-stage codegen and scales as an ordinary shuffle-once
 aggregation keyed on url. Over raw pages (:func:`extract_with_status`,
-:func:`extract_from_pages`) one fused map-only Python kernel parses each
-document and assembles the same text and spans in place, with no
-shuffle and a parse status per document.
+:func:`extract_from_pages`) it is a :func:`.perdoc.per_doc` kernel: the
+map-only parse pass assembles each document's text and spans in place,
+with no shuffle and one row with a parse status per document.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..schemas import MAIN_CONTENT_LABELS
-from .parse import MAX_NODES_PER_DOC, parse_batch
+from .parse import MAX_NODES_PER_DOC
+from .perdoc import per_doc
 
 # Canonical reading order (SURVEY.md §2.6 O2): page, then top-to-bottom,
 # then left-to-right; node_id as the deterministic tiebreak.
 READING_ORDER = ["page_num", "y1", "x1", "node_id"]
+
+# One row per input document (:func:`extract_with_status`); every column
+# is nullable, since only documents with text carry doc_id/text/spans.
+STATUS_SCHEMA = T.StructType([
+    T.StructField("url", T.StringType()),
+    T.StructField("doc_id", T.LongType()),
+    T.StructField("extracted_text", T.StringType()),
+    T.StructField("spans", T.ArrayType(T.StructType([
+        T.StructField("node_id", T.StringType()),
+        T.StructField("start", T.IntegerType()),
+        T.StructField("end", T.IntegerType()),
+        T.StructField("label", T.StringType()),
+    ]))),
+    T.StructField("status", T.StringType()),
+])
 
 
 def extract_text_spans(
@@ -146,51 +163,25 @@ def extract_with_status(
     persist this frame once, write the output from its text rows and the
     audit table from its other rows, and count the statuses with a
     ``DataFrame.observe`` in the same action — no second parse."""
-    from typing import Iterator
-
-    import pandas as pd
-
     want = set(labels) if labels is not None else None
-    schema = (
-        "url string, doc_id long, extracted_text string, "
-        "spans array<struct<node_id:string,start:int,end:int,label:string>>, "
-        "status string"
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, dids, texts, spans_col, status = [], [], [], [], []
-            for url, dc, st in parse_batch(pdf, max_nodes_per_doc=max_nodes_per_doc):
-                did = text = spans = None
-                if dc is not None:
-                    assembled = _fused_doc(dc, want)
-                    if assembled is None:
-                        st = "empty"
-                    else:
-                        did, (text, spans) = dc["doc_id"][0], assembled
-                urls.append(url)
-                dids.append(did)
-                texts.append(text)
-                spans_col.append(spans)
-                status.append(st)
-            # pd.DataFrame({...: []}) defaults the columns to float64,
-            # which Arrow cannot convert to list<struct>: an empty batch
-            # yields nothing. doc_id is nullable Int64: a float64 column
-            # (ints mixed with the None of non-text rows) rounds ids
-            # above 2**53.
-            if urls:
-                yield pd.DataFrame(
-                    {"url": urls, "doc_id": pd.array(dids, dtype="Int64"),
-                     "extracted_text": texts, "spans": spans_col, "status": status}
-                )
+    def kernel(url: str, dc: dict | None, status: str) -> dict[str, list]:
+        did = text = spans = None
+        if dc is not None:
+            assembled = _fused_doc(dc, want)
+            if assembled is None:
+                status = "empty"
+            else:
+                did, (text, spans) = dc["doc_id"][0], assembled
+        return dict(url=[url], doc_id=[did], extracted_text=[text], spans=[spans],
+                    status=[status])
 
-    return pages.select("url", "html").mapInPandas(run, schema=schema)
+    return per_doc(STATUS_SCHEMA, kernel, pages, max_nodes_per_doc=max_nodes_per_doc)
 
 
 def extract_from_pages(
     pages: DataFrame,
     labels: tuple[str, ...] | None = MAIN_CONTENT_LABELS,
-    max_nodes_per_doc: int | None = MAX_NODES_PER_DOC,
 ) -> DataFrame:
     """Fused parse+extract: pages.html -> (url, doc_id, extracted_text,
     spans) in ONE map-only pass — the flagship 100 TB plan shape.
@@ -208,12 +199,12 @@ def extract_from_pages(
     labeled NODE tables (predicted/smoothed labels, cluster-driven
     extraction); this fused form exists for the scan->extract path.
 
-    These are the text rows of :func:`extract_with_status`: documents
-    that fail to parse or keep no node are absent, and that frame says
-    why. ``max_nodes_per_doc``: identical semantics and default to
-    ``parse_pages`` (None disables the giant-document guard)."""
+    These are the text rows of :func:`extract_with_status` at its
+    default ``MAX_NODES_PER_DOC`` cap, the one ``parse_pages`` applies:
+    documents that fail to parse or keep no node are absent, and that
+    frame says why."""
     return (
-        extract_with_status(pages, labels, max_nodes_per_doc)
+        extract_with_status(pages, labels)
         .filter(F.col("extracted_text").isNotNull())
         .drop("status")
     )

@@ -1,8 +1,11 @@
 """Parse stage: ``pages.html`` -> one row per layout node.
 
-Spark shape: a single ``mapInPandas`` over the pages table — document
-parsing is embarrassingly parallel, so this stage is map-only (no
-shuffle); Catalyst prunes unread page columns out of the scan.
+Spark shape: document parsing is embarrassingly parallel, so this stage
+is map-only (no shuffle): :func:`parse_batch` is the per-document loop
+of :func:`.perdoc.per_doc`, the one ``mapInArrow`` over the pages
+table's ``url``/``html`` (Catalyst prunes every other page column out
+of the scan), and :func:`parse_pages` is that pass with a kernel that
+returns the parsed columns.
 
 Reference semantics reproduced (SURVEY.md §2.2 P1-P10):
 - node iteration per configured XPath (``graph/NodeType_PageXml.py:126-200``)
@@ -20,7 +23,6 @@ from __future__ import annotations
 import re
 from typing import Iterator, Mapping, Sequence
 
-import pandas as pd
 from xml.etree import ElementTree as etree
 from pyspark.sql import DataFrame
 
@@ -244,10 +246,9 @@ def parse_batch(
     kinds: tuple[str, ...] = ("TextRegion",),
     max_nodes_per_doc: int | None = MAX_NODES_PER_DOC,
 ) -> Iterator[tuple[str, dict[str, list] | None, str]]:
-    """The one per-document parse loop: every kernel that reads
-    ``pages.html`` iterates this over its batch — any mapping with
-    ``url``/``html`` columns: a ``mapInPandas`` frame, or an Arrow
-    batch's ``to_pydict()`` — and yields, per input document in input
+    """The one per-document parse loop, iterated by :func:`.perdoc.per_doc`
+    over each Arrow batch's ``to_pydict()`` (any mapping with
+    ``url``/``html`` columns). It yields, per input document in input
     order, ``(url, cols, status)``:
 
     - ``ok``: ``cols`` is the :func:`parse_doc_cols` output;
@@ -273,32 +274,17 @@ def parse_batch(
             yield url, cols, "ok"
 
 
-def parse_pages(
-    pages: DataFrame,
-    kinds: tuple[str, ...] = ("TextRegion",),
-    max_nodes_per_doc: int | None = MAX_NODES_PER_DOC,
-) -> DataFrame:
+def parse_pages(pages: DataFrame, kinds: tuple[str, ...] = ("TextRegion",)) -> DataFrame:
     """pages -> nodes. Map-only; one Arrow batch in, node rows out.
 
     Documents that fail to parse contribute no rows, and a giant document
-    contributes its first ``max_nodes_per_doc`` nodes (:func:`parse_batch`;
+    contributes its first ``MAX_NODES_PER_DOC`` nodes (:func:`parse_batch`;
     ``extract.extract_with_status`` reports both per url). ``kinds``
     selects node types (multitype F21).
     """
-    names = [f.name for f in NODES_SCHEMA.fields]
+    from .perdoc import per_doc  # perdoc imports this module
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # columnar assembly end to end: per-doc column lists extend
-            # per-batch column lists; no row dicts anywhere
-            out: dict[str, list] = {n: [] for n in names}
-            for _, dc, _ in parse_batch(pdf, kinds, max_nodes_per_doc):
-                if dc is not None:
-                    for n in names:
-                        out[n].extend(dc[n])
-            yield pd.DataFrame(out)
-
-    return pages.select("url", "html").mapInPandas(run, schema=NODES_SCHEMA)
+    return per_doc(NODES_SCHEMA, lambda url, cols, status: cols or {}, pages, kinds)
 
 
 def dedup_guard(nodes: DataFrame) -> DataFrame:

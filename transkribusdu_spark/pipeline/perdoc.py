@@ -1,15 +1,53 @@
-"""The per-document Python boundary of the url-grouped graph stages:
-edges, clustering, ECN scoring/training and the cut query each run one
-array kernel per document behind one url shuffle, built only here."""
+"""The two per-document Python boundaries, built only here.
+
+- :func:`per_doc` is the map-only pass over a pages table: a pages row
+  is a whole document, so parse, fused edges, fused extraction and the
+  oracle conjugate and region passes run one kernel per parsed document
+  with no shuffle.
+- :func:`per_url` is the url-grouped pass of the stages that start from
+  node and edge tables: edges, clustering, ECN scoring/training, the
+  cut query and the hull query each run one array kernel per document
+  behind one url shuffle.
+
+Both hand plain columns to a Spark-free kernel and build the Arrow
+output from its ``{column: values}``; no pandas frame is built per
+batch or per document."""
 
 from __future__ import annotations
 
-from typing import Callable, Mapping
+from typing import Callable, Iterator, Mapping
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
+
+from .parse import MAX_NODES_PER_DOC, parse_batch
+
+
+def per_doc(schema: StructType, kernel: Callable[..., Mapping], pages: DataFrame,
+            kinds: tuple[str, ...] = ("TextRegion",),
+            max_nodes_per_doc: int | None = MAX_NODES_PER_DOC) -> DataFrame:
+    """``mapInArrow`` over ``pages.select("url", "html")``: every document
+    of a batch goes through :func:`.parse.parse_batch` (``kinds`` and
+    ``max_nodes_per_doc`` are its arguments) and then through
+    ``kernel(url, cols, status)``, where ``cols`` is the parsed node
+    columns (None when the document failed to parse) and ``status`` its
+    parse status. The kernel returns ``{column: list}`` for ``schema``,
+    or ``{}`` when the document gives no rows; each input batch gives
+    one output batch."""
+    arrow_schema = to_arrow_schema(schema)
+    names = schema.fieldNames()
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            out: dict[str, list] = {n: [] for n in names}
+            for url, cols, status in parse_batch(b.to_pydict(), kinds, max_nodes_per_doc):
+                for k, v in kernel(url, cols, status).items():
+                    out[k].extend(v)
+            yield pa.RecordBatch.from_pydict(out, schema=arrow_schema)
+
+    return pages.select("url", "html").mapInArrow(run, schema)
 
 
 def per_url(schema: StructType, kernel: Callable[..., Mapping], frame: DataFrame,

@@ -10,20 +10,20 @@ call per document (:func:`.perdoc.per_url`). Documents never share edges
 (``graph/Graph_Multi_SinglePageXml.py:77-133``), so no cross-document
 iteration (GraphFrames-style) is ever needed. With the edge oracle the
 whole chain is per document too: :func:`oracle_clusters_doc` runs edges,
-scores and components on one parsed document, inside the single map-only
-pass of ``api.conjugate_cluster``.
+scores and components on one parsed document, and :func:`regions_doc`
+adds the column split and the hulls; they are the kernels of the single
+map-only passes of ``api.conjugate_cluster`` and ``api.segment_regions``
+(:func:`.perdoc.per_doc`).
 """
 
 from __future__ import annotations
 
-from typing import Mapping
+from typing import Mapping, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..schemas import CLUSTERS_SCHEMA
+from ..schemas import CLUSTERS_SCHEMA, HULLS_SCHEMA
 from .edges import doc_edges
 from .perdoc import per_url
 
@@ -182,7 +182,7 @@ def split_cluster_columns(
     vertical separators are reported as (inf, x_threshold).
 
     members: (node_id, x1, y1, x2, y2). Pure kernel (unit-testable);
-    :func:`split_wide_clusters` lifts it over the clusters table.
+    :func:`split_clusters_doc` runs it on every cluster of a document.
     """
     from ..functions.separator import get_linear_separator
 
@@ -215,86 +215,87 @@ def split_cluster_columns(
     )
 
 
-def split_wide_clusters(clusters: DataFrame, nodes: DataFrame,
-                        min_gap: float = 30.0) -> DataFrame:
-    """Distributed C7 region splitting: re-partition each cluster whose
-    members straddle a whitespace column gap; same cogrouped-per-url
-    shape as the clusterers. Emits the refined clusters table plus a
-    ``separator`` column (a, b) on rows produced by a split."""
-    from pyspark.sql import types as T
+def boxes_by_id(cols: Mapping) -> dict[str, list[list[float]]]:
+    """Every ``[x1, y1, x2, y2]`` box of a document's node columns under
+    its node id, in document order; id-less nodes are left out. An id
+    held by several nodes maps to all their boxes, as a join of cluster
+    members to the node table on (url, node_id) would give."""
+    out: dict[str, list[list[float]]] = {}
+    for nid, *box in zip(cols["node_id"], cols["x1"], cols["y1"], cols["x2"], cols["y2"]):
+        if nid is not None:
+            out.setdefault(nid, []).append(box)
+    return out
 
-    memb = clusters.select(
-        "url", "cluster_id", "algo", F.explode("node_ids").alias("node_id")
-    ).join(nodes.select("url", "node_id", "x1", "y1", "x2", "y2"), ["url", "node_id"])
 
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("cluster_id", T.IntegerType(), False),
-            T.StructField("algo", T.StringType(), False),
-            T.StructField("node_ids", T.ArrayType(T.StringType(), False), False),
-            T.StructField("separator", T.ArrayType(T.DoubleType(), True), True),
-        ]
-    )
+def cluster_hulls_doc(clusters: Sequence[Sequence[str]],
+                      boxes: Mapping[str, list]) -> list[tuple[int, int, str]]:
+    """C4 cluster -> DOM geometry for one document: ``(i, n_nodes,
+    hull_points)`` for each cluster ``i`` with at least one member box.
+    Every occurrence of an id in a cluster contributes every box carrying
+    that id, and ``n_nodes`` counts those boxes. The hull is the convex
+    hull of the boxes' corners (all top-left corners, then top-right,
+    bottom-right, bottom-left; shapely-free monotone chain from
+    functions/separator.py) as a PageXML-style points string of
+    truncated ints (the reference emits hull polygons on the cluster
+    elements)."""
+    from ..functions.separator import convex_hull
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for (url, _cid, algo), g in pdf.groupby(["url", "cluster_id", "algo"]):
-            members = list(zip(g["node_id"], g["x1"], g["y1"], g["x2"], g["y2"]))
-            groups, sep = split_cluster_columns(members, min_gap)
-            for grp in groups:
-                out.append(
-                    {"url": url, "cluster_id": 0, "algo": algo, "node_ids": grp,
-                     "separator": list(sep) if sep is not None else None}
-                )
-        out.sort(key=lambda r: r["node_ids"][0] if r["node_ids"] else "")
-        for i, r in enumerate(out):
-            r["cluster_id"] = i
-        cols = [f.name for f in schema.fields]
-        return pd.DataFrame(out, columns=cols)
+    out = []
+    for i, ids in enumerate(clusters):
+        member = [b for nid in ids for b in boxes.get(nid, ())]
+        if member:
+            b = np.asarray(member, dtype=float)
+            pts = np.concatenate([b[:, [0, 1]], b[:, [2, 1]], b[:, [2, 3]], b[:, [0, 3]]])
+            hull = " ".join(f"{int(x)},{int(y)}" for x, y in convex_hull(pts))
+            out.append((i, len(member), hull))
+    return out
 
-    return memb.groupBy("url").applyInPandas(run, schema=schema)
+
+def _hull_cols(url: str, cluster_ids: Sequence[int], algos: Sequence[str],
+               hulls: list[tuple[int, int, str]]) -> dict[str, list]:
+    return dict(url=[url] * len(hulls), cluster_id=[int(cluster_ids[i]) for i, _, _ in hulls],
+                algo=[algos[i] for i, _, _ in hulls], n_nodes=[n for _, n, _ in hulls],
+                hull_points=[h for _, _, h in hulls])
+
+
+def split_clusters_doc(cols: Mapping, boxes: Mapping[str, list]) -> list[list[str]]:
+    """The oracle clusters of one parsed document (:func:`oracle_clusters_doc`),
+    each split at a whitespace column gap of at least 30
+    (:func:`split_cluster_columns`) over its members' :func:`boxes_by_id`
+    boxes, and renumbered by first member id (a stable sort: ties keep
+    cluster order, left before right). An id held by several nodes
+    brings all their boxes, so it is listed once per box and can land on
+    both sides of a split."""
+    refined: list[list[str]] = []
+    for ids in oracle_clusters_doc(cols):
+        groups, _ = split_cluster_columns([(nid, *b) for nid in ids for b in boxes[nid]])
+        refined += groups
+    refined.sort(key=lambda g: g[0])
+    return refined
+
+
+def regions_doc(url: str, cols: Mapping) -> dict[str, list]:
+    """Region geometry of one parsed document, as ``HULLS_SCHEMA``
+    columns: :func:`split_clusters_doc`, then :func:`cluster_hulls_doc`,
+    both over the document's own :func:`boxes_by_id`."""
+    boxes = boxes_by_id(cols)
+    refined = split_clusters_doc(cols, boxes)
+    k = len(refined)
+    return _hull_cols(url, range(k), ["cc"] * k, cluster_hulls_doc(refined, boxes))
 
 
 def clusters_with_hulls(clusters: DataFrame, nodes: DataFrame) -> DataFrame:
-    """C4 cluster -> DOM geometry: each cluster gets the convex hull of
-    its members' box corners as a PageXML-style points string (reference
-    emits hull polygons on the cluster elements; shapely-free via the
-    monotone-chain hull in functions/separator.py)."""
-    from pyspark.sql import types as T
+    """:func:`cluster_hulls_doc` over a clusters table and its node table,
+    one url cogroup (:func:`.perdoc.per_url`): one ``HULLS_SCHEMA`` row
+    per cluster row that has a member in ``nodes``."""
 
-    from ..functions.separator import convex_hull
+    def run(c: Mapping[str, np.ndarray], n: Mapping[str, np.ndarray]) -> dict[str, list]:
+        url = c["url"][0] if len(c["url"]) else None  # a nodes-only url has no cluster
+        return _hull_cols(url, c["cluster_id"], c["algo"],
+                          cluster_hulls_doc(c["node_ids"], boxes_by_id(n)))
 
-    memb = clusters.select(
-        "url", "cluster_id", "algo", F.explode("node_ids").alias("node_id")
-    ).join(nodes.select("url", "node_id", "x1", "y1", "x2", "y2"), ["url", "node_id"])
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("cluster_id", T.IntegerType(), False),
-            T.StructField("algo", T.StringType(), False),
-            T.StructField("n_nodes", T.IntegerType(), False),
-            T.StructField("hull_points", T.StringType(), False),
-        ]
+    return per_url(
+        HULLS_SCHEMA, run,
+        clusters.select("url", "cluster_id", "algo", "node_ids"),
+        nodes.select("url", "node_id", "x1", "y1", "x2", "y2"),
     )
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for (url, cid, algo), g in pdf.groupby(["url", "cluster_id", "algo"]):
-            pts = np.concatenate(
-                [
-                    g[["x1", "y1"]].to_numpy(), g[["x2", "y1"]].to_numpy(),
-                    g[["x2", "y2"]].to_numpy(), g[["x1", "y2"]].to_numpy(),
-                ]
-            ).astype(float)
-            hull = convex_hull(pts)
-            s = " ".join(f"{int(x)},{int(y)}" for x, y in hull)
-            out.append(
-                {"url": url, "cluster_id": int(cid), "algo": algo,
-                 "n_nodes": len(g), "hull_points": s}
-            )
-        cols = [f.name for f in schema.fields]
-        return pd.DataFrame(out, columns=cols)
-
-    return memb.groupBy("url").applyInPandas(run, schema=schema)

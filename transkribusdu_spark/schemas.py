@@ -101,6 +101,18 @@ CLUSTERS_SCHEMA = T.StructType(
     ]
 )
 
+# Region geometry (C4): one convex hull per cluster, as a PageXML-style
+# points string over its n_nodes member boxes.
+HULLS_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType(), False),
+        T.StructField("cluster_id", T.IntegerType(), False),
+        T.StructField("algo", T.StringType(), False),
+        T.StructField("n_nodes", T.IntegerType(), False),
+        T.StructField("hull_points", T.StringType(), False),
+    ]
+)
+
 SPAN_TYPE = T.StructType(
     [
         T.StructField("node_id", T.StringType(), False),

@@ -32,7 +32,7 @@ def engine_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
         "spark.sql.adaptive.skewJoin.enabled": "true",
         # Arrow: the only sanctioned Python<->JVM data path.
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        # Batch sizing for mapInPandas/applyInPandas: per-batch MEMORY is
+        # Batch sizing for every Python map/group UDF: per-batch MEMORY is
         # bounded by maxBytesPerBatch (Spark 4's direct knob — 32 MB
         # keeps a giant-html batch from OOMing a worker, the job the old
         # 512-row cap did indirectly), while the ROW cap is raised to
