@@ -7,8 +7,10 @@ in one job.
                                       latest snapshot per canonical url)
       -> main-content extraction     (pipeline/extract.extract_from_pages:
                                       fused map-only parse+extract)
-      -> content dedup               (ops/dedup.minhash_lsh_pairs ->
-                                      ops/dedupgraph survivors: one doc
+      -> content dedup               (ops/dedupgraph.content_dedup:
+                                      exact-copy fold -> MinHash-LSH on
+                                      one representative per md5 group
+                                      -> connected components; one doc
                                       kept per near-dup cluster)
       -> quality/lang annotation     (ops/textstats: all_stats in one
                                       scan + repetition_stats — optional)
@@ -73,7 +75,7 @@ def main() -> None:
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    from transkribusdu_spark.ops import dedup, dedupgraph, textstats, urls
+    from transkribusdu_spark.ops import dedupgraph, textstats, urls
     from transkribusdu_spark.pipeline.extract import extract_with_status, observe_status
     from transkribusdu_spark.pipeline.lineage import (
         run_with_lineage,
@@ -130,8 +132,7 @@ def main() -> None:
     if not args.no_content_dedup:
         docs = extracted.select("doc_id", F.col("extracted_text").alias("text"))
         kw = {} if args.threshold is None else {"threshold": args.threshold}
-        pairs = dedup.minhash_lsh_pairs(docs, **kw)
-        verdicts = dedupgraph.dedup_survivors(docs, pairs)
+        verdicts = dedupgraph.content_dedup(docs, **kw)
         extracted = extracted.join(
             verdicts.filter("survivor").select("doc_id"), "doc_id", "left_semi"
         )

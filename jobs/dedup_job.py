@@ -13,7 +13,8 @@ writes the result parquet::
 Ops: `exact` (one survivor per md5 group), `minhash` (MinHash-LSH
 candidates verified with exact Jaccard), `simhash` (Hamming <= k
 near-pairs), `ngram` (exact word-n-gram Jaccard pairs), `cluster`
-(minhash pairs -> distributed connected components -> per-doc
+(exact-copy fold, minhash pairs over one representative per md5
+group -> distributed connected components -> per-doc
 (component, survivor) verdicts for the WHOLE corpus), `clean` (same,
 but writes the surviving documents (doc_id, text) — the deduplicated
 corpus a training pipeline consumes downstream).
@@ -64,8 +65,7 @@ def main() -> None:
         from transkribusdu_spark.ops import dedupgraph
 
         kw = {} if args.threshold is None else {"threshold": args.threshold}
-        pairs = dedup.minhash_lsh_pairs(docs, **kw)
-        verdicts = dedupgraph.dedup_survivors(docs, pairs)
+        verdicts = dedupgraph.content_dedup(docs, **kw)
         if args.op == "cluster":
             result = verdicts
         else:

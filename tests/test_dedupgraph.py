@@ -8,8 +8,10 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from transkribusdu_spark.ops import dedup, textstats
+from __spark_entry__ import _DEDUP_CLUSTERS_SQL
+from transkribusdu_spark.ops import dedup, dedupgraph, textstats
 from transkribusdu_spark.ops.dedupgraph import (
+    content_dedup,
     dedup_clusters,
     dedup_components,
     dedup_survivors,
@@ -95,34 +97,7 @@ def test_dedup_clusters_matches_duckdb_transitive_closure(docs, duck):
     got = {
         (r.doc_id, r.component) for r in dedup_clusters(docs).collect()
     }
-    want = {
-        tuple(r)
-        for r in duck.execute(
-            """
-with recursive docs_t as (select doc_id, string_split(text,' ') toks from documents),
-sh as (select doc_id, unnest(list_distinct(
-         [toks[i]||' '||toks[i+1]||' '||toks[i+2] for i in range(1, len(toks)-1)])) as shingle
-       from docs_t where len(toks) >= 3),
-sizes as (select doc_id, count(*) sz from sh group by doc_id),
-inter as (select a.doc_id doc_a, b.doc_id doc_b, count(*) n_inter
-          from sh a join sh b using (shingle) where a.doc_id < b.doc_id
-          group by 1, 2),
-pairs as (select doc_a, doc_b
-          from inter
-          join sizes sa on sa.doc_id = doc_a
-          join sizes sb on sb.doc_id = doc_b
-          where round(n_inter::double / (sa.sz + sb.sz - n_inter), 6) >= 0.7),
-und as (select doc_a u, doc_b v from pairs union select doc_b, doc_a from pairs),
-nodes as (select distinct u from und),
-reach(u, v) as (
-  select u, u from nodes
-  union
-  select r.u, e.v from reach r join und e on r.v = e.u
-)
-select u doc_id, min(v) component from reach group by u
-"""
-        ).fetchall()
-    }
+    want = {tuple(r) for r in duck.execute(_DEDUP_CLUSTERS_SQL).fetchall()}
     assert got == want
     assert len(got) > 0  # corpus has planted near-dup pairs
 
@@ -141,6 +116,116 @@ def test_survivors_one_per_component_and_isolated_docs_kept(docs):
     paired = set(surv[surv.component != surv.doc_id].doc_id)
     comp_ids = set(surv.component)
     assert paired.isdisjoint(comp_ids - set(surv[surv.survivor].doc_id))
+
+
+# ---------------------------------------------------------------------------
+# content dedup: exact-copy fold over the LSH + components path
+# ---------------------------------------------------------------------------
+_NEAR = " ".join(f"planted_near_{i}" for i in range(30))
+_PLANTED = (  # (doc_id, text): every group is planted above the sf0.001 ids
+    [(900_001 + i, "planted exact group of four copies " * 3) for i in range(4)]
+    # copies of a near-dup (Jaccard 27/29) of the lower-id singleton
+    # 900_010: the copies take the component of a doc outside their group
+    + [(900_010, _NEAR)]
+    + [(900_011 + i, _NEAR.replace("planted_near_29", "changed")) for i in range(3)]
+    + [(900_021 + i, "two tokens") for i in range(3)]
+    + [(900_031 + i, "") for i in range(3)]
+    + [(900_041 + i, None) for i in range(3)]
+)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.fixture(scope="module")
+def planted(spark, docs):
+    extra = spark.createDataFrame(_PLANTED, "doc_id long, text string")
+    return docs.select("doc_id", "text").unionByName(extra)
+
+
+@pytest.mark.parametrize("threshold", [0.7, 1.01])
+def test_content_dedup_planted_parity(spark, planted, threshold):
+    """The fold gives the verdicts of LSH + components over every
+    document, and of the DuckDB exact-Jaccard closure; short, empty and
+    NULL copies stay apart, and above Jaccard 1 nothing pairs."""
+    got = _rows(content_dedup(planted, threshold))
+    parent = _rows(dedup_survivors(planted, dedup.minhash_lsh_pairs(planted, threshold)))
+    assert got == parent
+
+    con = duckdb.connect()
+    con.register("documents", planted.toPandas())
+    sql = _DEDUP_CLUSTERS_SQL.replace(">= 0.7", f">= {threshold}")
+    assert sql.count(f">= {threshold}") == 1
+    closure = dict(con.execute(sql).fetchall())
+    assert got == sorted(
+        (d, closure.get(d, d), closure.get(d, d) == d) for d, *_ in got
+    )
+
+    comp = {d: c for d, c, _ in got}
+    short = [d for d, t in _PLANTED if t is None or len(t.split(" ")) < 3]
+    assert all(comp[d] == d for d in short)  # every short copy survives
+    if threshold <= 1.0:
+        assert {comp[d] for d in range(900_001, 900_005)} == {900_001}
+        assert {comp[d] for d in range(900_010, 900_014)} == {900_010}
+    else:
+        assert all(d == c for d, c, _ in got)
+
+
+def test_content_dedup_hot_group_reaches_lsh_once(spark, docs, monkeypatch):
+    """5,000 identical documents reach the LSH stage as one document and
+    fold back into one component kept by its minimum."""
+    seen = []
+    lsh = dedup._minhash_lsh
+
+    def spy(reps, threshold):
+        seen.append(reps)
+        return lsh(reps, threshold)
+
+    monkeypatch.setattr(dedup, "_minhash_lsh", spy)
+    hot = spark.range(800_000, 805_000).select(
+        F.col("id").alias("doc_id"),
+        F.lit("the same hot page text copied many times").alias("text"),
+    )
+    corpus = docs.select("doc_id", "text").unionByName(hot)
+    verdicts = content_dedup(corpus)
+    (reps,) = seen
+    assert reps.filter(F.col("doc_id") >= 800_000).count() == 1
+    assert reps.count() == docs.count() + 1
+    hot_rows = verdicts.filter(F.col("doc_id") >= 800_000)
+    assert hot_rows.select("component").distinct().collect() == [(800_000,)]
+    assert hot_rows.filter("survivor").count() == 1
+    assert verdicts.count() == docs.count() + 5_000
+
+
+def _cache_empty(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_content_dedup_releases_lsh_caches(spark, planted, monkeypatch):
+    """Nothing stays cached after content_dedup, on success and on
+    failure; on success only the group table and the components'
+    two checkpoints, which the result reads, stay persistent."""
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    spark.catalog.clearCache()
+    held = persistent()
+    verdicts = content_dedup(planted)
+    assert verdicts.count() == planted.count()
+    assert _cache_empty(spark)
+    assert len(persistent() - held) <= 3
+
+    def failing(pairs):
+        pairs.count()  # the LSH caches are filled, then the stage fails
+        raise RuntimeError("injected")
+
+    monkeypatch.setattr(dedupgraph, "dedup_components", failing)
+    held = persistent()
+    with pytest.raises(RuntimeError, match="injected"):
+        content_dedup(planted)
+    assert _cache_empty(spark)
+    assert not persistent() - held
 
 
 # ---------------------------------------------------------------------------

@@ -2,7 +2,7 @@
 
 Five families (all over the ``documents`` table):
 
-- exact:       md5 hash-groupBy, keep min doc_id per group
+- exact:       md5 groups (exact_groups), keep min doc_id per group
 - ngram-jaccard: exact word-3-gram Jaccard pairs via shingle inverted
                  index (explode -> equi-join -> count); at 100 TB this is
                  the verification stage behind LSH candidates
@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from typing import Iterator
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 SHINGLE_N = 3
@@ -39,12 +39,27 @@ _PERM_A = [(2 * i + 1) * 0x9E3779B97F4A7C15 % MERSENNE_P for i in range(MINHASH_
 _PERM_B = [(i + 1) * 0xC2B2AE3D27D4EB4F % MERSENNE_P for i in range(MINHASH_PERMS)]
 
 
+def exact_groups(docs: DataFrame, *cols: Column) -> DataFrame:
+    """Per-document exact-copy group: ``(doc_id, h, *cols, keep_doc_id)``
+    with ``h = md5(text)`` and ``keep_doc_id`` the group's min doc_id.
+
+    The one md5-grouping site. ``cols`` are computed in the map before
+    the shuffle, so only the narrow ``(doc_id, h, *cols)`` rows move,
+    never the text. NULL texts share the NULL-``h`` group.
+    """
+    return docs.select("doc_id", F.md5("text").alias("h"), *cols).withColumn(
+        "keep_doc_id", F.min("doc_id").over(Window.partitionBy("h"))
+    )
+
+
 def exact_dedup(docs: DataFrame) -> DataFrame:
-    """Exact dedup on full text: one survivor (min doc_id) per md5 group."""
+    """Exact dedup on full text: one survivor (min doc_id) per md5 group.
+    The output is already partitioned on ``h``, so the count adds no
+    shuffle."""
     return (
-        docs.select("doc_id", F.md5("text").alias("h"))
-        .groupBy("h")
-        .agg(F.min("doc_id").alias("keep_doc_id"), F.count("*").alias("group_size"))
+        exact_groups(docs)
+        .groupBy("h", "keep_doc_id")
+        .agg(F.count("*").alias("group_size"))
     )
 
 
@@ -382,6 +397,15 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = JACCARD_THRESHOLD) -> 
     superset relation), not a construction guarantee — on a new corpus
     with many pairs sitting exactly at the threshold, add bands.
     """
+    return _minhash_lsh(docs, threshold)[0]
+
+
+def _minhash_lsh(
+    docs: DataFrame, threshold: float
+) -> "tuple[DataFrame, tuple[DataFrame, ...]]":
+    """:func:`minhash_lsh_pairs` plus the frames it persists, for a
+    caller that knows when nothing reads them any more and releases them
+    (``dedupgraph.content_dedup``)."""
     # The signature table is read by BOTH sides of the band self-join,
     # the candidate table by three consumers, and the shingle-set table
     # by two joins — none of which Spark's exchange reuse dedupes here
@@ -475,7 +499,7 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = JACCARD_THRESHOLD) -> 
         )
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
-    )
+    ), (sig, cand, sets)
 
 
 # Open-vocabulary simhash scratch budget: distinct (doc, token) triples

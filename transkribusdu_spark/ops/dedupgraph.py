@@ -3,6 +3,14 @@ pairs and survivor selection — the step that turns pairwise dedup output
 (minhash/simhash/embedding pairs) into "keep one document per duplicate
 cluster", which is how web-scale corpus dedup is actually applied.
 
+Content dedup (:func:`content_dedup`, which the corpus and dedup jobs
+and the ``dedup_clusters`` query run) folds exact copies first: md5
+groups (``dedup.exact_groups``) send one representative each to
+MinHash-LSH and the components, and every other copy takes its
+representative's verdict. An exact-copy group of k documents is then
+one LSH row, not 16 x C(k, 2) candidate rows and C(k, 2) edges; the
+verdicts equal those of LSH + components over every document.
+
 Scale design: the component computation is the alternating
 large-star / small-star algorithm (Kiveris et al., "Connected Components
 in MapReduce and Beyond", SoCC'14) expressed as DataFrame joins — each
@@ -32,8 +40,11 @@ first-class component).
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from . import dedup as dd
+from .dedup import JACCARD_THRESHOLD
 
 # 2 * log2(10^12) ~ 80 rounds bounds any conceivable corpus (the
 # alternating rounds converge in O(log^2 n) with a small constant; real
@@ -90,6 +101,16 @@ def _release(df: DataFrame) -> None:
     df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
+def _truncate(df: DataFrame) -> DataFrame:
+    """Eager plan truncation: a RELIABLE checkpoint when the session has
+    a checkpoint dir (cluster runs — survives executor loss, which
+    localCheckpoint blocks do not), localCheckpoint otherwise (local/test
+    runs — no shared storage required)."""
+    if df.sparkSession.sparkContext._jsc.sc().getCheckpointDir().isDefined():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
+
+
 def dedup_components(pairs: DataFrame, max_rounds: int = MAX_CC_ROUNDS) -> DataFrame:
     """(doc_id, component) for every doc appearing in >= 1 pair.
 
@@ -108,16 +129,6 @@ def dedup_components(pairs: DataFrame, max_rounds: int = MAX_CC_ROUNDS) -> DataF
     the final round and the roots checkpoint, which the returned
     DataFrame reads, stay.
     """
-    spark = pairs.sparkSession
-    # Plan-truncation strategy: a RELIABLE checkpoint when the session
-    # has a checkpoint dir (cluster runs — survives executor loss, which
-    # localCheckpoint blocks do not), localCheckpoint otherwise
-    # (local/test runs — no shared storage required).
-    reliable = spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
-
-    def _truncate(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
-
     edges = _truncate(
         _canon(pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")))
     )
@@ -189,16 +200,75 @@ def dedup_survivors(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
-def dedup_clusters(docs: DataFrame) -> DataFrame:
-    """Registered query surface: MinHash-LSH near-dup pairs (verified
-    exact Jaccard >= 0.7, ``ops.dedup.minhash_lsh_pairs``) -> connected
-    components -> (doc_id, component) for every clustered doc.
+def content_dedup(docs: DataFrame, threshold: float = JACCARD_THRESHOLD) -> DataFrame:
+    """(doc_id, component, survivor) for every document: the verdicts of
+    ``dedup_survivors(docs, minhash_lsh_pairs(docs, threshold))``, with
+    MinHash-LSH and the components run on one representative per
+    exact-copy group.
 
-    This is the end-to-end corpus-dedup path a 100 TB pipeline runs:
-    sub-quadratic candidate generation, exact verification, distributed
-    clustering, survivor = min doc_id per component.
+    1. ``dedup.exact_groups``: md5 groups, representative = min doc_id;
+       only ``(doc_id, h, pairable)`` is shuffled.
+    2. LSH pairs and :func:`dedup_components` over the representatives.
+    3. A member takes its representative's component iff its group is
+       *pairable* — the text has >= 3 space-split tokens (the documents
+       that get a signature and a shingle set) and ``threshold <= 1`` —
+       and is its own component otherwise (short, empty and NULL texts
+       never pair, so every copy survives).
+
+    Why the verdicts are unchanged: identical texts have identical
+    signatures, band keys and shingle sets, so a member has exactly its
+    representative's pairs, and it pairs with the representative itself
+    at Jaccard 1.0, always a candidate since all bands match. A planted
+    300-copy group thus costs one LSH row instead of 16 x C(300, 2)
+    candidate rows and C(300, 2) graph edges.
+
+    Both the group table and the components are checkpointed, so the
+    returned frame reads only checkpoints; the LSH caches are released
+    once the components are built, on the failure path too.
     """
-    from . import dedup as dd
+    toks = F.size(F.split(F.coalesce("text", F.lit("")), " "))
+    groups = _truncate(
+        dd.exact_groups(docs, (F.lit(threshold <= 1.0) & (toks >= 3)).alias("pairable"))
+    )
+    reps = docs.join(
+        groups.filter(F.col("doc_id") == F.col("keep_doc_id")).select("doc_id"),
+        "doc_id",
+        "left_semi",
+    )
+    pairs, cached = dd._minhash_lsh(reps, threshold)
+    try:
+        comp = dedup_components(pairs)
+    except BaseException:
+        _release(groups)
+        raise
+    finally:
+        for df in cached:
+            df.unpersist()
+    rep_comp = comp.select(
+        F.col("doc_id").alias("keep_doc_id"), F.col("component").alias("rep_component")
+    )
+    return (
+        groups.join(rep_comp, "keep_doc_id", "left")
+        .select(
+            "doc_id",
+            F.when(
+                F.col("pairable"), F.coalesce("rep_component", "keep_doc_id")
+            ).otherwise(F.col("doc_id")).alias("component"),
+        )
+        .withColumn("survivor", F.col("doc_id") == F.col("component"))
+    )
 
-    pairs = dd.minhash_lsh_pairs(docs)
-    return dedup_components(pairs)
+
+def dedup_clusters(docs: DataFrame) -> DataFrame:
+    """Registered query surface: (doc_id, component) for every document
+    in a near-dup cluster of >= 2 documents — the :func:`content_dedup`
+    rows whose component has another member, which are exactly the
+    documents in >= 1 verified MinHash-LSH pair (exact Jaccard >= 0.7,
+    ``ops.dedup.minhash_lsh_pairs``).
+    """
+    return (
+        content_dedup(docs)
+        .withColumn("n", F.count("*").over(Window.partitionBy("component")))
+        .filter(F.col("n") >= 2)
+        .select("doc_id", "component")
+    )
