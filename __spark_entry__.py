@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from transkribusdu_spark import relational as rel
-from transkribusdu_spark.api import conjugate_cluster
+from transkribusdu_spark.api import conjugate_cluster, extract_documents_deterministic
 from transkribusdu_spark.functions.xycut import page_coverage_profile
 from transkribusdu_spark.ops import dedup, dedupgraph, similarity, textstats, urls
 from transkribusdu_spark.ops.multimodal import attach_media, extract_binary_features
@@ -370,27 +370,17 @@ def _q_chi2_features(spark, sf_dir):
 
 
 def _q_extract_predicted_smoothed(spark, sf_dir):
-    """Full learned path, hash-gated: fit the DETERMINISTIC closed-form
-    node classifier (diagonal LDA over integer features — every fitted
-    quantity derives from exact integer sums, so the distributed fit is
-    bit-reproducible), predict, Viterbi-smooth along reading order with
-    fitted transitions, extract main content with the predicted labels.
-    Oracle: tools/make_truth.py mirrors the identical spec single-node.
-    (The spark.ml L-BFGS and ECN learned paths remain quality-gated in
-    tests/test_learned_extraction.py and tests/test_ecn_training.py.)"""
-    from transkribusdu_spark.pipeline.model import (
-        fit_label_transitions,
-        fit_lda_params,
-        predict_nodes_lda,
-        viterbi_smooth,
-    )
-
-    nodes = parse_pages(pages_from_documents(spark, sf_dir)).cache()
-    params = fit_lda_params(nodes)
-    pred = predict_nodes_lda(nodes, params)
-    sm = viterbi_smooth(pred, log_trans=fit_label_transitions(nodes))
-    labeled = pred.drop("y_proba").join(sm, ["url", "node_id"])
-    ext = extract_text_spans(labeled, labels=("main",), label_col="smoothed_label")
+    """Full learned path, hash-gated, through
+    ``api.extract_documents_deterministic``: fit the DETERMINISTIC
+    closed-form node classifier (diagonal LDA over integer features —
+    every fitted quantity derives from exact integer sums, so the
+    distributed fit is bit-reproducible), Viterbi-smooth along reading
+    order with fitted transitions, extract main content with the
+    smoothed labels. Oracle: tools/make_truth.py mirrors the identical
+    spec single-node. (The spark.ml L-BFGS and ECN learned paths remain
+    quality-gated in tests/test_learned_extraction.py and
+    tests/test_ecn_training.py.)"""
+    ext = extract_documents_deterministic(pages_from_documents(spark, sf_dir))
     return ext.select("doc_id", F.length("extracted_text").alias("n_chars_extracted"))
 
 

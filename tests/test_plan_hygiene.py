@@ -195,6 +195,24 @@ def test_segment_regions_is_one_map_only_arrow_pass(spark, sf_dir):
         assert node not in plan, plan
 
 
+def test_extract_documents_deterministic_is_two_arrow_passes(spark, sf_dir):
+    """The learned path parses each document once to fit (per-document
+    statistics summed in the JVM) and once to score, smooth and extract:
+    no url shuffle, no pandas UDF, no grouped pandas smoothing."""
+    from transkribusdu_spark.api import extract_documents_deterministic
+    from transkribusdu_spark.pipeline.model import lda_fit_stats
+
+    tmp = tempfile.mkdtemp(prefix="plan_pages_det_")
+    pages_from_documents(spark, sf_dir).write.mode("overwrite").parquet(tmp)
+    pages = spark.read.parquet(tmp)
+    fit = _physical(lda_fit_stats(pages))
+    assert fit.count("MapInArrow") == 1, fit
+    plan = _physical(extract_documents_deterministic(pages))
+    assert plan.count("MapInArrow") == 1, plan
+    for node in ("Exchange", "FlatMapGroupsInPandas", "ArrowEvalPython", "MapInPandas"):
+        assert node not in plan, plan
+
+
 def test_page_passes_are_one_arrow_map_each(spark, sf_dir):
     """parse_pages, edges_from_pages and extract_with_status are each the
     one per-document Arrow pass over pages, with no pandas boundary."""

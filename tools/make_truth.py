@@ -320,10 +320,11 @@ def jarvis_hull(points: list[tuple[float, float]]) -> list[tuple[float, float]]:
 
 # ---------------------------------------------------------------------------
 # Deterministic learned-extraction truth (spec: pipeline/model.py
-# fit_lda_params / predict_nodes_lda / fit_label_transitions /
-# viterbi_smooth + extract reading order). Everything derives from
-# exact integer sums, so this single-node mirror reproduces the
-# distributed output bit-for-bit.
+# fit_lda_params (closed-form LDA weights + reading-order transition
+# counts) / smoothed_labels (score + Viterbi) + extract reading order,
+# as composed by api.extract_documents_deterministic). Everything
+# derives from exact integer sums, so this single-node mirror
+# reproduces the distributed output bit-for-bit.
 # ---------------------------------------------------------------------------
 def lda_fit_truth(region_rows: list[dict]) -> tuple[list[float], float]:
     import math

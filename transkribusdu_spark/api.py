@@ -6,18 +6,24 @@ Extraction (:func:`extract_documents`), oracle conjugate clustering
 (:func:`segment_regions`) are map-only: a pages row is a whole
 document, so each is one :func:`.pipeline.perdoc.per_doc` pass over
 ``url``/``html`` that parses every document once and needs no shuffle.
-The learned paths compose the staged DataFrame layers (parse, edges,
-features, model)."""
+The deterministic learned path (:func:`extract_documents_deterministic`)
+is two such passes, a summed fit and a map-only score, smooth and
+extract. The spark.ml paths (:func:`extract_documents_predicted`,
+:func:`train_models`) compose the staged DataFrame layers (parse,
+edges, features, model)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 from .pipeline.edges import build_edges
-from .pipeline.extract import extract_from_pages, extract_text_spans
+from .pipeline.extract import STATUS_SCHEMA, _fused_doc, extract_from_pages, extract_text_spans
 from .pipeline.features import edge_features, node_features
 from .pipeline.model import (
+    fit_lda_params,
     predict_nodes,
+    smoothed_labels,
     train_edge_classifier,
     train_node_classifier,
 )
@@ -25,6 +31,9 @@ from .pipeline.parse import parse_pages
 from .pipeline.perdoc import per_doc
 from .pipeline.segment import oracle_clusters_doc, regions_doc
 from .schemas import CLUSTERS_SCHEMA, HULLS_SCHEMA
+
+# The extraction rows of extract_with_status, without the parse status.
+_EXTRACT_SCHEMA = StructType([f for f in STATUS_SCHEMA.fields if f.name != "status"])
 
 
 def extract_documents(pages: DataFrame) -> DataFrame:
@@ -74,24 +83,34 @@ def conjugate_cluster(pages: DataFrame) -> DataFrame:
 
 
 def extract_documents_deterministic(pages: DataFrame) -> DataFrame:
-    """The hash-gateable learned path: fit the closed-form diagonal-LDA
-    node classifier (bit-reproducible integer-sum fit), predict,
-    Viterbi-smooth with fitted transitions, extract. This is the
-    pipeline the contract query `extract_predicted_smoothed` verifies
-    against the independent single-node oracle."""
-    from .pipeline.model import (
-        fit_label_transitions,
-        fit_lda_params,
-        predict_nodes_lda,
-        viterbi_smooth,
-    )
+    """The hash-gateable learned path (SURVEY.md §0 steps 5-6): classify
+    every node with the closed-form diagonal-LDA model, Viterbi-smooth
+    the labels along reading order with fitted transitions, and extract
+    the nodes smoothed to ``main``, as ``(url, doc_id, extracted_text,
+    spans)`` rows. This is the pipeline the contract query
+    ``extract_predicted_smoothed`` verifies against the independent
+    single-node oracle.
 
-    nodes = parse_pages(pages)
-    params = fit_lda_params(nodes)
-    pred = predict_nodes_lda(nodes, params)
-    sm = viterbi_smooth(pred, log_trans=fit_label_transitions(nodes))
-    labeled = pred.drop("y_proba").join(sm, ["url", "node_id"])
-    return extract_text_spans(labeled, labels=("main",), label_col="smoothed_label")
+    Two :func:`.pipeline.perdoc.per_doc` passes, so each document is
+    parsed twice: :func:`.pipeline.model.fit_lda_params` sums per-document
+    statistics into one collected row, then one map-only pass scores and
+    smooths each document (:func:`.pipeline.model.smoothed_labels`) and
+    assembles its text with the same reading order and span offsets as
+    :func:`extract_documents`. No shuffle; a document that fails to
+    parse, or has no node smoothed to ``main``, gives no row. Every node
+    is its own span, whatever its ``@id``."""
+    params = fit_lda_params(pages)
+
+    def kernel(url: str, cols: dict | None, status: str) -> dict[str, list]:
+        if not cols or not cols["node_id"]:
+            return {}
+        assembled = _fused_doc(dict(cols, label=smoothed_labels(cols, params)), {"main"})
+        if assembled is None:
+            return {}
+        text, spans = assembled
+        return dict(url=[url], doc_id=[cols["doc_id"][0]], extracted_text=[text], spans=[spans])
+
+    return per_doc(_EXTRACT_SCHEMA, kernel, pages)
 
 
 def segment_regions(pages: DataFrame) -> DataFrame:

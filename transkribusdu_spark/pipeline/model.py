@@ -12,19 +12,28 @@ Spark-first: training is ``spark.ml`` LogisticRegression (distributed
 L-BFGS over the executors); inference stays JVM-side (no Python).
 Fitted coefficients are tiny and broadcast implicitly by the ML
 transformer — the analogue of the reference's pickled-model load.
+
+The deterministic learned path (closed-form diagonal LDA + fitted
+Viterbi smoothing, last section) is instead two per-document Arrow
+kernels: a fit whose statistics are summed in the JVM, and a
+score-and-smooth kernel that runs inside the extraction pass.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
 from pyspark.ml.classification import LogisticRegression, LogisticRegressionModel
 from pyspark.ml.feature import VectorAssembler
 from pyspark.ml.functions import vector_to_array
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..functions.viterbi import viterbi_decode
 from ..schemas import MAIN_CONTENT_LABELS
+from .extract import _fused_ord_key
 from .features import EDGE_FEATURE_COLS, NODE_FEATURE_COLS
+from .perdoc import per_doc
 
 
 # ---------------------------------------------------------------------------
@@ -133,178 +142,6 @@ def apply_xor(
     ).drop("_r")
 
 
-def fit_label_transitions(
-    nodes: DataFrame,
-    classes: tuple[str, ...] = ("boilerplate", "main"),
-    label_col: str = "label",
-):
-    """Fit the class-transition matrix from training labels: bigram
-    counts along reading order (window lag + groupBy — one distributed
-    pass). A *fitted* matrix is essential: a naive sticky prior assumes
-    runs, but real layouts switch main/boilerplate at every page
-    boundary, and a wrong prior makes smoothing strictly worse
-    (measured: 278/500 -> 0/500 byte-identical)."""
-    import numpy as np
-    from pyspark.sql import Window
-
-    is_main = F.col(label_col).isin(list(MAIN_CONTENT_LABELS)).cast("int")
-    w = Window.partitionBy("url").orderBy("page_num", "y1", "x1", "node_id")
-    pairs = (
-        nodes.withColumn("c", is_main)
-        .withColumn("c_next", F.lead("c").over(w))
-        .filter(F.col("c_next").isNotNull())
-        .groupBy("c", "c_next")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    )
-    k = len(classes)
-    counts = np.ones((k, k))  # add-one smoothing
-    for r in pairs:
-        counts[r.c, r.c_next] += r.n
-    return np.log(counts / counts.sum(axis=1, keepdims=True))
-
-
-def viterbi_smooth(
-    scored: DataFrame,
-    log_trans=None,
-    proba_col: str = "y_proba",
-    classes: tuple[str, ...] = ("boilerplate", "main"),
-    self_transition: float = 0.8,
-) -> DataFrame:
-    """Sequence smoothing of per-node class probabilities along reading
-    order (C11 applied): Viterbi decode against a transition matrix —
-    pass the ``fit_label_transitions`` output for a learned matrix,
-    else a sticky default is used. Per-document DP inside
-    ``applyInPandas`` (reading-order sequences are short).
-
-    Measured caveat (sf0.01 synthetic corpus): when the node classifier
-    is already strong with near-independent errors, smoothing REDUCES
-    document-perfect extraction (raw 278/500 vs learned-trans 153/500 vs
-    sticky 0/500) — use it when per-node scores are noisy relative to
-    layout transitions, not as a default post-process."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from ..functions.viterbi import viterbi_decode
-
-    k = len(classes)
-    if log_trans is None:
-        off = (1.0 - self_transition) / max(k - 1, 1)
-        log_trans = np.log(np.full((k, k), off) + np.eye(k) * (self_transition - off))
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("node_id", T.StringType()),
-            T.StructField("smoothed_label", T.StringType()),
-        ]
-    )
-    src = scored.select("url", "node_id", "page_num", "y1", "x1", proba_col)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["page_num", "y1", "x1", "node_id"])
-        proba = np.clip(np.array(list(pdf[proba_col])), 1e-9, 1.0)
-        path, _ = viterbi_decode(np.log(proba), log_trans)
-        return pd.DataFrame(
-            {
-                "url": pdf["url"].to_numpy(),
-                "node_id": pdf["node_id"].to_numpy(),
-                "smoothed_label": [classes[i] for i in path],
-            }
-        )
-
-    return src.groupBy("url").applyInPandas(run, schema=schema)
-
-
-# ---------------------------------------------------------------------------
-# Deterministic closed-form node classifier (diagonal LDA over
-# integer-valued features). spark.ml L-BFGS is not bit-stable across
-# partitionings, so the learned-extraction contract query uses THIS
-# model: every fitted quantity derives from exact integer sums
-# (count/sum/sum-of-squares, all < 2^53), so the fit and the scores are
-# bit-reproducible across engines, partition orders, and cluster sizes
-# — hash-gateable against the independent single-node oracle
-# (tools/make_truth.py mirrors the identical spec).
-# ---------------------------------------------------------------------------
-# Integer-valued node features for the deterministic model, in the
-# FIXED order the score expression sums them (float op order matters).
-LDA_FEATURES = ("ld_chars", "ld_spaces", "ld_w", "ld_h")
-
-
-def _lda_feature_cols(nodes: DataFrame) -> DataFrame:
-    txt = F.coalesce(F.col("text"), F.lit(""))
-    return nodes.withColumn("ld_chars", F.length(txt).cast("double")).withColumn(
-        "ld_spaces", (F.length(txt) - F.length(F.replace(txt, F.lit(" "), F.lit("")))).cast("double")
-    ).withColumn("ld_w", F.col("x2") - F.col("x1")).withColumn("ld_h", F.col("y2") - F.col("y1"))
-
-
-def fit_lda_params(nodes: DataFrame, label_col: str = "label") -> dict:
-    """Closed-form fit: per-class counts, sums, sums of squares (one
-    distributed aggregation, 2 result rows) -> per-feature weights
-    w_f = (mu1_f - mu0_f) / (pooled_var_f + 1) and intercept
-    b = ln(n1/n0) - sum_f w_f * (mu1_f + mu0_f) / 2."""
-    import math
-
-    ft = _lda_feature_cols(nodes).withColumn(
-        "y", F.col(label_col).isin(list(MAIN_CONTENT_LABELS)).cast("int")
-    )
-    aggs = [F.count("*").alias("n")]
-    for c in LDA_FEATURES:
-        aggs.append(F.sum(c).alias(f"s_{c}"))
-        aggs.append(F.sum(F.col(c) * F.col(c)).alias(f"q_{c}"))
-    rows = {r["y"]: r for r in ft.groupBy("y").agg(*aggs).collect()}
-    if 0 not in rows or 1 not in rows:
-        present = sorted(rows)
-        raise ValueError(
-            "fit_lda_params needs both classes present (main-content and "
-            f"non-main nodes); got only y={present}. A single-class corpus "
-            "has no discriminative direction — filter upstream or use a "
-            "prior-only classifier."
-        )
-    n0, n1 = float(rows[0]["n"]), float(rows[1]["n"])
-    ws, mid = [], []
-    for c in LDA_FEATURES:
-        s0, s1 = float(rows[0][f"s_{c}"]), float(rows[1][f"s_{c}"])
-        q = float(rows[0][f"q_{c}"]) + float(rows[1][f"q_{c}"])
-        mu0, mu1 = s0 / n0, s1 / n1
-        var = (q - s0 * mu0 - s1 * mu1) / (n0 + n1 - 2.0) + 1.0
-        ws.append((mu1 - mu0) / var)
-        mid.append((mu0 + mu1) / 2.0)
-    b = math.log(n1 / n0)
-    for w, m in zip(ws, mid):
-        b = b - w * m
-    return {"w": ws, "b": b}
-
-
-def predict_nodes_lda(nodes: DataFrame, params: dict) -> DataFrame:
-    """Score with broadcast closed-form weights: one Arrow kernel,
-    z = f0*w0 + f1*w1 + f2*w2 + f3*w3 + b (fixed op order, mirrored
-    bit-for-bit by the oracle), p_main = sigmoid(z)."""
-    import numpy as np
-
-    w = [float(x) for x in params["w"]]
-    b = float(params["b"])
-
-    @F.pandas_udf("array<double>")
-    def proba(f0: pd.Series, f1: pd.Series, f2: pd.Series, f3: pd.Series) -> pd.Series:
-        z = (
-            f0.to_numpy(dtype=np.float64) * w[0]
-            + f1.to_numpy(dtype=np.float64) * w[1]
-            + f2.to_numpy(dtype=np.float64) * w[2]
-            + f3.to_numpy(dtype=np.float64) * w[3]
-            + b
-        )
-        p = 1.0 / (1.0 + np.exp(-z))
-        return pd.Series([[1.0 - v, v] for v in p])
-
-    ft = _lda_feature_cols(nodes)
-    return ft.withColumn("y_proba", proba(*[F.col(c) for c in LDA_FEATURES])).withColumn(
-        "pred_label",
-        F.when(F.col("y_proba")[1] >= 0.5, F.lit("main")).otherwise(F.lit("boilerplate")),
-    ).drop(*LDA_FEATURES)
-
-
 def train_edge_classifier(
     edge_feats: DataFrame,
     reg_param: float = 0.01,
@@ -334,3 +171,139 @@ def predict_edges(
         proba.getItem(0).alias("p_continue"),
         proba.getItem(1).alias("p_break"),
     )
+
+
+# ---------------------------------------------------------------------------
+# Deterministic learned path: a closed-form node classifier (diagonal LDA
+# over integer-valued features) smoothed along reading order with fitted
+# transitions. spark.ml L-BFGS is not bit-stable across partitionings, so
+# the learned-extraction contract query uses THIS model: every fitted
+# quantity derives from exact integer sums (per-class count/sum/sum of
+# squares and reading-order bigram counts, all < 2^53), so the fit and
+# the scores are bit-reproducible across engines, partition orders, and
+# cluster sizes — hash-gateable against the independent single-node
+# oracle (tools/make_truth.py mirrors the identical spec). Both halves
+# are per-document kernels over the parsed columns, in the reading order
+# of ``extract._fused_ord_key``: :func:`fit_lda_params` sums the
+# per-document statistics in the JVM, and
+# ``api.extract_documents_deterministic`` scores, smooths
+# (:func:`smoothed_labels`) and extracts in one map-only pass.
+# A *fitted* transition matrix is essential: a naive sticky prior assumes
+# runs, but real layouts switch main/boilerplate at every page boundary,
+# and a wrong prior makes smoothing strictly worse (measured: 278/500 ->
+# 0/500 byte-identical).
+# ---------------------------------------------------------------------------
+# Integer-valued node features for the deterministic model, in the
+# FIXED order the score expression sums them (float op order matters).
+LDA_FEATURES = ("ld_chars", "ld_spaces", "ld_w", "ld_h")
+LDA_CLASSES = ("boilerplate", "main")
+
+# One row of per-document fit statistics: per class y (1 = main content)
+# the node count, and per feature the sum and sum of squares; then the
+# reading-order bigram counts t<y><y_next>.
+_FIT_SCHEMA = T.StructType(
+    [T.StructField(f"n{y}", T.LongType()) for y in (0, 1)]
+    + [T.StructField(f"{k}{y}_{c}", T.DoubleType())
+       for y in (0, 1) for c in LDA_FEATURES for k in "sq"]
+    + [T.StructField(f"t{a}{b}", T.LongType()) for a in (0, 1) for b in (0, 1)]
+)
+
+
+def _lda_features(dc: dict) -> tuple[list[int], np.ndarray]:
+    """One document's node indices in reading order and their
+    ``LDA_FEATURES`` as a float64 [4, n] array in that order: code-point
+    length, space count, width, height."""
+    idx = sorted(range(len(dc["node_id"])), key=lambda i: _fused_ord_key(dc, i))
+    txt = [dc["text"][i] or "" for i in idx]
+    return idx, np.array([[float(len(t)) for t in txt],
+                          [float(t.count(" ")) for t in txt],
+                          [dc["x2"][i] - dc["x1"][i] for i in idx],
+                          [dc["y2"][i] - dc["y1"][i] for i in idx]], dtype=np.float64)
+
+
+def _fit_stats_doc(url: str, dc: dict | None, status: str) -> dict[str, list]:
+    """Fit kernel: one ``_FIT_SCHEMA`` row per document with nodes."""
+    if not dc or not dc["node_id"]:
+        return {}
+    idx, f = _lda_features(dc)
+    y = np.array([dc["label"][i] in MAIN_CONTENT_LABELS for i in idx], dtype=np.int64)
+    row: dict[str, list] = {}
+    for k in (0, 1):
+        fk = f[:, y == k]
+        row[f"n{k}"] = [int(fk.shape[1])]
+        for c, col in zip(LDA_FEATURES, fk):
+            row[f"s{k}_{c}"] = [float(col.sum())]
+            row[f"q{k}_{c}"] = [float((col * col).sum())]
+    for a in (0, 1):
+        for b in (0, 1):
+            row[f"t{a}{b}"] = [int(np.sum((y[:-1] == a) & (y[1:] == b)))]
+    return row
+
+
+def lda_fit_stats(pages: DataFrame) -> DataFrame:
+    """The fit pass: the per-document ``_FIT_SCHEMA`` rows of one
+    ``per_doc`` pass over ``pages``, summed column by column in the JVM
+    into one row."""
+    stats = per_doc(_FIT_SCHEMA, _fit_stats_doc, pages)
+    return stats.agg(*[F.sum(c).alias(c) for c in _FIT_SCHEMA.fieldNames()])
+
+
+def fit_lda_params(pages: DataFrame) -> dict:
+    """Closed-form fit from the one :func:`lda_fit_stats` row: per-feature
+    weights w_f = (mu1_f - mu0_f) / (pooled_var_f + 1), intercept
+    b = ln(n1/n0) - sum_f w_f * (mu1_f + mu0_f) / 2, and the add-one
+    smoothed log transition matrix over ``LDA_CLASSES``. Returns
+    ``{"w", "b", "log_trans"}``."""
+    import math
+
+    r = lda_fit_stats(pages).collect()[0]
+    present = [y for y in (0, 1) if r[f"n{y}"]]
+    if len(present) < 2:
+        raise ValueError(
+            "fit_lda_params needs both classes present (main-content and "
+            f"non-main nodes); got only y={present}. A single-class corpus "
+            "has no discriminative direction — filter upstream or use a "
+            "prior-only classifier."
+        )
+    n0, n1 = float(r["n0"]), float(r["n1"])
+    ws, mid = [], []
+    for c in LDA_FEATURES:
+        s0, s1 = float(r[f"s0_{c}"]), float(r[f"s1_{c}"])
+        q = float(r[f"q0_{c}"]) + float(r[f"q1_{c}"])
+        mu0, mu1 = s0 / n0, s1 / n1
+        var = (q - s0 * mu0 - s1 * mu1) / (n0 + n1 - 2.0) + 1.0
+        ws.append((mu1 - mu0) / var)
+        mid.append((mu0 + mu1) / 2.0)
+    b = math.log(n1 / n0)
+    for w, m in zip(ws, mid):
+        b = b - w * m
+    counts = np.ones((2, 2))  # add-one smoothing
+    for a in (0, 1):
+        for a_next in (0, 1):
+            counts[a, a_next] += r[f"t{a}{a_next}"]
+    return {"w": ws, "b": b, "log_trans": np.log(counts / counts.sum(axis=1, keepdims=True))}
+
+
+def smoothed_labels(dc: dict, params: dict) -> list[str]:
+    """Score and smooth one document with nodes (C11 applied):
+    z = f0*w0 + f1*w1 + f2*w2 + f3*w3 + b (fixed op order, mirrored
+    bit-for-bit by the oracle), p_main = sigmoid(z), then a Viterbi
+    decode of log(clip([1 - p, p])) along reading order against the
+    fitted transitions. Returns each node's ``LDA_CLASSES`` label, in
+    document order.
+
+    Measured caveat (sf0.01 synthetic corpus): when the node classifier
+    is already strong with near-independent errors, smoothing REDUCES
+    document-perfect extraction (raw 278/500 vs learned-trans 153/500 vs
+    sticky 0/500) — use it when per-node scores are noisy relative to
+    layout transitions, not as a default post-process."""
+    idx, f = _lda_features(dc)
+    w, b = params["w"], params["b"]
+    z = f[0] * w[0] + f[1] * w[1] + f[2] * w[2] + f[3] * w[3] + b
+    p = 1.0 / (1.0 + np.exp(-z))
+    proba = np.clip(np.stack([1.0 - p, p], axis=1), 1e-9, 1.0)
+    path, _ = viterbi_decode(np.log(proba), params["log_trans"])
+    labels = [""] * len(idx)
+    for i, k in zip(idx, path):
+        labels[i] = LDA_CLASSES[k]
+    return labels
