@@ -26,7 +26,13 @@ transkribusdu_spark.zip jobs/corpus_job.py ...`); the single JSON line
 on stdout carries the stage funnel (rows in/out per stage, parse
 statuses), per-phase wall seconds, and the lineage verdict. The funnel
 up to extraction is observed (``DataFrame.observe``) in the one action
-that materializes the extraction, so it costs no extra scan or job.
+that materializes the extraction, and ``after_content_dedup`` is
+observed on the frame the lineage'd write runs, so the funnel costs no
+extra scan or job. That figure counts the rows written: with
+``--annotate`` it equals the survivor count only while the annotation
+join gives one row per ``doc_id``. The lineage verdict's ``complete``
+compares the output's distinct urls against it, so a join that
+multiplied rows shows there as incomplete.
 Sandbox stand-in::
 
     spark-submit --master local[8] --py-files dist/transkribusdu_spark.zip \
@@ -124,8 +130,6 @@ def main() -> None:
     status = status.persist()
     extracted = status.filter(F.col("extracted_text").isNotNull()).drop("status")
     funnel["extracted"] = extracted.count()
-    for obs in observed.values():
-        funnel.update(obs.get)
     phases["extract_sec"] = round(time.monotonic() - t, 3)
 
     t = time.monotonic()
@@ -136,7 +140,6 @@ def main() -> None:
         extracted = extracted.join(
             verdicts.filter("survivor").select("doc_id"), "doc_id", "left_semi"
         )
-        funnel["after_content_dedup"] = extracted.count()
     phases["content_dedup_sec"] = round(time.monotonic() - t, 3)
 
     t = time.monotonic()
@@ -149,8 +152,12 @@ def main() -> None:
         extracted = extracted.join(ann, "doc_id")
     phases["annotate_sec"] = round(time.monotonic() - t, 3)
 
+    if not args.no_content_dedup:
+        extracted = count_rows(extracted, "after_content_dedup")
     phases.update(run_with_lineage(extracted, args.output, run_id=run_id,
                                    input_snapshot=snapshot))
+    for obs in observed.values():
+        funnel.update(obs.get)
     phases["audit_sec"] = write_audit(status, funnel, args.output, run_id)
     wall = time.monotonic() - t0
     out_docs = funnel.get("after_content_dedup", funnel["extracted"])

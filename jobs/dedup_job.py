@@ -28,6 +28,36 @@ import time
 import uuid
 
 
+def write_op(docs, op: str, output: str, threshold: float | None = None,
+             max_hamming: int = 8) -> None:
+    """Run dedup operator ``op`` over ``docs`` (doc_id, text) and write its
+    result parquet to ``output``. Whatever the operator caches for its
+    own plan is released once the write has run."""
+    from transkribusdu_spark.ops import dedup, dedupgraph
+
+    thr = dedup.JACCARD_THRESHOLD if threshold is None else threshold
+    cached = ()
+    if op == "exact":
+        result = dedup.exact_dedup(docs)
+    elif op == "minhash":
+        result, cached = dedup._minhash_lsh(docs, thr)
+    elif op == "simhash":
+        result = dedup.simhash_near_pairs(docs, max_hamming=max_hamming)
+    elif op in ("cluster", "clean"):
+        result = dedupgraph.content_dedup(docs, thr)
+        if op == "clean":
+            result = docs.join(
+                result.filter("survivor").select("doc_id"), "doc_id", "left_semi"
+            )
+    else:
+        result = dedup.ngram_jaccard_pairs(docs, thr)
+    try:
+        result.write.mode("overwrite").parquet(output)
+    finally:
+        for df in cached:
+            df.unpersist()
+
+
 def main() -> None:
     p = argparse.ArgumentParser(description=__doc__)
     src = p.add_mutually_exclusive_group(required=True)
@@ -44,7 +74,6 @@ def main() -> None:
     p.add_argument("--max-hamming", type=int, default=8, help="simhash op")
     args = p.parse_args()
 
-    from transkribusdu_spark.ops import dedup
     from transkribusdu_spark.session import submit_session
 
     run_id = args.run_id or f"dedup-{uuid.uuid4().hex[:12]}"
@@ -53,30 +82,7 @@ def main() -> None:
 
     path = args.documents or f"{args.sf_dir}/documents.parquet"
     docs = spark.read.parquet(path).select("doc_id", "text")
-
-    if args.op == "exact":
-        result = dedup.exact_dedup(docs)
-    elif args.op == "minhash":
-        kw = {} if args.threshold is None else {"threshold": args.threshold}
-        result = dedup.minhash_lsh_pairs(docs, **kw)
-    elif args.op == "simhash":
-        result = dedup.simhash_near_pairs(docs, max_hamming=args.max_hamming)
-    elif args.op in ("cluster", "clean"):
-        from transkribusdu_spark.ops import dedupgraph
-
-        kw = {} if args.threshold is None else {"threshold": args.threshold}
-        verdicts = dedupgraph.content_dedup(docs, **kw)
-        if args.op == "cluster":
-            result = verdicts
-        else:
-            result = docs.join(
-                verdicts.filter("survivor").select("doc_id"), "doc_id", "left_semi"
-            )
-    else:
-        kw = {} if args.threshold is None else {"threshold": args.threshold}
-        result = dedup.ngram_jaccard_pairs(docs, **kw)
-
-    result.write.mode("overwrite").parquet(args.output)
+    write_op(docs, args.op, args.output, args.threshold, args.max_hamming)
     wall = time.monotonic() - t0
     n_docs = docs.count()
     n_rows = spark.read.parquet(args.output).count()

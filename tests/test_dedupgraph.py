@@ -61,6 +61,11 @@ def _union_find(edges):
         ("stars", [(100 * c, 100 * c + i) for c in range(5) for i in range(1, 8)]),
         ("reverse_path", [(i + 1, i) for i in range(20)]),  # doc_a > doc_b tolerated
         ("single_edge", [(7, 3)]),
+        # a hub that is not its component's minimum
+        ("star", [(50, i) for i in range(40, 50)] + [(50, i) for i in range(51, 60)]),
+        ("disjoint", [(i, i + 1) for i in range(200, 210)]  # chain
+         + [(a, b) for a in range(300, 306) for b in range(a + 1, 306)]  # clique
+         + [(400, 400 + i) for i in range(1, 6)] + [(9, 2), (8, 1)]),  # star, pairs
     ],
 )
 def test_components_match_union_find_structured(spark, name, edges):
@@ -88,9 +93,17 @@ def test_components_match_union_find_random(spark):
     assert got == _union_find(edges)
 
 
-def test_components_empty_pairs(spark):
+def test_components_empty_pairs(spark, monkeypatch):
+    """An empty edge set is already converged: no round runs, and the
+    result is an empty (doc_id, component) frame of the pair id type."""
+    def no_round(edges):
+        raise AssertionError("a round ran on an empty edge set")
+
+    monkeypatch.setattr(dedupgraph, "_large_star", no_round)
     empty = spark.createDataFrame([], "doc_a long, doc_b long")
-    assert dedup_components(empty).count() == 0
+    got = dedup_components(empty)
+    assert got.schema.simpleString() == "struct<doc_id:bigint,component:bigint>"
+    assert got.count() == 0
 
 
 def test_dedup_clusters_matches_duckdb_transitive_closure(docs, duck):
@@ -226,6 +239,25 @@ def test_content_dedup_releases_lsh_caches(spark, planted, monkeypatch):
         content_dedup(planted)
     assert _cache_empty(spark)
     assert not persistent() - held
+
+
+def test_dedup_job_minhash_releases_caches(spark, docs, tmp_path):
+    """``dedup_job --op minhash`` leaves nothing in the session's cache
+    manager once its write has run (``minhash_lsh_pairs`` alone keeps its
+    three persists cached)."""
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "jobs", "dedup_job.py")
+    spec = importlib.util.spec_from_file_location("dedup_job", path)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+
+    spark.catalog.clearCache()
+    out = str(tmp_path / "pairs")
+    job.write_op(docs.select("doc_id", "text"), "minhash", out)
+    assert _cache_empty(spark)
+    assert spark.read.parquet(out).count() > 0
 
 
 # ---------------------------------------------------------------------------
@@ -465,10 +497,12 @@ def test_components_reliable_checkpoint_path(spark, tmp_path, reliable):
 
 
 def test_components_release_superseded_checkpoints(spark):
-    """Repeated calls in one session keep at most two persistent RDDs
-    each (the final round and the roots checkpoint the result reads);
-    every superseded round checkpoint and the entry one are freed."""
+    """Repeated calls in one session keep one persistent RDD each (the
+    final round, from which the result reads labels and roots); every
+    superseded round checkpoint and the entry one are freed, and no node
+    table is cached."""
     sc = spark.sparkContext
+    spark.catalog.clearCache()
     edges = [(i, i + 1) for i in range(25)] + [(100, 103), (103, 99)]
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
     held = [len(sc._jsc.getPersistentRDDs())]
@@ -476,7 +510,8 @@ def test_components_release_superseded_checkpoints(spark):
     for _ in range(3):
         results.append(dedup_components(pairs))
         held.append(len(sc._jsc.getPersistentRDDs()))
-    assert all(b - a <= 2 for a, b in zip(held, held[1:])), held
+    assert all(b - a == 1 for a, b in zip(held, held[1:])), held
+    assert _cache_empty(spark)
     # the retained checkpoints are the ones the results read
     for r in results:
         assert dict(r.collect()) == _union_find(edges)

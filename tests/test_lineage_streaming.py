@@ -162,3 +162,25 @@ def test_stream_dedup_urls_cross_batch(spark, sf_dir, tmp_path):
     assert out.count() == 40  # 30 + 10 new; all 30 variants suppressed
     assert out.filter(F.col("url").contains("utm_source=refetch")).count() == 0
     assert out.select("canonical_url").distinct().count() == 40
+
+
+def test_verify_lineage_counts_in_one_pass(spark, tmp_path):
+    """The one-aggregate counts equal the two separate scans: a repeated
+    url counts once and a NULL url as one value."""
+    out_dir = str(tmp_path / "out3")
+    spark.createDataFrame(
+        [("u1", "a"), ("u1", "b"), (None, "c"), ("u2", "d")],
+        "url string, extracted_text string",
+    ).write.parquet(os.path.join(out_dir, "extracted"))
+    spark.createDataFrame([(4,)], "doc_count long").write.parquet(
+        os.path.join(out_dir, "lineage"))
+    ext = spark.read.parquet(os.path.join(out_dir, "extracted"))
+    got = verify_lineage(spark, out_dir, expected_docs=3)
+    assert got == {
+        "lineage_docs": 4,
+        "output_rows": ext.count(),
+        "distinct_urls": ext.select("url").distinct().count(),
+        "expected": 3,
+        "complete": True,
+    }
+    assert got["distinct_urls"] == 3

@@ -42,6 +42,24 @@ def test_minhash_lsh_recall_vs_exact(docs):
     assert want == got  # verification stage makes LSH output == exact set
 
 
+def test_band_keys_sql_equals_column_expression(spark, sf_dir):
+    """The one-expression LSH band keys give the buckets of the nested
+    Column expression they replaced, band for band, on sf0.01."""
+    import os
+
+    sf = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01")
+    sig = dedup.minhash_signatures(spark.read.parquet(f"{sf}/documents.parquet"))
+    rows = dedup.MINHASH_PERMS // dedup.LSH_BANDS
+    old = F.array(*[
+        F.xxhash64(F.lit(bi), *[F.col("sig")[bi * rows + r] for r in range(rows)])
+        for bi in range(dedup.LSH_BANDS)
+    ])
+    got = sig.select(F.expr(dedup._band_keys_sql()).alias("new"), old.alias("old"))
+    assert got.filter(F.col("new") != F.col("old")).count() == 0
+    assert got.count() == 500
+    assert got.select(F.size("new")).distinct().collect() == [(dedup.LSH_BANDS,)]
+
+
 def test_hot_shingle_guard_bounds_boilerplate_skew(spark):
     """Boilerplate-heavy fixture: every doc shares the 'copyright all
     rights reserved' shingles, two docs are true near-dups. The DF-cap

@@ -305,3 +305,27 @@ def test_parse_batch_has_one_call_site():
     package calls parse_batch only from perdoc.per_doc, so no stage can
     grow its own batch loop around the parse."""
     assert _call_sites("parse_batch") == [(os.path.join("pipeline", "perdoc.py"), "per_doc")]
+
+
+def test_persisted_status_is_coalesced_by_aqe(spark, sf_dir):
+    """The jobs persist the extraction ``status`` frame behind url
+    dedup's window shuffle. AQE sizes that cached plan to its data, so
+    the Python kernels reading it run fewer tasks than
+    ``spark.sql.shuffle.partitions``."""
+    from transkribusdu_spark.ops.urls import url_dedup_rows
+    from transkribusdu_spark.pipeline.extract import extract_with_status
+    from transkribusdu_spark.session import engine_conf
+    from transkribusdu_spark.synth import pages_from_documents
+
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    assert engine_conf()[key] == "true"
+    assert spark.conf.get(key) == "true"
+    sf = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01")
+    pages = url_dedup_rows(pages_from_documents(spark, sf))
+    status = extract_with_status(pages.drop("canonical_url", "n_snapshots")).persist()
+    try:
+        assert status.count() == 500
+        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert status.rdd.getNumPartitions() < n_shuffle
+    finally:
+        status.unpersist()

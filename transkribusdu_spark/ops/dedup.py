@@ -400,6 +400,17 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = JACCARD_THRESHOLD) -> 
     return _minhash_lsh(docs, threshold)[0]
 
 
+def _band_keys_sql() -> str:
+    """``array(xxhash64(0, sig[0], .., sig[3]), .., xxhash64(15, ..))``:
+    one 64-bit LSH bucket per band, the band index hashed in."""
+    rows = MINHASH_PERMS // LSH_BANDS
+    return "array({})".format(", ".join(
+        "xxhash64({}, {})".format(
+            bi, ", ".join(f"sig[{bi * rows + r}]" for r in range(rows)))
+        for bi in range(LSH_BANDS)
+    ))
+
+
 def _minhash_lsh(
     docs: DataFrame, threshold: float
 ) -> "tuple[DataFrame, tuple[DataFrame, ...]]":
@@ -423,7 +434,6 @@ def _minhash_lsh(
     from pyspark import StorageLevel
 
     sig = minhash_signatures(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    rows_per_band = MINHASH_PERMS // LSH_BANDS
     # ONE packed 64-bit join key per (doc, band): xxhash64 over (band
     # index, the band's signature rows) — the band index rides inside
     # the hash, so the self-join carries a single long instead of
@@ -432,20 +442,9 @@ def _minhash_lsh(
     # (different-signature) candidates than the old 32-bit bucket —
     # collisions only ever ADD candidates (all emitted pairs are
     # exact-verified below), so this can only shrink wasted verify work.
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(bi),
-                        *[F.col("sig")[bi * rows_per_band + r] for r in range(rows_per_band)],
-                    )
-                    for bi in range(LSH_BANDS)
-                ]
-            )
-        ).alias("bucket"),
-    )
+    # The 16 keys are one SQL expression: built from nested Column calls
+    # they cost ~2.5k py4j round trips (0.4-0.8 s of driver time a call).
+    bands = sig.select("doc_id", F.explode(F.expr(_band_keys_sql())).alias("bucket"))
     # No join-strategy hint: AQE picks broadcast while the band table is
     # small and falls back to a shuffled join at corpus scale — the same
     # let-AQE-choose contract the hot-shingle guard carries.

@@ -24,8 +24,10 @@ result is checkpointed too — reliably (HDFS/S3 checkpoint dir) when the
 session has one, so an executor loss replays at most one round;
 localCheckpoint otherwise (local runs) — so every round plans against a
 leaf. A checkpoint is released as soon as the round after it has been
-compared; only the final round and the roots checkpoint, which the
-returned DataFrame reads, outlive the call. Near-dup graphs are
+compared; only the final round outlives the call. There is no separate
+node table: the converged stars hold every node, and the roots are read
+from the final round (each root is a ``v`` and never a ``u``). An empty
+edge set runs no round at all. Near-dup graphs are
 overwhelmingly tiny star/clique clusters, so in practice 2-3 rounds
 converge; the loop still carries the logarithmic worst-case bound for
 adversarial chains (a 1M-doc path graph converges in ~20 rounds, not 1M).
@@ -39,7 +41,6 @@ first-class component).
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -121,28 +122,24 @@ def dedup_components(pairs: DataFrame, max_rounds: int = MAX_CC_ROUNDS) -> DataF
 
     The canonical edge set is checkpointed once at entry and every
     round's result is checkpointed (reliable when a checkpoint dir is
-    configured, local otherwise), so each round, the ``nodes`` table and
-    the roots join plan against a leaf instead of the caller's whole
-    upstream lineage. A round's edge count is carried forward as the next
-    round's ``prev`` count. Once a round has been compared, the
-    checkpoint it superseded (the entry one included) is released; only
-    the final round and the roots checkpoint, which the returned
-    DataFrame reads, stay.
+    configured, local otherwise), so each round plans against a leaf
+    instead of the caller's whole upstream lineage. A round's edge count
+    is carried forward as the next round's ``prev`` count; an empty entry
+    edge set is already converged and runs no round. Once a round has
+    been compared, the checkpoint it superseded (the entry one included)
+    is released. The returned DataFrame reads only the final checkpoint:
+    in the converged star state every non-root points at its component
+    minimum and every root appears as ``v`` and never as ``u``, so the
+    roots are the distinct ``v`` values.
     """
-    edges = _truncate(
+    prev = nxt = _truncate(
         _canon(pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")))
     )
-    nodes = (
-        edges.select(F.col("u").alias("doc_id"))
-        .union(edges.select(F.col("v").alias("doc_id")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    prev = nxt = edges
     try:
-        nodes.count()  # materialize before the entry checkpoint is released
         n_prev = prev.count()
         for _ in range(max_rounds):
+            if not n_prev:  # an empty edge set is already converged
+                break
             nxt = _truncate(_small_star(_large_star(prev)))
             n_nxt = nxt.count()
             # Convergence: identical edge sets. Both sides are distinct
@@ -157,26 +154,14 @@ def dedup_components(pairs: DataFrame, max_rounds: int = MAX_CC_ROUNDS) -> DataF
                 f"dedup_components did not converge in {max_rounds} rounds "
                 "(cap exists to surface bugs, not to truncate real graphs)"
             )
-
-        # Stable state = stars: every non-root points directly at its
-        # component minimum; roots appear only on the v side. Roots are
-        # checkpointed (the guard set is tiny: every >= 2 node
-        # component's root already appears as v) so the returned plan
-        # reads only checkpointed data and ``nodes`` can be released.
-        labels = prev.select(F.col("u").alias("doc_id"), F.col("v").alias("component"))
-        roots = _truncate(
-            nodes.join(labels.select("doc_id"), "doc_id", "left_anti")
-            .select("doc_id", F.col("doc_id").alias("component"))
-        )
     except BaseException:
         _release(prev)
         _release(nxt)  # a round that failed before it was compared
         raise
-    finally:
-        # success AND failure paths: a repeated call in a long-lived
-        # session must not accumulate cached node tables.
-        nodes.unpersist()
-    return labels.union(roots)
+    v = F.col("v")
+    return prev.select(F.col("u").alias("doc_id"), v.alias("component")).union(
+        prev.select(v.alias("doc_id"), v.alias("component")).distinct()
+    )
 
 
 def dedup_survivors(docs: DataFrame, pairs: DataFrame) -> DataFrame:

@@ -30,6 +30,24 @@ def engine_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
+        # Let AQE coalesce the shuffle under a persisted frame too (Spark's
+        # default keeps a cached plan's partitioning as planned). Without it
+        # the jobs' persisted extraction `status` keeps all 32 partitions of
+        # url dedup's window shuffle, and every Python kernel reading it
+        # (extraction, MinHash signatures, shingle sets, lineage) runs 32
+        # tasks. corpus_job's extraction stage on perfbench dedup snapshots,
+        # local[4] on 4 cores, tasks and stage wall without -> with the key
+        # (median of 2-3 runs from 15k documents up):
+        #   1.5k docs (1.9 MB shuffled): 32, 7.3 s -> 1, 3.4 s
+        #   15k docs (20 MB):            32, 7.7 s -> 4, 4.4 s
+        #   60k docs (78 MB):            32, 12.9 s -> 5, 8.2 s
+        #   240k docs (320 MB):          32, 24.0 s -> 6, 30.1 s
+        # Past cores x 64 MB (the advisory partition size) AQE cuts 64 MB
+        # partitions, and 6 of them on 4 cores leave two cores idle through
+        # a second wave of ~17 s tasks. For a corpus in that band, the jobs'
+        # --repartition N sets the partition count (AQE keeps an explicit
+        # count), or --conf turns the key off.
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
         # Arrow: the only sanctioned Python<->JVM data path.
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         # Batch sizing for every Python map/group UDF: per-batch MEMORY is
