@@ -42,7 +42,7 @@ def write_op(docs, op: str, output: str, threshold: float | None = None,
     elif op == "minhash":
         result, cached = dedup._minhash_lsh(docs, thr)
     elif op == "simhash":
-        result = dedup.simhash_near_pairs(docs, max_hamming=max_hamming)
+        result, cached = dedup._simhash_near_pairs(docs, max_hamming, bits=60)
     elif op in ("cluster", "clean"):
         result = dedupgraph.content_dedup(docs, thr)
         if op == "clean":

@@ -1,7 +1,9 @@
 """Map-only oracle conjugate clustering (``api.conjugate_cluster``) and
-region segmentation (``api.segment_regions``) against the staged
-compositions they replace, on the fixture pages plus planted documents
-that exercise the staged join semantics."""
+region segmentation (``api.segment_regions``): equal to the staged
+compositions they replace on the fixture pages and on planted documents
+with unique ids, and pinned on planted documents with a repeated or a
+missing ``@id``, where the fused passes key nodes on their position and
+the staged ones on their id."""
 
 import os
 from collections import defaultdict
@@ -44,9 +46,14 @@ IDLESS = _doc([_region("a", 50, 10, "paragraph", "alpha"),
                _region(None, 50, 60, "paragraph", "middle"),
                _region("b", 50, 110, "paragraph", "beta")])
 
+# two columns 40 apart: one oracle cluster, split into L and R
+COLUMNS = _doc([_region(f"{side}{i}", x, 50 * i, "paragraph", f"{side}{i}", w=290 if side == "L" else 260)
+                for i in range(3) for side, x in (("L", 10), ("R", 340))])
+
 PLANTED = {
-    # id "d" is a paragraph box and a heading box: it joins e (heading)
-    # and f (paragraph) through the staged endpoint cross product
+    # id "d" is a paragraph box and a heading box: the heading d joins
+    # e, the paragraph d stays alone (the staged id join would unite d,
+    # e and f through the endpoint cross product)
     "900001": _doc([_region("d", 50, 10, "paragraph", "one"),
                     _region("e", 50, 60, "heading", "two"),
                     _region("d", 50, 110, "heading", "three"),
@@ -59,7 +66,15 @@ PLANTED = {
     "900003": b"<PcGts><Page",
     "900004": _doc([]),
     "900005": IDLESS,
+    "900006": COLUMNS,
+    # id "q" is a box in each column: the split puts one q on each side
+    "900007": _doc([_region("q", 10, 0, "paragraph", "q1", w=190),
+                    _region("q", 400, 0, "paragraph", "q2"),
+                    _region("s", 10, 50, "paragraph", "s", w=190)]),
 }
+# the planted documents whose ids are unique (or that have no node), on
+# which the fused and the staged passes agree
+UNIQUE_IDS = {HOST + k for k in ("900002", "900003", "900004", "900006")}
 
 
 def _planted(spark, docs):
@@ -77,28 +92,54 @@ def _rows(df):
                   for r in df.collect())
 
 
-def test_conjugate_cluster_equals_staged_oracle_composition(spark, sf_dir):
+def _fixture_and_planted(spark, sf_dir):
     sf = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01")
-    pages = pages_from_documents(spark, sf).select("url", "html").unionByName(
+    return pages_from_documents(spark, sf).select("url", "html").unionByName(
         _planted(spark, PLANTED))
-    fused = _rows(api.conjugate_cluster(pages))
-    assert fused == _rows(_staged(pages))
-    planted = {}
-    for url, _, ids, proba, algo in fused:
-        assert proba is None and algo == "cc"
+
+
+def _comparable(rows):
+    """The rows of the fixture documents and of the unique-id planted ones."""
+    return [r for r in rows if not r[0].startswith(HOST) or r[0] in UNIQUE_IDS]
+
+
+def _by_planted_doc(rows):
+    got = defaultdict(list)
+    for url, *rest in rows:
         if url.startswith(HOST):
-            planted.setdefault(url[len(HOST):], []).append(list(ids))
+            got[url[len(HOST):]].append(tuple(rest))
+    return dict(got)
+
+
+def _node_counts(pages):
+    return {r.url[len(HOST):]: r["count"]
+            for r in parse_pages(pages).filter(F.col("url").startswith(HOST))
+            .groupBy("url").count().collect()}
+
+
+def test_conjugate_cluster_equals_staged_oracle_composition(spark, sf_dir):
+    pages = _fixture_and_planted(spark, sf_dir)
+    fused = _rows(api.conjugate_cluster(pages))
+    assert _comparable(fused) == _comparable(_rows(_staged(pages)))
+    for _, _, _, proba, algo in fused:
+        assert proba is None and algo == "cc"
+    planted = {k: [list(ids) for _, ids, _, _ in v] for k, v in _by_planted_doc(fused).items()}
     assert planted == {
-        "900001": [["d", "e", "f"]],
+        # a node is its position: the two d nodes land in different
+        # clusters, and d is listed once per node that carries it
+        "900001": [["d"], ["d", "e"], ["f"]],
         "900002": [["p1a", "p2a", "p2b"], ["p1b"]],
-        "900005": [["a"], ["b"]],
+        # the id-less middle box links a and b
+        "900005": [["a", "b"]],
+        "900006": [["L0", "L1", "L2", "R0", "R1", "R2"]],
+        "900007": [["q", "q", "s"]],
     }
 
 
 def test_idless_region_does_not_kill_the_job(spark, sf_dir):
     """A TextRegion without @id parses to a null node_id: every stage
-    finishes, the id-less box still occludes, and it gets no edge or
-    cluster."""
+    finishes, the id-less box still occludes, an edge table has no row
+    for it, and the fused clustering links through it."""
     normal = pages_from_documents(spark, sf_dir).select("url", "html").limit(5)
     pages = normal.unionByName(_planted(spark, {"900005": IDLESS}))
     ids = [r.node_id for r in parse_pages(pages).filter(f"url = '{HOST}900005'").collect()]
@@ -106,18 +147,12 @@ def test_idless_region_does_not_kill_the_job(spark, sf_dir):
     edges = build_edges(parse_pages(pages)).collect()
     assert edges and all(e.src is not None and e.dst is not None for e in edges)
     assert not [e for e in edges if e.url == HOST + "900005"]
-    assert _rows(api.conjugate_cluster(pages)) == _rows(_staged(pages))
+    fused = _rows(api.conjugate_cluster(pages))
+    assert [r for r in fused if r[0] == HOST + "900005"] == [
+        (HOST + "900005", 0, ("a", "b"), None, "cc")]
+    assert _comparable(fused) == _comparable(_rows(_staged(pages)))
     text = {r.url: r.extracted_text for r in extract_from_pages(pages).collect()}
     assert text[HOST + "900005"] == "alpha middle beta"
-
-
-# two columns 40 apart: one oracle cluster, split into L and R
-COLUMNS = _doc([_region(f"{side}{i}", x, 50 * i, "paragraph", f"{side}{i}", w=290 if side == "L" else 260)
-                for i in range(3) for side, x in (("L", 10), ("R", 340))])
-# id "q" is a box in each column: the split puts q on both sides
-SPLIT_ID = _doc([_region("q", 10, 0, "paragraph", "q1", w=190),
-                 _region("q", 400, 0, "paragraph", "q2"),
-                 _region("s", 10, 50, "paragraph", "s", w=190)])
 
 
 def _staged_regions(pages):
@@ -151,23 +186,26 @@ def _staged_regions(pages):
 
 
 def test_segment_regions_equals_staged_composition(spark, sf_dir):
-    sf = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01")
-    planted = {k: PLANTED[k] for k in ("900001", "900003", "900005")}
-    planted.update({"900006": COLUMNS, "900007": SPLIT_ID})
-    pages = pages_from_documents(spark, sf).select("url", "html").unionByName(
-        _planted(spark, planted))
+    pages = _fixture_and_planted(spark, sf_dir)
     fused = sorted(tuple(r) for r in api.segment_regions(pages).collect())
-    assert fused == _staged_regions(pages)
-    got = defaultdict(list)
-    for url, cid, _, n, hull in fused:
-        if url.startswith(HOST):
-            got[url[len(HOST):]].append((cid, n, hull))
-    assert dict(got) == {
-        # d is held by two nodes: the split lists d once per box, and
-        # each listed d brings both boxes to the hull (2 x 2 + e + f)
-        "900001": [(0, 6, "50,10 250,10 250,190 50,190")],
-        "900005": [(0, 1, "50,10 250,10 250,40 50,40"), (1, 1, "50,110 250,110 250,140 50,140")],
-        "900006": [(0, 3, "10,0 300,0 300,130 10,130"), (1, 3, "340,0 600,0 600,130 340,130")],
-        # left (q, s) before right (q); each q brings both q boxes
-        "900007": [(0, 3, "10,0 600,0 600,30 200,80 10,80"), (1, 2, "10,0 600,0 600,30 10,30")],
+    assert _comparable(fused) == _comparable(_staged_regions(pages))
+    got = _by_planted_doc(fused)
+    assert got == {
+        # each node brings its own box: d alone, then the heading d
+        # with e, then f
+        "900001": [(0, "cc", 1, "50,10 250,10 250,40 50,40"),
+                   (1, "cc", 2, "50,60 250,60 250,140 50,140"),
+                   (2, "cc", 1, "50,160 250,160 250,190 50,190")],
+        # p2b stands 50 right of p2a: the cross-page cluster splits
+        "900002": [(0, "cc", 2, "50,10 250,10 250,42 50,42"),
+                   (1, "cc", 1, "300,10 500,10 500,40 300,40"),
+                   (2, "cc", 1, "300,12 500,12 500,42 300,42")],
+        "900005": [(0, "cc", 3, "50,10 250,10 250,140 50,140")],
+        "900006": [(0, "cc", 3, "10,0 300,0 300,130 10,130"),
+                   (1, "cc", 3, "340,0 600,0 600,130 340,130")],
+        # left (q, s) before right (q): one q node on each side
+        "900007": [(0, "cc", 2, "10,0 200,0 200,80 10,80"),
+                   (1, "cc", 1, "400,0 600,0 600,30 400,30")],
     }
+    # each node of a planted document lies in exactly one hull
+    assert {k: sum(n for _, _, n, _ in v) for k, v in got.items()} == _node_counts(pages)

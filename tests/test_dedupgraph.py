@@ -241,10 +241,12 @@ def test_content_dedup_releases_lsh_caches(spark, planted, monkeypatch):
     assert not persistent() - held
 
 
-def test_dedup_job_minhash_releases_caches(spark, docs, tmp_path):
-    """``dedup_job --op minhash`` leaves nothing in the session's cache
-    manager once its write has run (``minhash_lsh_pairs`` alone keeps its
-    three persists cached)."""
+@pytest.mark.parametrize("op", ["minhash", "simhash"])
+def test_dedup_job_minhash_releases_caches(spark, docs, tmp_path, op):
+    """``dedup_job --op minhash|simhash`` leaves nothing in the session's
+    cache manager once its write has run (``minhash_lsh_pairs`` alone
+    keeps its three persists cached, ``simhash_near_pairs`` its
+    signatures)."""
     import importlib.util
     import os
 
@@ -255,7 +257,7 @@ def test_dedup_job_minhash_releases_caches(spark, docs, tmp_path):
 
     spark.catalog.clearCache()
     out = str(tmp_path / "pairs")
-    job.write_op(docs.select("doc_id", "text"), "minhash", out)
+    job.write_op(docs.select("doc_id", "text"), op, out)
     assert _cache_empty(spark)
     assert spark.read.parquet(out).count() > 0
 

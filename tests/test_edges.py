@@ -9,10 +9,10 @@ from transkribusdu_spark.pipeline.edges import (
     GRID,
     PREFILTER_MIN,
     _box_iou,
-    _empty_out,
     _los_pass,
     doc_continuous_edges_arrays,
     doc_edges,
+    edge_rows,
 )
 
 
@@ -237,9 +237,8 @@ def test_los_pass_matches_seen_list_reference_fuzz():
             n = int(rng.integers(0, 49))
         sizes.add(n)
         a1, a2, b1, b2 = _fuzz_boxes(rng, n, kinds[t % 4])
-        ids = np.arange(n)
         for mode in ("g1", "g2", "g1o"):
-            got = list(_los_pass(ids, a1, a2, b1, b2, mode))
+            got = list(_los_pass(a1, a2, b1, b2, mode))
             want = list(_los_reference(a1, a2, b1, b2, mode))
             assert got == want, (t, n, kinds[t % 4], mode)
     assert min(sizes) <= 1 and max(sizes) > 3 * PREFILTER_MIN
@@ -275,13 +274,10 @@ def test_non_finite_boxes_get_no_edges_and_hide_nothing():
         pd.testing.assert_frame_equal(got.reset_index(drop=True), want)
 
     def continuous(pdf):
-        out = _empty_out()
-        doc_continuous_edges_arrays(
-            "u", *(pdf[c].to_numpy() for c in ("node_id", "page_num")),
+        return edge_rows("u", pdf.node_id, doc_continuous_edges_arrays(
+            pdf.page_num.to_numpy(),
             *(pdf[c].to_numpy(dtype=np.float64) for c in ("page_h", "page_w", "x1", "y1", "x2", "y2")),
-            out,
-        )
-        return out
+        ))
 
     want = continuous(clean)
     assert want["etype"] and set(want["etype"]) == {"CPM"}
@@ -290,21 +286,18 @@ def test_non_finite_boxes_get_no_edges_and_hide_nothing():
 
 def test_idless_boxes_occlude_but_get_no_edge():
     """A box whose id is None (a TextRegion without @id) still blocks
-    the line of sight exactly as before; only its own V/H/CP/CPM edges
-    are dropped."""
+    the line of sight exactly as before; only its own V/H/CP/CPM edge
+    rows are dropped (``edge_rows``)."""
     clean = _two_page_nodes(False)
     # B sits between A and D, A-G is the CP edge, F ends two CPM edges
     gone = {"B", "F", "G"}
     anon = clean.assign(node_id=[None if n in gone else n for n in clean.node_id])
 
     def continuous(pdf):
-        out = _empty_out()
-        doc_continuous_edges_arrays(
-            "u", *(pdf[c].to_numpy() for c in ("node_id", "page_num")),
+        return pd.DataFrame(edge_rows("u", pdf.node_id, doc_continuous_edges_arrays(
+            pdf.page_num.to_numpy(),
             *(pdf[c].to_numpy(dtype=np.float64) for c in ("page_h", "page_w", "x1", "y1", "x2", "y2")),
-            out,
-        )
-        return pd.DataFrame(out)
+        )))
 
     def kept(e):
         return e[~e.src.isin(gone) & ~e.dst.isin(gone)].reset_index(drop=True)

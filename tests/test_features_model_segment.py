@@ -143,11 +143,7 @@ def test_split_clusters_doc_on_per_doc_pass(spark):
     is split in the per-document pass; the refined clusters keep every
     node exactly once."""
     from transkribusdu_spark.pipeline.perdoc import per_doc
-    from transkribusdu_spark.pipeline.segment import (
-        boxes_by_id,
-        oracle_clusters_doc,
-        split_clusters_doc,
-    )
+    from transkribusdu_spark.pipeline.segment import oracle_clusters_doc, split_clusters_doc
     from transkribusdu_spark.schemas import CLUSTERS_SCHEMA
 
     boxes = []
@@ -164,7 +160,7 @@ def test_split_clusters_doc_on_per_doc_pass(spark):
     def kernel(url, cols, status):
         # before the split, the six boxes are one oracle cluster
         assert oracle_clusters_doc(cols) == [sorted(b[0] for b in boxes)]
-        groups = split_clusters_doc(cols, boxes_by_id(cols))
+        groups = [[cols["node_id"][i] for i in g] for g in split_clusters_doc(cols)]
         k = len(groups)
         return dict(url=[url] * k, cluster_id=list(range(k)), node_ids=groups,
                     proba=[None] * k, algo=["cc"] * k)

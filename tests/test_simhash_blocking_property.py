@@ -67,7 +67,9 @@ def test_geometry_matches_engine_source():
 
     from transkribusdu_spark.ops import dedup
 
-    src = inspect.getsource(dedup.simhash_near_pairs)
+    # the blocking join lives in the private half that also returns the
+    # persisted signatures (simhash_near_pairs returns its pairs)
+    src = inspect.getsource(dedup._simhash_near_pairs)
     for fragment in (
         "n_chunks, n_flips = 3, 2",
         "n_chunks, n_flips = 5, 1",

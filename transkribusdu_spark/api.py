@@ -64,10 +64,10 @@ def conjugate_cluster(pages: DataFrame) -> DataFrame:
     §2.8), as ``CLUSTERS_SCHEMA`` rows with ``algo`` ``"cc"``.
 
     One map-only pass (:func:`.pipeline.perdoc.per_doc`): each document
-    is parsed once (a document that fails to parse, or has no named
-    node, gives no rows) and solved by
-    :func:`.pipeline.segment.oracle_clusters_doc`. No shuffle. A trained
-    edge model ``m`` takes the staged composition instead::
+    is parsed once and solved by :func:`.pipeline.segment.oracle_clusters_doc`
+    over node positions (an id-less node links but is not listed; a
+    cluster without a named node gives no row). No shuffle. On unique ids
+    this is the staged composition, which a trained edge model ``m`` takes::
 
         nodes = parse_pages(pages)
         connected_components(nodes, predict_edges(m, edge_features(build_edges(nodes), nodes)))
@@ -122,7 +122,8 @@ def segment_regions(pages: DataFrame) -> DataFrame:
 
     One map-only pass like :func:`conjugate_cluster`: each parsed
     document goes through :func:`.pipeline.segment.regions_doc`, which
-    reads its member boxes from the document itself. No shuffle."""
+    reads each member node's box from the document itself (``n_nodes``
+    is the member count). No shuffle."""
     return per_doc(HULLS_SCHEMA, lambda url, cols, status: regions_doc(url, cols) if cols else {},
                    pages)
 

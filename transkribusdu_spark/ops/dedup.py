@@ -620,6 +620,15 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 8, bits: int = 60) ->
     bit_count filter runs map-side BEFORE the dedup shuffle, so the
     distinct only ever carries true near-pairs.
     """
+    return _simhash_near_pairs(docs, max_hamming, bits)[0]
+
+
+def _simhash_near_pairs(
+    docs: DataFrame, max_hamming: int, bits: int
+) -> "tuple[DataFrame, tuple[DataFrame, ...]]":
+    """:func:`simhash_near_pairs` plus the frame it persists, for a
+    caller that knows when nothing reads it any more and releases it
+    (``jobs/dedup_job.py``)."""
     if max_hamming > 9:
         raise ValueError("multi-index blocking guarantees recall only for max_hamming <= 9")
     from pyspark import StorageLevel
@@ -678,7 +687,7 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 8, bits: int = 60) ->
         )
         .filter(F.col("hamming") <= max_hamming)  # map-side, pre-shuffle
     )
-    return joined.groupBy("doc_a", "doc_b").agg(F.first("hamming").alias("hamming"))
+    return joined.groupBy("doc_a", "doc_b").agg(F.first("hamming").alias("hamming")), (sig,)
 
 
 DUP_SPAN_K = 8

@@ -7,6 +7,10 @@ edges via a sweep with visibility masking (``graph/Block.py:350-371,
 (``graph/Edge.py:132-175``), coordinates grid-rounded to multiples of 2
 before sweeping (``graph/Block.py:37,443-445``).
 
+The kernels take only geometry and return edges between node positions
+(an id-less node takes part like any other); :func:`edge_rows` alone
+names them for ``EDGES_SCHEMA`` rows.
+
 Spark shape: documents never share edges, so this is one url shuffle
 and one Arrow kernel call per document (:func:`.perdoc.per_url`) over a
 nodes table, or, over a pages table, a :func:`.perdoc.per_doc` kernel
@@ -37,10 +41,11 @@ GRID = 2
 # overhead costs more than the scan it would save.
 PREFILTER_MIN = 128
 CROSS_PAGE_IOU = 0.25
+# the kernels' edge columns: EDGES_SCHEMA without url, src/dst positions
+_POS_COLS = ("page_num", "src", "dst", "etype", "length", "overlap", "iou")
 
 
 def _los_pass(
-    ids: np.ndarray,
     a1: np.ndarray,
     a2: np.ndarray,
     b1: np.ndarray,
@@ -52,7 +57,7 @@ def _los_pass(
     (a1,a2) = interval along the *overlap* axis; (b1,b2) = interval along
     the *sweep* axis. Emits (i, j, length, overlap, iou) for each pair
     where j is visible below i along the sweep axis; i and j are
-    positions in ``ids``. Vertical edges: overlap axis = x, sweep axis =
+    positions in the arrays. Vertical edges: overlap axis = x, sweep axis =
     y. Horizontal edges are the same pass with axes swapped (reference
     rotates -90 deg and reuses the vertical code,
     ``graph/Block.py:350-371``).
@@ -70,9 +75,9 @@ def _los_pass(
     Only boxes whose four coordinates are finite are swept: a box with a
     NaN or infinite coordinate gets no edge and hides nothing.
     """
-    if len(ids) < 2:
+    if len(a1) < 2:
         return
-    box = range(len(ids))
+    box = range(len(a1))
     cols = (a1, a2, b1, b2)
     try:
         # Python round() is half-even like np.round, and raises on NaN/inf
@@ -165,33 +170,27 @@ def _box_iou(x1a, y1a, x2a, y2a, x1b, y1b, x2b, y2b) -> float:
 
 
 def doc_edges_arrays(
-    url: str,
-    node_id: np.ndarray,
     page_num: np.ndarray,
     x1: np.ndarray,
     y1: np.ndarray,
     x2: np.ndarray,
     y2: np.ndarray,
-    out: dict[str, list],
     mode: str = "g1",
-) -> None:
-    """Edge kernel over plain numpy arrays for one document; appends to
-    ``out`` column lists (dict-of-lists beats list-of-dicts ~10x in the
-    Arrow batch path). A box whose id is None still takes part in the
-    sweep (it can block the line of sight between two other boxes) but
-    gets no edge."""
-    ids_all = node_id.tolist()
-    named = None if None not in ids_all else np.array([v is not None for v in ids_all])
+) -> dict[str, list]:
+    """V/H/CP edge kernel over plain numpy arrays for one document, as
+    ``_POS_COLS`` lists (dict-of-lists beats list-of-dicts ~10x in the
+    Arrow batch path)."""
+    out: dict[str, list] = {k: [] for k in _POS_COLS}
     pages = np.unique(page_num)
     page_rows = {int(p): np.nonzero(page_num == p)[0] for p in pages}
     for p in pages:
         rows = page_rows[int(p)]
-        ids = node_id[rows]
+        pos = rows.tolist()
         px1, py1, px2, py2 = x1[rows], y1[rows], x2[rows], y2[rows]
         page_edges: dict[tuple, tuple] = {}
         for etype, a1, a2, b1, b2 in (("V", px1, px2, py1, py2), ("H", py1, py2, px1, px2)):
-            for i, j, length, ov, iou in _los_pass(ids, a1, a2, b1, b2, mode):
-                page_edges[(etype, i, j)] = (length, ov, iou)
+            for i, j, length, ov, iou in _los_pass(a1, a2, b1, b2, mode):
+                page_edges[(etype, pos[i], pos[j])] = (length, ov, iou)
         if mode == "g1o":
             # overlapping-box filter (graph/Block.py:622-688): when a pair
             # got both a V and an H edge and either has negative length
@@ -203,18 +202,13 @@ def doc_edges_arrays(
                     lh, ovh, _ = page_edges[kh]
                     if lv < 0 or lh < 0:
                         del page_edges[kv if ovv < ovh else kh]
-        if named is not None:
-            ok = named[rows]
-            page_edges = {k: v for k, v in page_edges.items() if ok[k[1]] and ok[k[2]]}
         if page_edges:
-            # batch extends (one C call per column) instead of 8 appends
-            # per edge; dict iteration order = insertion order, so the
-            # emitted row order is unchanged
+            # batch extends (one C call per column); dict iteration order
+            # = insertion order, so the emitted row order is the sweep's
             m = len(page_edges)
-            out["url"].extend([url] * m)
             out["page_num"].extend([int(p)] * m)
-            out["src"].extend(ids[i] for (_, i, _) in page_edges)
-            out["dst"].extend(ids[j] for (_, _, j) in page_edges)
+            out["src"].extend(i for (_, i, _) in page_edges)
+            out["dst"].extend(j for (_, _, j) in page_edges)
             out["etype"].extend(e for (e, _, _) in page_edges)
             out["length"].extend(float(max(v[0], 0.0)) for v in page_edges.values())
             out["overlap"].extend(v[1] for v in page_edges.values())
@@ -234,39 +228,42 @@ def doc_edges_arrays(
         with np.errstate(divide="ignore", invalid="ignore"):
             iou = np.where(union > 0, inter / union, 0.0)
         ii, jj = np.nonzero(iou >= CROSS_PAGE_IOU)
-        if named is not None:
-            keep = named[ra[ii]] & named[rb[jj]]
-            ii, jj = ii[keep], jj[keep]
         m = len(ii)
         if m:
             # same row-major (ii, jj) order the per-pair loop emitted
-            out["url"].extend([url] * m)
             out["page_num"].extend([int(p)] * m)
-            out["src"].extend(node_id[ra[ii]].tolist())
-            out["dst"].extend(node_id[rb[jj]].tolist())
+            out["src"].extend(ra[ii].tolist())
+            out["dst"].extend(rb[jj].tolist())
             out["etype"].extend(["CP"] * m)
             out["length"].extend([0.0] * m)
             out["overlap"].extend([0.0] * m)
             out["iou"].extend(iou[ii, jj].tolist())
+    return out
 
 
-def _empty_out() -> dict[str, list]:
-    return {f.name: [] for f in EDGES_SCHEMA.fields}
+def edge_rows(url: str, node_id, edges: Mapping[str, list]) -> dict[str, list]:
+    """``EDGES_SCHEMA`` columns of one document's positional edges:
+    ``src``/``dst`` become the ids in ``node_id`` (node order), and a
+    pair with an id-less endpoint is dropped (the one place that rule lives)."""
+    ids = np.asarray(node_id, dtype=object).tolist()
+    cols = dict(edges, src=[ids[i] for i in edges["src"]], dst=[ids[j] for j in edges["dst"]])
+    if None in cols["src"] or None in cols["dst"]:
+        keep = [k for k, (s, d) in enumerate(zip(cols["src"], cols["dst"])) if None not in (s, d)]
+        cols = {k: [v[i] for i in keep] for k, v in cols.items()}
+    return dict(cols, url=[url] * len(cols["src"]))
+
+
+def edge_positions(cols: Mapping, mode: str) -> dict[str, list]:
+    """:func:`doc_edges_arrays` over one document's node columns (numpy
+    arrays, :func:`.parse.parse_doc_cols` lists, or a pandas frame)."""
+    x1, y1, x2, y2 = (np.asarray(cols[c], dtype=np.float64) for c in ("x1", "y1", "x2", "y2"))
+    return doc_edges_arrays(np.asarray(cols["page_num"]), x1, y1, x2, y2, mode)
 
 
 def doc_edges(cols: Mapping, mode: str = "g1") -> dict[str, list]:
-    """All edges for one document's node columns (numpy arrays, the
-    :func:`.parse.parse_doc_cols` lists, or a pandas frame in tests), as
-    edge columns: the per-document entry of :func:`build_edges`,
-    :func:`edges_from_pages` and the conjugate oracle pass over the
-    :func:`doc_edges_arrays` kernel."""
-    out = _empty_out()
-    node_id = np.asarray(cols["node_id"])
-    if len(node_id):
-        x1, y1, x2, y2 = (np.asarray(cols[c], dtype=np.float64) for c in ("x1", "y1", "x2", "y2"))
-        doc_edges_arrays(np.asarray(cols["url"])[0], node_id, np.asarray(cols["page_num"]),
-                         x1, y1, x2, y2, out, mode=mode)
-    return out
+    """:func:`edge_positions` as :func:`edge_rows`: the per-document
+    entry of :func:`build_edges` and :func:`edges_from_pages`."""
+    return edge_rows(next(iter(cols["url"]), None), cols["node_id"], edge_positions(cols, mode))
 
 
 def edges_from_pages(pages: DataFrame, mode: str = "g1") -> DataFrame:
@@ -282,8 +279,6 @@ def edges_from_pages(pages: DataFrame, mode: str = "g1") -> DataFrame:
 
 
 def doc_continuous_edges_arrays(
-    url: str,
-    node_id: np.ndarray,
     page_num: np.ndarray,
     page_h: np.ndarray,
     page_w: np.ndarray,
@@ -291,14 +286,15 @@ def doc_continuous_edges_arrays(
     y1: np.ndarray,
     x2: np.ndarray,
     y2: np.ndarray,
-    out: dict[str, list],
     mirror: bool = True,
-) -> None:
+) -> dict[str, list]:
     """J6 continuous-page (book-scan) edges, reference
     ``graph/Graph_MultiPageXml.py:78-130``: for consecutive pages, stack
     the lower half of page p and the (optionally horizontally mirrored)
     upper half of page p+1 into a fake page, run the vertical g1 sweep,
-    keep only the edges that cross the page boundary (etype 'CPM')."""
+    keep only the edges that cross the page boundary (etype 'CPM'), as
+    ``_POS_COLS`` lists."""
+    out: dict[str, list] = {k: [] for k in _POS_COLS}
     pages = np.unique(page_num)
     rows_of = {int(p): np.nonzero(page_num == p)[0] for p in pages}
     for p in pages:
@@ -314,8 +310,8 @@ def doc_continuous_edges_arrays(
         sel_b = rb[cy_b <= float(page_h[rb[0]]) / 2.0]
         if not len(sel_a) or not len(sel_b):
             continue
-        ids = np.concatenate([node_id[sel_a], node_id[sel_b]])
-        pn = np.concatenate([page_num[sel_a], page_num[sel_b]])
+        pos = np.concatenate([sel_a, sel_b]).tolist()
+        n_a = len(sel_a)
         fy1 = np.concatenate([y1[sel_a] - h0 / 2.0, y1[sel_b] + h0 / 2.0])
         fy2 = np.concatenate([y2[sel_a] - h0 / 2.0, y2[sel_b] + h0 / 2.0])
         if mirror:
@@ -324,17 +320,17 @@ def doc_continuous_edges_arrays(
         else:
             fx1 = np.concatenate([x1[sel_a], x1[sel_b]])
             fx2 = np.concatenate([x2[sel_a], x2[sel_b]])
-        for i, j, length, ov, iou in _los_pass(ids, fx1, fx2, fy1, fy2, "g1"):
-            if pn[i] == pn[j] or ids[i] is None or ids[j] is None:
-                continue
-            out["url"].append(url)
+        for i, j, length, ov, iou in _los_pass(fx1, fx2, fy1, fy2, "g1"):
+            if (i < n_a) == (j < n_a):
+                continue  # both ends on the same page
             out["page_num"].append(p)
-            out["src"].append(ids[i])
-            out["dst"].append(ids[j])
+            out["src"].append(pos[i])
+            out["dst"].append(pos[j])
             out["etype"].append("CPM")
             out["length"].append(float(max(length, 0.0)))
             out["overlap"].append(float(ov))
             out["iou"].append(float(iou))
+    return out
 
 
 def build_continuous_edges(nodes: DataFrame, mirror: bool = True) -> DataFrame:
@@ -342,13 +338,11 @@ def build_continuous_edges(nodes: DataFrame, mirror: bool = True) -> DataFrame:
     per-document shape as :func:`build_edges`."""
 
     def run(c: Mapping[str, np.ndarray]) -> dict[str, list]:
-        out = _empty_out()
-        if len(c["url"]):
-            doc_continuous_edges_arrays(
-                c["url"][0], c["node_id"], c["page_num"], c["page_h"], c["page_w"],
-                c["x1"], c["y1"], c["x2"], c["y2"], out, mirror=mirror,
-            )
-        return out
+        edges = doc_continuous_edges_arrays(
+            c["page_num"], c["page_h"], c["page_w"], c["x1"], c["y1"], c["x2"], c["y2"],
+            mirror=mirror,
+        )
+        return edge_rows(next(iter(c["url"]), None), c["node_id"], edges)
 
     cols = ("url", "node_id", "page_num", "page_h", "page_w", "x1", "y1", "x2", "y2")
     return per_url(EDGES_SCHEMA, run, nodes.select(*cols))

@@ -228,14 +228,3 @@ def observe_status(status: DataFrame) -> tuple[DataFrame, Observation]:
         F.count_if(st.startswith("truncated:")).alias("truncated"),
         F.count_if(st == "empty").alias("empty"),
     ), obs
-
-
-def extract_from_clusters(nodes: DataFrame, clusters: DataFrame) -> DataFrame:
-    """Cluster-driven extraction (reference C5/C12): keep nodes belonging
-    to clusters, labeled by cluster majority label, then assemble text in
-    reading order. clusters: (url, cluster_id, node_ids array<string>)."""
-    memb = clusters.select(
-        "url", "cluster_id", F.explode("node_ids").alias("node_id")
-    )
-    joined = nodes.join(memb, ["url", "node_id"], "inner")
-    return extract_text_spans(joined, labels=None)

@@ -8,23 +8,25 @@ adjacency + recursive DFS (an O(N^2)-memory anti-pattern, SURVEY.md §4);
 we use union-find over the edge list — O(E α(N)) — in one Arrow kernel
 call per document (:func:`.perdoc.per_url`). Documents never share edges
 (``graph/Graph_Multi_SinglePageXml.py:77-133``), so no cross-document
-iteration (GraphFrames-style) is ever needed. With the edge oracle the
-whole chain is per document too: :func:`oracle_clusters_doc` runs edges,
-scores and components on one parsed document, and :func:`regions_doc`
-adds the column split and the hulls; they are the kernels of the single
-map-only passes of ``api.conjugate_cluster`` and ``api.segment_regions``
-(:func:`.perdoc.per_doc`).
+iteration (GraphFrames-style) is ever needed. The staged clusterers join
+tables on ``(url, node_id)``. With the edge oracle the whole chain is
+per document: :func:`oracle_clusters_doc` (edges, scores, components)
+and :func:`regions_doc` (plus column split and hulls) are the kernels of
+the map-only passes of ``api.conjugate_cluster`` and
+``api.segment_regions`` (:func:`.perdoc.per_doc`). They key a node on
+its position in the document; ids become output only in
+:func:`_named_groups`. Both keys share one grouping, :func:`_components`.
 """
 
 from __future__ import annotations
 
-from typing import Mapping, Sequence
+from typing import Iterable, Mapping, Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame
 
 from ..schemas import CLUSTERS_SCHEMA, HULLS_SCHEMA
-from .edges import doc_edges
+from .edges import edge_positions
 from .perdoc import per_url
 
 
@@ -53,19 +55,26 @@ class _UF:
             self.r[ra] += 1
 
 
+def _components(n: int, pairs: Iterable[tuple[int, int]]) -> list[list[int]]:
+    """Union-find components of nodes ``0..n-1`` under ``pairs``, as
+    ascending positions, in order of first position."""
+    uf = _UF(n)
+    for a, b in pairs:
+        uf.union(a, b)
+    groups: dict[int, list[int]] = {}
+    for i in range(n):
+        groups.setdefault(uf.find(i), []).append(i)
+    return list(groups.values())
+
+
 def cluster_doc(node_ids: list[str], edges: Mapping, threshold: float) -> list[list[str]]:
-    """Union-find connected components for one document; ``edges`` maps
-    ``src``/``dst``/``p_continue`` to columns (unit-testable)."""
+    """Connected components of one document's distinct ``node_ids``;
+    ``edges`` maps ``src``/``dst``/``p_continue`` to columns
+    (unit-testable). Clusters ordered by smallest member id, members sorted."""
     idx = {nid: i for i, nid in enumerate(node_ids)}
-    uf = _UF(len(node_ids))
-    for src, dst, pc in zip(edges["src"], edges["dst"], edges["p_continue"]):
-        if pc >= threshold and src in idx and dst in idx:
-            uf.union(idx[src], idx[dst])
-    groups: dict[int, list[str]] = {}
-    for nid, i in idx.items():
-        groups.setdefault(uf.find(i), []).append(nid)
-    # deterministic: clusters ordered by smallest member id, members sorted
-    out = [sorted(g) for g in groups.values()]
+    pairs = ((idx[s], idx[d]) for s, d, pc in zip(edges["src"], edges["dst"], edges["p_continue"])
+             if pc >= threshold and s in idx and d in idx)
+    out = [sorted(node_ids[i] for i in g) for g in _components(len(node_ids), pairs)]
     out.sort(key=lambda g: g[0])
     return out
 
@@ -119,7 +128,8 @@ def _cluster_by(nodes: DataFrame, edge_scores: DataFrame, algo: str,
                 threshold: float) -> DataFrame:
     """Shared distributed shape for both clusterers: nodes and scored
     edges are COGROUPED per url (two clean keyed streams — no
-    null-padded union frame), each document solved by its kernel."""
+    null-padded union frame), each document solved by its kernel over
+    its distinct named node ids."""
     solve = agglomerate_doc if algo == "agglo" else cluster_doc
 
     def run(n: Mapping[str, np.ndarray], e: Mapping[str, np.ndarray]) -> dict[str, list]:
@@ -136,8 +146,8 @@ def _cluster_by(nodes: DataFrame, edge_scores: DataFrame, algo: str,
 
 def agglomerative_clusters(nodes: DataFrame, edge_scores: DataFrame,
                            seed_threshold: float = 0.99) -> DataFrame:
-    """Distributed agglomerative segmentation: same shuffle shape as
-    connected_components, C3 kernel per document."""
+    """Distributed agglomerative segmentation: same shuffle shape (and
+    node-id key) as connected_components, C3 kernel per document."""
     return _cluster_by(nodes, edge_scores, "agglo", seed_threshold)
 
 
@@ -147,33 +157,48 @@ def connected_components(nodes: DataFrame, edge_scores: DataFrame,
 
     One co-partitioned cogroup on url; singletons (nodes without a
     continue-edge) become their own cluster, matching the reference.
+    Nodes are keyed on ``(url, node_id)``, so this assumes unique ids
+    per document (``parse.dedup_guard`` returns the rows that break it)
+    and leaves id-less nodes out.
     """
     return _cluster_by(nodes, edge_scores, "cc", threshold)
 
 
+def _named_groups(node_id: Sequence, groups: Iterable[Sequence[int]]
+                  ) -> list[tuple[list[str], Sequence[int]]]:
+    """The fused kernels' output boundary: ``(names, group)`` for each
+    group of positions with a named member, ``names`` the sorted ids of
+    its named nodes (one per node), ordered by ``min((id is None, id or
+    "", position))`` over members: on unique ids, by first member id."""
+    keyed = []
+    for g in groups:
+        named = [(node_id[i], i) for i in g if node_id[i] is not None]
+        if named:
+            keyed.append((min(named), sorted(nid for nid, _ in named), g))
+    keyed.sort(key=lambda t: t[0])
+    return [(names, g) for _, names, g in keyed]
+
+
+def _oracle_components(cols: Mapping) -> list[list[int]]:
+    """Components of one parsed document's positions over its
+    line-of-sight edges whose endpoints share a label (edge oracle)."""
+    label = cols["label"]
+    e = edge_positions(cols, "g1")
+    return _components(len(label), ((i, j) for i, j in zip(e["src"], e["dst"])
+                                    if label[i] == label[j]))
+
+
 def oracle_clusters_doc(cols: Mapping) -> list[list[str]]:
     """Conjugate clusters of one parsed document (:func:`.parse.parse_doc_cols`
-    columns) under the edge oracle: the line-of-sight edges
-    (:func:`.edges.doc_edges`), each scored ``p_continue = 1`` iff its
-    endpoints share a label, then :func:`cluster_doc` at 0.5. It equals
-    ``connected_components(nodes, edge_oracle_scores(edge_features(
-    build_edges(nodes), nodes)))`` on the document: an id held by several
-    nodes joins there as a cross product, so two ids are united iff an
-    edge links them and their label sets intersect. Id-less nodes are
-    left out, and a document without named nodes has no cluster."""
-    labels: dict[str, set[str]] = {}
-    for nid, lab in zip(cols["node_id"], cols["label"]):
-        if nid is not None:
-            labels.setdefault(nid, set()).add(lab)
-    edges = doc_edges(cols)
-    edges["p_continue"] = [float(not labels[s].isdisjoint(labels[d]))
-                           for s, d in zip(edges["src"], edges["dst"])]
-    return cluster_doc(sorted(labels), edges, 0.5)
+    columns) under the edge oracle, as :func:`_named_groups` id lists. On
+    unique ids it equals ``connected_components(nodes, edge_oracle_scores(
+    edge_features(build_edges(nodes), nodes)))`` on the document."""
+    return [names for names, _ in _named_groups(cols["node_id"], _oracle_components(cols))]
 
 
 def split_cluster_columns(
-    members: list[tuple[str, float, float, float, float]], min_gap: float = 30.0
-) -> tuple[list[list[str]], tuple[float, float] | None]:
+    members: list[tuple], min_gap: float = 30.0
+) -> tuple[list[list], tuple[float, float] | None]:
     """C7 applied to region splitting (reference ``util/statSeparator.py``
     wired into the segmenter): if a cluster's members leave a horizontal
     whitespace gap >= min_gap in their x-projection, split it into
@@ -181,8 +206,8 @@ def split_cluster_columns(
     max-margin separator line (a, b) between the two corner sets —
     vertical separators are reported as (inf, x_threshold).
 
-    members: (node_id, x1, y1, x2, y2). Pure kernel (unit-testable);
-    :func:`split_clusters_doc` runs it on every cluster of a document.
+    members: (key, x1, y1, x2, y2) with distinct keys (node positions
+    in :func:`split_clusters_doc`). Pure kernel (unit-testable).
     """
     from ..functions.separator import get_linear_separator
 
@@ -215,84 +240,59 @@ def split_cluster_columns(
     )
 
 
-def boxes_by_id(cols: Mapping) -> dict[str, list[list[float]]]:
-    """Every ``[x1, y1, x2, y2]`` box of a document's node columns under
-    its node id, in document order; id-less nodes are left out. An id
-    held by several nodes maps to all their boxes, as a join of cluster
-    members to the node table on (url, node_id) would give."""
-    out: dict[str, list[list[float]]] = {}
-    for nid, *box in zip(cols["node_id"], cols["x1"], cols["y1"], cols["x2"], cols["y2"]):
-        if nid is not None:
-            out.setdefault(nid, []).append(box)
-    return out
-
-
-def cluster_hulls_doc(clusters: Sequence[Sequence[str]],
-                      boxes: Mapping[str, list]) -> list[tuple[int, int, str]]:
-    """C4 cluster -> DOM geometry for one document: ``(i, n_nodes,
-    hull_points)`` for each cluster ``i`` with at least one member box.
-    Every occurrence of an id in a cluster contributes every box carrying
-    that id, and ``n_nodes`` counts those boxes. The hull is the convex
-    hull of the boxes' corners (all top-left corners, then top-right,
-    bottom-right, bottom-left; shapely-free monotone chain from
-    functions/separator.py) as a PageXML-style points string of
-    truncated ints (the reference emits hull polygons on the cluster
-    elements)."""
+def _hull_points(boxes: Sequence[Sequence[float]]) -> str:
+    """C4 cluster -> DOM geometry: the convex hull of the boxes' corners
+    (all top-left corners, then top-right, bottom-right, bottom-left;
+    shapely-free monotone chain from functions/separator.py) as a
+    PageXML-style points string of truncated ints (the reference emits
+    hull polygons on the cluster elements)."""
     from ..functions.separator import convex_hull
 
-    out = []
-    for i, ids in enumerate(clusters):
-        member = [b for nid in ids for b in boxes.get(nid, ())]
-        if member:
-            b = np.asarray(member, dtype=float)
-            pts = np.concatenate([b[:, [0, 1]], b[:, [2, 1]], b[:, [2, 3]], b[:, [0, 3]]])
-            hull = " ".join(f"{int(x)},{int(y)}" for x, y in convex_hull(pts))
-            out.append((i, len(member), hull))
-    return out
+    b = np.asarray(boxes, dtype=float)
+    pts = np.concatenate([b[:, [0, 1]], b[:, [2, 1]], b[:, [2, 3]], b[:, [0, 3]]])
+    return " ".join(f"{int(x)},{int(y)}" for x, y in convex_hull(pts))
 
 
 def _hull_cols(url: str, cluster_ids: Sequence[int], algos: Sequence[str],
-               hulls: list[tuple[int, int, str]]) -> dict[str, list]:
-    return dict(url=[url] * len(hulls), cluster_id=[int(cluster_ids[i]) for i, _, _ in hulls],
-                algo=[algos[i] for i, _, _ in hulls], n_nodes=[n for _, n, _ in hulls],
-                hull_points=[h for _, _, h in hulls])
+               members: Sequence[list]) -> dict[str, list]:
+    return dict(url=[url] * len(members), cluster_id=[int(c) for c in cluster_ids],
+                algo=list(algos), n_nodes=[len(m) for m in members],
+                hull_points=[_hull_points(m) for m in members])
 
 
-def split_clusters_doc(cols: Mapping, boxes: Mapping[str, list]) -> list[list[str]]:
-    """The oracle clusters of one parsed document (:func:`oracle_clusters_doc`),
-    each split at a whitespace column gap of at least 30
-    (:func:`split_cluster_columns`) over its members' :func:`boxes_by_id`
-    boxes, and renumbered by first member id (a stable sort: ties keep
-    cluster order, left before right). An id held by several nodes
-    brings all their boxes, so it is listed once per box and can land on
-    both sides of a split."""
-    refined: list[list[str]] = []
-    for ids in oracle_clusters_doc(cols):
-        groups, _ = split_cluster_columns([(nid, *b) for nid in ids for b in boxes[nid]])
-        refined += groups
-    refined.sort(key=lambda g: g[0])
-    return refined
+def split_clusters_doc(cols: Mapping) -> list[list[int]]:
+    """The oracle components of one parsed document, each split at a
+    whitespace column gap of at least 30 (:func:`split_cluster_columns`),
+    as the positions of the :func:`_named_groups` refined clusters."""
+    boxes = list(zip(cols["x1"], cols["y1"], cols["x2"], cols["y2"]))
+    refined: list[list[int]] = []
+    for g in _oracle_components(cols):
+        refined += split_cluster_columns([(i, *boxes[i]) for i in g])[0]
+    return [g for _, g in _named_groups(cols["node_id"], refined)]
 
 
 def regions_doc(url: str, cols: Mapping) -> dict[str, list]:
-    """Region geometry of one parsed document, as ``HULLS_SCHEMA``
-    columns: :func:`split_clusters_doc`, then :func:`cluster_hulls_doc`,
-    both over the document's own :func:`boxes_by_id`."""
-    boxes = boxes_by_id(cols)
-    refined = split_clusters_doc(cols, boxes)
+    """``HULLS_SCHEMA`` columns of one parsed document: a hull over the
+    member boxes of each :func:`split_clusters_doc` cluster."""
+    boxes = list(zip(cols["x1"], cols["y1"], cols["x2"], cols["y2"]))
+    refined = split_clusters_doc(cols)
     k = len(refined)
-    return _hull_cols(url, range(k), ["cc"] * k, cluster_hulls_doc(refined, boxes))
+    return _hull_cols(url, range(k), ["cc"] * k, [[boxes[i] for i in g] for g in refined])
 
 
 def clusters_with_hulls(clusters: DataFrame, nodes: DataFrame) -> DataFrame:
-    """:func:`cluster_hulls_doc` over a clusters table and its node table,
-    one url cogroup (:func:`.perdoc.per_url`): one ``HULLS_SCHEMA`` row
-    per cluster row that has a member in ``nodes``."""
+    """One ``HULLS_SCHEMA`` row per cluster row with a member in
+    ``nodes``, one url cogroup (:func:`.perdoc.per_url`). Members join on
+    node id, so this assumes unique ids per document (``parse.dedup_guard``)."""
 
     def run(c: Mapping[str, np.ndarray], n: Mapping[str, np.ndarray]) -> dict[str, list]:
-        url = c["url"][0] if len(c["url"]) else None  # a nodes-only url has no cluster
-        return _hull_cols(url, c["cluster_id"], c["algo"],
-                          cluster_hulls_doc(c["node_ids"], boxes_by_id(n)))
+        boxes: dict[str, list] = {}
+        for nid, *box in zip(n["node_id"], n["x1"], n["y1"], n["x2"], n["y2"]):
+            boxes.setdefault(nid, []).append(box)
+        rows = [(cid, algo, [b for nid in ids for b in boxes.get(nid, ())])
+                for cid, algo, ids in zip(c["cluster_id"], c["algo"], c["node_ids"])]
+        cids, algos, members = list(zip(*[r for r in rows if r[2]])) or ((), (), ())
+        return _hull_cols(c["url"][0] if cids else None, cids, algos, members)
 
     return per_url(
         HULLS_SCHEMA, run,

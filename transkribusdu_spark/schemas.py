@@ -32,8 +32,11 @@ NODES_SCHEMA = T.StructType(
         T.StructField("page_w", T.DoubleType(), False),
         T.StructField("page_h", T.DoubleType(), False),
         T.StructField("page_cnt", T.IntegerType(), False),
-        # null for a TextRegion without @id: it still occludes other
-        # boxes in the line-of-sight sweep but gets no edge or cluster
+        # null for a TextRegion without @id. The fused per-document
+        # passes key nodes on position, so it takes part in edges,
+        # clusters and hulls there but is never named in their output;
+        # edge tables (edges.edge_rows) and the staged id-keyed
+        # clusterers leave it out
         T.StructField("node_id", T.StringType(), True),
         T.StructField("kind", T.StringType(), False),
         T.StructField("x1", T.DoubleType(), False),
