@@ -1,6 +1,10 @@
 """Top-level API pipelines (transkribusdu_spark.api): the composed
 entry points a reference user would call, driven end-to-end."""
 
+import os
+import subprocess
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 from test_conjugate_fused import HOST, _doc, _planted, _region
@@ -111,3 +115,15 @@ def test_segment_regions_full_surface(spark, sf_dir):
         # hull of >= 2 distinct boxes has >= 3 vertices
         if r.n_nodes >= 2:
             assert len(pts) >= 2
+
+
+def test_api_import_leaves_pyspark_ml_out():
+    """A job that imports the api and never trains pays no ``pyspark.ml``
+    import (about 0.5 s on a spark-submit driver, where it compiles from
+    Spark's source-only zip): the spark.ml functions import it themselves."""
+    code = ("import sys, transkribusdu_spark.api; "
+            "print(sorted(m for m in sys.modules if m.split('.')[:2] == ['pyspark', 'ml']))")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], cwd=repo, capture_output=True,
+                         text=True, check=True)
+    assert out.stdout.strip() == "[]"

@@ -383,6 +383,7 @@ CANON_CASES = [
     ("http://h.com/CasePath/Q?X=Y", "http://h.com/CasePath/Q?X=Y"),  # path/query case kept
     ("http://h.com/a/", "http://h.com/a"),
     ("http://h.com/", "http://h.com/"),  # root slash kept
+    ("HTTP://BÜCHER.Example:80/Ä/?utm_x=1", "http://bücher.example/Ä"),  # non-ASCII host
 ]
 
 

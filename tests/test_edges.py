@@ -8,7 +8,6 @@ import pytest
 from transkribusdu_spark.pipeline.edges import (
     GRID,
     PREFILTER_MIN,
-    _box_iou,
     _los_pass,
     doc_continuous_edges_arrays,
     doc_edges,
@@ -168,12 +167,6 @@ def test_subtract_seen_interval_algebra():
     assert _subtract_seen(0, 10, [(-5, 5)]) == 5
     assert _subtract_seen(0, 10, [(5, 15)]) == 5
     assert _subtract_seen(0, 10, [(0, 5), (5, 10)]) == 0
-
-
-def test_box_iou():
-    assert _box_iou(0, 0, 10, 10, 0, 0, 10, 10) == 1.0
-    assert _box_iou(0, 0, 10, 10, 20, 20, 30, 30) == 0.0
-    assert _box_iou(0, 0, 10, 10, 5, 0, 15, 10) == pytest.approx(50 / 150)
 
 
 def test_spark_edges_on_synth(spark, sf_dir):

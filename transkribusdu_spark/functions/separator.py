@@ -22,20 +22,27 @@ def convex_hull(pts: np.ndarray) -> np.ndarray:
     pts = np.unique(pts, axis=0)
     if len(pts) <= 2:
         return pts
-    order = np.lexsort((pts[:, 1], pts[:, 0]))
-    pts = pts[order]
+    pts = pts[np.lexsort((pts[:, 1], pts[:, 0]))]
+    xy = pts.tolist()
 
-    def half(points):
-        out: list[np.ndarray] = []
-        for p in points:
-            while len(out) >= 2 and np.cross(out[-1] - out[-2], p - out[-2]) <= 0:
+    def half(order):
+        out: list[int] = []
+        for i in order:
+            while len(out) >= 2 and _cross(xy[out[-2]], xy[out[-1]], xy[i]) <= 0:
                 out.pop()
-            out.append(p)
+            out.append(i)
         return out
 
-    lower = half(pts)
-    upper = half(pts[::-1])
-    return np.array(lower[:-1] + upper[:-1])
+    lower = half(range(len(xy)))
+    upper = half(range(len(xy) - 1, -1, -1))
+    return pts[lower[:-1] + upper[:-1]]
+
+
+def _cross(o: list, a: list, p: list) -> float:
+    """The 2-D cross product (a - o) x (p - o) on Python floats, in
+    ``np.cross``'s operation order (so the same value), without its
+    per-call array handling."""
+    return (a[0] - o[0]) * (p[1] - o[1]) - (a[1] - o[1]) * (p[0] - o[0])
 
 
 def _seg_point_closest(p: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:

@@ -4,9 +4,8 @@ Common-Crawl-style page tables — the first dedup a web corpus applies
 parameter variants), before any content-level dedup runs.
 
 Pure built-in column expressions (Java-regex side) with RE2-compatible
-patterns so a SQL engine reproduces them exactly; semantics are frozen
-by tests/test_dedupgraph.py against literal fixtures AND a DuckDB
-mirror.
+patterns so a SQL engine could reproduce them exactly; semantics are
+frozen by tests/test_dedupgraph.py against literal fixtures.
 
 Canonicalization contract (documented, deterministic):
   1. strip the fragment (``#...``);
@@ -37,12 +36,22 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 _TRACKING_RE = "^(utm_[^=]*|fbclid|gclid|msclkid)="
+_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+
+
+def _lower(s: F.Column) -> F.Column:
+    """``lower(s)``, with an all-ASCII ``s`` (as many characters as
+    bytes) mapped A-Z -> a-z by ``translate``: the same string, without
+    the ICU case-mapping tables ``lower`` initializes in the JVM (one
+    task builds them while the others wait on the class-init lock)."""
+    ascii_only = F.length(s) == F.octet_length(s)
+    return F.when(ascii_only, F.translate(s, _UPPER, _UPPER.lower())).otherwise(F.lower(s))
 
 
 def canonical_url(url: F.Column) -> F.Column:
     """Canonical form of ``url`` per the module contract."""
     u = F.regexp_replace(url, "#.*$", "")
-    head = F.lower(F.regexp_extract(u, "^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)", 1))
+    head = _lower(F.regexp_extract(u, "^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)", 1))
     tail = F.regexp_replace(u, "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*", "")
     head = F.regexp_replace(head, "^(http://[^/?#:]*):80$", "$1")
     head = F.regexp_replace(head, "^(https://[^/?#:]*):443$", "$1")

@@ -159,16 +159,6 @@ def _los_pass(
                     break  # watermark early-exit (graph/Block.py:562-565)
 
 
-def _box_iou(x1a, y1a, x2a, y2a, x1b, y1b, x2b, y2b) -> float:
-    ox = max(0.0, min(x2a, x2b) - max(x1a, x1b))
-    oy = max(0.0, min(y2a, y2b) - max(y1a, y1b))
-    inter = ox * oy
-    if inter <= 0:
-        return 0.0
-    ua = (x2a - x1a) * (y2a - y1a) + (x2b - x1b) * (y2b - y1b) - inter
-    return inter / ua if ua > 0 else 0.0
-
-
 def doc_edges_arrays(
     page_num: np.ndarray,
     x1: np.ndarray,

@@ -21,10 +21,9 @@ score-and-smooth kernel that runs inside the extraction pass.
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 import numpy as np
-from pyspark.ml.classification import LogisticRegression, LogisticRegressionModel
-from pyspark.ml.feature import VectorAssembler
-from pyspark.ml.functions import vector_to_array
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -34,6 +33,13 @@ from ..schemas import MAIN_CONTENT_LABELS
 from .extract import _fused_ord_key
 from .features import EDGE_FEATURE_COLS, NODE_FEATURE_COLS
 from .perdoc import per_doc
+
+# pyspark.ml is imported inside the spark.ml functions only: importing
+# it costs ~0.5 s on a spark-submit driver (it compiles from Spark's
+# source-only pyspark.zip), which every job importing this module (via
+# api) paid, training or not.
+if TYPE_CHECKING:
+    from pyspark.ml.classification import LogisticRegressionModel
 
 
 # ---------------------------------------------------------------------------
@@ -54,6 +60,8 @@ def edge_oracle_scores(edge_feats: DataFrame) -> DataFrame:
 # Node classifier: main-content vs boilerplate (M6 over node features).
 # ---------------------------------------------------------------------------
 def _assemble(df: DataFrame, cols: list[str]) -> DataFrame:
+    from pyspark.ml.feature import VectorAssembler
+
     return VectorAssembler(inputCols=cols, outputCol="features", handleInvalid="keep").transform(df)
 
 
@@ -62,6 +70,8 @@ def train_node_classifier(node_feats: DataFrame, label_col: str = "label",
     """Binary main-content classifier trained on nf_* features with
     ground-truth labels (distributed fit; labels from the synthesizer
     play the role of the reference's annotated PageXML)."""
+    from pyspark.ml.classification import LogisticRegression
+
     train = node_feats.withColumn(
         "y", F.col(label_col).isin(list(MAIN_CONTENT_LABELS)).cast("double")
     )
@@ -73,6 +83,8 @@ def train_node_classifier(node_feats: DataFrame, label_col: str = "label",
 def predict_nodes(model: LogisticRegressionModel, node_feats: DataFrame) -> DataFrame:
     """JVM-side inference; emits predicted label + probability column
     (the reference's ``@DU_Y`` proba attribute analogue, P7)."""
+    from pyspark.ml.functions import vector_to_array
+
     scored = model.transform(_assemble(node_feats, NODE_FEATURE_COLS))
     return scored.withColumn(
         "pred_label",
@@ -151,6 +163,8 @@ def train_edge_classifier(
     to the geometry set; pass geometry + ef_lcs_ratio + class-shifted
     blocks (pipeline/edgefeats.py) for the full reference feature space
     (F13/F16)."""
+    from pyspark.ml.classification import LogisticRegression
+
     train = edge_feats.withColumn(
         "y", (F.col("src_label") != F.col("dst_label")).cast("double")
     )
@@ -164,6 +178,8 @@ def predict_edges(
     edge_feats: DataFrame,
     feature_cols: list[str] | None = None,
 ) -> DataFrame:
+    from pyspark.ml.functions import vector_to_array
+
     scored = model.transform(_assemble(edge_feats, feature_cols or EDGE_FEATURE_COLS))
     proba = vector_to_array(F.col("probability"))
     return scored.select(

@@ -11,7 +11,8 @@
 
 Both hand plain columns to a Spark-free kernel and build the Arrow
 output from its ``{column: values}``; no pandas frame is built per
-batch or per document."""
+batch or per document. :func:`per_doc` runs a small parquet pages scan
+in one Python worker, not one per core (:func:`_sized`)."""
 
 from __future__ import annotations
 
@@ -24,6 +25,46 @@ from pyspark.sql.types import StructType
 
 from .parse import MAX_NODES_PER_DOC, parse_batch
 
+# Largest estimated input of a per_doc pass that runs as one task. Rule:
+# a task's kernel time should be at least the cold start of the Python
+# worker it runs in. A pass is one task when even a split in two breaks
+# the rule, for the costliest kernel: 2 x 0.88 s (worst fork to first
+# output batch of a worker) / 0.81 s per estimated MB (segment_regions;
+# conjugate clusters 0.33-0.40, extraction 0.16-0.17) = 2.2 MB, rounded
+# down to 2 MB. Measured with spark-submit, 4 cores, local[4], on
+# perfbench pages snapshots (BENCH/PER_DOC_SIZING.json). The MB are
+# Spark's estimate for a parquet pages scan (the file bytes scaled by
+# the projected columns); only such scans are sized. In a warm session,
+# where workers are reused, the one task costs at most its whole kernel
+# time of wall against a split over the cores.
+ONE_TASK_BYTES = 2 * 1024 * 1024
+
+# Logical operators that keep their child's partitions row for row
+_ROW_WISE = frozenset({"Project", "Filter"})
+
+
+def _sized(frame: DataFrame) -> DataFrame:
+    """``frame`` coalesced to one partition (no shuffle) when it is a
+    projection or filter of a file scan whose estimated size is at most
+    :data:`ONE_TASK_BYTES`, else as it is. So an input whose partitions
+    a shuffle, an explicit repartition (the jobs' ``--repartition N``),
+    a cache or an RDD decides keeps them, and so does an input whose
+    estimate is not file bytes (a Python map's output, an RDD's
+    ``Long.MaxValue``-derived size)."""
+    plan = frame._jdf.queryExecution().optimizedPlan()
+    if _file_scan(plan) and plan.stats().sizeInBytes() <= ONE_TASK_BYTES:
+        return frame.coalesce(1)
+    return frame
+
+
+def _file_scan(plan) -> bool:
+    """Whether the JVM logical ``plan`` is row-wise operators over one
+    file scan, so that the scan's splits are its partitions."""
+    while plan.getClass().getSimpleName() in _ROW_WISE:
+        plan = plan.child()
+    return (plan.getClass().getSimpleName() == "LogicalRelation"
+            and plan.relation().getClass().getSimpleName() == "HadoopFsRelation")
+
 
 def per_doc(schema: StructType, kernel: Callable[..., Mapping], pages: DataFrame,
             kinds: tuple[str, ...] = ("TextRegion",),
@@ -35,7 +76,7 @@ def per_doc(schema: StructType, kernel: Callable[..., Mapping], pages: DataFrame
     columns (None when the document failed to parse) and ``status`` its
     parse status. The kernel returns ``{column: list}`` for ``schema``,
     or ``{}`` when the document gives no rows; each input batch gives
-    one output batch."""
+    one output batch. The pass runs on :func:`_sized` partitions."""
     arrow_schema = to_arrow_schema(schema)
     names = schema.fieldNames()
 
@@ -47,7 +88,7 @@ def per_doc(schema: StructType, kernel: Callable[..., Mapping], pages: DataFrame
                     out[k].extend(v)
             yield pa.RecordBatch.from_pydict(out, schema=arrow_schema)
 
-    return pages.select("url", "html").mapInArrow(run, schema)
+    return _sized(pages.select("url", "html")).mapInArrow(run, schema)
 
 
 def per_url(schema: StructType, kernel: Callable[..., Mapping], frame: DataFrame,

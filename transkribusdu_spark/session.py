@@ -70,10 +70,14 @@ def engine_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
         # packs small files into FEW, RAGGED splits (measured: a 1.5 GB
         # / 192-file corpus became 18 splits — one full wave of 16
         # threads plus a 2-task tail that doubled the stage wall). 32 MB
-        # splits + 1 MB open cost keep every core in work at small
-        # corpus sizes; at 100 TB both settings are irrelevant to wave
-        # shape (hundreds of splits per executor either way) and 32 MB
-        # still means ~30 s parse tasks — well above scheduling noise.
+        # splits + 1 MB open cost keep every core in work for JVM scans
+        # at small corpus sizes; a per-document Python pass over a
+        # parquet pages scan of at most 2 MB runs as one task instead
+        # (pipeline/perdoc.py _sized: a cold Python worker costs more
+        # than such a task's share of the kernel). At 100 TB
+        # both settings are irrelevant to wave shape (hundreds of splits
+        # per executor either way) and 32 MB still means ~30 s parse
+        # tasks — well above scheduling noise.
         "spark.sql.files.maxPartitionBytes": str(32 * 1024 * 1024),
         "spark.sql.files.openCostInBytes": str(1024 * 1024),
         "spark.ui.enabled": "false",
