@@ -15,7 +15,9 @@ in one job.
       -> quality/lang annotation     (ops/textstats: all_stats in one
                                       scan + repetition_stats — optional)
       -> lineage'd corpus write      (pipeline/lineage.run_with_lineage:
-                                      per-partition lineage + checksums)
+                                      one lineage row per write task —
+                                      doc count, checksum, the task's
+                                      executorRunTime as wall_ms)
       -> audit rows                  (pipeline/lineage.write_audit: every
                                       document that failed to parse, was
                                       truncated or kept no main-content
@@ -32,7 +34,9 @@ extra scan or job. That figure counts the rows written: with
 ``--annotate`` it equals the survivor count only while the annotation
 join gives one row per ``doc_id``. The lineage verdict's ``complete``
 compares the output's distinct urls against it, so a join that
-multiplied rows shows there as incomplete.
+multiplied rows shows there as incomplete. ``stragglers`` is built from
+the lineage rows' ``wall_ms``, so it describes the post-dedup write
+stage (the survivor join and the file write), not the extraction.
 Sandbox stand-in::
 
     spark-submit --master local[8] --py-files dist/transkribusdu_spark.zip \

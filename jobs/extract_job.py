@@ -16,8 +16,9 @@ and the sandbox stand-in (no cluster manager here)::
 
 The job is idempotent and resumable: ``--resume`` anti-joins the input
 on urls already extracted under ``--output`` (exactly-once per url —
-``pipeline/lineage.py``), every run appends per-partition lineage rows
-(run_id, partition id, input snapshot, doc count, checksum, wall ms),
+``pipeline/lineage.py``), every run appends one lineage row per output
+write task (run_id, partition id, input snapshot, doc count, checksum,
+and the task's executorRunTime as wall ms),
 and every document whose parse failed, was truncated or kept no
 main-content node lands in an ``audit`` table as (url, status, run_id).
 Output, audit rows and the parse funnel all come from one persisted

@@ -1,15 +1,20 @@
 """Resumability (kill-and-rerun) + incremental streaming extraction."""
 
+import hashlib
 import os
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
-from transkribusdu_spark.pipeline.extract import extract_text_spans
+from transkribusdu_spark.pipeline import lineage
+from transkribusdu_spark.pipeline.extract import extract_from_pages, extract_text_spans
 from transkribusdu_spark.pipeline.lineage import (
     pending_pages,
     run_with_lineage,
     verify_lineage,
 )
+from transkribusdu_spark.schemas import LINEAGE_SCHEMA
 from transkribusdu_spark.pipeline.parse import parse_pages
 from transkribusdu_spark.streaming.incremental import stream_extract, windowed_event_counts
 from transkribusdu_spark.synth import pages_from_documents
@@ -51,6 +56,77 @@ def test_lineage_rows_written(spark, sf_dir, tmp_path):
     assert all(r.run_id == "runA" for r in rows)
     assert sum(r.doc_count for r in rows) == pages.count()
     assert all(len(r.checksum) == 16 for r in rows)
+
+
+def _doc_sig(url, text) -> int:
+    """Reference checksum term: the first 8 bytes of sha1(url NUL text),
+    a NULL url or text hashed as the empty string."""
+    h = hashlib.sha1(((url or "") + "\x00" + (text or "")).encode("utf-8")).digest()
+    return int.from_bytes(h[:8], "big")
+
+
+def _reference_rows(spark, out_dir, run_id) -> dict:
+    """{part number: (doc_count, checksum)} of one run's output files,
+    counted and XOR-ed in Python."""
+    acc = {}
+    for r in (spark.read.parquet(os.path.join(out_dir, "extracted"))
+              .filter(F.col("run_id") == run_id)
+              .select("url", "extracted_text", F.col("_metadata.file_name").alias("f"))
+              .collect()):
+        part = int(re.match(r"part-(\d+)", r.f).group(1))
+        n, x = acc.get(part, (0, 0))
+        acc[part] = (n + 1, x ^ _doc_sig(r.url, r.extracted_text))
+    return {p: (n, f"{x:016x}") for p, (n, x) in acc.items()}
+
+
+@pytest.mark.parametrize("n_parts", [0, 4])
+def test_lineage_rows_are_write_tasks(spark, sf_dir, tmp_path, n_parts):
+    """One lineage row per output write task on sf0.01: its count and
+    checksum equal the Python reference over that task's files, its
+    partition_id is the part- number of those files and its wall_ms is
+    the task's (non-zero) executorRunTime."""
+    out_dir = str(tmp_path / f"out_w{n_parts}")
+    pages = pages_from_documents(spark, os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01"))
+    if n_parts:
+        pages = pages.repartition(n_parts, "url")
+    run_with_lineage(extract_from_pages(pages), out_dir, run_id="w")
+    lin = spark.read.parquet(os.path.join(out_dir, "lineage"))
+    assert [(f.name, f.dataType) for f in lin.schema] == [
+        (f.name, f.dataType) for f in LINEAGE_SCHEMA]
+    rows = lin.collect()
+    assert {r.partition_id: (r.doc_count, r.checksum) for r in rows} == _reference_rows(
+        spark, out_dir, "w")
+    parts = {int(m.group(1)) for f in os.listdir(os.path.join(out_dir, "extracted"))
+             if (m := re.match(r"part-(\d+)", f))}
+    assert {r.partition_id for r in rows} == parts
+    assert all(r.wall_ms > 0 for r in rows), rows
+    assert sum(r.doc_count for r in rows) == 500
+    if n_parts:
+        assert len(rows) == n_parts
+
+
+def test_lineage_counts_and_hashes_null_url_and_text(spark, tmp_path):
+    """A NULL url and a NULL extracted_text are counted and hashed (as
+    empty strings), not an error after the output was appended."""
+    out_dir = str(tmp_path / "out_nulls")
+    ext = spark.createDataFrame(
+        [(None, "a"), ("u1", None), ("u2", "b")], "url string, extracted_text string")
+    run_with_lineage(ext, out_dir, run_id="n")
+    rows = spark.read.parquet(os.path.join(out_dir, "lineage")).collect()
+    assert sum(r.doc_count for r in rows) == 3
+    assert {r.partition_id: (r.doc_count, r.checksum) for r in rows} == _reference_rows(
+        spark, out_dir, "n")
+
+
+def test_lineage_plan_has_no_python(spark, tmp_path):
+    """The lineage rows are computed in the JVM: no Python worker."""
+    path = str(tmp_path / "ext")
+    spark.createDataFrame([("u", "t")], "url string, extracted_text string").coalesce(1).write.parquet(path)
+    rows = lineage._lineage_rows(spark.read.parquet(path), "r", "s", {0: 7})
+    plan = rows._jdf.queryExecution().executedPlan().toString()
+    for node in ("MapInPandas", "MapInArrow", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, plan
+    assert [tuple(r)[3:] for r in rows.collect()] == [(1, f"{_doc_sig('u', 't'):016x}", 7)]
 
 
 def test_stream_extract_available_now(spark, sf_dir, tmp_path):

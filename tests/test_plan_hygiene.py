@@ -307,6 +307,36 @@ def test_parse_batch_has_one_call_site():
     assert _call_sites("parse_batch") == [(os.path.join("pipeline", "perdoc.py"), "per_doc")]
 
 
+def test_every_public_definition_is_named_outside_its_module():
+    """No package code that nothing names: every public top-level def or
+    class of the package is named, as a word, in some ``.py`` file of the
+    repo outside its own module (tests, jobs, tools and string literals
+    count). A helper only its own module uses is private (``_name``)."""
+    import re
+
+    import transkribusdu_spark
+
+    root = os.path.dirname(transkribusdu_spark.__file__)
+    sources = {}
+    for d, dirs, files in os.walk(os.path.dirname(root)):
+        dirs[:] = [x for x in dirs if not x.startswith(".")]
+        for name in files:
+            if name.endswith(".py"):
+                with open(os.path.join(d, name)) as f:
+                    sources[os.path.join(d, name)] = f.read()
+    unnamed = []
+    for path, src in sources.items():
+        if not path.startswith(root + os.sep):
+            continue
+        for node in ast.parse(src).body:
+            if (isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                    and not node.name.startswith("_")):
+                word = re.compile(rf"\b{re.escape(node.name)}\b")
+                if not any(word.search(s) for p, s in sources.items() if p != path):
+                    unnamed.append(f"{os.path.relpath(path, root)}:{node.name}")
+    assert unnamed == [], unnamed
+
+
 def test_persisted_status_is_coalesced_by_aqe(spark, sf_dir):
     """The jobs persist the extraction ``status`` frame behind url
     dedup's window shuffle. AQE sizes that cached plan to its data, so

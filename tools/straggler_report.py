@@ -1,8 +1,9 @@
-"""Straggler evidence (BASELINE.md skew check): run the extraction with
-per-partition lineage at bench scale, then report the wall-time
-distribution across partitions — no partition may run >4x the median
-(the north rule's skew-handling criterion, observable because lineage
-rows already carry per-partition wall_ms).
+"""Straggler evidence (BASELINE.md skew check): write the extraction
+with lineage (``run_with_lineage``) at bench scale into a temp dir, then
+report the wall-time distribution across its write tasks — no task may
+run >4x the median (the north rule's skew-handling criterion, observable
+because each lineage row carries its write task's ``executorRunTime``,
+which covers that partition's parse, window and aggregation compute).
 
 Writes BENCH/STRAGGLERS.md.  Usage: python tools/straggler_report.py
 (env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_BENCH_MULT, SPARK_GRAFT_CPUS)
@@ -27,7 +28,7 @@ N_PARTITIONS = 64
 
 def main() -> None:
     from transkribusdu_spark.pipeline.extract import extract_text_spans
-    from transkribusdu_spark.pipeline.lineage import with_lineage
+    from transkribusdu_spark.pipeline.lineage import run_with_lineage
     from transkribusdu_spark.pipeline.parse import parse_pages
     from transkribusdu_spark.session import build_session
     from transkribusdu_spark.synth import write_pages
@@ -42,11 +43,9 @@ def main() -> None:
         write_pages(spark, SF_DIR, pages_dir, n_partitions=N_PARTITIONS, multiplier=MULT)
         pages = spark.read.parquet(pages_dir)
         n_docs = pages.count()
-        # wrap the LIVE extraction (not a re-read): each lineage row's
-        # wall_ms covers that partition's parse+window+agg compute, so
-        # the distribution IS the extraction's partition-skew profile
-        ext = extract_text_spans(parse_pages(pages))
-        rows = with_lineage(ext, "straggler_probe", "parquet").collect()
+        out_dir = os.path.join(tmp, "out")
+        run_with_lineage(extract_text_spans(parse_pages(pages)), out_dir, "straggler_probe")
+        rows = spark.read.parquet(os.path.join(out_dir, "lineage")).collect()
         walls = sorted(r.wall_ms for r in rows if r.wall_ms > 0)
         counts = sorted(r.doc_count for r in rows if r.doc_count > 0)
         median = walls[len(walls) // 2]
@@ -76,7 +75,8 @@ def main() -> None:
             f"- **documents per partition** (the load balance itself): median "
             f"{stats['median_docs']}, max {stats['max_docs']}, "
             f"**max/median = {stats['doc_ratio']}** (criterion < 4.0)",
-            f"- reduce-stage wall per partition (post-shuffle assembly; AQE may "
+            f"- write-task run time per partition (post-shuffle assembly and "
+            f"file write, Spark's executorRunTime; AQE may "
             f"coalesce small partitions): median {stats['median_ms']} ms, max "
             f"{stats['max_ms']} ms, ratio {stats['ratio']}",
             "",

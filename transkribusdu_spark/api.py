@@ -8,26 +8,15 @@ document, so each is one :func:`.pipeline.perdoc.per_doc` pass over
 ``url``/``html`` that parses every document once and needs no shuffle.
 The deterministic learned path (:func:`extract_documents_deterministic`)
 is two such passes, a summed fit and a map-only score, smooth and
-extract. The spark.ml paths (:func:`extract_documents_predicted`,
-:func:`train_models`) compose the staged DataFrame layers (parse,
-edges, features, model)."""
+extract."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
-from .pipeline.edges import build_edges
-from .pipeline.extract import STATUS_SCHEMA, _fused_doc, extract_from_pages, extract_text_spans
-from .pipeline.features import edge_features, node_features
-from .pipeline.model import (
-    fit_lda_params,
-    predict_nodes,
-    smoothed_labels,
-    train_edge_classifier,
-    train_node_classifier,
-)
-from .pipeline.parse import parse_pages
+from .pipeline.extract import STATUS_SCHEMA, _fused_doc, extract_from_pages
+from .pipeline.model import fit_lda_params, smoothed_labels
 from .pipeline.perdoc import per_doc
 from .pipeline.segment import oracle_clusters_doc, regions_doc
 from .schemas import CLUSTERS_SCHEMA, HULLS_SCHEMA
@@ -46,15 +35,6 @@ def extract_documents(pages: DataFrame) -> DataFrame:
     ``extract_text_spans(parse_pages(pages))`` form (parity-locked).
     """
     return extract_from_pages(pages)
-
-
-def extract_documents_predicted(pages: DataFrame, node_model) -> DataFrame:
-    """Same path but labels come from the trained node classifier
-    (boilerplate strip by model, not ground truth)."""
-    nodes = parse_pages(pages)
-    nf = node_features(nodes, build_edges(nodes))
-    pred = predict_nodes(node_model, nf)
-    return extract_text_spans(pred, labels=("main",), label_col="pred_label")
 
 
 def conjugate_cluster(pages: DataFrame) -> DataFrame:
@@ -126,12 +106,3 @@ def segment_regions(pages: DataFrame) -> DataFrame:
     is the member count). No shuffle."""
     return per_doc(HULLS_SCHEMA, lambda url, cols, status: regions_doc(url, cols) if cols else {},
                    pages)
-
-
-def train_models(pages: DataFrame):
-    """Fit stage: returns (node_model, edge_model) trained on GT labels."""
-    nodes = parse_pages(pages)
-    edges = build_edges(nodes)
-    nf = node_features(nodes, edges)
-    ef = edge_features(edges, nodes)
-    return train_node_classifier(nf), train_edge_classifier(ef)

@@ -19,10 +19,10 @@ import numpy as np
 
 def convex_hull(pts: np.ndarray) -> np.ndarray:
     """Andrew monotone chain; returns hull vertices in CCW order."""
-    pts = np.unique(pts, axis=0)
+    pts = pts[np.lexsort((pts[:, 1], pts[:, 0]))]
+    pts = pts[np.r_[True, (pts[1:] != pts[:-1]).any(axis=1)]]  # drop repeats
     if len(pts) <= 2:
         return pts
-    pts = pts[np.lexsort((pts[:, 1], pts[:, 0]))]
     xy = pts.tolist()
 
     def half(order):
@@ -52,7 +52,7 @@ def _seg_point_closest(p: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarra
     return a + t * ab
 
 
-def closest_pair_between_hulls(ha: np.ndarray, hb: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+def _closest_pair_between_hulls(ha: np.ndarray, hb: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Closest points (p in hull A, q in hull B) by brute force over
     vertex-vs-edge pairs (exact for disjoint convex polygons)."""
     best = None
@@ -85,7 +85,7 @@ def get_linear_separator(X: np.ndarray, Y: np.ndarray) -> tuple[float, float]:
     Y = np.asarray(Y)
     ha = convex_hull(X[Y == 1])
     hb = convex_hull(X[Y == 0])
-    p, q = closest_pair_between_hulls(ha, hb)
+    p, q = _closest_pair_between_hulls(ha, hb)
     w = p - q  # normal direction, pointing to class 1
     m = (p + q) / 2.0
     if abs(w[1]) < 1e-12:

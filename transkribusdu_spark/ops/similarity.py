@@ -272,7 +272,7 @@ def _sqdist_expr(vcol, center: list[float]):
     )
 
 
-def ivf_fit(
+def _ivf_fit(
     embeddings: DataFrame, n_cells: int = IVF_CELLS, n_iters: int = IVF_ITERS
 ) -> tuple[list[list[float]], DataFrame]:
     """Fit the IVF coarse quantizer: deterministic Lloyd k-means.
@@ -319,7 +319,7 @@ def ivf_knn(
     per-cell top-k prune bounds output rows. Each vector lives in
     exactly one cell, so no cross-table dedup is needed before the
     global rank."""
-    cents, assigned = ivf_fit(embeddings, n_cells)
+    cents, assigned = _ivf_fit(embeddings, n_cells)
     dist_structs = F.array(
         *[
             F.struct(_sqdist_expr(F.col("qv"), c).alias("d"), F.lit(ci).alias("ci"))

@@ -52,12 +52,3 @@ def duplicate_directed(dual: DataFrame) -> DataFrame:
         "url", F.col("e2").alias("e1"), F.col("e1").alias("e2"), "shared"
     )
     return fwd.unionByName(rev)
-
-
-def dual_nodes(edge_features_df: DataFrame, feature_cols: list[str]) -> DataFrame:
-    """Dual node table: one row per primal edge with its feature vector
-    (nf_dual = ef, reference ``GraphConjugate.py:59-71``)."""
-    return edge_features_df.select(
-        "url", _edge_id("src", "dst").alias("eid"),
-        F.array(*[F.col(c) for c in feature_cols]).alias("f"),
-    )

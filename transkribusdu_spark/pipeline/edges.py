@@ -159,7 +159,7 @@ def _los_pass(
                     break  # watermark early-exit (graph/Block.py:562-565)
 
 
-def doc_edges_arrays(
+def _doc_edges_arrays(
     page_num: np.ndarray,
     x1: np.ndarray,
     y1: np.ndarray,
@@ -244,10 +244,10 @@ def edge_rows(url: str, node_id, edges: Mapping[str, list]) -> dict[str, list]:
 
 
 def edge_positions(cols: Mapping, mode: str) -> dict[str, list]:
-    """:func:`doc_edges_arrays` over one document's node columns (numpy
+    """:func:`_doc_edges_arrays` over one document's node columns (numpy
     arrays, :func:`.parse.parse_doc_cols` lists, or a pandas frame)."""
     x1, y1, x2, y2 = (np.asarray(cols[c], dtype=np.float64) for c in ("x1", "y1", "x2", "y2"))
-    return doc_edges_arrays(np.asarray(cols["page_num"]), x1, y1, x2, y2, mode)
+    return _doc_edges_arrays(np.asarray(cols["page_num"]), x1, y1, x2, y2, mode)
 
 
 def doc_edges(cols: Mapping, mode: str = "g1") -> dict[str, list]:

@@ -5,9 +5,14 @@ The reference's nearest analogue is a timestamp-freshness model cache
 (``graph/GraphModel.py:156-176``) — nothing distributed. Design here:
 
 - every run writes its output *and* a lineage table
-  ``(run_id, partition_id, input_snapshot, doc_count, checksum, wall_ms)``;
-  the checksum is an order-insensitive XOR of per-document
-  ``sha1(url || extracted_text)`` so it is stable under partitioning.
+  ``(run_id, partition_id, input_snapshot, doc_count, checksum, wall_ms)``
+  with one row per task that wrote output files: ``partition_id`` is the
+  write task's partition (the ``part-<n>`` of its files), ``doc_count``
+  the rows in those files, ``checksum`` an order-insensitive XOR of
+  per-document ``sha1(url || NUL || extracted_text)`` (stable under
+  partitioning), and ``wall_ms`` Spark's ``executorRunTime`` for that
+  task — the whole task, from its input through the file write. Spark
+  computes every value; the lineage pass starts no Python worker.
 - documents that failed to parse, were truncated or kept no text get
   ``audit`` rows (:func:`write_audit`) from the same pass as the output.
 - resume = anti-join the input on urls already present in the output
@@ -18,49 +23,69 @@ The reference's nearest analogue is a timestamp-freshness model cache
 
 from __future__ import annotations
 
-import hashlib
 import os
 import time
-from typing import Iterator
 
-import pandas as pd
+from py4j.protocol import Py4JError
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import LINEAGE_SCHEMA
 
 
-def _doc_sig(url: str, text: str) -> int:
-    h = hashlib.sha1((url + "\x00" + (text or "")).encode("utf-8")).digest()
-    return int.from_bytes(h[:8], "big")
+def _write_task_walls(sc: SparkContext, job_ids: set[int]) -> dict[int, int]:
+    """``{partition id: executorRunTime ms}`` of the successful tasks in
+    the result stage (a job's highest stage id) of the last of
+    ``job_ids``: the stage whose tasks wrote the files. A task Spark's
+    status store no longer holds (``spark.ui.retainedTasks`` /
+    ``retainedJobs``) is absent."""
+    try:
+        # job and task ends reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+    except Py4JError:
+        pass
+    tracker = sc.statusTracker()
+    job = tracker.getJobInfo(max(job_ids)) if job_ids else None
+    stage = tracker.getStageInfo(max(job.stageIds)) if job else None
+    if stage is None:
+        return {}
+    store = sc._jsc.sc().statusStore()
+    walls = {}
+    for attempt in range(stage.currentAttemptId + 1):
+        tasks = store.taskList(stage.stageId, attempt, 2**31 - 1)
+        for i in range(tasks.size()):
+            task = tasks.apply(i)
+            if task.status() == "SUCCESS" and task.taskMetrics().isDefined():
+                walls[task.partitionId()] = task.taskMetrics().get().executorRunTime()
+    return walls
 
 
-def with_lineage(extracted: DataFrame, run_id: str, input_snapshot: str) -> DataFrame:
-    """Wrap an extracted DataFrame so each partition also yields a lineage
-    row. Returns the lineage DataFrame (the extracted side is written by
-    the caller); map-only, no extra shuffle."""
-    cols = extracted.select("url", "extracted_text")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        t0 = time.monotonic()
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        n = 0
-        acc = 0
-        for pdf in batches:
-            n += len(pdf)
-            for u, t in zip(pdf["url"], pdf["extracted_text"]):
-                acc ^= _doc_sig(u, t)
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        yield pd.DataFrame(
-            [
-                dict(run_id=run_id, partition_id=pid, input_snapshot=input_snapshot,
-                     doc_count=n, checksum=f"{acc:016x}", wall_ms=wall_ms)
-            ]
+def _lineage_rows(increment: DataFrame, run_id: str, input_snapshot: str,
+                  walls: dict[int, int]) -> DataFrame:
+    """One lineage row per write task of ``increment`` (a parquet read of
+    one run's output), grouped by the ``part-<n>`` of its file names.
+    The checksum XORs the first 8 bytes of each document's sha1 as two
+    32-bit halves, so it stays in ``long`` arithmetic."""
+    sig = F.sha1(F.concat_ws("\x00", F.coalesce("url", F.lit("")),
+                             F.coalesce("extracted_text", F.lit(""))))
+    part = F.regexp_extract("_metadata.file_name", r"^part-(\d+)", 1).cast("int")
+    wall = F.create_map(*[F.lit(v) for kv in walls.items() for v in kv])
+    return (
+        increment.groupBy(part.alias("partition_id"))
+        .agg(F.count(F.lit(1)).alias("doc_count"),
+             *[F.bit_xor(F.conv(F.substring(sig, i, 8), 16, 10).cast("long")).alias(f"h{i}")
+               for i in (1, 9)])
+        .select(
+            F.lit(run_id).alias("run_id"),
+            "partition_id",
+            F.lit(input_snapshot).alias("input_snapshot"),
+            "doc_count",
+            F.format_string("%08x%08x", "h1", "h9").alias("checksum"),
+            F.coalesce(F.element_at(wall, F.col("partition_id")), F.lit(0)).alias("wall_ms"),
         )
-
-    return cols.mapInPandas(run, schema=LINEAGE_SCHEMA)
+        .select(*[F.col(f.name).cast(f.dataType) for f in LINEAGE_SCHEMA])
+    )
 
 
 def run_with_lineage(
@@ -75,7 +100,9 @@ def run_with_lineage(
     re-reading ONLY this run's increment from disk — so (a) checksums
     cover the bytes that actually landed, and (b) resumed runs never
     double-count earlier runs' documents in the lineage table (each
-    document is counted by exactly one run_id).
+    document is counted by exactly one run_id). Each write task's
+    ``wall_ms`` is read from Spark's status store for the jobs the
+    write started (the current job group's new job ids).
 
     Returns per-phase wall seconds (extract+write / checksum pass) so
     jobs can report where a run's time went.
@@ -98,16 +125,17 @@ def run_with_lineage(
             f"{out_dir} — re-running it would double-count its documents; "
             f"resume under a fresh run_id instead"
         )
+    sc = spark.sparkContext
+    group = sc.getLocalProperty("spark.jobGroup.id")
+    before = set(sc.statusTracker().getJobIdsForGroup(group))
     t0 = time.monotonic()
     extracted.withColumn("run_id", F.lit(run_id)).write.mode("append").parquet(ext_path)
     t1 = time.monotonic()
+    walls = _write_task_walls(sc, set(sc.statusTracker().getJobIdsForGroup(group)) - before)
     increment = (
-        extracted.sparkSession.read.parquet(ext_path)
-        .filter(F.col("run_id") == run_id)
-        .drop("run_id")
+        spark.read.parquet(ext_path).filter(F.col("run_id") == run_id).drop("run_id")
     )
-    lin = with_lineage(increment, run_id, input_snapshot)
-    lin.write.mode("append").parquet(lin_path)
+    _lineage_rows(increment, run_id, input_snapshot, walls).write.mode("append").parquet(lin_path)
     return {
         "extract_write_sec": round(t1 - t0, 3),
         "lineage_sec": round(time.monotonic() - t1, 3),
@@ -150,9 +178,12 @@ def pending_pages(spark: SparkSession, pages: DataFrame, out_dir: str) -> DataFr
 
 def straggler_stats(spark: SparkSession, out_dir: str,
                     run_id: str | None = None) -> dict:
-    """Skew check (BASELINE.md): no partition should take > 4x the median
-    partition wall time. Uses the per-partition wall_ms the lineage rows
-    already record — zero extra instrumentation. Pass ``run_id`` to scope
+    """Skew check (BASELINE.md): no task should take > 4x the median task
+    time. Uses the ``wall_ms`` the lineage rows already record — Spark's
+    ``executorRunTime`` of each output write task, i.e. of the run's
+    last stage (for ``jobs/corpus_job.py`` the post-dedup write stage) —
+    so it costs zero extra instrumentation; rows whose task Spark no
+    longer held (``wall_ms`` 0) are skipped. Pass ``run_id`` to scope
     the stats to one run; the default mixes every run in ``out_dir``,
     which is meaningless after a resume at a different parallelism."""
     lin = spark.read.parquet(os.path.join(out_dir, "lineage"))

@@ -121,7 +121,7 @@ def mine_row_cuts(tops: list[tuple[float, int]], n_cols: int,
     return cuts
 
 
-def assign_rows(cuts: list[float], y_centers: list[float]) -> list[int]:
+def _assign_rows(cuts: list[float], y_centers: list[float]) -> list[int]:
     """Line -> row index = number of cuts at or below its y-center
     (assessCuts interval semantics, rowDetection.py:294-318)."""
     import bisect
@@ -129,8 +129,8 @@ def assign_rows(cuts: list[float], y_centers: list[float]) -> list[int]:
     return [max(bisect.bisect_right(cuts, y) - 1, 0) for y in y_centers]
 
 
-def coherence_score(rows: list[int], cols: list[int], tags: list[str],
-                    y1s: list[float]) -> float:
+def _coherence_score(rows: list[int], cols: list[int], tags: list[str],
+                     y1s: list[float]) -> float:
     """BIESO coherence (computeCoherenceScore, rowDetection.py:1401-1434;
     we keep the full BIESO convention: single-line cell -> RS, first ->
     RB, last -> RE, middle -> RI)."""
@@ -172,8 +172,8 @@ def detect_doc_rows(pdf: pd.DataFrame) -> pd.DataFrame:
             cuts = mine_row_cuts(tops, n_cols, thnum, thsup)
             if not cuts:
                 continue
-            rows = assign_rows(cuts, centers)
-            score = coherence_score(rows, pdf["col_id"].tolist(), pdf["tag"].tolist(),
+            rows = _assign_rows(cuts, centers)
+            score = _coherence_score(rows, pdf["col_id"].tolist(), pdf["tag"].tolist(),
                                     pdf["y1"].tolist())
             if score > best[0]:
                 best = (score, rows)
@@ -201,7 +201,7 @@ def detect_table_rows(lines: DataFrame) -> DataFrame:
 # candidates to a DTW path — an approximation; exhaustive greedy is a
 # strict superset and identical on well-separated tables).
 # ---------------------------------------------------------------------------
-def jaccard_similarity(a: set, b: set) -> float:
+def _jaccard_similarity(a: set, b: set) -> float:
     if not a and not b:
         return 1.0
     return len(a & b) / len(a | b)
@@ -215,7 +215,7 @@ def eval_partitions(run: list[list], gt: list[list], th: float) -> tuple[int, in
     for i, x in enumerate(run):
         sx = set(x)
         for j, y in enumerate(gt):
-            s = jaccard_similarity(sx, set(y))
+            s = _jaccard_similarity(sx, set(y))
             if s >= th:
                 sims.append((s, i, j))
     sims.sort(key=lambda t: (-t[0], t[1], t[2]))
@@ -262,15 +262,3 @@ def eval_row_clusters(pred: DataFrame, gt: DataFrame, simil: float = 1.0) -> Dat
         )
 
     return j.groupBy("url").applyInPandas(run, schema=schema)
-
-
-def row_eval(tags: DataFrame, gt: DataFrame) -> DataFrame:
-    """E5-style row evaluation: per-url fraction of nodes whose BIESO tag
-    matches ground truth (gt: url, node_id, bieso)."""
-    j = tags.join(
-        gt.select("url", "node_id", F.col("bieso").alias("gt_bieso")),
-        ["url", "node_id"],
-    )
-    return j.groupBy("url").agg(
-        F.round(F.avg((F.col("bieso") == F.col("gt_bieso")).cast("double")), 6).alias("tag_acc")
-    )

@@ -1,4 +1,4 @@
-"""Skew handling: explicit hash-partitioning + salting for hot keys
+"""Skew handling: salting for hot keys
 (north rule: "salting for skewed hosts").
 
 The pages table is keyed by url (fine-grained, so the extraction shuffle
@@ -20,15 +20,6 @@ def host_of_url(col=None) -> F.Column:
     return F.regexp_extract(col if col is not None else F.col("url"), r"https?://([^/]+)/", 1)
 
 
-def repartition_salted(df: DataFrame, key: str, n_partitions: int,
-                       n_salts: int = DEFAULT_SALTS) -> DataFrame:
-    """Hash repartition on (key, salt) so a single hot key spreads over
-    ``n_salts`` partitions. Deterministic salt from a row hash (no RNG:
-    resume-safe)."""
-    salted = df.withColumn("_salt", F.pmod(F.xxhash64(*df.columns), F.lit(n_salts)))
-    return salted.repartition(n_partitions, F.col(key), F.col("_salt")).drop("_salt")
-
-
 def docs_per_host_salted(pages: DataFrame, n_salts: int = DEFAULT_SALTS) -> DataFrame:
     """Two-phase (salted partial -> final) count per host — the skew-safe
     shape for any hot-key aggregation: phase 1 aggregates (host, salt)
@@ -40,15 +31,3 @@ def docs_per_host_salted(pages: DataFrame, n_salts: int = DEFAULT_SALTS) -> Data
     )
     partial = salted.groupBy("host", "salt").agg(F.count("*").alias("c"))
     return partial.groupBy("host").agg(F.sum("c").alias("n_docs"))
-
-
-def hot_keys(df: DataFrame, key_col, min_share: float = 0.05) -> DataFrame:
-    """Detect keys holding more than ``min_share`` of all rows (salting /
-    broadcast-isolation candidates)."""
-    total = df.count()
-    return (
-        df.groupBy(key_col.alias("key"))
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= total * min_share)
-        .orderBy(F.desc("n"))
-    )

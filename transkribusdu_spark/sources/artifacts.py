@@ -52,8 +52,8 @@ def _read_store(spark: SparkSession, path: str) -> DataFrame | None:
     return df
 
 
-def save_artifact(spark: SparkSession, store_dir: str, name: str,
-                  payload: Any, cfg_hash: str = "") -> None:
+def _save_artifact(spark: SparkSession, store_dir: str, name: str,
+                   payload: Any, cfg_hash: str = "") -> None:
     """Append a new version: version = 1 + max existing version for
     (name, cfg_hash). Plain parquet read order across appended files is
     unspecified, so 'latest' must be an explicit column, not row order."""
@@ -75,8 +75,8 @@ def save_artifact(spark: SparkSession, store_dir: str, name: str,
     df.coalesce(1).write.mode("append").parquet(path)
 
 
-def load_artifact(spark: SparkSession, store_dir: str, name: str,
-                  cfg_hash: str = "") -> Any | None:
+def _load_artifact(spark: SparkSession, store_dir: str, name: str,
+                   cfg_hash: str = "") -> Any | None:
     """Latest artifact for (name, cfg_hash) by explicit version column,
     or None if absent/stale."""
     df = _read_store(spark, os.path.join(store_dir, "artifacts"))
@@ -97,12 +97,12 @@ def save_quantile_splits(spark, store_dir, splits: dict[str, list[float]], cfg: 
     # +-inf are not JSON; encode as sentinels
     enc = {c: [("-inf" if v == float("-inf") else "inf" if v == float("inf") else v) for v in s]
            for c, s in splits.items()}
-    save_artifact(spark, store_dir, "quantile_splits", enc, h)
+    _save_artifact(spark, store_dir, "quantile_splits", enc, h)
     return h
 
 
 def load_quantile_splits(spark, store_dir, cfg: dict) -> dict[str, list[float]] | None:
-    enc = load_artifact(spark, store_dir, "quantile_splits", config_hash(cfg))
+    enc = _load_artifact(spark, store_dir, "quantile_splits", config_hash(cfg))
     if enc is None:
         return None
     dec = {}

@@ -99,7 +99,7 @@ def nodes_to_dsxml(nodes: DataFrame) -> DataFrame:
     )
 
 
-def parse_dsxml_doc(url: str, xml: bytes) -> list[dict]:
+def _parse_dsxml_doc(url: str, xml: bytes) -> list[dict]:
     """One DS-XML document -> node dicts (ElementTree, document-local)."""
     root = etree.fromstring(xml)
     pages = root.findall(".//PAGE")
@@ -149,7 +149,7 @@ def parse_dsxml_pages(pages: DataFrame, payload_col: str = "html") -> DataFrame:
             out: dict[str, list] = {n: [] for n in names}
             for url, payload in zip(pdf["url"], pdf[payload_col]):
                 try:
-                    rows = parse_dsxml_doc(url, bytes(payload))
+                    rows = _parse_dsxml_doc(url, bytes(payload))
                 except Exception:
                     continue
                 for r in rows:

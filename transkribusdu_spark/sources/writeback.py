@@ -2,9 +2,10 @@
 
 The reference writes predictions back into the DOM (label attributes,
 ``@DU_Y`` probabilities, Cluster elements) and saves ``*_du.mpxml``
-files. Here the write-back is (a) a labeled-nodes output table — the
-actual 100 TB sink — and (b) an optional XML render of the enriched
-document (one string per url) for consumers that want documents back.
+files. Here the labeled-nodes table (the actual 100 TB sink) is the
+predicted node frame written as is, and this module is the optional XML
+render of the enriched document (one string per url) for consumers that
+want documents back.
 The render is a vectorized string assembly inside mapInPandas; it
 round-trips through our own parser (tested), which is the analogue of
 the reference's save/load cycle.
@@ -18,8 +19,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from ..pipeline.parse import _CUSTOM_RE  # reuse parser regexes for sanity
 
 
 def _esc(s: str) -> str:
@@ -121,9 +120,3 @@ def render_enriched_xml(nodes: DataFrame, label_col: str = "label",
 
     # repartition by url so each document renders whole in one task
     return src.repartition(F.col("url")).mapInPandas(run, schema=RENDERED_SCHEMA)
-
-
-def labeled_output(nodes_pred: DataFrame) -> DataFrame:
-    """The table sink (S9): url, node_id, label, pred_label, y_proba."""
-    cols = [c for c in ("url", "node_id", "label", "pred_label", "y_proba") if c in nodes_pred.columns]
-    return nodes_pred.select(*cols)

@@ -72,10 +72,6 @@ def url_of(doc_id: int) -> str:
     return f"https://host{host_of(doc_id):03d}.example.org/doc/{int(doc_id):06d}"
 
 
-def doc_id_of_url(url: str) -> int:
-    return int(url.rsplit("/", 1)[1])
-
-
 def _polygon_pts(x1: int, y1: int, x2: int, y2: int, rng) -> list[tuple[int, int]]:
     """4-8 point polygon whose bounding box is exactly (x1,y1,x2,y2)
     (exercises polygon->rect fitting, ``util/Polygon.py:104``): midpoints
