@@ -109,19 +109,13 @@ def main() -> None:
     wall = time.monotonic() - t0
 
     consistency = verify_lineage(
-        spark, args.output, expected_docs=args.expected_docs or -1
+        spark, args.output, expected_docs=args.expected_docs or -1, run_id=run_id
     )
-    this_run = (
-        spark.read.parquet(f"{args.output}/lineage")
-        .filter(F.col("run_id") == run_id)
-        .agg(F.sum("doc_count"))
-        .collect()[0][0]
-        or 0
-    )
+    this_run = consistency.pop("run_docs")
     metrics = {
         "run_id": run_id,
         "input_snapshot": snapshot,
-        "docs_this_run": int(this_run),
+        "docs_this_run": this_run,
         "funnel": funnel,
         "wall_sec": round(wall, 3),
         "phases": phases,

@@ -260,3 +260,17 @@ def test_verify_lineage_counts_in_one_pass(spark, tmp_path):
         "complete": True,
     }
     assert got["distinct_urls"] == 3
+
+
+def test_verify_lineage_run_docs_from_the_same_aggregate(spark, tmp_path):
+    """``run_id`` adds that run's doc count, summed next to the total;
+    a run with no lineage rows counts 0."""
+    out_dir = str(tmp_path / "out4")
+    spark.createDataFrame([("u1", "a")], "url string, extracted_text string").write.parquet(
+        os.path.join(out_dir, "extracted"))
+    spark.createDataFrame([("a", 3), ("b", 2), ("a", 1)], "run_id string, doc_count long").write.parquet(
+        os.path.join(out_dir, "lineage"))
+    assert "run_docs" not in verify_lineage(spark, out_dir, expected_docs=1)
+    got = verify_lineage(spark, out_dir, expected_docs=1, run_id="a")
+    assert (got["lineage_docs"], got["run_docs"]) == (6, 4)
+    assert verify_lineage(spark, out_dir, expected_docs=1, run_id="c")["run_docs"] == 0

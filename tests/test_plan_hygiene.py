@@ -337,6 +337,65 @@ def test_every_public_definition_is_named_outside_its_module():
     assert unnamed == [], unnamed
 
 
+def test_row_stages_cross_into_python_through_arrow_only():
+    """Every row-level Python stage of the package crosses the boundary
+    as Arrow (per_doc / per_url, mapInArrow, arrow_udf). The pandas
+    shapes stay only where they are the point: the test-data builder
+    (synth.py) and the stateful streaming operator (streaming/)."""
+    import transkribusdu_spark
+
+    pandas_shapes = {"mapInPandas", "applyInPandas", "pandas_udf"}
+    root = os.path.dirname(transkribusdu_spark.__file__)
+    found = []
+    for d, _, files in os.walk(root):
+        for name in files:
+            path = os.path.join(d, name)
+            rel = os.path.relpath(path, root)
+            if not name.endswith(".py") or rel == "synth.py" or rel.startswith("streaming" + os.sep):
+                continue
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            for node in ast.walk(tree):
+                if getattr(node, "id", getattr(node, "attr", None)) in pandas_shapes:
+                    found.append(f"{rel}:{node.lineno}")
+    assert found == [], found
+
+
+def test_grouped_row_stages_are_one_arrow_group_pass(spark, sf_dir):
+    """Table-row tagging, row detection, row evaluation and the enriched
+    write-back each run one url-grouped Arrow kernel (per_url); the
+    write-back shuffles once, on url, and holds one document per call."""
+    import re
+
+    from transkribusdu_spark.pipeline.tablerows import (
+        bieso_tag_rows, detect_table_rows, eval_row_clusters)
+    from transkribusdu_spark.sources.writeback import render_enriched_xml
+    from transkribusdu_spark.synth import table_lines_df
+
+    tmp = tempfile.mkdtemp(prefix="plan_grouped_")
+    parse_pages(pages_from_documents(spark, sf_dir), kinds=("TextRegion", "TextLine")).repartition(
+        3).write.parquet(tmp + "/nodes")
+    table_lines_df(spark, n_tables=4).withColumn("row_id", F.col("gt_row")).write.parquet(
+        tmp + "/lines")
+    nodes = spark.read.parquet(tmp + "/nodes")
+    lines = spark.read.parquet(tmp + "/lines")
+    stages = {
+        "bieso": bieso_tag_rows(nodes),
+        "detect": detect_table_rows(lines),
+        "eval": eval_row_clusters(lines, lines),
+        "writeback": render_enriched_xml(nodes),
+    }
+    for name, df in stages.items():
+        plan = _physical(df)
+        assert plan.count("FlatMapGroupsInArrow") == 1, (name, plan)
+        for node in ("FlatMapGroupsInPandas", "MapInPandas"):
+            assert node not in plan, (name, plan)
+    exchanges = re.findall(r"Exchange (\w+)\(([^)]*)\)", _physical(stages["writeback"]))
+    assert len(exchanges) == 1, exchanges
+    kind, keys = exchanges[0]
+    assert kind == "hashpartitioning" and re.match(r"url#\d+,", keys), exchanges
+
+
 def test_persisted_status_is_coalesced_by_aqe(spark, sf_dir):
     """The jobs persist the extraction ``status`` frame behind url
     dedup's window shuffle. AQE sizes that cached plan to its data, so

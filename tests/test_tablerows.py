@@ -1,6 +1,6 @@
 """BIESO row tagging over a constructed table layout (C9-lite)."""
 
-import pandas as pd
+import numpy as np
 
 from transkribusdu_spark.pipeline.tablerows import bieso_tag_rows, tag_doc_rows
 
@@ -18,19 +18,19 @@ def _table(n_rows=3, n_cols=3, row_h=40, gap=30):
     # a lone caption line below the table -> RS
     rows.append(dict(url="u", node_id="caption", page_num=1,
                      x1=100.0, y1=400.0, x2=700.0, y2=430.0))
-    return pd.DataFrame(rows)
+    return {k: np.array([r[k] for r in rows]) for k in rows[0]}
 
 
 def test_tag_doc_rows_bieso():
     got = tag_doc_rows(_table(), min_gap=10.0)
-    tags = dict(zip(got.node_id, got.bieso))
+    tags = dict(zip(got["node_id"], got["bieso"]))
     for r in range(3):
         assert tags[f"r{r}c0"] == "RB"
         assert tags[f"r{r}c1"] == "RI"
         assert tags[f"r{r}c2"] == "RE"
     assert tags["caption"] == "RS"
     # rows are distinct and ordered top-to-bottom
-    rid = dict(zip(got.node_id, got.row_id))
+    rid = dict(zip(got["node_id"], got["row_id"]))
     assert rid["r0c0"] < rid["r1c0"] < rid["r2c0"]
     assert rid["r0c0"] == rid["r0c2"]
 

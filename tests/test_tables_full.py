@@ -4,7 +4,7 @@ The fixture family (synth.plan_table) has bounded jitter/skew so the
 cut miner is entitled to recover every row exactly; the evaluator is
 exercised on imperfect partitions too."""
 
-import pandas as pd
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,6 +12,7 @@ from transkribusdu_spark.pipeline.tablerows import (
     compute_prf,
     detect_doc_rows,
     detect_table_rows,
+    eval_doc_rows,
     eval_partitions,
     eval_row_clusters,
     mine_row_cuts,
@@ -43,13 +44,12 @@ def test_eval_partitions_and_prf():
 def test_fixture_rows_detected_exactly_local():
     for tid in (0, 7, 23):
         plan = plan_table(tid)
-        pdf = pd.DataFrame(plan["lines"])
-        pdf["url"] = plan["url"]
-        out = detect_doc_rows(pdf)
-        m = pdf.merge(out, on="node_id")
-        runp = [g["node_id"].tolist() for _, g in m.groupby("row_id")]
-        gtp = [g["node_id"].tolist() for _, g in m.groupby("gt_row")]
-        ok, err, miss = eval_partitions(runp, gtp, 1.0)
+        cols = {k: np.array([ln[k] for ln in plan["lines"]]) for k in plan["lines"][0]}
+        cols["url"] = np.array([plan["url"]] * len(plan["lines"]), dtype=object)
+        out = detect_doc_rows(cols)
+        assert out["node_id"] == cols["node_id"].tolist()
+        ev = eval_doc_rows(dict(cols, row_id=np.array(out["row_id"])), 1.0)
+        ok, err, miss = ev["n_ok"][0], ev["n_err"][0], ev["n_miss"][0]
         assert (err, miss) == (0, 0) and ok == plan["n_rows"]
 
 

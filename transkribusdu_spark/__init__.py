@@ -8,7 +8,7 @@ Architecture (Spark-first, NOT a port):
   (parse -> nodes -> edges -> features -> score -> cluster -> extract) is
   document-local (reference: one Graph per file/page,
   ``graph/Graph_Multi_SinglePageXml.py:77-133``), so it runs inside
-  vectorized Arrow/pandas UDFs over hash-partitioned batches.
+  vectorized Arrow UDFs over hash-partitioned batches.
 - Only *fitting* (quantiles, vocabularies, class weights, model training)
   aggregates across documents — expressed as plain DataFrame aggregations
   with results broadcast back into the scoring UDFs.

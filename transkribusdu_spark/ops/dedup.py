@@ -587,14 +587,14 @@ def simhash(docs: DataFrame, bits: int = 60) -> DataFrame:
     the bench (10.4 s -> ~1 s at 20k docs); value-identical by
     construction (integer arithmetic throughout).
     """
-    import pandas as pd
+    import pyarrow as pa
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = _simhash_batch(pdf["text"], bits)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].to_numpy(), "simhash": out})
+    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        for rb in batches:
+            sig = pa.array(_simhash_batch(rb.column("text").to_pylist(), bits), pa.int64())
+            yield pa.RecordBatch.from_arrays([rb.column("doc_id"), sig], ["doc_id", "simhash"])
 
-    return docs.select("doc_id", "text").mapInPandas(run, schema="doc_id long, simhash long")
+    return docs.select("doc_id", "text").mapInArrow(run, schema="doc_id long, simhash long")
 
 
 def simhash_near_pairs(docs: DataFrame, max_hamming: int = 8, bits: int = 60) -> DataFrame:

@@ -1,6 +1,6 @@
 """Multimodal column plumbing: image/audio/video as opaque binary
-columns with typed metadata; decode / feature-extraction as Arrow-batched
-pandas UDFs over ``mapInPandas``.
+columns with typed metadata; decode / feature-extraction as one
+``mapInArrow`` pass, one output batch per input batch.
 
 The decode libraries (PIL/ffmpeg/librosa) are NOT in this container, so
 the decode kernels are STUBBED: ``decode_image_real`` raises
@@ -15,10 +15,11 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -77,20 +78,19 @@ def extract_binary_features(media: DataFrame, hist_bins: int = 16) -> DataFrame:
     """Arrow-batched feature extraction over the binary column.
 
     Deterministic fake kernel: byte mean + 16-bin byte histogram (real
-    decoders slot into the same mapInPandas shape). Vectorized with
+    decoders slot into the same mapInArrow shape). Vectorized with
     numpy.frombuffer per payload — no per-byte Python."""
+    arrow_schema = to_arrow_schema(FEATURES_SCHEMA)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "n_bytes": [], "mime": [], "byte_mean": [], "byte_hist": []}
-            for doc_id, payload, meta in zip(pdf["doc_id"], pdf["payload"], pdf["meta"]):
-                arr = np.frombuffer(bytes(payload), dtype=np.uint8)
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            rows = []
+            for r in b.to_pylist():
+                arr = np.frombuffer(r["payload"], dtype=np.uint8)
                 hist, _ = np.histogram(arr, bins=hist_bins, range=(0, 256))
-                out["doc_id"].append(int(doc_id))
-                out["n_bytes"].append(int(arr.size))
-                out["mime"].append(meta["mime"] if isinstance(meta, dict) else meta.mime)
-                out["byte_mean"].append(round(float(arr.mean()) if arr.size else 0.0, 6))
-                out["byte_hist"].append((hist / max(arr.size, 1)).round(6).tolist())
-            yield pd.DataFrame(out)
+                rows.append(dict(doc_id=r["doc_id"], n_bytes=arr.size, mime=r["meta"]["mime"],
+                                 byte_mean=round(float(arr.mean()) if arr.size else 0.0, 6),
+                                 byte_hist=(hist / max(arr.size, 1)).round(6).tolist()))
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
-    return media.mapInPandas(run, schema=FEATURES_SCHEMA)
+    return media.mapInArrow(run, FEATURES_SCHEMA)

@@ -18,7 +18,6 @@
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -26,15 +25,13 @@ from pyspark.sql import functions as F
 from .. import SEED
 
 
-def _mat64(col: "pa.ChunkedArray", n: int) -> np.ndarray:
-    """(n x d) float64 matrix from an Arrow list<float|double> column in
-    ONE flatten+reshape memcpy (the per-row ``np.asarray(list)`` loop the
-    pandas group path paid cost ~1-2 us per ROW — guide §4.2: hand whole
-    batches to native code). float->double widening is exact, so values
-    are bit-identical to the per-row form. Ragged lists or nulls (never
+def _mat64(col: "pa.Array | pa.ChunkedArray", n: int) -> np.ndarray:
+    """(n x d) float64 matrix from an Arrow list<float|double> array or
+    column in ONE flatten+reshape memcpy, not a per-row list conversion;
+    float->double widening is exact. Ragged lists or nulls (never
     expected for embeddings) take the per-row path, which raises on
     ragged rows instead of reshaping them into a wrong matrix."""
-    arr = col.combine_chunks()
+    arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
     if arr.null_count == 0 and n:
         lens = np.diff(arr.offsets.to_numpy())
         if (lens == lens[0]).all():
@@ -230,14 +227,15 @@ def _buckets_udf(planes: np.ndarray):
     flat = planes.reshape(-1, dim).T.copy()  # (dim, tables*planes)
     weights = (1 << np.arange(n_planes)).astype(np.int64)
 
-    @F.pandas_udf("array<int>")
-    def f(vs: pd.Series) -> pd.Series:
-        if not len(vs):
-            return pd.Series([], dtype=object)
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
-        bits = (m @ flat) > 0
-        bk = (bits.reshape(len(m), n_tables, n_planes) * weights).sum(axis=2)
-        return pd.Series(list(bk.astype(np.int32)))
+    @F.arrow_udf("array<int>")
+    def f(vs: pa.Array) -> pa.Array:
+        n = len(vs)
+        if not n:
+            return pa.array([], pa.list_(pa.int32()))
+        bits = (_mat64(vs, n) @ flat) > 0
+        bk = (bits.reshape(n, n_tables, n_planes) * weights).sum(axis=2)
+        offsets = np.arange(n + 1, dtype=np.int32) * n_tables
+        return pa.ListArray.from_arrays(pa.array(offsets), pa.array(bk.astype(np.int32).reshape(-1)))
 
     return f
 
@@ -250,13 +248,13 @@ def _cells_udf(cents: list[list[float]]):
     the cell assignment end to end."""
     c = np.asarray(cents, dtype=np.float64)  # (k, d)
 
-    @F.pandas_udf("int")
-    def f(vs: pd.Series) -> pd.Series:
+    @F.arrow_udf("int")
+    def f(vs: pa.Array) -> pa.Array:
         if not len(vs):
-            return pd.Series([], dtype="int32")
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
+            return pa.array([], pa.int32())
+        m = _mat64(vs, len(vs))
         d = ((m[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-        return pd.Series(np.argmin(d, axis=1).astype(np.int32))
+        return pa.array(np.argmin(d, axis=1).astype(np.int32))
 
     return f
 

@@ -24,14 +24,14 @@ Reference semantics reproduced:
 
 Spark shape: everything except the LCS is declarative column algebra
 (whole-stage codegen). The LCS is inherently a per-pair DP, so it runs
-as an Arrow-batched pandas UDF with a numpy row-vectorized kernel —
+as an Arrow UDF (``F.arrow_udf``) with a numpy row-vectorized kernel —
 O(len_a) vector ops per row of the DP instead of a Python inner loop.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -75,9 +75,10 @@ def lcs_ratio_py(a: str, b: str) -> float:
     return float(lcs) / denom if denom > 0 else 0.0
 
 
-@F.pandas_udf(T.DoubleType())
-def _lcs_ratio_udf(sa: pd.Series, sb: pd.Series) -> pd.Series:
-    return pd.Series([lcs_ratio_py(x, y) for x, y in zip(sa, sb)], dtype=np.float64)
+@F.arrow_udf(T.DoubleType())
+def _lcs_ratio_udf(sa: pa.Array, sb: pa.Array) -> pa.Array:
+    return pa.array([lcs_ratio_py(x, y) for x, y in zip(sa.to_pylist(), sb.to_pylist())],
+                    pa.float64())
 
 
 def edge_text_features(edges: DataFrame, nodes: DataFrame) -> DataFrame:

@@ -202,18 +202,26 @@ def straggler_stats(spark: SparkSession, out_dir: str,
     }
 
 
-def verify_lineage(spark: SparkSession, out_dir: str, expected_docs: int) -> dict:
-    """Consistency check: lineage doc counts must cover the output table."""
+def verify_lineage(spark: SparkSession, out_dir: str, expected_docs: int,
+                   run_id: str | None = None) -> dict:
+    """Consistency check: lineage doc counts must cover the output table.
+    With ``run_id``, ``run_docs`` is that run's doc count (same scan)."""
     lin = spark.read.parquet(os.path.join(out_dir, "lineage"))
     ext = spark.read.parquet(os.path.join(out_dir, "extracted"))
-    n_lineage = lin.agg(F.sum("doc_count")).collect()[0][0] or 0
+    sums = [F.sum("doc_count")]
+    if run_id is not None:
+        sums.append(F.sum(F.when(F.col("run_id") == run_id, F.col("doc_count"))))
+    n_lineage, *n_run = lin.agg(*sums).first()
     # One scan for both counts; the struct makes a NULL url count as one
     # distinct value, as ``select("url").distinct()`` does.
     n_out, n_urls = ext.agg(F.count(F.lit(1)), F.count_distinct(F.struct("url"))).first()
-    return {
-        "lineage_docs": int(n_lineage),
+    out = {
+        "lineage_docs": int(n_lineage or 0),
         "output_rows": int(n_out),
         "distinct_urls": int(n_urls),
         "expected": expected_docs,
         "complete": n_urls == expected_docs,
     }
+    if n_run:
+        out["run_docs"] = int(n_run[0] or 0)
+    return out

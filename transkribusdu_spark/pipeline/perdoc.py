@@ -6,8 +6,9 @@
   with no shuffle.
 - :func:`per_url` is the url-grouped pass of the stages that start from
   node and edge tables: edges, clustering, ECN scoring/training, the
-  cut query and the hull query each run one array kernel per document
-  behind one url shuffle.
+  cut query, the hull query, table-row tagging, row detection and
+  row evaluation, and the enriched write-back each run one array
+  kernel per document behind one url shuffle.
 
 Both hand plain columns to a Spark-free kernel and build the Arrow
 output from its ``{column: values}``; no pandas frame is built per

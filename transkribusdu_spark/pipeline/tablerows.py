@@ -9,18 +9,22 @@ candidates (``tasks/DU_Table/rowDetection.py``). Re-expressed here:
    their y-extents (the projection-profile cut, functions/xycut.py);
 2. order each row left-to-right and tag positions BIESO.
 
-Per-document ``applyInPandas`` over the standard nodes table — works on
-any node kind that has boxes (TextLine nodes from the multitype parser).
+One array kernel call per document behind one url shuffle
+(:func:`.perdoc.per_url`) over the standard nodes table — works on any
+node kind that has boxes (TextLine nodes from the multitype parser).
 """
 
 from __future__ import annotations
 
-import pandas as pd
+from typing import Mapping
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.xycut import merge_intervals
+from .perdoc import per_url
 
 ROW_TAGS_SCHEMA = T.StructType(
     [
@@ -33,51 +37,42 @@ ROW_TAGS_SCHEMA = T.StructType(
 )
 
 
-def tag_doc_rows(pdf: pd.DataFrame, min_gap: float = 10.0) -> pd.DataFrame:
-    """One document: line boxes -> (row_id, col_pos, BIESO tag)."""
-    out = {k: [] for k in ("url", "node_id", "row_id", "col_pos", "bieso")}
-    url = pdf["url"].iloc[0] if len(pdf) else None
-    row_counter = 0
-    for _, page in pdf.groupby("page_num", sort=True):
-        ys = list(zip(page["y1"], page["y2"]))
-        bands = merge_intervals(ys, min_gap)
-        # assign each line to the band containing its y-center
-        centers = (page["y1"] + page["y2"]) / 2.0
-        for lo, hi in bands:
-            sel = page[(centers >= lo) & (centers <= hi)].sort_values(
-                ["x1", "node_id"]
-            )
-            n = len(sel)
-            for pos, r in enumerate(sel.itertuples()):
-                if n == 1:
-                    tag = "RS"
-                elif pos == 0:
-                    tag = "RB"
-                elif pos == n - 1:
-                    tag = "RE"
-                else:
-                    tag = "RI"
-                out["url"].append(url)
-                out["node_id"].append(r.node_id)
-                out["row_id"].append(row_counter)
-                out["col_pos"].append(pos)
-                out["bieso"].append(tag)
-            row_counter += 1
-    return pd.DataFrame(out)
+def tag_doc_rows(cols: Mapping[str, np.ndarray], min_gap: float = 10.0) -> dict[str, list]:
+    """One document's line boxes ``{column: ndarray}`` -> (row_id,
+    col_pos, BIESO tag) per line. Rows are numbered over the pages in
+    order and a page's bands top to bottom; a band's lines are placed by
+    (x1, node_id), a null node id last."""
+    nid, page, x1 = cols["node_id"], cols["page_num"], cols["x1"]
+    centers = (cols["y1"] + cols["y2"]) / 2.0
+    null = np.equal(nid, None)
+    key = np.where(null, "", nid)
+    out: dict[str, list] = {k: [] for k in ("node_id", "row_id", "col_pos", "bieso")}
+    row = 0
+    for p in np.unique(page):
+        on = page == p
+        for lo, hi in merge_intervals(list(zip(cols["y1"][on], cols["y2"][on])), min_gap):
+            # the lines whose y-center is in the band, left to right
+            band = np.flatnonzero(on & (centers >= lo) & (centers <= hi))
+            band = band[np.lexsort((key[band], null[band], x1[band]))]
+            n = len(band)
+            out["node_id"] += nid[band].tolist()
+            out["row_id"] += [row] * n
+            out["col_pos"] += range(n)
+            out["bieso"] += ["RB"] + ["RI"] * (n - 2) + ["RE"] if n > 1 else ["RS"] * n
+            row += 1
+    out["url"] = cols["url"][:1].tolist() * len(out["node_id"])
+    return out
 
 
 def bieso_tag_rows(nodes: DataFrame, min_gap: float = 10.0,
                    kind: str | None = "TextLine") -> DataFrame:
-    """nodes -> BIESO row tags; one co-partitioned groupBy on url."""
+    """nodes -> BIESO row tags; one url shuffle, one kernel call per
+    document."""
     src = nodes
     if kind is not None:
         src = src.filter(F.col("kind") == kind)
     src = src.select("url", "node_id", "page_num", "x1", "y1", "x2", "y2")
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        return tag_doc_rows(pdf, min_gap)
-
-    return src.groupBy("url").applyInPandas(run, schema=ROW_TAGS_SCHEMA)
+    return per_url(ROW_TAGS_SCHEMA, lambda c: tag_doc_rows(c, min_gap), src)
 
 
 # ---------------------------------------------------------------------------
@@ -154,18 +149,20 @@ def _coherence_score(rows: list[int], cols: list[int], tags: list[str],
     return ok / n if n else 0.0
 
 
-def detect_doc_rows(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One table: grid-search (thnum x thsup) cut candidates, keep the
-    cut set with the best BIESO coherence (strictly-better keeps the
-    first grid hit, like the reference's ``>`` comparison)."""
-    url = pdf["url"].iloc[0]
-    n_cols = int(pdf["col_id"].nunique())
+def detect_doc_rows(cols: Mapping[str, np.ndarray]) -> dict[str, list]:
+    """One table's lines ``{column: ndarray}`` -> row_id per line:
+    grid-search (thnum x thsup) cut candidates, keep the cut set with
+    the best BIESO coherence (strictly-better keeps the first grid hit,
+    like the reference's ``>`` comparison)."""
+    col = cols["col_id"]
+    y1, col_id = cols["y1"].tolist(), col.tolist()
+    n_cols = len(np.unique(col[col == col]))  # a null column id is no column
     # cell tops: the min y1 per (col, contiguous block)? The miner uses
     # cell y-tops; with line-level input the first line of each cell is
     # unknown pre-segmentation, so every line top is a (weaker) vote —
     # row-top lines dominate because they align across columns.
-    tops = list(zip(pdf["y1"].tolist(), pdf["col_id"].tolist()))
-    centers = ((pdf["y1"] + pdf["y2"]) / 2.0).tolist()
+    tops = list(zip(y1, col_id))
+    centers = ((cols["y1"] + cols["y2"]) / 2.0).tolist()
     best = (-1.0, None)
     for thnum in GRID_THNUM:
         for thsup in GRID_THSUP:
@@ -173,25 +170,19 @@ def detect_doc_rows(pdf: pd.DataFrame) -> pd.DataFrame:
             if not cuts:
                 continue
             rows = _assign_rows(cuts, centers)
-            score = _coherence_score(rows, pdf["col_id"].tolist(), pdf["tag"].tolist(),
-                                    pdf["y1"].tolist())
+            score = _coherence_score(rows, col_id, cols["tag"].tolist(), y1)
             if score > best[0]:
                 best = (score, rows)
-    rows = best[1] if best[1] is not None else [0] * len(pdf)
-    return pd.DataFrame(
-        {"url": url, "node_id": pdf["node_id"].to_numpy(), "row_id": rows}
-    )
+    rows = best[1] if best[1] is not None else [0] * len(y1)
+    return {"url": cols["url"][:1].tolist() * len(rows),
+            "node_id": cols["node_id"].tolist(), "row_id": rows}
 
 
 def detect_table_rows(lines: DataFrame) -> DataFrame:
     """lines (url, node_id, col_id, tag, x1..y2) -> (url, node_id,
-    row_id); one co-partitioned groupBy per table."""
+    row_id); one url shuffle, one kernel call per table."""
     src = lines.select("url", "node_id", "col_id", "tag", "y1", "y2")
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        return detect_doc_rows(pdf)
-
-    return src.groupBy("url").applyInPandas(run, schema=ROWS_SCHEMA)
+    return per_url(ROWS_SCHEMA, detect_doc_rows, src)
 
 
 # ---------------------------------------------------------------------------
@@ -236,29 +227,41 @@ def compute_prf(n_ok: int, n_err: int, n_miss: int) -> tuple[float, float, float
     return p, r, f
 
 
+EVAL_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType(), False),
+        T.StructField("n_ok", T.LongType(), False),
+        T.StructField("n_err", T.LongType(), False),
+        T.StructField("n_miss", T.LongType(), False),
+        T.StructField("f1", T.DoubleType(), False),
+    ]
+)
+
+
+def _partition(keys: np.ndarray, members: np.ndarray) -> list[list]:
+    """``members`` grouped by ``keys``, groups in ascending key order; a
+    null (NaN) key is in no group."""
+    keep = np.flatnonzero(keys == keys)
+    keep = keep[np.argsort(keys[keep], kind="stable")]
+    groups = np.split(members[keep], np.flatnonzero(np.diff(keys[keep])) + 1)
+    return [g.tolist() for g in groups] if len(keep) else []
+
+
+def eval_doc_rows(cols: Mapping[str, np.ndarray], simil: float = 1.0) -> dict[str, list]:
+    """One table's (node_id, row_id, gt_row) ``{column: ndarray}`` -> its
+    one evaluation row: the predicted row partition matched to the
+    ground-truth one by :func:`eval_partitions`."""
+    ok, err, miss = eval_partitions(_partition(cols["row_id"], cols["node_id"]),
+                                    _partition(cols["gt_row"], cols["node_id"]), simil)
+    _, _, f1 = compute_prf(ok, err, miss)
+    return {"url": cols["url"][:1].tolist(), "n_ok": [ok], "n_err": [err],
+            "n_miss": [miss], "f1": [round(f1, 6)]}
+
+
 def eval_row_clusters(pred: DataFrame, gt: DataFrame, simil: float = 1.0) -> DataFrame:
     """Per-table row-cluster evaluation: (url, n_ok, n_err, n_miss, f1)
     comparing predicted row partitions to ground truth at a jaccard
     similarity threshold."""
-    j = pred.join(gt.select("url", "node_id", "gt_row"), ["url", "node_id"])
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("n_ok", T.LongType(), False),
-            T.StructField("n_err", T.LongType(), False),
-            T.StructField("n_miss", T.LongType(), False),
-            T.StructField("f1", T.DoubleType(), False),
-        ]
-    )
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        url = pdf["url"].iloc[0]
-        runp = [g["node_id"].tolist() for _, g in pdf.groupby("row_id")]
-        gtp = [g["node_id"].tolist() for _, g in pdf.groupby("gt_row")]
-        ok, err, miss = eval_partitions(runp, gtp, simil)
-        _, _, f1 = compute_prf(ok, err, miss)
-        return pd.DataFrame(
-            [{"url": url, "n_ok": ok, "n_err": err, "n_miss": miss, "f1": round(f1, 6)}]
-        )
-
-    return j.groupBy("url").applyInPandas(run, schema=schema)
+    j = pred.select("url", "node_id", "row_id").join(
+        gt.select("url", "node_id", "gt_row"), ["url", "node_id"])
+    return per_url(EVAL_SCHEMA, lambda c: eval_doc_rows(c, simil), j)

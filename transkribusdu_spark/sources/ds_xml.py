@@ -20,9 +20,10 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from xml.etree import ElementTree as etree
 
 from ..schemas import ALL_LABELS, NODES_SCHEMA
@@ -142,19 +143,16 @@ def parse_dsxml_pages(pages: DataFrame, payload_col: str = "html") -> DataFrame:
     row. A job that reads DS-XML should first move this source onto
     the PageXML path's status contract (``pipeline.parse.parse_batch``:
     one loop, a status per document, no second pass)."""
+    arrow_schema = to_arrow_schema(NODES_SCHEMA)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        names = [f.name for f in NODES_SCHEMA.fields]
-        for pdf in batches:
-            out: dict[str, list] = {n: [] for n in names}
-            for url, payload in zip(pdf["url"], pdf[payload_col]):
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            rows: list[dict] = []
+            for url, payload in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
                 try:
-                    rows = _parse_dsxml_doc(url, bytes(payload))
+                    rows += _parse_dsxml_doc(url, bytes(payload))
                 except Exception:
-                    continue
-                for r in rows:
-                    for n in names:
-                        out[n].append(r[n])
-            yield pd.DataFrame(out)
+                    pass
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
-    return pages.select("url", payload_col).mapInPandas(run, schema=NODES_SCHEMA)
+    return pages.select("url", payload_col).mapInArrow(run, NODES_SCHEMA)

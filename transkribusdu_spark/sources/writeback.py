@@ -6,19 +6,22 @@ files. Here the labeled-nodes table (the actual 100 TB sink) is the
 predicted node frame written as is, and this module is the optional XML
 render of the enriched document (one string per url) for consumers that
 want documents back.
-The render is a vectorized string assembly inside mapInPandas; it
-round-trips through our own parser (tested), which is the analogue of
-the reference's save/load cycle.
+The render is one string assembly per document behind one url shuffle
+(``pipeline.perdoc.per_url``); it round-trips through our own
+parser (tested), which is the analogue of the reference's save/load
+cycle.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Mapping
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..pipeline.perdoc import per_url
 
 
 def _esc(s: str) -> str:
@@ -33,6 +36,44 @@ RENDERED_SCHEMA = T.StructType(
 )
 
 
+def _render_doc(c: Mapping[str, np.ndarray]) -> dict[str, list]:
+    """One document's TextRegion rows ``{column: ndarray}`` -> its one
+    enriched document: pages in order, a page's regions by (y1, x1)."""
+    page, proba, lines = c["page_num"], c.get("proba_out"), c.get("lines_arr")
+    order = np.lexsort((c["x1"], c["y1"], page))
+    parts = ["<PcGts>"]
+    for p in np.unique(page[page == page]):  # a null page is no page
+        rows = order[page[order] == p]
+        parts.append(f'<Page n="{int(p)}" imageWidth="{c["page_w"][rows[0]]:g}" '
+                     f'imageHeight="{c["page_h"][rows[0]]:g}">')
+        for i in rows:
+            x1, y1, x2, y2 = (c[k][i] for k in ("x1", "y1", "x2", "y2"))
+            box = f"{x1:g},{y1:g} {x2:g},{y1:g} {x2:g},{y2:g} {x1:g},{y2:g}"
+            if lines is not None and lines[i] is not None and len(lines[i]):
+                # S10 full: rebuild the original line tree
+                body = "".join(
+                    f'<TextLine id="{_esc(l["lid"])}">'
+                    f'<Coords points="{l["lx1"]:g},{l["ly1"]:g} {l["lx2"]:g},{l["ly1"]:g} '
+                    f'{l["lx2"]:g},{l["ly2"]:g} {l["lx1"]:g},{l["ly2"]:g}"/>'
+                    f"<TextEquiv><Unicode>{_esc(l['ltext'])}</Unicode></TextEquiv></TextLine>"
+                    for l in lines[i]
+                )
+            else:
+                body = (
+                    f'<TextLine id="{_esc(c["node_id"][i])}_l0"><Coords points="{box}"/>'
+                    f"<TextEquiv><Unicode>{_esc(c['text'][i])}</Unicode></TextEquiv></TextLine>"
+                )
+            du_y = f' DU_Y="{proba[i]:.6f}"' if proba is not None else ""
+            parts.append(
+                f'<TextRegion id="{_esc(c["node_id"][i])}" custom="structure '
+                f'{{type:{_esc(c["label_out"][i])};}}"{du_y}>'
+                f'<Coords points="{box}"/>' + body + "</TextRegion>"
+            )
+        parts.append("</Page>")
+    parts.append("</PcGts>")
+    return {"url": c["url"][:1].tolist(), "xml": ["".join(parts)]}
+
+
 def render_enriched_xml(nodes: DataFrame, label_col: str = "label",
                         proba_col: str | None = None,
                         lines: DataFrame | None = None) -> DataFrame:
@@ -45,14 +86,14 @@ def render_enriched_xml(nodes: DataFrame, label_col: str = "label",
     original lines with their own boxes/texts); otherwise each region
     carries one synthetic line holding the region text."""
     cols = ["url", "page_num", "page_w", "page_h", "node_id", "x1", "y1",
-            "x2", "y2", "text", label_col]
+            "x2", "y2", "text", F.col(label_col).alias("label_out")]
     if proba_col:
-        cols.append(proba_col)
-    src = nodes.filter(
-        F.col("kind") == "TextRegion"
-    ).select(*cols).withColumnRenamed(label_col, "label_out") if "kind" in nodes.columns else nodes.select(*cols).withColumnRenamed(label_col, "label_out")
-    if proba_col:
-        src = src.withColumnRenamed(proba_col, "proba_out")
+        cols.append(F.col(proba_col).alias("proba_out"))
+    # a node without a url belongs to no document
+    keep = F.col("url").isNotNull()
+    if "kind" in nodes.columns:
+        keep &= F.col("kind") == "TextRegion"
+    src = nodes.filter(keep).select(*cols)
     if lines is not None:
         ln = (
             lines.filter(F.col("kind") == "TextLine")
@@ -71,52 +112,4 @@ def render_enriched_xml(nodes: DataFrame, label_col: str = "label",
             )
         )
         src = src.join(ln, ["url", "node_id"], "left")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        buf: dict[str, pd.DataFrame] = {}
-        for pdf in batches:
-            for url, g in pdf.groupby("url", sort=False):
-                buf[url] = pd.concat([buf[url], g]) if url in buf else g
-        out_urls, out_xml = [], []
-        for url, g in buf.items():
-            parts = ["<PcGts>"]
-            for pnum, pg in g.sort_values(["page_num", "y1", "x1"]).groupby("page_num", sort=True):
-                w = pg["page_w"].iloc[0]
-                h = pg["page_h"].iloc[0]
-                parts.append(f'<Page n="{int(pnum)}" imageWidth="{w:g}" imageHeight="{h:g}">')
-                for r in pg.itertuples():
-                    proba = f' DU_Y="{r.proba_out:.6f}"' if hasattr(r, "proba_out") else ""
-                    real_lines = getattr(r, "lines_arr", None)
-                    if real_lines is not None and not (
-                        isinstance(real_lines, float) or real_lines is None
-                    ) and len(real_lines):
-                        # S10 full: rebuild the original line tree
-                        lparts = [
-                            f'<TextLine id="{_esc(l["lid"])}">'
-                            f'<Coords points="{l["lx1"]:g},{l["ly1"]:g} {l["lx2"]:g},{l["ly1"]:g} '
-                            f'{l["lx2"]:g},{l["ly2"]:g} {l["lx1"]:g},{l["ly2"]:g}"/>'
-                            f"<TextEquiv><Unicode>{_esc(l['ltext'])}</Unicode></TextEquiv></TextLine>"
-                            for l in real_lines
-                        ]
-                        body = "".join(lparts)
-                    else:
-                        body = (
-                            f'<TextLine id="{_esc(r.node_id)}_l0"><Coords points="{r.x1:g},{r.y1:g} '
-                            f'{r.x2:g},{r.y1:g} {r.x2:g},{r.y2:g} {r.x1:g},{r.y2:g}"/>'
-                            f"<TextEquiv><Unicode>{_esc(r.text)}</Unicode></TextEquiv></TextLine>"
-                        )
-                    parts.append(
-                        f'<TextRegion id="{_esc(r.node_id)}" custom="structure '
-                        f'{{type:{_esc(r.label_out)};}}"{proba}>'
-                        f'<Coords points="{r.x1:g},{r.y1:g} {r.x2:g},{r.y1:g} '
-                        f'{r.x2:g},{r.y2:g} {r.x1:g},{r.y2:g}"/>'
-                        + body + "</TextRegion>"
-                    )
-                parts.append("</Page>")
-            parts.append("</PcGts>")
-            out_urls.append(url)
-            out_xml.append("".join(parts))
-        yield pd.DataFrame({"url": out_urls, "xml": out_xml})
-
-    # repartition by url so each document renders whole in one task
-    return src.repartition(F.col("url")).mapInPandas(run, schema=RENDERED_SCHEMA)
+    return per_url(RENDERED_SCHEMA, _render_doc, src)
