@@ -11,12 +11,13 @@ from test_conjugate_fused import HOST, _doc, _planted, _region
 
 import tools.make_truth as mt
 from transkribusdu_spark import api
+from transkribusdu_spark.pipeline.extract import extract_from_pages
 from transkribusdu_spark.synth import pages_from_documents
 
 
 def test_extract_documents_byte_identical(spark, sf_dir):
     pages = pages_from_documents(spark, sf_dir)
-    ext = api.extract_documents(pages)
+    ext = extract_from_pages(pages)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     cmp = ext.join(docs, "doc_id")
     n = cmp.count()

@@ -19,9 +19,9 @@ from transkribusdu_spark.pipeline.ecn import (
     _doc_grad,
     _flatten,
     _forward,
-    _shapes,
     _unflatten,
     ecn_score,
+    gat_init,
     init_weights,
     train_ecn,
 )
@@ -32,20 +32,28 @@ from transkribusdu_spark.pipeline.parse import parse_pages
 from transkribusdu_spark.synth import pages_from_documents
 
 
-def test_backprop_matches_finite_differences():
+@pytest.mark.parametrize("weights", [
+    pytest.param(lambda f, h, k: init_weights(f, h, k, 2, seed=3), id="ecn"),
+    pytest.param(lambda f, h, k: init_weights(f, h, k, 2, seed=3, n_etypes=3), id="ecn_etypes3"),
+    pytest.param(lambda f, h, k: gat_init(f, h, k, 2, seed=9), id="gat"),
+    pytest.param(lambda f, h, k: gat_init(f, 2 * h, k, 2, seed=9, n_heads=3), id="gat_3heads"),
+])
+def test_backprop_matches_finite_differences(weights):
     rng = np.random.default_rng(0)
-    n, f, hdim, k = 6, 4, 3, 2
+    n, f, hdim, k = 7, 4, 3, 2
     nf = rng.standard_normal((n, f))
-    src = np.array([0, 1, 2, 3])
-    dst = np.array([1, 2, 3, 4])
+    src = np.array([0, 1, 2, 3, 5, 0])
+    dst = np.array([1, 2, 3, 4, 6, 2])
+    e_cls = np.array([0, 1, 2, 0, 1, 2])
     y = rng.integers(0, k, n)
-    w = init_weights(f, hdim, k, 2, seed=3)
-    shapes = _shapes(f, hdim, k, 2)
+    w = weights(f, hdim, k)
     theta = _flatten(w)
-    flat, _, _ = _doc_grad(nf, src, dst, y, w)
+    assert np.array_equal(_flatten(_unflatten(theta, w)), theta)
+    flat = _doc_grad(nf, src, dst, y, w, e_cls)
+    assert len(flat) == len(theta)
 
     def loss_at(th):
-        p = _forward(nf, src, dst, _unflatten(th, shapes))
+        p = _forward(nf, src, dst, _unflatten(th, w), e_cls)
         return float(-np.log(np.clip(p[np.arange(n), y], 1e-12, 1.0)).sum())
 
     eps = 1e-6
@@ -55,6 +63,26 @@ def test_backprop_matches_finite_differences():
         tm[i] -= eps
         num = (loss_at(tp) - loss_at(tm)) / (2 * eps)
         assert abs(num - flat[i]) < 1e-5 * max(1.0, abs(num))
+
+
+@pytest.mark.parametrize("bad_cols", [
+    pytest.param(["nf_x1", "no_such_col"], id="select"),
+    pytest.param(["nf_x1", "nf_bad"], id="standardizer"),
+])
+def test_train_ecn_restores_state_when_it_fails(spark, sf_dir, bad_cols):
+    """A fit that fails at its input select, or in the standardizer pass
+    after its inputs are cached, leaves the AQE conf and the cache as it
+    found them."""
+    nodes = parse_pages(pages_from_documents(spark, sf_dir).limit(5))
+    edges = build_edges(nodes)
+    nf = node_features(nodes, edges).withColumn("nf_bad", F.array("nf_x1"))
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    n_cached = cache.numCachedEntries()
+    with pytest.raises(Exception, match="no_such_col|nf_bad"):
+        train_ecn(nf, edges, bad_cols, epochs=1)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe == "true"
+    assert cache.numCachedEntries() == n_cached
 
 
 @pytest.fixture(scope="module")
@@ -102,76 +130,6 @@ def test_trained_ecn_extraction_quality(spark, sf_dir, trained):
     # measured 444/500 at 60 epochs (491 at 150); generous floor guards
     # against numerical drift without masking a real regression
     assert ok >= 0.8 * n_docs, f"trained ECN byte-identical {ok}/{n_docs}"
-
-
-def test_gat_backprop_matches_finite_differences():
-    from transkribusdu_spark.pipeline.ecn import (
-        _gat_doc_grad,
-        _gat_flatten,
-        _gat_forward,
-        _gat_shapes,
-        _gat_unflatten,
-        gat_init,
-    )
-
-    rng = np.random.default_rng(1)
-    n, f, hdim, k = 6, 4, 3, 2
-    nf = rng.standard_normal((n, f))
-    src = np.array([0, 1, 2, 3])
-    dst = np.array([1, 2, 3, 4])
-    y = rng.integers(0, k, n)
-    w = gat_init(f, hdim, k, 2, seed=9)
-    shapes = _gat_shapes(f, hdim, k, 2)
-    theta = _gat_flatten(w)
-    flat, _, _ = _gat_doc_grad(nf, src, dst, y, w)
-
-    def loss_at(th):
-        p = _gat_forward(nf, src, dst, _gat_unflatten(th, shapes))
-        return float(-np.log(np.clip(p[np.arange(n), y], 1e-12, 1.0)).sum())
-
-    eps = 1e-6
-    for i in rng.choice(len(theta), 25, replace=False):
-        tp, tm = theta.copy(), theta.copy()
-        tp[i] += eps
-        tm[i] -= eps
-        num = (loss_at(tp) - loss_at(tm)) / (2 * eps)
-        assert abs(num - flat[i]) < 1e-5 * max(1.0, abs(num))
-
-
-def test_multihead_gat_backprop_matches_finite_differences():
-    from transkribusdu_spark.pipeline.ecn import (
-        _gat_doc_grad,
-        _gat_flatten,
-        _gat_forward,
-        _gat_shapes,
-        _gat_unflatten,
-        gat_init,
-    )
-
-    rng = np.random.default_rng(2)
-    n, f, hdim, k, heads = 7, 4, 6, 2, 3
-    nf = rng.standard_normal((n, f))
-    src = np.array([0, 1, 2, 3, 5])
-    dst = np.array([1, 2, 3, 4, 6])
-    y = rng.integers(0, k, n)
-    w = gat_init(f, hdim, k, 2, seed=9, n_heads=heads)
-    shapes = _gat_shapes(f, hdim, k, 2, heads)
-    theta = _gat_flatten(w)
-    assert np.allclose(_gat_flatten(_gat_unflatten(theta, shapes, heads)), theta)
-    flat, _, _ = _gat_doc_grad(nf, src, dst, y, w)
-    assert len(flat) == len(theta)
-
-    def loss_at(th):
-        p = _gat_forward(nf, src, dst, _gat_unflatten(th, shapes, heads))
-        return float(-np.log(np.clip(p[np.arange(n), y], 1e-12, 1.0)).sum())
-
-    eps = 1e-6
-    for i in rng.choice(len(theta), 25, replace=False):
-        tp, tm = theta.copy(), theta.copy()
-        tp[i] += eps
-        tm[i] -= eps
-        num = (loss_at(tp) - loss_at(tm)) / (2 * eps)
-        assert abs(num - flat[i]) < 1e-5 * max(1.0, abs(num))
 
 
 def test_trained_gat_extraction_parity(spark, sf_dir):

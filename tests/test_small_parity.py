@@ -4,6 +4,7 @@ M10 label binarizer, P8 dedup guard, P9 output-file filter."""
 import pytest
 from pyspark.sql import functions as F
 
+from transkribusdu_spark.pipeline.edgefeats import fit_edge_text_vocab
 from transkribusdu_spark.pipeline.features import (
     apply_standard_scaler,
     fit_standard_scaler,
@@ -15,7 +16,7 @@ from transkribusdu_spark.pipeline.parse import dedup_guard, filter_output_files
 
 def test_enclosed_tfidf_has_boundary_ngrams(spark):
     docs = spark.createDataFrame([("abc",), ("abd",)], "text string")
-    vocab = fit_tfidf_vocab(docs, n=3, max_features=50, enclose=True)
+    vocab = fit_edge_text_vocab(docs, n=3, max_features=50)
     grams = {r.ngram for r in vocab.collect()}
     assert "{ab" in grams and "bc}" in grams  # start/end markers present
     plain = {r.ngram for r in fit_tfidf_vocab(docs, n=3, max_features=50).collect()}

@@ -120,9 +120,9 @@ def test_artifact_store_roundtrip(spark, tmp_path):
 def test_ecn_forward_shapes_and_determinism():
     w = init_weights(n_features=5, n_hidden=8, n_classes=3)
     nf = np.random.default_rng(1).normal(size=(10, 5))
-    src = np.array([0, 1, 2]); dst = np.array([1, 2, 3])
-    p1 = _forward(nf, src, dst, w)
-    p2 = _forward(nf, src, dst, w)
+    src = np.array([0, 1, 2]); dst = np.array([1, 2, 3]); e_cls = np.array([0, 1, 2])
+    p1 = _forward(nf, src, dst, w, e_cls)
+    p2 = _forward(nf, src, dst, w, e_cls)
     assert p1.shape == (10, 3)
     assert np.allclose(p1.sum(axis=1), 1.0)
     assert np.array_equal(p1, p2)

@@ -1,8 +1,8 @@
 """Top-level composable pipelines (the reference's DU_Task entry points,
 SURVEY.md §3, re-expressed as DataFrame -> DataFrame functions).
 
-Extraction (:func:`extract_documents`), oracle conjugate clustering
-(:func:`conjugate_cluster`) and region segmentation
+Extraction (:func:`.pipeline.extract.extract_from_pages`), oracle
+conjugate clustering (:func:`conjugate_cluster`) and region segmentation
 (:func:`segment_regions`) are map-only: a pages row is a whole
 document, so each is one :func:`.pipeline.perdoc.per_doc` pass over
 ``url``/``html`` that parses every document once and needs no shuffle.
@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
-from .pipeline.extract import STATUS_SCHEMA, _fused_doc, extract_from_pages
+from .pipeline.extract import STATUS_SCHEMA, _fused_doc
 from .pipeline.model import fit_lda_params, smoothed_labels
 from .pipeline.perdoc import per_doc
 from .pipeline.segment import oracle_clusters_doc, regions_doc
@@ -23,18 +23,6 @@ from .schemas import CLUSTERS_SCHEMA, HULLS_SCHEMA
 
 # The extraction rows of extract_with_status, without the parse status.
 _EXTRACT_SCHEMA = StructType([f for f in STATUS_SCHEMA.fields if f.name != "status"])
-
-
-def extract_documents(pages: DataFrame) -> DataFrame:
-    """The --run path (SURVEY.md §3.2) in ground-truth-label mode:
-    scan -> fused parse+extract (map-only, zero shuffle — reading order,
-    join, and spans are doc-local).
-
-    This is the throughput surface benchmarked in bench.py;
-    byte-identical to the window-based
-    ``extract_text_spans(parse_pages(pages))`` form (parity-locked).
-    """
-    return extract_from_pages(pages)
 
 
 def conjugate_cluster(pages: DataFrame) -> DataFrame:
@@ -76,9 +64,9 @@ def extract_documents_deterministic(pages: DataFrame) -> DataFrame:
     statistics into one collected row, then one map-only pass scores and
     smooths each document (:func:`.pipeline.model.smoothed_labels`) and
     assembles its text with the same reading order and span offsets as
-    :func:`extract_documents`. No shuffle; a document that fails to
-    parse, or has no node smoothed to ``main``, gives no row. Every node
-    is its own span, whatever its ``@id``."""
+    :func:`.pipeline.extract.extract_from_pages`. No shuffle; a document
+    that fails to parse, or has no node smoothed to ``main``, gives no
+    row. Every node is its own span, whatever its ``@id``."""
     params = fit_lda_params(pages)
 
     def kernel(url: str, cols: dict | None, status: str) -> dict[str, list]:

@@ -155,8 +155,9 @@ def _enclosed(nodes: DataFrame) -> DataFrame:
 
 
 def fit_edge_text_vocab(nodes: DataFrame, n: int = 3, max_features: int = 250) -> DataFrame:
-    """Fit the char-ngram vocabulary over {}-enclosed node texts (the
-    reference's start/end marker trick, ``Transformer_PageXml.py:40-47``)."""
+    """Fit the char-ngram vocabulary over {}-enclosed node texts (F1, the
+    reference's start/end marker trick, ``Transformer_PageXml.py:40-47``),
+    so boundary n-grams become features."""
     from .features import fit_tfidf_vocab
 
     return fit_tfidf_vocab(_enclosed(nodes), n=n, max_features=max_features, text_col="_enc")

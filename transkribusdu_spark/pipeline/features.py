@@ -275,21 +275,12 @@ def neighbor_class_mask(nodes: DataFrame, edges: DataFrame,
 
 
 def fit_tfidf_vocab(nodes: DataFrame, n: int = 3, max_features: int = 500,
-                    text_col: str = "text", enclose: bool = False) -> DataFrame:
+                    text_col: str = "text") -> DataFrame:
     """F2/A4: character n-gram document-frequency vocabulary fit with a
     deterministic tie-break (df desc, ngram asc) — the reference's
     TfidfVectorizer fit re-expressed as explode -> groupBy -> top-K.
-    Returns (ngram, idx, df, idf); tiny, broadcastable.
-
-    ``enclose=True`` wraps each text in {} start/end markers before
-    n-gramming (F1 NodeTransformerTextEnclosed,
-    ``graph/Transformer_PageXml.py:40-47``) so boundary n-grams become
-    features."""
-    if enclose:
-        nodes = nodes.withColumn(
-            "_enc_f1", F.concat(F.lit("{"), F.coalesce(F.col(text_col), F.lit("")), F.lit("}"))
-        )
-        text_col = "_enc_f1"
+    Returns (ngram, idx, df, idf); tiny, broadcastable. The {}-enclosed
+    form (F1) is :func:`.edgefeats.fit_edge_text_vocab`."""
     total = nodes.count()
     toks = F.lower(F.coalesce(F.col(text_col), F.lit("")))
     grams = F.when(
